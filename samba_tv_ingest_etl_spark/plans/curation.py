@@ -416,20 +416,15 @@ class CurationDag:
     def _write_curated(self, gated: DataFrame, run_id: str) -> None:
         """Idempotent landing: dynamic partition overwrite replaces
         ONLY this run's partition, so a replayed append after a crash
-        rewrites the same rows instead of duplicating them."""
-        conf = self.spark.conf
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = conf.get(key, "static")
-        conf.set(key, "dynamic")
-        try:
-            (
-                gated.withColumn("run_id", F.lit(run_id))
-                .write.mode("overwrite")
-                .partitionBy("run_id")
-                .parquet(self.curated_path)
-            )
-        finally:
-            conf.set(key, prev)
+        rewrites the same rows instead of duplicating them. The mode is
+        a per-write option, so the session conf stays untouched."""
+        (
+            gated.withColumn("run_id", F.lit(run_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("run_id")
+            .parquet(self.curated_path)
+        )
 
     # -- surface -------------------------------------------------------
 

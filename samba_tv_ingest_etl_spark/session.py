@@ -57,3 +57,20 @@ def get_spark(app_name: str = "samba_tv_ingest_etl_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def inheriting_target(fn, spark: SparkSession | None = None):
+    """``fn`` wrapped for a worker thread: it runs with the Spark local
+    properties (job group, job description, scheduler pool) the
+    CALLING thread has now (``pyspark.inheritable_thread_target``).
+    Jobs submitted from a plain pool thread lose them, so a job group
+    set around a task would not cover the jobs its pool threads start.
+    ``fn`` comes back unchanged when no SparkContext is running."""
+    from pyspark import SparkContext, inheritable_thread_target
+
+    if SparkContext._active_spark_context is None:
+        return fn
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        return inheritable_thread_target(fn)
+    return inheritable_thread_target(spark)(fn)

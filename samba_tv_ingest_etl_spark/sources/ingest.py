@@ -17,13 +17,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schemas
 from .ledger import LoadLedger
 from .stage import discover_feed, read_stage_files
+from .writer import append
 
 FEED_SCHEMAS: dict[str, T.StructType] = {
     "ACR": schemas.ACR,
@@ -85,14 +86,15 @@ def ingest_feed(
     raw = read_stage_files(spark, new)
     # path-derived columns win over any same-named file columns
     projected = project_declared_schema(raw, FEED_SCHEMAS[feed])
-    rows = projected.count()
-    (
-        projected.write.mode("append")
-        .partitionBy("yyyy", "mm", "dd")
-        .parquet(target_path)
+    # the row count comes from the append job itself: one scan
+    obs = Observation()
+    append(
+        projected.observe(obs, F.count(F.lit(1)).alias("n")),
+        target_path,
+        ["yyyy", "mm", "dd"],
     )
     ledger.record(feed, new)
-    return IngestResult(feed, len(new), rows)
+    return IngestResult(feed, len(new), int(obs.get["n"]))
 
 
 # The reference schedules all three ingest tasks at 00:04 LOCAL New
@@ -116,7 +118,9 @@ def build_ingest_dag(
     """The three independent COPY-INTO tasks of ``ingest-dag.sql``
     (STB/ACR/GEO_WEIGHTS), each on the reference's New-York daily
     cron, all resumed — no edges between them, matching the
-    reference's flat task set."""
+    reference's flat task set, so a run loads the three feeds
+    concurrently. Each task appends to its own feed table; their
+    shared load-ledger appends are serialised by ``writer.append``."""
     import os
 
     from ..plans.dag import TaskDag

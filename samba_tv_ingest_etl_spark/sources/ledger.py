@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
+from .writer import append
 
 # Past this many values, a literal F.array(...) becomes one giant
 # generated expression (the ISIN_LITERAL_CAP / Janino blowup class):
@@ -86,4 +87,6 @@ class LoadLedger:
             .withColumn("loaded_at", F.current_timestamp())
             .coalesce(1)
         )
-        df.write.mode("append").parquet(self.path)
+        # every feed's ingest task appends here, possibly at once:
+        # writer.append keeps their jobs out of each other's staging
+        append(df, self.path)

@@ -13,7 +13,11 @@ write-new-then-swap discipline of SURVEY §4.2-4.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import inheriting_target
 
 
 def _fs(spark: SparkSession, path: str):
@@ -23,10 +27,11 @@ def _fs(spark: SparkSession, path: str):
 
 
 # Per-output-file target in the OPTIMIZER'S size-estimate domain
-# (Catalyst row-size x row-count, uncompressed). Parquet files land
-# smaller than this by the encoding/compression ratio; the target
-# only needs the right decade — the point is ceil(bytes/target)
-# files, not exact file sizes.
+# (Catalyst row-size x row-count). The estimate is not the file size:
+# array and string frames were measured landing 2.5-4.8x LARGER than
+# it (SCALING_r14), since Catalyst's per-row guess for variable-width
+# columns undershoots them. The target only needs the right decade —
+# the point is ceil(bytes/target) files, not exact file sizes.
 TARGET_FILE_EST_BYTES = 128 * 1024 * 1024
 
 
@@ -75,11 +80,28 @@ def sized(
     return df.coalesce(n)
 
 
+# one lock per directory ever appended to, process-wide: the staging
+# clash is between any two jobs of this driver, whoever started them
+_DIR_LOCKS: dict[str, threading.Lock] = {}
+_DIR_LOCKS_GUARD = threading.Lock()
+
+
+def _dir_lock(path: str) -> threading.Lock:
+    with _DIR_LOCKS_GUARD:
+        return _DIR_LOCKS.setdefault(path.rstrip("/"), threading.Lock())
+
+
 def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    """Append ``df`` to the parquet directory ``path``. Appends into
+    one directory are serialised across driver threads: concurrent
+    Spark appends to one directory share its ``_temporary/`` staging
+    area, and the first job commit deletes it under the second job,
+    which then loses (or fails to commit) its files."""
     w = df.write.mode("append")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    with _dir_lock(path):
+        w.parquet(path)
 
 
 def append_all(
@@ -102,7 +124,9 @@ def append_all(
         max_workers=min(len(appends), _STAGE_POOL)
     ) as pool:
         futs = [
-            pool.submit(append, df, path, pby)
+            pool.submit(
+                inheriting_target(append, df.sparkSession), df, path, pby
+            )
             for df, path, pby in appends
         ]
         for f in futs:
@@ -151,7 +175,10 @@ def atomic_overwrite_all(
         max_workers=min(len(writes), _STAGE_POOL)
     ) as pool:
         futs = [
-            pool.submit(_stage_overwrite, df, path, pby)
+            pool.submit(
+                inheriting_target(_stage_overwrite, df.sparkSession),
+                df, path, pby,
+            )
             for df, path, pby in writes
         ]
         for f in futs:
@@ -255,16 +282,14 @@ def overwrite_partitions(
         df = sized(df.localCheckpoint(eager=True))
         col = partition_by[0]
         written = {r[0] for r in df.select(col).distinct().collect()}
-    conf_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
+    # the per-write option, not the session conf: a conf toggle would
+    # also switch the mode of any overwrite another thread runs meanwhile
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
     if expected_partitions:
         col = partition_by[0]
         fs, _ = _fs(spark, path)
@@ -285,8 +310,20 @@ def overwrite_partitions(
 
 def overwrite_small(spark: SparkSession, rows, schema, path: str) -> None:
     """Overwrite a tiny control table (task_control is 2 rows —
-    reference etl-dag.sql:136-142) from driver-side rows."""
-    atomic_overwrite(spark.createDataFrame(rows, schema).coalesce(1), path)
+    reference etl-dag.sql:136-142) from driver-side rows. The rows are
+    JVM literals (``inline`` over an array of structs), like
+    ``ledger.literal_strings_frame``: a ``createDataFrame`` frame
+    would drain through the Python runner, about 1 s per write."""
+    from pyspark.sql import functions as F
+
+    structs = [
+        F.struct(*[
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for v, f in zip(row, schema.fields)
+        ])
+        for row in rows
+    ]
+    atomic_overwrite(spark.range(1).select(F.inline(F.array(*structs))), path)
 
 
 def write_clustered(

@@ -10,6 +10,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -250,3 +251,88 @@ def test_dag_structure():
     dag.suspend("a")
     dag.run()  # c skipped because its dependency a is suspended
     assert "a" not in calls and "c" not in calls and "b" in calls
+
+
+def test_dag_runs_ready_siblings_concurrently():
+    """Two tasks with no edge between them run at the same time: each
+    waits on a two-party barrier, which only opens if both are in
+    flight together (run one after the other, the first times out)."""
+    from samba_tv_ingest_etl_spark.plans.dag import TaskDag
+
+    barrier = threading.Barrier(2, timeout=30)
+    dag = TaskDag()
+    dag.add("root", lambda: "root")
+    dag.add("a", lambda: barrier.wait() >= 0, after=["root"])
+    dag.add("b", lambda: barrier.wait() >= 0, after=["root"])
+    dag.add("c", lambda: "c", after=["a", "b"])
+    assert dag.run() == {"root": "root", "a": True, "b": True, "c": "c"}
+
+
+def test_dag_chain_runs_on_calling_thread():
+    """A chain has one ready task at a time: it runs in order on the
+    caller's thread, as the sequential runner did."""
+    from samba_tv_ingest_etl_spark.plans.dag import TaskDag
+
+    seen = []
+
+    def record(name):
+        return lambda: seen.append((name, threading.current_thread()))
+
+    dag = TaskDag()
+    dag.add("x", record("x"))
+    dag.add("y", record("y"), after=["x"])
+    dag.add("z", record("z"), after=["y"])
+    dag.run()
+    assert [n for n, _ in seen] == ["x", "y", "z"]
+    assert {t for _, t in seen} == {threading.current_thread()}
+
+
+def test_dag_failure_skips_downstream_and_reraises():
+    """A task that raises: its downstream subtree is skipped, a
+    sibling that does not depend on it still completes (and so does
+    the sibling's own downstream), and ``run()`` re-raises the error
+    once nothing is left running."""
+    from samba_tv_ingest_etl_spark.plans.dag import TaskDag
+
+    started = threading.Event()
+    calls = []
+
+    def bad():
+        started.wait(30)  # fail only once the sibling has started
+        raise ValueError("task bad failed")
+
+    def good():
+        started.set()
+        calls.append("good")
+        return "good"
+
+    dag = TaskDag()
+    dag.add("root", lambda: calls.append("root"))
+    dag.add("bad", bad, after=["root"])
+    dag.add("good", good, after=["root"])
+    dag.add("after_bad", lambda: calls.append("after_bad"), after=["bad"])
+    dag.add("after_good", lambda: calls.append("after_good"),
+            after=["good"])
+    dag.add("after_both", lambda: calls.append("after_both"),
+            after=["bad", "good"])
+    with pytest.raises(ValueError, match="task bad failed"):
+        dag.run()
+    assert sorted(calls) == ["after_good", "good", "root"]
+
+
+def test_dag_threads_keep_callers_job_group(spark):
+    """Concurrent tasks run on pool threads; the Spark jobs they
+    launch must still carry the job group the caller set."""
+    from samba_tv_ingest_etl_spark.plans.dag import TaskDag
+
+    sc = spark.sparkContext
+    group = "test-dag-job-group"
+    dag = TaskDag()
+    dag.add("a", lambda: spark.range(10).count())
+    dag.add("b", lambda: spark.range(20).count())
+    sc.setJobGroup(group, "concurrent DAG tasks")
+    try:
+        assert dag.run() == {"a": 10, "b": 20}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from samba_tv_ingest_etl_spark.sources.ingest import (
     ingest_feed,
@@ -197,3 +198,79 @@ def test_ledger_record_past_literal_cap(spark, tmp_path):
     ledger.record("FEED", files)
     assert ledger.seen("FEED") == set(files)
     assert ledger.new_files("FEED", files) == []
+
+
+def test_concurrent_ingest_dag_loads_every_file_once(spark, tmp_path):
+    """The ingest DAG loads its three feeds concurrently, and all
+    three tasks append to ONE ledger directory. Over several drops of
+    every feed, each staged file must land in the ledger exactly
+    once, each raw table must hold exactly the staged rows, and a
+    re-run with nothing new must load nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from samba_tv_ingest_etl_spark.sources.ingest import build_ingest_dag
+    from samba_tv_ingest_etl_spark.sources.ledger import LoadLedger
+
+    base = str(tmp_path / "stage")
+    feeds = {"STB": "STB", "ACR": "ACR", "GEO_WEIGHTS": "Geo-Weights"}
+    staged = {f: [] for f in feeds}
+    rows = {f: 0 for f in feeds}
+
+    def event_file(n, day, i):
+        return pa.table({
+            "smba_id": [f"dev_{day}_{i}_{k}" for k in range(n)],
+            "exposure_start_ts": pa.array(range(n), pa.int64()),
+            "exposure_end_ts": pa.array(range(10, n + 10), pa.int64()),
+            "duration": pa.array([10] * n, pa.int64()),
+            "title": ["t"] * n,
+            "content_id": ["c"] * n,
+        })
+
+    def geo_file(n, day, i):
+        return pa.table({
+            "hh_id": [f"hh_{day}_{i}_{k}" for k in range(n)],
+            "smba_id": [f"dev_{day}_{i}_{k}" for k in range(n)],
+            "geo_weight": [1.0] * n,
+        })
+
+    warehouse = str(tmp_path / "raw")
+    ledger_path = str(tmp_path / "ledger")
+    dag = build_ingest_dag(spark, base, warehouse, ledger_path)
+    for day in range(1, 4):
+        drop = {f: 0 for f in feeds}
+        for feed, sub in feeds.items():
+            make = geo_file if feed == "GEO_WEIGHTS" else event_file
+            d = os.path.join(base, sub, f"yyyy=2025/mm=06/dd={day:02d}")
+            os.makedirs(d)
+            for i in range(2):
+                n = 3 + day + i
+                p = os.path.join(d, f"part-{i:05d}.parquet")
+                pq.write_table(make(n, day, i), p)
+                staged[feed].append(p)
+                drop[feed] += n
+                rows[feed] += n
+        res = dag.run()
+        assert list(res) == ["stb_ingest", "acr_ingest", "geo_weights_ingest"]
+        for feed in feeds:
+            got = res[f"{feed.lower()}_ingest"]
+            assert (got.files_loaded, got.rows_loaded) == (2, drop[feed])
+
+    ledger = spark.read.parquet(ledger_path)
+    for feed in feeds:
+        got = [
+            r["file_path"]
+            for r in ledger.filter(F.col("feed") == feed).collect()
+        ]
+        assert len(got) == len(set(got)) == len(staged[feed])
+        assert {p.split(":", 1)[-1] for p in got} == set(staged[feed])
+        assert (
+            read_feed_table(spark, os.path.join(warehouse, feed.lower()), feed)
+            .count() == rows[feed]
+        )
+        assert LoadLedger(spark, ledger_path).seen(feed) == set(got)
+
+    again = dag.run()
+    assert all(
+        r.files_loaded == 0 and r.rows_loaded == 0 for r in again.values()
+    )

@@ -180,6 +180,45 @@ def test_overwrite_partitions_leaves_unlisted(spark, tmp_path):
     assert rows == {(7, "a"), (2, "b")}
 
 
+def test_dynamic_overwrites_leave_session_conf_alone(spark, tmp_path):
+    """``overwrite_partitions`` and the curated landing replace only
+    the partitions they write through the PER-WRITE option: with the
+    session left on static mode they still keep other partitions, and
+    the session conf (which concurrently running tasks also read) is
+    the same afterwards."""
+    from samba_tv_ingest_etl_spark.plans.curation import CurationDag
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        path = str(tmp_path / "t")
+        spark.createDataFrame(
+            [(1, "a"), (2, "b")], ["id", "part"]
+        ).write.partitionBy("part").parquet(path)
+        overwrite_partitions(
+            spark.createDataFrame([(7, "a")], ["id", "part"]), path, ["part"]
+        )
+        assert {tuple(r) for r in spark.read.parquet(path).collect()} == {
+            (7, "a"), (2, "b")
+        }
+        assert spark.conf.get(key) == "static"
+
+        dag = CurationDag(
+            spark, str(tmp_path / "cur"),
+            spark.createDataFrame([], "doc_id long, toks array<string>"),
+        )
+        docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+        dag._write_curated(docs, "r1")
+        dag._write_curated(docs, "r2")
+        assert sorted(
+            r["run_id"] for r in spark.read.parquet(dag.curated_path)
+            .select("run_id").collect()
+        ) == ["r1", "r2"]
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)
+
+
 def test_overwrite_partitions_clears_emptied_date_partition(spark, tmp_path):
     """Partition values that are DATEs: the cleanup path builds the
     hive dir name from str(value) — 'col=2025-06-02' — which must

@@ -110,3 +110,41 @@ def test_delete_by_keys_no_forced_broadcast(spark):
     assert "broadcast" not in analyzed.lower()
     assert out.count() == 5_000
     assert out.filter("k < 5000").count() == 0
+
+
+def test_concurrent_appends_to_one_directory_keep_every_row(spark, tmp_path):
+    """Appends into one directory from several driver threads (the
+    ingest tasks' shared load ledger): no append may lose another's
+    files through the shared ``_temporary/`` staging area."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = str(tmp_path / "t")
+    n = 2 * (os.cpu_count() or 4)  # more writers than cores
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        list(pool.map(
+            lambda i: writer.append(_mk(spark, range(10 * i, 10 * i + 10)),
+                                    path),
+            range(n),
+        ))
+    got = sorted(r.k for r in spark.read.parquet(path).collect())
+    assert got == list(range(10 * n))
+
+
+def test_writer_pools_keep_callers_job_group(spark, tmp_path):
+    """``append_all``/``atomic_overwrite_all`` start their jobs from
+    pool threads; those jobs must carry the caller's job group."""
+    sc = spark.sparkContext
+    group = "test-writer-pool-group"
+    sc.setJobGroup(group, "pooled writes")
+    try:
+        writer.append_all([
+            (_mk(spark, [1]), str(tmp_path / "a"), None),
+            (_mk(spark, [2]), str(tmp_path / "b"), None),
+        ])
+        writer.atomic_overwrite_all([
+            (_mk(spark, [3]), str(tmp_path / "c"), None),
+            (_mk(spark, [4]), str(tmp_path / "d"), None),
+        ])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4

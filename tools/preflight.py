@@ -67,7 +67,9 @@ def main() -> None:
         try:
             with open(full, encoding="utf-8", errors="replace") as f:
                 for i, line in enumerate(f, 1):
-                    if line.startswith(("<<<<<<< ", ">>>>>>> ", "=======\n")) and line.startswith(("<<<<<<< ", ">>>>>>> ")):
+                    # a bare "=======" line is also an RST underline,
+                    # so only the two arrow markers count
+                    if line.startswith(("<<<<<<< ", ">>>>>>> ")):
                         fail(f"conflict marker at {path}:{i}: {line.rstrip()}")
         except FileNotFoundError:
             continue
