@@ -771,6 +771,15 @@ def _increment_survivors(
     )
 
 
+# On-disk schemas of the band index directories (``write_band_index``),
+# declared on every read so none launches a schema-inference job.
+_DOCS_SCHEMA = (
+    "doc_id long, set_size int, shingles array<string>, sig array<long>"
+)
+_BANDS_SCHEMA = "doc_id long, slice array<long>, band int"
+_META_SCHEMA = "num_perm int, bands int"
+
+
 def write_band_index(
     index_shingled: DataFrame,
     path: str,
@@ -875,7 +884,9 @@ def append_band_index(
     )
     fs = jmeta.getFileSystem(sc._jsc.hadoopConfiguration())
     if fs.exists(jmeta):  # pre-meta indexes skip (back-compat)
-        meta = spark.read.parquet(str(jmeta)).collect()[0]
+        meta = spark.read.schema(_META_SCHEMA).parquet(
+            str(jmeta)
+        ).collect()[0]
         if (meta["num_perm"], meta["bands"]) != (num_perm, bands):
             raise ValueError(
                 f"band index at {path} was written with num_perm="
@@ -911,11 +922,13 @@ def read_band_index(
     """(docs, bands) frames of an at-rest index written by
     ``write_band_index`` / ``append_band_index``. The docs scan is
     column-pruned by downstream selects (the band join never touches
-    ``shingles``; the verify probe never touches ``sig``)."""
+    ``shingles``; the verify probe never touches ``sig``). Both reads
+    declare their schemas, so neither launches a schema-inference
+    job."""
     p = path.rstrip("/")
     return (
-        spark.read.parquet(p + "/docs"),
-        spark.read.parquet(p + "/bands"),
+        spark.read.schema(_DOCS_SCHEMA).parquet(p + "/docs"),
+        spark.read.schema(_BANDS_SCHEMA).parquet(p + "/bands"),
     )
 
 

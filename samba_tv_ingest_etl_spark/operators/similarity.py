@@ -27,7 +27,11 @@ Kernel discipline: Python appears ONLY as Arrow-vectorized matmul /
 set kernels (``_imatmul`` float64-BLAS-exact int64) where the JVM
 alternative is an interpreted higher-order function per element —
 never row-at-a-time, and every kernel reproduces the SQL oracle's
-integer/IEEE arithmetic bit-for-bit.
+integer/IEEE arithmetic bit-for-bit. The IVF probe's scoring kernel
+(``_probe_topk``) is one of them: each cluster's candidate rows meet
+only the queries routed to that cluster in one ``_imatmul``, and the
+scaled cosine repeats ``_cos_scaled``'s double ops (NULL on a zero
+norm, as Spark's non-ANSI divide gives).
 """
 
 from __future__ import annotations
@@ -698,19 +702,6 @@ def _centroid_df(spark, cents: dict[int, list[int]]) -> DataFrame:
     return local_df(spark, rows, "c long, cv array<long>, cn long")
 
 
-def _join_dist() -> Column:
-    """Exact int64 squared L2 against a joined centroid row —
-    identical arithmetic to ``_dist_to`` but over COLUMNS, so the
-    generated code contains no centroid literals and Janino compiles
-    it once instead of once per Lloyd iteration (the literal form
-    re-codegens 2-4s every time the centroid values change)."""
-    return (
-        F.col("norm2")
-        - F.lit(2).cast("long") * _dot(F.col("q"), F.col("cv"))
-        + F.col("cn")
-    )
-
-
 def _assign_pandas(
     quantized: DataFrame, cents: dict[int, list[int]], keep: list[str]
 ) -> DataFrame:
@@ -718,10 +709,10 @@ def _assign_pandas(
     pass: each batch computes the full int64 distance matrix
     ``D = norm2 - 2*Q@C^T + |C|^2`` with numpy and takes the per-row
     argmin. Arithmetic and tie-break are identical to the
-    broadcast-join form this replaced (``_join_dist`` + ``min(struct
-    (d, c))``): centroid columns are ordered by ascending centroid
-    id, so numpy's first-minimum argmin IS the lowest-id tie-break,
-    and every value is exact int64 (quantized inputs bound
+    broadcast-join form this replaced (a joined-centroid ``_dot`` +
+    ``min(struct(d, c))``): centroid columns are ordered by ascending
+    centroid id, so numpy's first-minimum argmin IS the lowest-id
+    tie-break, and every value is exact int64 (quantized inputs bound
     ``|q_i| <= QUANT`` so ``|D| <= 4*dim*QUANT^2 < 2^39``) — the
     unrolled-SQL oracle reproduces assignments bit-for-bit.
 
@@ -1100,6 +1091,70 @@ def ivf_assign(
     return quantized.withColumn("cluster", _assign_expr(cents))
 
 
+def _collect_queries(queries_q: DataFrame):
+    """The query batch on the driver as ``(ids, Q, norm2)`` numpy
+    arrays — ONE bounded collect per probe. The batch is
+    broadcast-sized by the probe's contract (the broadcast join this
+    replaced pulled the same rows through the driver), and every
+    routing step and the scoring kernel's closure reuse it."""
+    import numpy as np
+
+    pdf = queries_q.select("vec_id", "q", "norm2").toPandas()
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    Q = (
+        np.stack(pdf["q"].to_numpy()).astype(np.int64)
+        if len(pdf)
+        else np.zeros((0, 0), dtype=np.int64)
+    )
+    return ids, Q, pdf["norm2"].to_numpy(dtype=np.int64)
+
+
+def _nearest(Q, n2, codebook: dict[int, list[int]], n: int):
+    """Ids of each row's ``n`` nearest codebook entries, nearest
+    first, as an ``(rows, min(n, |codebook|))`` int64 array. Exact
+    int64 ``norm2 - 2·q·c + ‖c‖²`` through ``_imatmul``; the stable
+    sort over ascending-id columns orders by ``(d, c)``, the
+    tie-break every assignment and routing step shares."""
+    import numpy as np
+
+    ids = np.asarray(sorted(codebook), dtype=np.int64)
+    width = min(n, len(ids))
+    if not len(Q):
+        return np.zeros((0, width), dtype=np.int64)
+    C = np.asarray([codebook[int(c)] for c in ids], dtype=np.int64)
+    d = n2[:, None] - 2 * _imatmul(Q, C.T) + (C * C).sum(axis=1)[None, :]
+    return ids[np.argsort(d, axis=1, kind="stable")[:, :width]]
+
+
+def _routed_ids(
+    quantized: DataFrame, codebook: dict[int, list[int]], n: int
+) -> list[int]:
+    """Distinct ids among every row's ``n`` nearest codebook entries
+    (``_nearest``), computed map-side — for an append batch, which
+    is not bounded like a probe's query batch. The collect is
+    bounded by the codebook size."""
+    import numpy as np
+    import pandas as pd
+
+    def route(batches):
+        for pdf in batches:
+            if len(pdf):
+                near = _nearest(
+                    np.stack(pdf["q"].to_numpy()).astype(np.int64),
+                    pdf["norm2"].to_numpy(dtype=np.int64),
+                    codebook, n,
+                )
+                yield pd.DataFrame({"c": np.unique(near)})
+
+    return sorted(
+        r["c"]
+        for r in quantized.select("q", "norm2")
+        .mapInPandas(route, schema="c long")
+        .distinct()
+        .collect()
+    )
+
+
 def topk_ivf(
     corpus_q: DataFrame,
     queries_q: DataFrame,
@@ -1123,11 +1178,12 @@ def topk_ivf(
     flat O(n·k) (``_assign_pandas``) by default, or — with
     ``route_width`` set — two-level O(n·√k) routing
     (``coarse_route`` + ``_assign_pandas_routed``), the scale path
-    once k derives from corpus size. The tiny query side probes
-    through the broadcast centroid table (``_join_dist``). Nothing
-    here re-codegens per run; the literal map-side ``ivf_assign``
-    remains the partition-key writer for a persisted 100 TB index."""
-    spark = corpus_q.sparkSession
+    once k derives from corpus size. The tiny query side is routed
+    on the driver against the codebook it already holds
+    (``_nearest``), and the shared ``_probe_topk`` kernel skips every
+    cluster no query probes. Nothing here re-codegens per run; the
+    literal map-side ``ivf_assign`` remains the partition-key writer
+    for a persisted 100 TB index."""
     # no persist here: training manages (and releases) its own cache
     # inside kmeans_centroids; after it returns eagerly, the corpus is
     # scanned exactly once more for the final assignment.
@@ -1135,7 +1191,6 @@ def topk_ivf(
         corpus_q, k=n_centroids, iters=iters, dim=dim,
         train_sample=train_sample,
     )
-    cdf = _centroid_df(spark, cents)
     if route_width is not None:
         assigned = _assign_pandas_routed(
             corpus_q, cents, coarse_route(cents), route_width,
@@ -1143,58 +1198,118 @@ def topk_ivf(
         )
     else:
         assigned = _assign_pandas(corpus_q, cents, keep=["q", "norm2"])
-    return _probe_topk(cdf, assigned, queries_q, k, nprobe)
+    queries = _collect_queries(queries_q)
+    probes = _nearest(queries[1], queries[2], cents, nprobe)
+    return _probe_topk(assigned, queries, probes, k)
 
 
-def _probe_topk(
-    cdf: DataFrame,
-    assigned: DataFrame,
-    queries_q: DataFrame,
-    k: int,
-    nprobe: int,
-) -> DataFrame:
+_TOPK_SCHEMA = "query_id long, cand_id long, rank int, cos_scaled long"
+
+
+def _probe_topk(candidates: DataFrame, queries, probes, k: int) -> DataFrame:
     """The IVF probe/score stage, shared by the inline path
-    (``topk_ivf``) and the at-rest path (``topk_ivf_indexed``) so the
-    two are bit-identical by construction: nprobe nearest centroids
-    per query through the broadcast centroid table (same (dist, id)
-    ordering as the assignment tie-break), candidates joined on the
-    cluster key, exact int64 dot + scaled cosine, row_number top-k."""
+    (``topk_ivf``) and both at-rest paths (``topk_ivf_indexed``,
+    ``topk_ivf_indexed_hier``) so the three are bit-identical by
+    construction. Callers route on the driver: ``queries`` is the
+    collected ``(ids, Q, norm2)`` batch (``_collect_queries``) and
+    ``probes`` each query's nearest cluster ids (``_nearest``, the
+    ``(d, c)`` order of assignment) — no Spark job routes a query.
+
+    Scoring is one Arrow kernel over the candidate rows (vec_id, q,
+    norm2, cluster; already pruned to the probed clusters by the
+    at-rest callers, the whole assigned corpus inline — clusters no
+    query probes are skipped). Each cluster's rows meet only the
+    queries routed to it in one ``_imatmul``; ``cos_scaled`` repeats
+    ``_cos_scaled``'s IEEE ops, ``floor(1e6·dot / sqrt(n_q·n_c))`` in
+    doubles, and is NULL when a norm is zero (Spark's non-ANSI
+    divide by zero), ranking after every scored candidate as in the
+    SQL path. Self-matches are dropped, and each partition emits only
+    its top k per query over DISTINCT ``(query_id, cand_id)`` pairs:
+    a global top-k member ranks at least as high inside its own
+    partition, so the union holds every answer.
+
+    The merge is one ``dropDuplicates(query_id, cand_id)`` plus a
+    ``row_number`` over ``(cos_scaled desc, cand_id)``, both hashed
+    on ``query_id`` so they share one shuffle. That dedup is what
+    keeps a replayed append neutral: the replay leaves bit-identical
+    copies of a vec_id, possibly in different partitions, each of
+    which may surface a copy; collapsing them before ``row_number``
+    gives every candidate one rank, so no duplicate displaces a
+    genuine neighbour."""
+    import numpy as np
+    import pandas as pd
     from pyspark.sql import Window
 
-    c = assigned.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("q").alias("q_c"),
-        F.col("norm2").alias("n_c"),
-        "cluster",
-    )
-    pw = Window.partitionBy("vec_id").orderBy(F.col("d"), F.col("c"))
-    qs = F.broadcast(
-        queries_q.crossJoin(F.broadcast(cdf))
-        .withColumn("d", _join_dist())
-        .withColumn("_pr", F.row_number().over(pw))
-        .filter(F.col("_pr") <= nprobe)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("q").alias("q_q"),
-            F.col("norm2").alias("n_q"),
-            F.col("c").alias("cluster"),
-        )
-    )
-    dot = _dot(F.col("q_q"), F.col("q_c"))
-    scored = (
-        c.join(qs, "cluster")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("dot", dot)
-        .withColumn(
-            "cos_scaled",
-            _cos_scaled(F.col("dot"), F.col("n_q"), F.col("n_c")),
-        )
+    ids, Q, n2 = queries
+    if not len(ids):
+        return candidates.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    # cluster -> indices of the queries routed to it
+    routed_qi = {
+        int(c): np.nonzero((probes == c).any(axis=1))[0]
+        for c in np.unique(probes)
+    }
+    n2_d = n2.astype(np.float64)
+
+    def top(df: pd.DataFrame) -> pd.DataFrame:
+        # (cos desc NULLS LAST, cand_id) per query over distinct pairs
+        df = df.sort_values(
+            ["qi", "null", "neg", "cand_id"], kind="mergesort"
+        ).drop_duplicates(["qi", "cand_id"])
+        return df.groupby("qi", sort=False).head(k)
+
+    def score(batches):
+        best = None
+        for pdf in batches:
+            cl = pdf["cluster"].to_numpy(dtype=np.int64)
+            vec_id = pdf["vec_id"].to_numpy(dtype=np.int64)
+            q = pdf["q"].to_numpy()
+            nc = pdf["norm2"].to_numpy(dtype=np.float64)
+            new = []
+            for c in np.unique(cl):
+                qi = routed_qi.get(int(c))
+                if qi is None:
+                    continue
+                rows = np.nonzero(cl == c)[0]
+                C = np.stack(q[rows]).astype(np.int64)
+                dot = _imatmul(Q[qi], C.T).astype(np.float64)
+                den = np.sqrt(n2_d[qi][:, None] * nc[rows][None, :])
+                null = den == 0.0
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = np.floor(1_000_000.0 * dot / den)
+                cos[null] = 0.0
+                qq = np.repeat(qi, len(rows))
+                cc = np.tile(vec_id[rows], len(qi))
+                keep = cc != ids[qq]
+                new.append(pd.DataFrame({
+                    "qi": qq[keep],
+                    "cand_id": cc[keep],
+                    "null": null.ravel()[keep],
+                    "neg": -cos.ravel().astype(np.int64)[keep],
+                }))
+            if new:
+                prev = [] if best is None else [best]
+                best = top(pd.concat(prev + new, ignore_index=True))
+        if best is not None and len(best):
+            yield pd.DataFrame({
+                "query_id": ids[best["qi"].to_numpy()],
+                "cand_id": best["cand_id"].to_numpy(),
+                "cos_scaled": pd.arrays.IntegerArray(
+                    -best["neg"].to_numpy(), best["null"].to_numpy()
+                ),
+            })
+
+    scored = candidates.select(
+        "vec_id", "q", "norm2", "cluster"
+    ).mapInPandas(
+        score, schema="query_id long, cand_id long, cos_scaled long"
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_scaled").desc(), F.col("cand_id")
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.repartition("query_id")
+        .dropDuplicates(["query_id", "cand_id"])
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "cand_id", "rank", "cos_scaled")
     )
@@ -1340,8 +1455,9 @@ def append_ivf_index(
     Replay semantics: a RETRIED append (crash before the caller's
     offset/ledger commit) duplicates the batch's rows in
     ``vectors/``. Consumers are hardened individually — the probe
-    (``topk_ivf_indexed``) dedupes its pruned candidates by
-    ``vec_id``, the increment (``semdedup_increment_against_index``)
+    stage (``_probe_topk``) dedupes its scored ``(query_id,
+    cand_id)`` pairs before ranking, the increment
+    (``semdedup_increment_against_index``)
     is duplicate-neutral by distinct + anti-join — so duplicate
     appends are result-neutral for every shipped reader, matching
     the band index's contract. A consumer added later must either
@@ -1368,6 +1484,14 @@ def append_ivf_index(
 # raises loudly instead of letting the collect OOM the driver.
 MAX_CODEBOOK_ROWS = 1_000_000
 
+# On-disk schemas of the index directories (``write_ivf_index``):
+# declared on every read so none launches a schema-inference job.
+_CELLS_SCHEMA = "c long, cv array<long>, cn long"
+_CENTROIDS_SCHEMA = _CELLS_SCHEMA + ", cell long"
+_VECTORS_SCHEMA = (
+    "cluster long, vec_id long, q array<long>, norm2 long, cell long"
+)
+
 
 def read_ivf_index(
     spark, path: str
@@ -1381,10 +1505,10 @@ def read_ivf_index(
     pull stays bounded whatever the on-disk size, without the
     separate count job (a full extra scan per probe) the guard used
     to pay; the error names the hierarchical-codebook successor.
-    The cell partition column comes back as its partition-inferred
-    type, so it is cast to the long the probe filters expect."""
+    Both reads declare their schemas (no schema-inference job), the
+    cell partition column as the long the probe filters expect."""
     p = path.rstrip("/")
-    cdf = spark.read.parquet(p + "/centroids")
+    cdf = spark.read.schema(_CENTROIDS_SCHEMA).parquet(p + "/centroids")
     rows = cdf.limit(MAX_CODEBOOK_ROWS + 1).collect()
     if len(rows) > MAX_CODEBOOK_ROWS:
         raise ValueError(
@@ -1399,10 +1523,15 @@ def read_ivf_index(
     cents = {
         int(r["c"]): [int(v) for v in r["cv"]] for r in rows
     }
-    vectors = spark.read.parquet(p + "/vectors").withColumn(
-        "cell", F.col("cell").cast("long")
+    return cents, _read_vectors(spark, p)
+
+
+def _read_vectors(spark, path: str) -> DataFrame:
+    """The at-rest ``vectors/`` frame, read with its declared schema
+    (no schema-inference job; ``cell`` typed long)."""
+    return spark.read.schema(_VECTORS_SCHEMA).parquet(
+        path.rstrip("/") + "/vectors"
     )
-    return cents, vectors
 
 
 # Max literal count for a codegen'd ``cluster IN (...)`` predicate:
@@ -1457,44 +1586,17 @@ def topk_ivf_indexed(
     cluster ids as an in-file filter over those cells). Identical
     output to ``topk_ivf`` given the same codebook — the probe/score
     stage IS ``_probe_topk``, shared code, and the pre-filters only
-    remove data no query probes."""
+    remove data no query probes. Routing runs once, on the driver
+    (``_nearest`` over the collected batch); replayed appends are
+    neutralized inside the shared stage (see ``_probe_topk``)."""
     cents, vectors = read_ivf_index(spark, path)
-    cdf = _centroid_df(spark, cents)
-    from pyspark.sql import Window
-
-    pw = Window.partitionBy("vec_id").orderBy(F.col("d"), F.col("c"))
-    probed = [
-        r["c"]
-        for r in (
-            queries_q.crossJoin(F.broadcast(cdf))
-            .withColumn("d", _join_dist())
-            .withColumn("_pr", F.row_number().over(pw))
-            .filter(F.col("_pr") <= nprobe)
-            .select("c")
-            .distinct()
-            .collect()
-        )
-    ]
+    queries = _collect_queries(queries_q)
+    probes = _nearest(queries[1], queries[2], cents, nprobe)
+    probed = sorted(set(probes.ravel().tolist()))
     _, cell_of = coarse_route(cents)
     cells = sorted({cell_of[c] for c in probed})
-    # dropDuplicates(vec_id): a REPLAYED append (retry after a crash
-    # between append and its caller's offset/ledger commit) leaves
-    # bit-identical duplicate rows in vectors/ — result-neutral for
-    # the increment consumer (distinct + anti-join by id) but NOT for
-    # ranking: a duplicated vector would take two row_number ranks
-    # and displace a genuine neighbor (r10 advice). The dedup runs on
-    # the PRUNED candidate set (bounded by the probed clusters'
-    # width), never the full index, and rows sharing a vec_id are
-    # identical by the per-row assignment determinism, so any
-    # representative is exact.
     return _probe_topk(
-        cdf,
-        _prune_to_clusters(vectors, cells, probed).dropDuplicates(
-            ["vec_id"]
-        ),
-        queries_q,
-        k,
-        nprobe,
+        _prune_to_clusters(vectors, cells, probed), queries, probes, k
     )
 
 
@@ -1519,7 +1621,7 @@ def read_ivf_cells(spark, path: str) -> dict[int, list[int]]:
         )
     return {
         int(r["c"]): [int(v) for v in r["cv"]]
-        for r in spark.read.parquet(p).collect()
+        for r in spark.read.schema(_CELLS_SCHEMA).parquet(p).collect()
     }
 
 
@@ -1537,9 +1639,7 @@ def _read_sub_codebook(
     O(probed cells · k/√k) = O(√k) per probe batch."""
     p = path.rstrip("/") + "/centroids"
     cell_ids = sorted({int(g) for g in cells})
-    cdf = spark.read.parquet(p).withColumn(
-        "cell", F.col("cell").cast("long")
-    )
+    cdf = spark.read.schema(_CENTROIDS_SCHEMA).parquet(p)
     if len(cell_ids) <= ISIN_LITERAL_CAP:
         sub = cdf.filter(F.col("cell").isin(cell_ids))
     else:
@@ -1559,27 +1659,6 @@ def _read_sub_codebook(
         {int(r["c"]): [int(v) for v in r["cv"]] for r in rows},
         {int(r["c"]): int(r["cell"]) for r in rows},
     )
-
-
-def _nearest_ids(queries_q: DataFrame, cdf: DataFrame, n: int) -> list[int]:
-    """Distinct ids of each query's ``n`` nearest codebook rows —
-    the (dist, id) ordering shared with assignment tie-breaks.
-    Bounded collect: |queries| · n ids."""
-    from pyspark.sql import Window
-
-    pw = Window.partitionBy("vec_id").orderBy(F.col("d"), F.col("c"))
-    return [
-        r["c"]
-        for r in (
-            queries_q.crossJoin(F.broadcast(cdf))
-            .withColumn("d", _join_dist())
-            .withColumn("_pr", F.row_number().over(pw))
-            .filter(F.col("_pr") <= n)
-            .select("c")
-            .distinct()
-            .collect()
-        )
-    ]
 
 
 def topk_ivf_indexed_hier(
@@ -1611,8 +1690,22 @@ def topk_ivf_indexed_hier(
     oracle; ``tests/test_ivf_index.py`` pins the all-cells identity
     plus the bounded-pull contract.
 
-    The default width is MEASURED (tools/hier_frontier.py, sf1 —
-    313 centroids / 18 cells / nprobe=2, SCALING_r13 §2): batched
+    Routing happens once, on the driver: the query batch is collected
+    once (``_collect_queries``) and routed twice with exact int64
+    ``_nearest`` — through ``cells/`` to pick the sub-codebook cells,
+    then through that sub-codebook to pick each query's nprobe
+    clusters, both ordered by ``(d, c)``. Scoring is the shared
+    ``_probe_topk`` kernel: per-partition top k over distinct
+    ``(query_id, cand_id)`` pairs, then one dedup + ``row_number``
+    merge on a single shuffle. The pair dedup before ranking is what
+    keeps a replayed append neutral — the replay's bit-identical
+    vec_id copies collapse to one candidate wherever they land. With
+    the cells/, centroids/ and vectors/ schemas declared, a probe
+    costs the two codebook reads, the query collect and the scoring
+    stage's two jobs (``tests/test_ivf_index.py`` pins the count).
+
+    The default width is MEASURED (sf1 — 313 centroids / 18 cells /
+    nprobe=2, SCALING_r13 §2): batched
     probes agree with the flat probe EXACTLY at every width (the
     sub-codebook pool is the union of the batch's routed cells, so a
     diverse batch saturates it), and worst-case SOLO probes at
@@ -1622,26 +1715,19 @@ def topk_ivf_indexed_hier(
     buys +0.002 for 2× the pull. Single-query callers at fleet
     scale can widen to 8; batch callers lose nothing at 4."""
     cells_cb = read_ivf_cells(spark, path)
-    gdf = _centroid_df(spark, cells_cb)
+    queries = _collect_queries(queries_q)
+    _, Q, n2 = queries
     width = len(cells_cb) if probe_cells is None else probe_cells
-    routed = _nearest_ids(queries_q, gdf, width)
-    cents_sub, cell_of_sub = _read_sub_codebook(spark, path, routed)
-    cdf = _centroid_df(spark, cents_sub)
-    probed = _nearest_ids(queries_q, cdf, nprobe)
+    routed = _nearest(Q, n2, cells_cb, width)
+    cents_sub, cell_of_sub = _read_sub_codebook(
+        spark, path, routed.ravel().tolist()
+    )
+    probes = _nearest(Q, n2, cents_sub, nprobe)
+    probed = sorted(set(probes.ravel().tolist()))
     cells = sorted({cell_of_sub[c] for c in probed})
-    vectors = spark.read.parquet(
-        path.rstrip("/") + "/vectors"
-    ).withColumn("cell", F.col("cell").cast("long"))
-    # dropDuplicates(vec_id): replayed-append neutrality, same as the
-    # flat probe (see topk_ivf_indexed)
     return _probe_topk(
-        cdf,
-        _prune_to_clusters(vectors, cells, probed).dropDuplicates(
-            ["vec_id"]
-        ),
-        queries_q,
-        k,
-        nprobe,
+        _prune_to_clusters(_read_vectors(spark, path), cells, probed),
+        queries, probes, k,
     )
 
 
@@ -1666,8 +1752,7 @@ def append_ivf_index_hier(
 
     spark = new_q.sparkSession
     cells_cb = read_ivf_cells(spark, path)
-    gdf = _centroid_df(spark, cells_cb)
-    routed = _nearest_ids(new_q, gdf, min(route_width, len(cells_cb)))
+    routed = _routed_ids(new_q, cells_cb, route_width)
     cents_sub, cell_of_sub = _read_sub_codebook(spark, path, routed)
     assigned = _assign_pandas_routed(
         new_q, cents_sub, (cells_cb, cell_of_sub), route_width,

@@ -6,6 +6,7 @@ must physically prune to the probed cluster partitions."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from samba_tv_ingest_etl_spark.operators import similarity as S
 
@@ -127,12 +128,25 @@ def test_semdedup_increment_sequential_equals_union(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_probe_neutral_to_replayed_append(spark, tmp_path):
+_PROBES = {
+    "flat": lambda spark, path, probes: S.topk_ivf_indexed(
+        spark, path, probes, k=10, nprobe=2
+    ),
+    "hier": lambda spark, path, probes: S.topk_ivf_indexed_hier(
+        spark, path, probes, k=10, nprobe=2
+    ),
+}
+
+
+@pytest.mark.parametrize("probe", sorted(_PROBES))
+def test_probe_neutral_to_replayed_append(spark, tmp_path, probe):
     """A RETRIED append (crash before the caller's ledger commit)
     leaves bit-identical duplicate rows in vectors/; the probe must
-    rank as if the append ran once — without the candidate-side
-    dropDuplicates(vec_id) a duplicated vector takes two row_number
-    ranks and displaces a genuine neighbor (r10 advice)."""
+    rank as if the append ran once — without the probe stage's
+    (query_id, cand_id) dedup a duplicated vector takes two
+    row_number ranks and displaces a genuine neighbor (r10 advice).
+    Both at-rest probes share that stage."""
+    run = _PROBES[probe]
     q = _corpus(spark)
     probes = q.filter(F.col("vec_id") < 10)
     cents = S.kmeans_centroids(q, k=8, iters=2, train_sample=(1, 4))
@@ -143,7 +157,7 @@ def test_probe_neutral_to_replayed_append(spark, tmp_path):
     )
     batch = q.filter(F.col("vec_id") % 2 == 1)
     S.append_ivf_index(batch, once, route_width=4)
-    want = _rows(S.topk_ivf_indexed(spark, once, probes, k=10, nprobe=2))
+    want = _rows(run(spark, once, probes))
 
     twice = str(tmp_path / "twice")
     S.write_ivf_index(
@@ -152,7 +166,7 @@ def test_probe_neutral_to_replayed_append(spark, tmp_path):
     )
     S.append_ivf_index(batch, twice, route_width=4)
     S.append_ivf_index(batch, twice, route_width=4)  # the replay
-    got = _rows(S.topk_ivf_indexed(spark, twice, probes, k=10, nprobe=2))
+    got = _rows(run(spark, twice, probes))
     assert got == want
 
 
@@ -352,3 +366,167 @@ def test_hier_requires_cells_level(spark, tmp_path):
     shutil.rmtree(path + "/cells")
     with pytest.raises(ValueError, match="cells/"):
         S.topk_ivf_indexed_hier(spark, path, q.filter(F.col("vec_id") < 2))
+
+
+# ---------------------------------------------------------------------
+# the probe stage: driver routing and the Arrow scoring kernel
+
+
+def test_zero_norm_scores_null_and_ranks_last(spark, tmp_path):
+    """A zero-norm side makes the SQL ``_cos_scaled`` NULL (non-ANSI
+    divide by zero) and the NULL ranks last in the desc window; the
+    scoring kernel must emit the same NULL, not numpy's NaN cast to
+    int64 min. Every cluster is probed and k covers the corpus, so
+    each probe must rank the whole corpus exactly as
+    ``topk_bruteforce`` (the SQL path) does."""
+    q = _corpus(spark)
+    zid = 10**6
+    zero = q.filter(F.col("vec_id") == 0).select(
+        (F.col("vec_id") + zid).alias("vec_id"),
+        F.transform("q", lambda x: x * 0).alias("q"),
+        F.lit(0).cast("long").alias("norm2"),
+    )
+    corpus = q.unionByName(zero).localCheckpoint(eager=True)
+    queries = corpus.filter(F.col("vec_id").isin(1, zid))
+    n = corpus.count()
+    path = str(tmp_path / "ivf")
+    S.write_ivf_index(corpus, path, n_centroids=8, iters=2)
+    want = _rows(S.topk_bruteforce(corpus, queries, k=n))
+    hier = _rows(
+        S.topk_ivf_indexed_hier(
+            spark, path, queries, k=n, nprobe=n, probe_cells=None
+        )
+    )
+    inline = _rows(
+        S.topk_ivf(corpus, queries, k=n, n_centroids=8, nprobe=n)
+    )
+    assert hier == want and inline == want
+    real = sorted((r for r in hier if r[0] == 1), key=lambda r: r[2])
+    assert real[-1][1] == zid and real[-1][3] is None
+    assert all(r[3] is not None for r in real[:-1])
+    zq = sorted((r for r in hier if r[0] == zid), key=lambda r: r[2])
+    assert len(zq) == n - 1 and all(r[3] is None for r in zq)
+    assert [r[1] for r in zq] == sorted(r[1] for r in zq)
+
+
+def test_probe_stage_merges_duplicates_across_partitions(spark, tmp_path):
+    """A replay's duplicate rows can land in different scan partitions,
+    where the per-partition dedup never sees both copies: the merge
+    must still give each (query_id, cand_id) one rank. The union of
+    the pruned scan with itself puts every copy in its own partition."""
+    q = _corpus(spark)
+    path = str(tmp_path / "ivf")
+    S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
+    cents, vectors = S.read_ivf_index(spark, path)
+    queries = S._collect_queries(q.filter(F.col("vec_id") < 10))
+    probes = S._nearest(queries[1], queries[2], cents, 2)
+    probed = sorted(set(probes.ravel().tolist()))
+    _, cell_of = S.coarse_route(cents)
+    pruned = S._prune_to_clusters(
+        vectors, sorted({cell_of[c] for c in probed}), probed
+    )
+    once = _rows(S._probe_topk(pruned, queries, probes, 10))
+    twice = _rows(
+        S._probe_topk(pruned.unionByName(pruned), queries, probes, 10)
+    )
+    assert twice == once and len(once) == 100
+
+
+def _planted_index(spark, path):
+    """Four axis centroids and a query equidistant from centroids 0
+    and 1 — and, after ``coarse_route`` folds them into two cells,
+    from cells 0 and 1. Candidates 3 and 7 are the same vector."""
+    cents = {
+        0: [100, 0, 0, 0],
+        1: [0, 100, 0, 0],
+        2: [-100, 0, 0, 0],
+        3: [0, -100, 0, 0],
+    }
+    vecs = {
+        3: [90, 10, 0, 0],
+        5: [80, 30, 0, 0],
+        7: [90, 10, 0, 0],
+        4: [10, 90, 0, 0],
+        6: [30, 80, 0, 0],
+        8: [-90, 5, 0, 0],
+        9: [5, -90, 0, 0],
+        100: [50, 50, 0, 0],
+    }
+
+    def frame(ids):
+        return spark.createDataFrame(
+            [(i, vecs[i], sum(v * v for v in vecs[i])) for i in ids],
+            "vec_id long, q array<long>, norm2 long",
+        )
+
+    S.write_ivf_index(frame(sorted(vecs)[:-1]), path, cents=cents)
+    return frame([100])
+
+
+def test_planted_ties_break_to_lower_ids(spark, tmp_path):
+    """Routing ties go to the lower centroid (and cell) id, and
+    equal-cosine candidates rank the lower cand_id first — the
+    ``(d, c)`` and ``(cos_scaled desc, cand_id)`` orders of the SQL
+    path. Routing the tie to centroid 1 would return 4 and 6."""
+    path = str(tmp_path / "ivf")
+    query = _planted_index(spark, path)
+    _, cell_of = S.coarse_route(S.read_ivf_index(spark, path)[0])
+    assert cell_of == {0: 0, 1: 1, 2: 1, 3: 0}
+    cos = [
+        int(1e6 * 5500 / (5000 * 7300) ** 0.5),
+        int(1e6 * 5000 / (5000 * 8200) ** 0.5),
+    ]
+    want = sorted(
+        [(100, 5, 1, cos[0]), (100, 3, 2, cos[1]), (100, 7, 3, cos[1])]
+    )
+    assert _rows(
+        S.topk_ivf_indexed(spark, path, query, k=10, nprobe=1)
+    ) == want
+    for width in (1, None):
+        assert _rows(
+            S.topk_ivf_indexed_hier(
+                spark, path, query, k=10, nprobe=1, probe_cells=width
+            )
+        ) == want
+
+
+def test_empty_query_batch_returns_empty_frame(spark, tmp_path):
+    """No queries, no rows — but still the 4-column result frame."""
+    q = _corpus(spark)
+    none = q.filter(F.col("vec_id") < 0)
+    path = str(tmp_path / "ivf")
+    S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
+    for out in (
+        S.topk_ivf_indexed(spark, path, none),
+        S.topk_ivf_indexed_hier(spark, path, none),
+        S.topk_ivf(q, none, n_centroids=8),
+    ):
+        assert out.columns == ["query_id", "cand_id", "rank", "cos_scaled"]
+        assert out.collect() == []
+
+
+# Spark jobs one hierarchical probe may launch: the cells/ read, the
+# query collect, the sub-codebook read (its bounded limit-collect can
+# take two jobs) and the scoring stage's shuffle-map and result jobs.
+# The round-trip analog of the plan-shape pin in
+# tests/test_keep_min_id_plan.py: routing in Spark cost 20 jobs here.
+MAX_HIER_PROBE_JOBS = 6
+
+
+def test_hier_probe_job_count(spark, tmp_path):
+    q = _corpus(spark)
+    probes = q.filter(F.col("vec_id") < 10)
+    path = str(tmp_path / "ivf")
+    S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
+    sc = spark.sparkContext
+    group = "hier-probe-job-count"
+    sc.setJobGroup(group, "one hierarchical probe")
+    try:
+        rows = S.topk_ivf_indexed_hier(
+            spark, path, probes, k=10, nprobe=2
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(rows) == 100
+    assert 1 <= len(jobs) <= MAX_HIER_PROBE_JOBS, sorted(jobs)

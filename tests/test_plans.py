@@ -158,11 +158,16 @@ def test_ivf_assignment_is_map_side_only(spark):
     assert "Python" not in plan  # all JVM-side expressions
 
 
-def test_ivf_probe_join_broadcasts_queries(spark, registry):
-    """q32: the probed-queries side broadcasts; the corpus is scored
-    in place (shuffle only for the final per-query top-k window)."""
+def test_ivf_probe_scores_corpus_in_place(spark, registry):
+    """q32: queries are routed on the driver and ride the scoring
+    kernel, so nothing joins them to the corpus: the corpus is scored
+    in place, and the only hash exchange is the final per-query
+    top-k merge's."""
     plan = plan_of(registry["q32_ann_topk_ivf"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
+    assert "Join" not in plan
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#", plan) == [
+        "query_id"
+    ]
 
 
 def test_rollup_reuses_per_hh_without_cache_pin(spark, registry):
