@@ -38,12 +38,15 @@ def merge_insert_only(
     source: DataFrame, target: DataFrame | None, keys: Sequence[str]
 ) -> DataFrame:
     """Rows of ``source`` whose key tuple is absent from ``target``
-    (the WHEN NOT MATCHED INSERT set). ``target=None`` = first load."""
+    (the WHEN NOT MATCHED INSERT set). ``target=None`` = first load.
+    The rows keep ``source``'s column order (a join on ``keys`` would
+    move the keys first), so an appended delta lands in the same
+    column order as the table's first load."""
     if target is None:
         return source
     return source.join(
         target.select(*keys).distinct(), on=list(keys), how="left_anti"
-    )
+    ).select(*source.columns)
 
 
 def delete_by_keys(
@@ -58,12 +61,14 @@ def delete_by_keys(
     but a multi-day backfill can make it arbitrarily large, and a
     forced ``F.broadcast`` would collect it to the driver regardless.
     AQE sizes the distinct key set at runtime and picks broadcast when
-    it actually fits (``spark.sql.adaptive.autoBroadcastJoinThreshold``)."""
+    it actually fits (``spark.sql.adaptive.autoBroadcastJoinThreshold``).
+    The survivors keep ``target``'s column order, so a rewrite lands in
+    the table's own order."""
     return target.join(
         keys_df.select(*keys).distinct(),
         on=list(keys),
         how="left_anti",
-    )
+    ).select(*target.columns)
 
 
 def semi_join_keys(

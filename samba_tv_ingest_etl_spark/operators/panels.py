@@ -65,8 +65,10 @@ def attribute_panels(
 ) -> DataFrame:
     """events + ``panel_monday`` = MAX covering Monday (NULL if none)."""
     if strategy == "array":
+        # dedupe on the driver: a DISTINCT would cost an exchange job
+        # for a relation of one row per panel Monday
         mondays = sorted(
-            r["panel_monday"] for r in windows.select("panel_monday").distinct().collect()
+            {r["panel_monday"] for r in windows.select("panel_monday").collect()}
         )
         if not mondays:
             return events.withColumn(out_col, F.lit(None).cast("date"))

@@ -17,7 +17,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from .. import schemas
 from ..operators.metrics import audience_metrics
 from ..operators.panels import attribute_panels, panel_windows
 from ..operators.sessionize import sessionize
@@ -78,6 +80,14 @@ class Warehouse:
     # the ACID upgrade of SCALE_LAYOUT: the one table the incremental
     # DAG rewrites across multiple partitions per pass
     MANIFEST_TABLES = frozenset({"viewing_sessions"})
+    # declared schemas of the modelling tables, in write order: a read
+    # with one launches no footer-inference job
+    SCHEMAS = {
+        "panel_windows": schemas.PANEL_WINDOWS,
+        "raw_viewing_events": schemas.RAW_VIEWING_EVENTS,
+        "weighted_events": schemas.WEIGHTED_EVENTS,
+        "viewing_sessions": schemas.VIEWING_SESSIONS,
+    }
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -97,12 +107,31 @@ class Warehouse:
                 f"manifest table {table!r} needs exactly one layout "
                 f"partition column, got {cols!r}"
             )
-        return ManifestTable(self.spark, self.path(table), cols[0])
+        return ManifestTable(
+            self.spark, self.path(table), cols[0], self.schema(table)
+        )
+
+    def schema(self, table: str) -> StructType | None:
+        """``table``'s declared schema in the order a read returns
+        it: hive partition columns last. None for a table without
+        one."""
+        declared = self.SCHEMAS.get(table)
+        if declared is None:
+            return None
+        part = self.partitioning(table) or []
+        return StructType(
+            [f for f in declared.fields if f.name not in part]
+            + [declared[c] for c in part]
+        )
 
     def read(self, table: str) -> DataFrame:
         if self.is_manifest(table):
             return self.manifest_table(table).read()
-        return self.spark.read.parquet(self.path(table))
+        schema = self.schema(table)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self.path(table))
 
     def read_partitions(self, table: str, values: list) -> DataFrame:
         """Read only the listed partition values. Manifest backend:

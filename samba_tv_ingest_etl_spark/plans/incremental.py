@@ -33,25 +33,29 @@ Fidelity notes (each a correctness trap the oracle tests pin):
 
 Scale: each task reads only the watermark slice (partition pruning on
 ``metadata_date`` when raw tables are date-partitioned); the affected
-keys set is DISTINCT over that slice — broadcast into both the DELETE
-anti-join and the recompute semi-join. The recompute shuffles only the
-affected groups. With the default flat layout the DELETE rewrites
-``viewing_sessions`` once per pass (atomic swap); with
-``Warehouse.SCALE_LAYOUT`` the pass rewrites ONLY the touched
-``panel_monday`` partitions (``_update_sessions_partitioned``) — the
-100 TB path. A Delta backend would slot into the same Warehouse seam
-for file-level deletes.
+keys set is a DISTINCT over that slice, planned into the recompute
+semi-join (broadcast) and the DELETE anti-join rather than cached. The
+recompute shuffles only the affected groups. With the default flat
+layout the DELETE rewrites ``viewing_sessions`` once per pass (atomic
+swap); with ``Warehouse.SCALE_LAYOUT`` the pass reads and rewrites
+ONLY the touched ``panel_monday`` partitions — the 100 TB path. A
+Delta backend would slot into the same Warehouse seam for file-level
+deletes.
 
 At daily-drop sizes the pass is bound by driver round trips, not by
 executor work (traced spans keep the executors 6-21% busy), so the
 pass is built to make few of them: tasks 1 and 2 run concurrently
 (``TaskDag.run``); the root reads ``task_control`` once, with its
-declared schema, for every task; the merges take their row counts
-from the append job (``Observation``) instead of a count job over a
-materialized delta; and the control task gets all three feed maxima
-from one job and writes its two rows as JVM literals. On 4 vCPUs
-(default perfbench scale) this cut the ingest plus incremental pass
-from 67 Spark jobs to 44. The feed maxima are still a full-history
+declared schema, for every task, and every modelling table is read
+with its declared schema (``Warehouse.SCHEMAS``), so no read infers
+one; the merges take their row counts from the append job
+(``Observation``) instead of a count job over a materialized delta;
+the sessions task is one plan with one write action, whose
+observation reports the recomputed-session count and the touched
+Mondays; and the control task gets all three feed maxima from one job
+and writes its two rows as JVM literals. On 4 vCPUs (default
+perfbench scale) the ingest plus incremental pass makes 30 Spark
+jobs, 67 before any of this. The feed maxima are still a full-history
 scan of ``metadata_date``.
 """
 
@@ -204,131 +208,159 @@ def update_viewing_sessions(wh: Warehouse, wm: dt.date | None = None) -> int:
     """Task 4 (``etl-dag.sql:86-124``): affected-key recompute.
     Find touched (hh_id, title, content_id) groups -> DELETE their
     sessions -> re-sessionize those groups from ALL their weighted
-    events -> INSERT.
+    events -> INSERT. Returns the number of recomputed sessions.
 
-    Three storage strategies, selected by the Warehouse layout:
+    One plan, one write action: the affected keys, the recompute,
+    the survivors and the commit's bookkeeping are a single DataFrame
+    (``_rewrite_sessions``), and its write is the task's only action
+    on the flat and hive layouts (AQE still runs the plan's shuffle
+    and broadcast stages as jobs of their own). The existing
+    sessions it reads depend on the Warehouse layout, and so does
+    its commit:
 
-    - default: DELETE + INSERT commit together as ONE atomic table
-      swap — stronger than the reference's two statements, same
-      result; but the swap rewrites the whole table every pass.
+    - default (flat): the whole table minus the affected groups'
+      sessions, plus the recomputed ones, committed as ONE atomic
+      table swap — stronger than the reference's two statements,
+      same result; but the swap rewrites the whole table every pass.
     - ``viewing_sessions`` partitioned on ``panel_monday``
-      (``Warehouse.SCALE_LAYOUT``): rewrite ONLY the touched
-      Mondays. A session's ``panel_monday`` is a grouping column
-      carried from its group's weighted events, so every existing
-      or recomputed session of an affected group lives under a
-      Monday present in that group's events — the affected-partition
-      set is a DISTINCT over the (already-computed) affected slice,
-      no extra scan of the sessions table. At 100 TB this turns the
-      daily pass from a full-table rewrite into a handful of
-      directory rewrites.
+      (``Warehouse.SCALE_LAYOUT``): only the touched Mondays are
+      read and rewritten. A session's ``panel_monday`` is a grouping
+      column carried from its group's weighted events, so every
+      existing or recomputed session of an affected group lives
+      under a Monday of that group's events. The existing sessions
+      are a left-semi join on those Mondays inside the plan, which
+      dynamic partition pruning turns into a directory-pruned scan;
+      the write is a dynamic partition overwrite, one file per
+      Monday. At 100 TB this turns the daily pass from a full-table
+      rewrite into a handful of directory rewrites.
     - additionally listed in ``Warehouse.manifest``
-      (``MANIFEST_TABLES``): same scoped rewrite, but committed
+      (``MANIFEST_TABLES``): the same scoped rewrite, committed
       through ``sources/manifest.py`` — every touched Monday flips
-      in ONE ``_CURRENT`` pointer swap, restoring the
-      cross-partition atomicity the plain hive backend trades away.
+      in ONE ``_CURRENT`` pointer swap, restoring the cross-partition
+      atomicity the plain hive backend trades away. The manifest
+      prunes before any listing, so this backend collects the
+      touched Mondays first (one job).
+
+    A touched Monday can lose every session (a late event re-cuts a
+    group's sessions into parts below the 180 s floor); both
+    partitioned commits clear such a Monday, using the expected
+    Mondays the write job observes.
     """
+    from ..sources.writer import overwrite_partitions
+
     if wm is None:
         wm = read_watermark(wh, RAW_WATERMARK)
     if not wh.exists("weighted_events"):
         return 0
     weighted = wh.read("weighted_events").drop("created_at")
-    # TEMP TABLE affected_sessions_keys — read twice, so cache (S11)
+    # TEMP TABLE affected_sessions_keys: a DISTINCT over the new slice,
+    # planned into every consumer (no cache, no extra job)
     keys = (
         weighted.filter(F.col("metadata_date") > F.lit(wm))
         .select(*AFFECTED_KEYS)
         .distinct()
-        .cache()
     )
-    try:
-        affected_events = semi_join_keys(weighted, keys, AFFECTED_KEYS)
-        new_sessions = build_viewing_sessions(affected_events).withColumn(
-            "created_at", F.current_timestamp()
-        )
-        if not wh.exists("viewing_sessions"):
-            # bootstrap: the count is only the RETURN value, never a
-            # decision, so take it from the write job itself
-            # (Observation) — one evaluation of the full-history
-            # sessionize, and nothing history-sized is materialized
-            # on executor disks the way a localCheckpoint would
-            obs = Observation()
-            wh.write(
-                new_sessions.observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                ),
-                "viewing_sessions",
-            )
-            return int(obs.get["n"])
-        # INCREMENTAL branches: the recomputed sessions are read by
-        # BOTH the n_new count and the table write (union side); the
-        # re-sessionize of affected groups is the expensive half of
-        # this task, and its output is affected-batch-bounded —
-        # materialize once (and freeze created_at across consumers).
-        # The bootstrap branch above stays double-eval: there the
-        # "affected" set is the entire history, whose materialization
-        # at fleet scale costs more than the second evaluation.
-        new_sessions = new_sessions.localCheckpoint(eager=True)
-        if wh.partitioning("viewing_sessions") == ["panel_monday"]:
-            return _update_sessions_partitioned(
-                wh, keys, affected_events, new_sessions
-            )
-        survivors = delete_by_keys(
-            wh.read("viewing_sessions"), keys, AFFECTED_KEYS
-        )
-        out = survivors.unionByName(new_sessions)
-        n_new = new_sessions.count()
-        wh.write(out, "viewing_sessions")
-        return n_new
-    finally:
-        keys.unpersist()
-
-
-def _update_sessions_partitioned(
-    wh: Warehouse,
-    keys: DataFrame,
-    affected_events: DataFrame,
-    new_sessions: DataFrame,
-) -> int:
-    """Partition-scoped DELETE+INSERT on the ``panel_monday`` hive
-    layout: read only the affected Mondays (directory-pruned scan),
-    anti-join out the affected groups' old sessions, union the
-    recomputed ones, dynamic-partition-overwrite exactly those
-    Mondays. Mondays whose every session belonged to an affected
-    group and got none back are cleared explicitly
-    (``expected_partitions``) — dynamic overwrite alone cannot
-    delete a partition it writes no rows to.
-
-    On the manifest backend the same plan commits through ONE
-    manifest swap: all touched Mondays flip together (or not at
-    all — a crash mid-commit leaves readers on the previous
-    version), and because the commit writes fresh immutable
-    directories, the survivors' self-read needs no
-    ``localCheckpoint`` lineage cut — the files it reads are never
-    replaced, only de-referenced."""
-    from ..sources.writer import overwrite_partitions
-
-    mondays = sorted(
-        r[0]
-        for r in affected_events.select("panel_monday").distinct().collect()
-        if r[0] is not None
+    affected_events = semi_join_keys(weighted, keys, AFFECTED_KEYS)
+    new_sessions = build_viewing_sessions(affected_events).withColumn(
+        "created_at", F.current_timestamp()
     )
-    if not mondays:
-        return 0
-    existing = wh.read_partitions("viewing_sessions", mondays)
-    survivors = delete_by_keys(existing, keys, AFFECTED_KEYS)
-    out = survivors.unionByName(new_sessions)
-    n_new = new_sessions.count()
-    if wh.is_manifest("viewing_sessions"):
-        wh.manifest_table("viewing_sessions").commit_dataframe(
-            out, expected_partitions=mondays
+    if not wh.exists("viewing_sessions"):
+        # bootstrap: the count is only the RETURN value, never a
+        # decision, so take it from the write job itself
+        # (Observation) — one evaluation of the full-history
+        # sessionize, and nothing history-sized is materialized
+        # on executor disks the way a localCheckpoint would
+        obs = Observation()
+        wh.write(
+            new_sessions.observe(obs, F.count(F.lit(1)).alias("n")),
+            "viewing_sessions",
+        )
+        return int(obs.get["n"])
+
+    mondays = affected_events.select("panel_monday").distinct()
+    manifest = wh.is_manifest("viewing_sessions")
+    by_monday = wh.partitioning("viewing_sessions") == ["panel_monday"]
+    if manifest:
+        listed = [r[0] for r in mondays.collect()]
+        if not listed:
+            return 0
+        existing = wh.read_partitions("viewing_sessions", listed)
+    elif by_monday:
+        existing = wh.read("viewing_sessions").join(
+            F.broadcast(mondays), "panel_monday", "left_semi"
         )
     else:
+        existing = wh.read("viewing_sessions")
+    out, obs = _rewrite_sessions(
+        existing, keys, new_sessions, mondays, by_monday
+    )
+
+    def expected() -> list:
+        return obs.get["expected"]
+
+    if manifest:
+        wh.manifest_table("viewing_sessions").commit_dataframe(
+            out, expected_partitions=expected
+        )
+    elif by_monday:
         overwrite_partitions(
             out,
             wh.path("viewing_sessions"),
             ["panel_monday"],
-            expected_partitions=mondays,
+            expected_partitions=expected,
         )
-    return n_new
+    else:
+        wh.write(out, "viewing_sessions")
+    return int(obs.get["n_new"])
+
+
+_ROW = "_row"  # 0 survivor, 1 recomputed session, 2 expected-Monday marker
+
+
+def _rewrite_sessions(
+    existing: DataFrame,
+    keys: DataFrame,
+    new_sessions: DataFrame,
+    mondays: DataFrame,
+    by_monday: bool,
+) -> tuple[DataFrame, Observation]:
+    """The rows every backend commits: ``existing`` minus the affected
+    groups' sessions (``delete_by_keys``), plus ``new_sessions``.
+
+    The returned frame carries ONE ``Observation`` at its root, so the
+    write job reports ``n_new`` (the recomputed sessions) and
+    ``expected`` (the touched Mondays, ``mondays``). The expected
+    Mondays ride along as marker rows, dropped right above the
+    observation. Every observation sits at the root on purpose: one
+    placed below a join or union can be pruned away by AQE when its
+    input is empty, and ``Observation.get`` then fails.
+
+    ``by_monday``: hash the rows on ``panel_monday`` before the write,
+    so that each touched Monday lands as one file."""
+    tagged = (
+        delete_by_keys(existing, keys, AFFECTED_KEYS)
+        .withColumn(_ROW, F.lit(0))
+        .unionByName(new_sessions.withColumn(_ROW, F.lit(1)))
+        .unionByName(
+            mondays.withColumn(_ROW, F.lit(2)), allowMissingColumns=True
+        )
+    )
+    if by_monday:
+        tagged = tagged.repartition("panel_monday")
+    obs = Observation()
+    marker = F.col(_ROW) == 2
+    out = (
+        tagged.observe(
+            obs,
+            F.count(F.when(F.col(_ROW) == 1, 1)).alias("n_new"),
+            F.collect_set(F.when(marker, F.col("panel_monday"))).alias(
+                "expected"
+            ),
+        )
+        .filter(~marker)
+        .drop(_ROW)
+    )
+    return out, obs
 
 
 def _max_dates(*dfs: DataFrame, col: str = "metadata_date") -> list:

@@ -19,8 +19,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..sources.writer import atomic_overwrite, overwrite_partitions
+from ..sources.writer import atomic_overwrite, overwrite_partitions, sized
 from .backfill import Warehouse
+
+
+def _overwrite_scope(df, path: str, part_cols: list[str], values) -> None:
+    """``overwrite_partitions`` of a compaction scope, materialized
+    first (bounded: the scope's partitions only) so that ``sized``
+    coalesces the write to a file count that follows the scope's
+    data size, not its upstream task count."""
+    overwrite_partitions(
+        sized(df.localCheckpoint(eager=True)), path, part_cols,
+        expected_partitions=values,
+    )
 
 
 def compact_table(
@@ -45,11 +56,11 @@ def compact_table(
             )
         scope = df.filter(F.col(part_cols[0]) == F.lit(partition_value))
         n = scope.count()
-        overwrite_partitions(
+        _overwrite_scope(
             scope.repartition(target_files),
             wh.path(table),
             part_cols,
-            expected_partitions=[partition_value],
+            [partition_value],
         )
         return n
     n = df.count()
@@ -333,10 +344,7 @@ def compact_index(
                 *part_cols, *(sort_cols or [])
             )
         if scope_values is not None:
-            overwrite_partitions(
-                out, f"{p}/{sub}", part_cols,
-                expected_partitions=scope_values,
-            )
+            _overwrite_scope(out, f"{p}/{sub}", part_cols, scope_values)
         else:
             atomic_overwrite(out, f"{p}/{sub}", part_cols)
     return counts

@@ -110,6 +110,54 @@ PANEL_WINDOWS = T.StructType(
     ]
 )
 
+# The three event/session tables in the order the writers produce
+# them. A hive-partitioned read lists its partition columns last
+# (``Warehouse.schema`` moves them).
+RAW_VIEWING_EVENTS = T.StructType(
+    [
+        _f(n, _S)
+        for n in (
+            "source_table", "smba_id", "content_type", "application",
+            "title", "content_id", "episode_title", "season", "episode",
+            "network",
+        )
+    ]
+    + [_f(n, _L) for n in ("duration", "exposure_start_ts", "exposure_end_ts")]
+    + [_f("dma", _S), _f("zip", _S), _f("metadata_date", _D)]
+    + [_f(n, _S) for n in ("yyyy", "mm", "dd")]
+    + [_f("created_at", T.TimestampType())]
+)
+
+WEIGHTED_EVENTS = T.StructType(
+    RAW_VIEWING_EVENTS.fields[:-1]
+    + [
+        _f("panel_monday", _D),
+        _f("hh_id", _S),
+        _f("panel_weight", _F64),
+        _f("created_at", T.TimestampType()),
+    ]
+)
+
+VIEWING_SESSIONS = T.StructType(
+    [
+        _f(n, _S)
+        for n in (
+            "hh_id", "dma", "source_table", "content_type", "application",
+            "title", "content_id", "episode_title", "season", "episode",
+            "network",
+        )
+    ]
+    + [_f("panel_monday", _D)]
+    + [
+        _f(n, _L)
+        for n in (
+            "session_id", "session_start_ts", "session_end_ts",
+            "total_duration",
+        )
+    ]
+    + [_f("panel_weight", _F64), _f("created_at", T.TimestampType())]
+)
+
 TASK_CONTROL = T.StructType(
     [
         _f("task_name", _S),

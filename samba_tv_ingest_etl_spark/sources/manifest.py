@@ -33,8 +33,10 @@ from __future__ import annotations
 import json
 import urllib.parse
 import uuid
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .writer import _fs
 
@@ -45,10 +47,20 @@ NULL_KEY = "__HIVE_DEFAULT_PARTITION__"
 
 
 class ManifestTable:
-    def __init__(self, spark: SparkSession, path: str, partition_col: str):
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        partition_col: str,
+        schema: StructType | None = None,
+    ):
+        """``schema``: the declared schema of a read, partition column
+        last. With it, no read launches a footer-inference job per
+        partition directory; without it every directory is inferred."""
         self.spark = spark
         self.path = path.rstrip("/")
         self.partition_col = partition_col
+        self.schema = schema
 
     # -- internals ----------------------------------------------------
     def _jpath(self, p: str):
@@ -89,6 +101,22 @@ class ManifestTable:
             return 0
         return int(self._read_text(fs, cur).strip())
 
+    def _read_partition(self, key: str, entry: dict) -> DataFrame:
+        """One live partition's files, its value restored as a typed
+        literal column (last, as in a hive read)."""
+        from pyspark.sql import functions as F
+
+        reader = self.spark.read
+        if self.schema is not None:
+            reader = reader.schema(StructType([
+                f for f in self.schema.fields
+                if f.name != self.partition_col
+            ]))
+        return reader.parquet(entry["dir"]).withColumn(
+            self.partition_col,
+            F.lit(None if key == NULL_KEY else key).cast(entry["type"]),
+        )
+
     def _manifest(self, version: int) -> dict:
         fs, _ = _fs(self.spark, self.path)
         if version == 0:
@@ -126,29 +154,14 @@ class ManifestTable:
             )
         from functools import reduce
 
-        from pyspark.sql import functions as F
-
         if not manifest:
             # pruned to nothing: a typed empty frame built exactly
             # like a live slice (schema incl. nullability matches a
             # full read; limit(0) short-circuits before file reads)
-            key, entry = next(iter(sorted(full.items())))
-            return (
-                self.spark.read.parquet(entry["dir"])
-                .withColumn(
-                    self.partition_col,
-                    F.lit(None if key == NULL_KEY else key).cast(
-                        entry["type"]
-                    ),
-                )
-                .limit(0)
-            )
+            return self._read_partition(*min(full.items())).limit(0)
 
         parts = [
-            self.spark.read.parquet(entry["dir"]).withColumn(
-                self.partition_col,
-                F.lit(None if key == NULL_KEY else key).cast(entry["type"]),
-            )
+            self._read_partition(key, entry)
             for key, entry in sorted(manifest.items())
         ]
         return reduce(lambda a, b: a.unionByName(b), parts)
@@ -184,7 +197,7 @@ class ManifestTable:
         df: DataFrame,
         *,
         full: bool = False,
-        expected_partitions: list | None = None,
+        expected_partitions: Iterable | Callable[[], Iterable] | None = None,
     ) -> int:
         """Commit every partition present in ``df`` in ONE Spark job
         (``partitionBy`` into a fresh immutable batch directory), then
@@ -197,7 +210,9 @@ class ManifestTable:
         caller logically rewrote — any listed value ``df`` wrote no
         rows for is dropped (the every-row-deleted case dynamic
         overwrite cannot express; same contract as
-        ``writer.overwrite_partitions``). Readers hold the previous
+        ``writer.overwrite_partitions``). A zero-argument callable is
+        called after the write job, for values that job itself
+        observes (``Observation``). Readers hold the previous
         manifest until the ``_CURRENT`` swap, so a crash anywhere
         before the swap leaves the table at its old version and only
         orphans the batch directory (reclaimed by ``vacuum``)."""
@@ -216,6 +231,8 @@ class ManifestTable:
                 continue  # _SUCCESS etc.
             key = urllib.parse.unquote(name[len(col) + 1:])
             manifest[key] = {"dir": f"{dest}/{name}", "type": dtype}
+        if callable(expected_partitions):
+            expected_partitions = expected_partitions()
         for value in expected_partitions or []:
             key = NULL_KEY if value is None else str(value)
             if manifest.get(key, {}).get("dir", "").startswith(dest):

@@ -14,6 +14,7 @@ write-new-then-swap discipline of SURVEY §4.2-4.
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -247,7 +248,7 @@ def overwrite_partitions(
     df: DataFrame,
     path: str,
     partition_by: list[str],
-    expected_partitions: list | None = None,
+    expected_partitions: Iterable | Callable[[], Iterable] | None = None,
 ) -> None:
     """Replace ONLY the hive partitions present in ``df``, leaving
     every other partition's files untouched (Spark's dynamic
@@ -260,28 +261,32 @@ def overwrite_partitions(
     with NO row in ``df`` (every row of that partition was deleted)
     is cleared explicitly, because dynamic overwrite can only replace
     partitions it writes; an absent partition would otherwise keep
-    its stale files and resurrect deleted rows.
+    its stale files and resurrect deleted rows. A zero-argument
+    callable is called after the write job, for values that job
+    itself observes (``Observation``). The written values are
+    observed at the root of the write job, so clearing costs no job.
+
+    ``df`` may read the partitions it replaces (survivors ∪
+    recomputed rows): dynamic overwrite stages every task's output
+    and moves the partition directories only at job commit, after
+    every task has read its input. No lineage cut is needed.
 
     Atomicity is per-partition (the standard Spark/Hive contract),
     not per-table like ``atomic_overwrite`` — the tradeoff is
     documented at the Warehouse layer, which keeps the atomic-swap
     path as the default backend.
     """
-    if expected_partitions and len(partition_by) != 1:
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    if expected_partitions is not None and len(partition_by) != 1:
         raise ValueError("expected_partitions needs a single partition column")
-    spark = df.sparkSession
-    written = None
-    if expected_partitions:
-        # The rewrite plan typically READS the table it overwrites
-        # (survivors ∪ recomputed). localCheckpoint materializes the
-        # output slice (bounded: the affected partitions only) and
-        # cuts the lineage, so neither the write nor the
-        # written-partition probe below can re-read files the commit
-        # replaces. Blocks are RDD-owned -> freed by the
-        # ContextCleaner, no CacheManager leak.
-        df = sized(df.localCheckpoint(eager=True))
-        col = partition_by[0]
-        written = {r[0] for r in df.select(col).distinct().collect()}
+    obs = None
+    if expected_partitions is not None:
+        obs = Observation()
+        df = df.observe(
+            obs, F.collect_set(partition_by[0]).alias("written")
+        )
     # the per-write option, not the session conf: a conf toggle would
     # also switch the mode of any overwrite another thread runs meanwhile
     (
@@ -290,22 +295,27 @@ def overwrite_partitions(
         .partitionBy(*partition_by)
         .parquet(path)
     )
-    if expected_partitions:
-        col = partition_by[0]
-        fs, _ = _fs(spark, path)
-        jvm = spark.sparkContext._jvm
-        for val in expected_partitions:
-            if val in written:
-                continue
-            # hive dir name uses the partition value's string form
-            sub = jvm.org.apache.hadoop.fs.Path(
-                path.rstrip("/") + f"/{col}={val}"
+    if obs is None:
+        return
+    if callable(expected_partitions):
+        expected_partitions = expected_partitions()
+    written = set(obs.get["written"])
+    col = partition_by[0]
+    spark = df.sparkSession
+    fs, _ = _fs(spark, path)
+    jvm = spark.sparkContext._jvm
+    for val in expected_partitions:
+        if val in written:
+            continue
+        # hive dir name uses the partition value's string form
+        sub = jvm.org.apache.hadoop.fs.Path(
+            path.rstrip("/") + f"/{col}={val}"
+        )
+        if fs.exists(sub) and not fs.delete(sub, True):
+            raise RuntimeError(
+                f"overwrite_partitions: failed to clear emptied "
+                f"partition {col}={val} under {path}"
             )
-            if fs.exists(sub) and not fs.delete(sub, True):
-                raise RuntimeError(
-                    f"overwrite_partitions: failed to clear emptied "
-                    f"partition {col}={val} under {path}"
-                )
 
 
 def overwrite_small(spark: SparkSession, rows, schema, path: str) -> None:
