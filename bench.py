@@ -26,13 +26,13 @@ from samba_tv_ingest_etl_spark import queries as Q  # noqa: E402
 from samba_tv_ingest_etl_spark.session import get_spark  # noqa: E402
 
 # Headline set: flagship pipeline stages + the heaviest operators.
-# 30 queries as of round 10 (q129 indexed incremental dedup / q130
-# banded ANN / q131 full curation pipeline / q133 persisted IVF
-# probe / q135 incremental SemDeDup joined; q124-q128 joined in r9,
-# q121/q123 in r8, q115/q117 in r6) —
-# round-over-round totals compare the first 16 (the r1-r5 set),
-# first 18 (r6-r7), first 20 (r8), or first 25 (r9); per-query
-# history is directly comparable throughout.
+# 31 queries (q129 indexed incremental dedup / q130 banded ANN /
+# q131 full curation pipeline / q133 persisted IVF probe / q135
+# incremental SemDeDup joined in round 10; q124, q125, q127, q128
+# in r9, q121/q123 in r8, q115/q117 in r6) — round-over-round
+# totals compare the first 16 (the r1-r5 set), first 18 (r6-r7) or
+# first 20 (r8); per-query history is directly comparable
+# throughout.
 HEADLINE = [
     "q13_session_ids",
     "q14_sessions",
@@ -56,7 +56,6 @@ HEADLINE = [
     "q123_semantic_decontamination_lsh",
     "q124_containment_survivors",
     "q125_ann_recall_audit",
-    "q126_incremental_minhash_dedup",
     "q127_eval_span_excision",
     "q128_curation_pipeline",
     # r10 joiners — sf1->sf10 rows in SCALING_r10_queries.md BEFORE

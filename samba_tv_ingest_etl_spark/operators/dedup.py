@@ -613,164 +613,6 @@ def minhash_lsh_pairs(
     return cand.mapInPandas(verify, schema=out_schema)
 
 
-def incremental_minhash_survivors(
-    new_shingled: DataFrame,
-    index_shingled: DataFrame,
-    num_perm: int = MINHASH_PERMS,
-    bands: int = MINHASH_BANDS,
-    threshold_pct: int = 50,
-) -> DataFrame:
-    """Dedup a NEW batch against an existing corpus index — the
-    production shape of MinHash dedup at fleet size, where the
-    corpus is never re-deduped wholesale: the index side's band keys
-    already exist AT REST (in production a table bucketed on
-    (band, slice); here computed inline from ``index_shingled``) and
-    every per-increment join is DRIVEN BY THE BATCH, so increment
-    cost is O(|batch| · bucket width), independent of re-pairing the
-    index against itself (q22's self-join shape, which this operator
-    exists to avoid repeating per increment).
-
-    A new doc drops when exact Jaccard >= threshold against (a) ANY
-    indexed doc — the index is the established corpus, it always
-    wins — or (b) a SMALLER-id doc within the same batch (the q22
-    min-id survivor rule applied intra-batch, so a duplicate pair
-    arriving together resolves deterministically). Candidates come
-    from band-key equality (new x index, new x new); verification is
-    the exact full-set intersection, so banding can only lose pairs,
-    never invent them. Returns surviving new docs as
-    (doc_id, set_size).
-
-    Signatures are per-doc and engine-deterministic
-    (``minhash_signatures`` sha2 mode), so signing the two sides
-    separately is bit-identical to signing their union — an
-    increment appended to the index later reproduces exactly the
-    keys this pass computed.
-
-    Empty-shingle docs never sign or band (r9 advice): the sentinel
-    signature ``[HASH_P]*num_perm`` would put EVERY empty doc on
-    both sides into the same band bucket — one corpus-wide hot key
-    generating O(|new empties| · |index empties|) candidate rows per
-    band, all of which the exact verify then discards (``union > 0``
-    can never hold for an empty-vs-empty pair, and a sentinel slice
-    can never equal a real slice because every real minimum is
-    ``< HASH_P``). Equal output, minus the guaranteed skew key:
-    empty batch docs pass through as survivors unconditionally."""
-    new_ne, new_empty = _split_empty(new_shingled)
-    signed_new = minhash_signatures(
-        new_ne, num_perm, hash_mode="sha2"
-    ).localCheckpoint(eager=True)
-    signed_idx = minhash_signatures(
-        index_shingled.filter(F.col("set_size") > 0),
-        num_perm,
-        hash_mode="sha2",
-    ).localCheckpoint(eager=True)
-    survivors = _increment_survivors(
-        signed_new,
-        signed_idx.select("doc_id", "set_size", "shingles"),
-        _banded(signed_idx, num_perm, bands),
-        num_perm,
-        bands,
-        threshold_pct,
-    )
-    return survivors.unionByName(new_empty)
-
-
-def _split_empty(
-    shingled: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """(non-empty shingled rows, empty (doc_id, set_size) rows) —
-    empties are unconditional survivors in every MinHash path (no
-    shingles → Jaccard undefined → ``union > 0`` never holds)."""
-    return (
-        shingled.filter(F.col("set_size") > 0),
-        shingled.filter(F.col("set_size") == 0).select(
-            "doc_id", "set_size"
-        ),
-    )
-
-
-def _increment_survivors(
-    signed_new: DataFrame,
-    index_docs: DataFrame,
-    index_bands: DataFrame,
-    num_perm: int,
-    bands: int,
-    threshold_pct: int,
-) -> DataFrame:
-    """The batch-driven increment core shared by the inline
-    (``incremental_minhash_survivors``) and at-rest
-    (``incremental_minhash_survivors_indexed``) entry points.
-    ``signed_new``: the signed NON-EMPTY batch; ``index_docs``:
-    (doc_id, set_size, shingles) of the indexed corpus (non-empty by
-    construction); ``index_bands``: (doc_id, band, slice) band keys.
-
-    Join shape at scale: the batch's band keys BROADCAST and the
-    at-rest index streams through the map-side join (the index is
-    the 100 TB side — it must never shuffle); the candidate set is
-    O(|batch| · bucket width), so it broadcasts too and the verify
-    probe streams the docs table once, column-pruned, with no
-    corpus shuffle. Returns non-empty survivors (doc_id, set_size)."""
-    bn = _banded(signed_new, num_perm, bands)
-    b = bn.select(F.col("doc_id").alias("new_id"), "band", "slice")
-    cand_ni = (
-        F.broadcast(b)
-        .join(
-            index_bands.select(
-                F.col("doc_id").alias("match_id"), "band", "slice"
-            ),
-            ["band", "slice"],
-        )
-        .select("new_id", "match_id")
-    )
-    cand_nn = (
-        b.join(
-            bn.select(
-                F.col("doc_id").alias("match_id"), "band", "slice"
-            ),
-            ["band", "slice"],
-        )
-        .filter(F.col("match_id") < F.col("new_id"))
-        .select("new_id", "match_id")
-    )
-    all_docs = index_docs.unionByName(
-        signed_new.select("doc_id", "set_size", "shingles")
-    )
-    ver = (
-        F.broadcast(cand_ni.unionByName(cand_nn).distinct())
-        .join(
-            all_docs.select(
-                F.col("doc_id").alias("match_id"),
-                F.col("set_size").alias("size_b"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "match_id",
-        )
-        .join(
-            signed_new.select(
-                F.col("doc_id").alias("new_id"),
-                F.col("set_size").alias("size_a"),
-                F.col("shingles").alias("sh_a"),
-            ),
-            "new_id",
-        )
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.col("size_a") + F.col("size_b") - common
-    dropped = (
-        ver.withColumn("_c", common)
-        .withColumn("_u", union)
-        .filter(
-            (F.col("_u") > 0)
-            & (F.col("_c") * 100 >= F.lit(threshold_pct) * F.col("_u"))
-        )
-        .select(F.col("new_id").alias("doc_id"))
-        .distinct()
-    )
-    return signed_new.select("doc_id", "set_size").join(
-        dropped, "doc_id", "left_anti"
-    )
-
-
 # On-disk schemas of the band index directories (``write_band_index``),
 # declared on every read so none launches a schema-inference job.
 _DOCS_SCHEMA = (
@@ -808,7 +650,7 @@ def write_band_index(
     (band, slice) with doc_id-sorted row groups so the verify probe
     can skip pages — plain parquet keeps the same I/O shape minus
     page skipping. Empty-shingle docs are excluded by construction
-    (see ``incremental_minhash_survivors``: they can never drop or
+    (see ``dedup_increment_against_index``: they can never drop or
     be dropped, and their sentinel signatures would form one
     corpus-wide hot bucket per band)."""
     from ..sources import writer
@@ -932,37 +774,6 @@ def read_band_index(
     )
 
 
-def incremental_minhash_survivors_indexed(
-    new_shingled: DataFrame,
-    index_docs: DataFrame,
-    index_bands: DataFrame,
-    num_perm: int = MINHASH_PERMS,
-    bands: int = MINHASH_BANDS,
-    threshold_pct: int = 50,
-) -> DataFrame:
-    """``incremental_minhash_survivors`` with the index side READ AT
-    REST (``read_band_index``) instead of re-signed inline — the
-    production shape: per-increment work is signing the batch
-    (O(|batch|)), one broadcast band join driven by the batch's
-    keys, and one streamed verify probe of the docs table. Identical
-    survivors to the inline path by the determinism contract (per-doc
-    sha2 signatures: signing sides separately ≡ signing the union),
-    pinned by ``test_dedup_incremental``'s property test."""
-    new_ne, new_empty = _split_empty(new_shingled)
-    signed_new = minhash_signatures(
-        new_ne, num_perm, hash_mode="sha2"
-    ).localCheckpoint(eager=True)
-    survivors = _increment_survivors(
-        signed_new,
-        index_docs.select("doc_id", "set_size", "shingles"),
-        index_bands.select("doc_id", "band", "slice"),
-        num_perm,
-        bands,
-        threshold_pct,
-    )
-    return survivors.unionByName(new_empty)
-
-
 def dedup_increment_against_index(
     new_shingled: DataFrame,
     path: str,
@@ -971,77 +782,138 @@ def dedup_increment_against_index(
     threshold_pct: int = 50,
     append: bool = True,
 ) -> DataFrame:
-    """One production increment, end to end: read the index at rest,
-    dedup the batch against it, and (by default) append the batch to
-    the index so the next increment sees it. Survivors are
+    """Dedup a NEW batch against the at-rest band index
+    (``write_band_index``) and, with ``append``, add the batch to the
+    index so the next increment sees it — the production shape of
+    MinHash dedup at fleet size, where the corpus is never re-deduped
+    wholesale: per-increment work is signing the batch (O(|batch|)),
+    one band join driven by the batch's keys, and one streamed verify
+    probe of the docs table, never an O(corpus) re-sign (the
+    reference's watermark discipline, etl-dag.sql:33-46: touch only
+    new rows). Returns surviving batch docs as (doc_id, set_size).
+
+    A new doc drops when exact Jaccard >= threshold against (a) ANY
+    indexed doc — the index is the established corpus, it always
+    wins — or (b) a SMALLER-id doc within the same batch (the q22
+    min-id survivor rule applied intra-batch, so a duplicate pair
+    arriving together resolves deterministically). Candidates come
+    from band-key equality (new x index, new x new); verification is
+    the exact full-set intersection, so banding can only lose pairs,
+    never invent them. Signatures are per-doc and engine-deterministic
+    (``minhash_signatures`` sha2 mode), so signing the batch apart
+    from the index is bit-identical to signing their union.
+
+    Replay-safe for at-least-once callers (the curation DAG, the
+    streaming ``foreachBatch`` handler): after a crash between
+    "batch appended to the index" and "offsets/ledger committed",
+    the replayed batch's docs are ON the index side, so the index
+    side anti-joins away the batch's own doc_ids (broadcast — the
+    batch is increment-sized), restoring exactly the pre-append
+    index: a replay is bit-identical to the first run. The same
+    exclusion means a batch that reuses a doc_id already in the
+    index is not dropped against that indexed doc — ids are keys,
+    and a reused id reads as a replay of it. The re-append then
+    duplicates the batch's index rows, which ``append_band_index``
+    documents as result-neutral; duplicate-tolerant re-append is
+    REQUIRED, not just tolerated: skipping "already present" docs
+    would break on a crash that wrote ``docs/`` but not ``bands/``.
+    Single-writer assumption: batch N+1 only runs after batch N
+    commits, so the exclusion never races a sibling append.
+
+    Empty-shingle docs never sign or band: the sentinel
+    signature ``[HASH_P]*num_perm`` would put EVERY empty doc into
+    one band bucket — a corpus-wide hot key whose candidates the
+    exact verify always discards (``union > 0`` never holds for an
+    empty-vs-empty pair, and a sentinel slice never equals a real
+    one because every real minimum is ``< HASH_P``). Empty batch
+    docs pass through as survivors unconditionally.
+
+    Join shape at scale: the batch's band keys BROADCAST and the
+    at-rest index streams through the map-side join (the index is
+    the 100 TB side — it must never shuffle); the candidate set is
+    O(|batch| · bucket width), so it broadcasts too and the verify
+    probe streams the docs table once, column-pruned. Survivors are
     MATERIALIZED (localCheckpoint) before the append — the returned
     frame must never lazily re-read index files the append just
-    grew, or every batch doc would self-match (the footgun named on
-    ``append_band_index``)."""
+    grew (the footgun named on ``append_band_index``)."""
     spark = new_shingled.sparkSession
     idx_docs, idx_bands = read_band_index(spark, path)
-    new_ne, new_empty = _split_empty(new_shingled)
+    new_empty = new_shingled.filter(F.col("set_size") == 0).select(
+        "doc_id", "set_size"
+    )
     signed_new = minhash_signatures(
-        new_ne, num_perm, hash_mode="sha2"
-    ).localCheckpoint(eager=True)
-    survivors = _increment_survivors(
-        signed_new,
-        idx_docs.select("doc_id", "set_size", "shingles"),
-        idx_bands.select("doc_id", "band", "slice"),
+        new_shingled.filter(F.col("set_size") > 0),
         num_perm,
-        bands,
-        threshold_pct,
+        hash_mode="sha2",
     ).localCheckpoint(eager=True)
-    if append:
-        append_band_index(signed_new, path, num_perm, bands)
-    return survivors.unionByName(new_empty)
-
-
-def dedup_increment_against_index_replay_safe(
-    new_shingled: DataFrame,
-    path: str,
-    num_perm: int = MINHASH_PERMS,
-    bands: int = MINHASH_BANDS,
-    threshold_pct: int = 50,
-    append: bool = True,
-) -> DataFrame:
-    """``dedup_increment_against_index`` hardened for at-least-once
-    replays — the contract a streaming ``foreachBatch`` caller needs
-    (``streaming/dedup.dedup_stream_against_index``): after a crash
-    between "batch appended to the index" and "offsets committed",
-    the restarted query replays the SAME batch, whose docs are now
-    ON the index side — the plain increment would self-match every
-    doc into the dropped set. Here the index side anti-joins away
-    the batch's own doc_ids (broadcast — the batch is micro-batch
-    sized), restoring exactly the pre-append index: a replay is
-    bit-identical to the first run. The re-append then duplicates
-    the batch's index rows, which ``append_band_index`` documents as
-    result-neutral (candidates and the dropped set are distinct
-    downstream) — duplicate-tolerant re-append is REQUIRED here, not
-    just tolerated: skipping "already present" docs would break on a
-    crash that wrote ``docs/`` but not ``bands/``, leaving docs the
-    band join can never see. Single-writer assumption: batch N+1
-    only runs after batch N's offsets commit, so the exclusion never
-    races a sibling append."""
-    spark = new_shingled.sparkSession
-    idx_docs, idx_bands = read_band_index(spark, path)
-    new_ne, new_empty = _split_empty(new_shingled)
-    signed_new = minhash_signatures(
-        new_ne, num_perm, hash_mode="sha2"
-    ).localCheckpoint(eager=True)
-    batch_ids = signed_new.select("doc_id")
-    survivors = _increment_survivors(
-        signed_new,
-        idx_docs.select("doc_id", "set_size", "shingles").join(
-            F.broadcast(batch_ids), "doc_id", "left_anti"
-        ),
-        idx_bands.select("doc_id", "band", "slice").join(
-            F.broadcast(batch_ids), "doc_id", "left_anti"
-        ),
-        num_perm,
-        bands,
-        threshold_pct,
-    ).localCheckpoint(eager=True)
+    batch_ids = F.broadcast(signed_new.select("doc_id"))
+    index_docs = idx_docs.select("doc_id", "set_size", "shingles").join(
+        batch_ids, "doc_id", "left_anti"
+    )
+    index_bands = idx_bands.select("doc_id", "band", "slice").join(
+        batch_ids, "doc_id", "left_anti"
+    )
+    bn = _banded(signed_new, num_perm, bands)
+    b = bn.select(F.col("doc_id").alias("new_id"), "band", "slice")
+    cand_ni = (
+        F.broadcast(b)
+        .join(
+            index_bands.select(
+                F.col("doc_id").alias("match_id"), "band", "slice"
+            ),
+            ["band", "slice"],
+        )
+        .select("new_id", "match_id")
+    )
+    cand_nn = (
+        b.join(
+            bn.select(
+                F.col("doc_id").alias("match_id"), "band", "slice"
+            ),
+            ["band", "slice"],
+        )
+        .filter(F.col("match_id") < F.col("new_id"))
+        .select("new_id", "match_id")
+    )
+    all_docs = index_docs.unionByName(
+        signed_new.select("doc_id", "set_size", "shingles")
+    )
+    ver = (
+        F.broadcast(cand_ni.unionByName(cand_nn).distinct())
+        .join(
+            all_docs.select(
+                F.col("doc_id").alias("match_id"),
+                F.col("set_size").alias("size_b"),
+                F.col("shingles").alias("sh_b"),
+            ),
+            "match_id",
+        )
+        .join(
+            signed_new.select(
+                F.col("doc_id").alias("new_id"),
+                F.col("set_size").alias("size_a"),
+                F.col("shingles").alias("sh_a"),
+            ),
+            "new_id",
+        )
+    )
+    common = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.col("size_a") + F.col("size_b") - common
+    dropped = (
+        ver.withColumn("_c", common)
+        .withColumn("_u", union)
+        .filter(
+            (F.col("_u") > 0)
+            & (F.col("_c") * 100 >= F.lit(threshold_pct) * F.col("_u"))
+        )
+        .select(F.col("new_id").alias("doc_id"))
+        .distinct()
+    )
+    survivors = (
+        signed_new.select("doc_id", "set_size")
+        .join(dropped, "doc_id", "left_anti")
+        .localCheckpoint(eager=True)
+    )
     if append:
         append_band_index(signed_new, path, num_perm, bands)
     return survivors.unionByName(new_empty)
@@ -1265,8 +1137,8 @@ def duplicated_span_intervals(
     # the corpus-grain checkpoint carries (doc_id, pos, h) ONLY —
     # never gram text (~24 B/row vs ~k x corpus bytes). Gram text for
     # the exact re-count is re-derived for CANDIDATE rows only by
-    # slicing the token arrays. Measured at sf1/sf10 (SCALING_r8.md,
-    # tools/span_footprint.py): bit-identical output, 1.5x less
+    # slicing the token arrays. Measured at sf1/sf10 (SCALING_r8.md):
+    # bit-identical output, 1.5x less
     # checkpoint storage AND faster wall (10.7 -> 6.8 s sf1,
     # 18.5 -> 17.2 s sf10) than checkpointing the gram-text explode.
     g = toks_df.select(

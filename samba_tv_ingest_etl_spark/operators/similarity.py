@@ -1208,10 +1208,10 @@ _TOPK_SCHEMA = "query_id long, cand_id long, rank int, cos_scaled long"
 
 def _probe_topk(candidates: DataFrame, queries, probes, k: int) -> DataFrame:
     """The IVF probe/score stage, shared by the inline path
-    (``topk_ivf``) and both at-rest paths (``topk_ivf_indexed``,
-    ``topk_ivf_indexed_hier``) so the three are bit-identical by
-    construction. Callers route on the driver: ``queries`` is the
-    collected ``(ids, Q, norm2)`` batch (``_collect_queries``) and
+    (``topk_ivf``) and the at-rest path (``topk_ivf_indexed_hier``)
+    so the two are bit-identical by construction. Callers route on
+    the driver: ``queries`` is the collected ``(ids, Q, norm2)``
+    batch (``_collect_queries``) and
     ``probes`` each query's nearest cluster ids (``_nearest``, the
     ``(d, c)`` order of assignment) — no Spark job routes a query.
 
@@ -1504,7 +1504,7 @@ def read_ivf_index(
     The guard is a single ``limit(MAX+1).collect()`` — the driver
     pull stays bounded whatever the on-disk size, without the
     separate count job (a full extra scan per probe) the guard used
-    to pay; the error names the hierarchical-codebook successor.
+    to pay; the error names the hierarchical append.
     Both reads declare their schemas (no schema-inference job), the
     cell partition column as the long the probe filters expect."""
     p = path.rstrip("/")
@@ -1514,11 +1514,13 @@ def read_ivf_index(
         raise ValueError(
             f"IVF codebook at {p} has over "
             f"MAX_CODEBOOK_ROWS={MAX_CODEBOOK_ROWS:,} centroids "
-            "(~0.5 GiB of driver memory): use the hierarchical "
-            "consumers (topk_ivf_indexed_hier / "
-            "append_ivf_index_hier), which read the persisted "
-            "cells/ level plus only the probed cells' sub-codebooks "
-            "— or retrain with a larger per-cluster target."
+            "(~0.5 GiB of driver memory) for a flat-codebook "
+            "append or SemDeDup increment: use the hierarchical "
+            "append (append_ivf_index_hier), which reads the "
+            "persisted cells/ level plus only the routed cells' "
+            "sub-codebooks as the probe (topk_ivf_indexed_hier) "
+            "always does — or retrain with a larger per-cluster "
+            "target."
         )
     cents = {
         int(r["c"]): [int(v) for v in r["cv"]] for r in rows
@@ -1567,37 +1569,6 @@ def _prune_to_clusters(
         "cluster long",
     )
     return pruned.join(F.broadcast(cdf), "cluster", "left_semi")
-
-
-def topk_ivf_indexed(
-    spark,
-    path: str,
-    queries_q: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF top-k against the PERSISTED index: read the codebook,
-    compute each query's nprobe nearest centroids, and scan ONLY the
-    probed data (the probed-cluster set is collected — bounded by
-    |queries| * nprobe, and the query side is broadcast-sized by the
-    same contract the inline path already assumes — then pushed down
-    twice: the clusters' COARSE CELLS as a partition ``IN`` filter,
-    so the file listing prunes to the probed directories, and the
-    cluster ids as an in-file filter over those cells). Identical
-    output to ``topk_ivf`` given the same codebook — the probe/score
-    stage IS ``_probe_topk``, shared code, and the pre-filters only
-    remove data no query probes. Routing runs once, on the driver
-    (``_nearest`` over the collected batch); replayed appends are
-    neutralized inside the shared stage (see ``_probe_topk``)."""
-    cents, vectors = read_ivf_index(spark, path)
-    queries = _collect_queries(queries_q)
-    probes = _nearest(queries[1], queries[2], cents, nprobe)
-    probed = sorted(set(probes.ravel().tolist()))
-    _, cell_of = coarse_route(cents)
-    cells = sorted({cell_of[c] for c in probed})
-    return _probe_topk(
-        _prune_to_clusters(vectors, cells, probed), queries, probes, k
-    )
 
 
 def read_ivf_cells(spark, path: str) -> dict[int, list[int]]:
@@ -1669,21 +1640,22 @@ def topk_ivf_indexed_hier(
     nprobe: int = 2,
     probe_cells: int | None = 4,
 ) -> DataFrame:
-    """``topk_ivf_indexed`` with O(√k) driver pulls — the true-fleet
-    probe path past ``MAX_CODEBOOK_ROWS`` (r11 verdict #4): instead
-    of collecting the FLAT codebook (O(k) — the last driver-side
-    ceiling in the ANN family at k ∝ n), route each query through
-    the persisted ``cells/`` level (O(√k) collect), read ONLY the
-    routed cells' sub-codebooks (partition-pruned ``centroids/``
-    read, O(probe_cells·√k) rows), pick the nprobe nearest centroids
-    among them, and scan the probed clusters through the shared
-    ``_probe_topk`` stage.
+    """IVF top-k against the PERSISTED index with O(√k) driver
+    pulls — the one at-rest probe, usable past ``MAX_CODEBOOK_ROWS``
+    (r11 verdict #4): instead of collecting the FLAT codebook (O(k)
+    — the last driver-side ceiling in the ANN family at k ∝ n),
+    route each query through the persisted ``cells/`` level (O(√k)
+    collect), read ONLY the routed cells' sub-codebooks
+    (partition-pruned ``centroids/`` read, O(probe_cells·√k) rows),
+    pick the nprobe nearest centroids among them, and scan the probed
+    clusters through the shared ``_probe_topk`` stage.
 
-    Exactness contract: identical to the flat probe whenever each
-    query's true nprobe nearest centroids lie inside its
-    ``probe_cells`` nearest cells — guaranteed at ``probe_cells=None``
-    (route through ALL cells: the centroid pool collected is then
-    exactly the probed clusters' cells' and the selection math is
+    Exactness contract: identical to a full-codebook probe (inline
+    ``topk_ivf`` on the same codebook) whenever each query's true
+    nprobe nearest centroids lie inside its ``probe_cells`` nearest
+    cells — guaranteed at ``probe_cells=None`` (route through ALL
+    cells: the sub-codebook read is then the whole codebook, under
+    the same ``MAX_CODEBOOK_ROWS`` guard, and the selection math is
     identical), and the standard IVF routing approximation otherwise,
     the same trade ``_assign_pandas_routed`` already makes (and the
     same knob: width). q140 pins the shipped config against q32's
@@ -1705,11 +1677,11 @@ def topk_ivf_indexed_hier(
     stage's two jobs (``tests/test_ivf_index.py`` pins the count).
 
     The default width is MEASURED (sf1 — 313 centroids / 18 cells /
-    nprobe=2, SCALING_r13 §2): batched
-    probes agree with the flat probe EXACTLY at every width (the
-    sub-codebook pool is the union of the batch's routed cells, so a
-    diverse batch saturates it), and worst-case SOLO probes at
-    width 4 give up 0.006 absolute recall@10 vs the flat probe
+    nprobe=2, SCALING_r13 §2): batched probes agree with the
+    full-codebook probe EXACTLY at every width (the sub-codebook pool
+    is the union of the batch's routed cells, so a diverse batch
+    saturates it), and worst-case SOLO probes at
+    width 4 give up 0.006 absolute recall@10 vs the full codebook
     (0.270 vs 0.276 — the 0.276 being IVF's own nprobe=2 ceiling)
     while pulling O(4·√k) codebook rows instead of O(k); width 8
     buys +0.002 for 2× the pull. Single-query callers at fleet
@@ -1777,7 +1749,7 @@ def semdedup_increment_against_index(
 ) -> DataFrame:
     """SemDeDup as a daily increment against the at-rest IVF index —
     the third consumer of one persisted index (probe: ``topk_ivf_
-    indexed``; grow: ``append_ivf_index``; dedup: here), mirroring
+    indexed_hier``; grow: ``append_ivf_index``; dedup: here), mirroring
     ``dedup.dedup_increment_against_index`` on the embedding side. A
     new vector is dropped when a near-duplicate (cosine >= τ, the
     exact integer decision of ``cosine_pairs``) shares its cluster
@@ -1811,37 +1783,12 @@ def semdedup_increment_against_index(
     ]
     _, cell_of = coarse_route(cents)
     cells = sorted({cell_of[c] for c in clusters})
-    survivors = _semdedup_increment_core(
-        assigned, _prune_to_clusters(vectors, cells, clusters),
-        threshold_pct,
-    ).localCheckpoint(eager=True)
-    if append:
-        writer.append(
-            _with_cell(assigned, cents).repartition("cell"),
-            path.rstrip("/") + "/vectors",
-            partition_by=["cell"],
-        )
-    return survivors
-
-
-def _semdedup_increment_core(
-    assigned: DataFrame,
-    index_vectors: DataFrame,
-    threshold_pct: int,
-) -> DataFrame:
-    """The increment decision, independent of where the index side
-    comes from (at rest and pruned, or assigned inline): a batch
-    vector drops when a cosine-τ near-dup shares its cluster and is
-    indexed (any id — the index side anti-joins away the batch's own
-    ids first, which is also what makes replays bit-identical) or a
-    smaller-id batch member. ``assigned`` must be materialized by
-    the caller (it is read four times); ``index_vectors`` carries
-    (vec_id, q, norm2, cluster). Returns surviving
-    (vec_id, cluster) — lazy, so callers that append afterwards must
-    checkpoint it first."""
+    # a batch vector drops when a cosine-τ near-dup shares its
+    # cluster and is indexed (any id) or a smaller-id batch member
     ids = assigned.select("vec_id")
     dom_idx = (
-        index_vectors.select("vec_id", "q", "norm2", "cluster")
+        _prune_to_clusters(vectors, cells, clusters)
+        .select("vec_id", "q", "norm2", "cluster")
         .join(F.broadcast(ids), "vec_id", "left_anti")
         .select(
             F.lit(-1).cast("long").alias("dom_id"),  # index side: any id dominates
@@ -1882,37 +1829,18 @@ def _semdedup_increment_core(
         .unionByName(_dropped(dom_new, need_lower_id=True))
         .distinct()
     )
-    return assigned.select("vec_id", "cluster").join(
-        dropped, "vec_id", "left_anti"
+    survivors = (
+        assigned.select("vec_id", "cluster")
+        .join(dropped, "vec_id", "left_anti")
+        .localCheckpoint(eager=True)
     )
-
-
-def semdedup_increment_inline(
-    new_q: DataFrame,
-    index_q: DataFrame,
-    cents: dict[int, list[int]],
-    threshold_pct: int = 80,
-    route_width: int | None = None,
-) -> DataFrame:
-    """``semdedup_increment_against_index`` with the index side
-    assigned INLINE per call — the measurement twin the at-rest path
-    is compared against (``tools/increment_cost.py --kind ivf``), and
-    the shape a caller without a persisted index is stuck with: every
-    increment pays an O(|index|) assignment pass before the first
-    candidate is scored, which is exactly the term the persisted
-    index deletes (the MinHash side measured this law in
-    SCALING_r10; the IVF row is r10 verdict #2). Identical survivors
-    to the at-rest path under the same codebook — assignment is
-    per-row deterministic and the decision core is shared code
-    (``_semdedup_increment_core``)."""
-    assigned = _assign_with(
-        new_q, cents, route_width
-    ).localCheckpoint(eager=True)
-    return _semdedup_increment_core(
-        assigned,
-        _assign_with(index_q, cents, route_width),
-        threshold_pct,
-    )
+    if append:
+        writer.append(
+            _with_cell(assigned, cents).repartition("cell"),
+            path.rstrip("/") + "/vectors",
+            partition_by=["cell"],
+        )
+    return survivors
 
 
 def topk_lsh(
@@ -1963,7 +1891,7 @@ def topk_lsh(
 
 
 # Shipped banded-ANN defaults — from the MEASURED frontier
-# (tools/ann_frontier.py, SCALING_r10.md), not theory: (48, 16) is
+# (SCALING_r10.md), not theory: (48, 16) is
 # the only grid point with recall@10 >= 0.8 at BOTH measured scales
 # (0.886 at sf0.1 n=2k, 0.922 at sf1 n=20k) — the r9 target "recall
 # >= 0.8 with stated cost". Its cost is ~0.7x brute force per probe
@@ -1997,7 +1925,7 @@ def topk_lsh_banded(
     corpus's cos≈0.5 neighbor regime. Banding flips the curve:
     P(candidate) = 1 - (1 - p^r)^bands with r = planes/bands, so
     recall is tunable against candidate cost. Defaults come from the
-    measured frontier (SCALING_r10.md, tools/ann_frontier.py), not
+    measured frontier (SCALING_r10.md), not
     theory — see ``LSH_TOPK_PLANES``/``LSH_TOPK_BANDS``.
 
     Scale shape: the probe side broadcasts (probes are few by
@@ -2251,8 +2179,8 @@ def append_vector_band_index(
     (query_id, cand_id) with max() before ranking, so duplicated
     rows re-derive the same cos and cannot take two ranks (the
     duplicate-append contract the MinHash index documents, enforced
-    here the same way the r10 advice had ``topk_ivf_indexed``
-    enforce it). Appended band files are key-sorted like the
+    here the same way the IVF probe stage, ``_probe_topk``,
+    enforces it). Appended band files are key-sorted like the
     writer's, keeping row-group pruning effective as the index
     grows. ``band_payload``/``planes``/``bands`` must match the
     index's writer — they are part of the index's identity, not
@@ -2435,7 +2363,6 @@ def contamination_matches_lsh_indexed(
     bands: int = 4,
     dim: int = 64,
     max_eval_rows: int = EVAL_BROADCAST_BUDGET_ROWS,
-    push_key_literals: bool = True,
 ) -> DataFrame:
     """``contamination_matches_lsh`` with the corpus side read AT
     REST — the last inline ANN/dedup surface moved off the per-call
@@ -2469,13 +2396,7 @@ def contamination_matches_lsh_indexed(
     result-neutral here with no extra dedup. Output contract
     identical to ``contamination_matches_lsh`` (shares its oracle);
     a slim index (written without ``band_payload``) raises a named
-    error instead of a missing-column surprise.
-
-    ``push_key_literals=False`` disables the key-literal pushdown —
-    an A/B knob for ``tools/increment_cost.py --kind decon_sparse``
-    (the filter is an optimization, never needed for correctness:
-    the band+key join stays exact either way), so the sparse-eval
-    pruning claim is measured instead of argued."""
+    error instead of a missing-column surprise."""
     _check_band_identity(spark, path, planes, bands, band_payload=True)
     docs, band_rows = read_vector_band_index(spark, path)
     missing = {"q", "norm2"} - set(band_rows.columns)
@@ -2513,8 +2434,7 @@ def contamination_matches_lsh_indexed(
     # exact either way).
     key_space = 1 << (planes // bands)
     if (
-        push_key_literals
-        and len(probed_keys) <= ISIN_LITERAL_CAP
+        len(probed_keys) <= ISIN_LITERAL_CAP
         and 4 * len(probed_keys) <= 3 * key_space
     ):
         bscan = bscan.filter(F.col("key").isin(probed_keys))

@@ -32,9 +32,10 @@ which computes the WHOLESALE pass in SQL.
 
 Exactly-once, end to end: a crash ANYWHERE before the final ledger
 commit replays the whole day — the ingest re-lists the unrecorded
-files, the dedup increment is the replay-safe variant (the index
-side anti-joins the batch's own ids, and the re-append's duplicate
-rows are result-neutral by the band index contract),
+files, the dedup increment (``dedup.dedup_increment_against_index``,
+the one batch-vs-index MinHash entry point) is replay-safe (the
+index side anti-joins the batch's own ids, and the re-append's
+duplicate rows are result-neutral by the band index contract),
 decontamination is deterministic per doc, and the curated write
 dynamically overwrites the run's own partition (run_id = hash of
 the file set) instead of appending blind. A replay whose file set
@@ -43,7 +44,10 @@ run_id; the run manifest makes that safe too (r11 advice): curated()
 shows only manifest-recorded runs, and the crashed attempt's
 partition — never recorded, or recorded but fully superseded by the
 wider replay — is garbage-collected before the replay commits (see
-``_gc_superseded_runs``). The global
+``_gc_superseded_runs``). Every store is written under the manifest,
+so a curated partition with no manifest row can only be a crashed
+attempt, and a pass with nothing newly staged launches no job in
+its landing task. The global
 token-budget head (q111/q131's final stage) is deliberately NOT in
 the DAG: it is a global selection over the curated pool, re-run
 wholesale over ``curated/`` when a training mix is cut — an
@@ -186,7 +190,7 @@ class CurationDag:
         bootstrap = not self._index_exists()
         if bootstrap:
             D.write_band_index(shingled, self.index_path)
-        survivors = D.dedup_increment_against_index_replay_safe(
+        survivors = D.dedup_increment_against_index(
             shingled,
             self.index_path,
             threshold_pct=self.threshold_pct,
@@ -218,13 +222,6 @@ class CurationDag:
         from ..sources.ledger import LoadLedger
 
         if state.get("gated") is None:
-            # even a no-op pass heals the empty-manifest crash window
-            # (a crash inside the first manifest append, with the
-            # staged files since vanished): the backfill is row-gated
-            # and idempotent, so this is one limit(1) read when
-            # healthy. "" can never equal a real run_id directory, so
-            # every committed partition is eligible for backfill.
-            self._backfill_manifest("")
             return 0
         self._write_curated(state["gated"], state["run_id"])
         self._gc_superseded_runs(state["run_id"], state["files"])
@@ -267,19 +264,8 @@ class CurationDag:
     #     they are still unledgered, so the pass that re-ingests
     #     them overlaps and supersedes it then;
     #   * a fully-ledgered run's files can never ALL be unrecorded,
-    #     so GC can never touch committed data;
-    #   * a store WRITTEN BEFORE the manifest existed has committed
-    #     partitions with no runs/ rows at all — `fr is None` must
-    #     not read as "crashed" for those (r12 advice: the first
-    #     landing under manifest code would silently delete every
-    #     previously committed partition). `_backfill_manifest`
-    #     marks every pre-manifest partition committed (sentinel
-    #     file_path) the first time manifest code touches a store
-    #     that has curated data but no runs/ — after which a missing
-    #     manifest entry can only mean a genuinely crashed attempt.
+    #     so GC can never touch committed data.
     # Single-writer assumption as documented on the dedup stage.
-
-    _PREMANIFEST = "__premanifest__"
 
     def _record_run(self, run_id: str, files: list[str]) -> None:
         from ..sources.ledger import literal_strings_frame
@@ -291,66 +277,6 @@ class CurationDag:
             .write.mode("append")
             .parquet(self.runs_path)
         )
-
-    def _backfill_manifest(self, current_run_id: str) -> list[str]:
-        """First-landing migration for stores created before the run
-        manifest existed: every curated partition already on disk
-        (other than the current run's) predates manifest bookkeeping
-        and therefore has no runs/ row — record each one with the
-        sentinel file path, marking it committed. The sentinel never
-        matches a staged file, so backfilled runs can never satisfy
-        the overlap-supersession test: they are permanently visible,
-        exactly as they were under pre-manifest code. Gated on the
-        LEDGER being non-empty: a committed pre-manifest run always
-        ledgered its files (the ledger write has been last since the
-        beginning), so an empty ledger means the store has never
-        committed anything — its unmanifested partitions are crashed
-        manifest-era attempts (e.g. a first landing that died between
-        the curated write and its manifest record) and must stay
-        GC-eligible, not be grandfathered in. A pre-manifest store
-        that held BOTH committed runs and a crashed attempt gets the
-        attempt backfilled too — indistinguishable without per-run
-        file records, and exactly as visible as pre-manifest code
-        left it. Idempotent by construction (runs only while the
-        manifest holds ZERO rows — directory existence is not the
-        gate, because a crash inside an append can leave runs/ as an
-        empty directory). Returns the backfilled run_ids."""
-        from ..sources.ledger import LoadLedger
-
-        mdf = self._manifest()
-        if mdf is not None and mdf.limit(1).count() > 0:
-            # rows, not directory existence: a crash INSIDE a backfill
-            # (or first _record_run) append can leave runs/ as an
-            # empty directory — skipping the backfill on that replay
-            # would let every pre-manifest partition read as
-            # unmanifested (fr None) and be GC'd as crashed
-            return []
-        fs, jpath = self._fs()
-        if not fs.exists(jpath(self.curated_path)):
-            return []
-        if not LoadLedger(self.spark, self.ledger_path).seen(_FEED):
-            return []
-        rids = []
-        for status in fs.listStatus(jpath(self.curated_path)):
-            name = status.getPath().getName()
-            if not name.startswith("run_id="):
-                continue
-            rid = name.removeprefix("run_id=")
-            if rid != current_run_id:
-                rids.append(rid)
-        if rids:
-            from ..sources.ledger import literal_strings_frame
-
-            (
-                literal_strings_frame(
-                    self.spark, sorted(rids), "run_id"
-                )
-                .withColumn("file_path", F.lit(self._PREMANIFEST))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(self.runs_path)
-            )
-        return sorted(rids)
 
     _RUNS_SCHEMA = "run_id string, file_path string"
 
@@ -374,7 +300,6 @@ class CurationDag:
         fs, jpath = self._fs()
         if not fs.exists(jpath(self.curated_path)):
             return []
-        self._backfill_manifest(current_run_id)
         manifest: dict[str, set[str]] = {}
         mdf = self._manifest()
         if mdf is not None:
@@ -394,9 +319,7 @@ class CurationDag:
                 continue
             fr = manifest.get(rid)
             # fr is None: unmanifested = crashed before its manifest
-            # record (pre-manifest committed stores were backfilled
-            # above, so this can no longer match them — r12 advice).
-            # Otherwise: fully-unledgered (never committed) AND
+            # record. Otherwise: fully-unledgered (never committed) AND
             # overlapping the current ingest set (the replay re-lands
             # at least one of its files' docs) — overlap, not subset,
             # so staged files vanishing between crash and replay
@@ -531,8 +454,7 @@ class CurationDag:
             if mdf.limit(1).count() == 0:
                 # runs/ exists but holds zero rows: only a crash
                 # inside the very first manifest append leaves this
-                # state (any committed landing wrote its rows first,
-                # and the pre-manifest backfill wrote sentinels).
+                # state (any committed landing wrote its rows first).
                 # Raise rather than semi-join everything away — a
                 # consumer in this window must see a named error, not
                 # an empty pool that reads as "no data"

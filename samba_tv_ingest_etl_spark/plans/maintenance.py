@@ -186,8 +186,8 @@ def index_fragmentation(
     spark, path: str, kind: str
 ) -> dict[str, dict[str | None, int]]:
     """Per-scope data-file counts for every component of a persisted
-    index — the fragmentation stat the maintenance gate reads and
-    ``tools/increment_cost.py --kind fragmentation`` reports. Keys
+    index — the fragmentation stat the maintenance gate reads (the
+    fragmentation-vs-compaction law is SCALING_r12.md §1). Keys
     are hive partition dir names (``band=3``) or ``None`` for flat
     components."""
     if kind not in INDEX_LAYOUTS:

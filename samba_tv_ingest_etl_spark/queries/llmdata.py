@@ -299,7 +299,7 @@ def q22_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.keep_min_id(corpus, pairs)
 
 
-# ---------------------------------------------------------------- q126
+# ---------------------------------------------------------------- q129
 
 
 def _incremental_minhash_oracle() -> str:
@@ -355,53 +355,30 @@ WHERE s.doc_id >= {_SPAN_OFFSET}
 
 
 @query(
-    "q126_incremental_minhash_dedup",
-    oracle=_incremental_minhash_oracle(),
-)
-def q126_incremental_minhash_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Incremental MinHash dedup — a NEW batch deduped against the
-    existing corpus index, the production shape at fleet size (you
-    never re-dedup 100 TB daily; you band the index once, at rest,
-    and join each day's batch against it —
-    dedup.incremental_minhash_survivors). Batch = the planted docs
-    (>= +1e12, the prefix near-dups), index = the natural corpus; a
-    new doc survives only if it near-dups no indexed doc and no
-    smaller-id batch doc. Signatures are per-doc deterministic, so
-    split-side signing is bit-identical to q22's whole-corpus pass —
-    the oracle pins that equivalence with the same sha256 minima."""
-    corpus = _prefix_corpus(spark, sf_dir)
-    sh = D.shingle_docs(corpus, ngram=_NGRAM)
-    new_sh = sh.filter(F.col("doc_id") >= _SPAN_OFFSET)
-    idx_sh = sh.filter(F.col("doc_id") < _SPAN_OFFSET)
-    return D.incremental_minhash_survivors(
-        new_sh, idx_sh, threshold_pct=_JACCARD_PCT
-    ).select("doc_id", F.col("set_size").cast("long").alias("set_size"))
-
-
-# ---------------------------------------------------------------- q129
-
-
-@query(
     "q129_indexed_incremental_dedup",
     oracle=_incremental_minhash_oracle(),
 )
 def q129_indexed_incremental_dedup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """q126 through the PERSISTED band index (r9 verdict #1): the
-    corpus side is signed and banded ONCE, written at rest
-    (dedup.write_band_index — docs/ + band-partitioned bands/), and
-    the increment reads it back instead of re-signing — per-increment
-    work is O(|batch|) signing + a batch-broadcast band join + one
-    streamed verify probe, never an O(corpus) sha256 pass. Shares
-    q126's oracle verbatim: the per-doc determinism contract says the
-    at-rest path must produce byte-identical survivors, so the
-    DuckDB hash match IS the end-to-end proof that persistence
-    round-trips signatures, band keys, and shingle sets exactly
-    (tests/test_dedup_incremental.py pins the same equivalence plus
-    the multi-increment ≡ wholesale property)."""
+    """Incremental MinHash dedup through the PERSISTED band index —
+    a NEW batch deduped against the existing corpus, the production
+    shape at fleet size (you never re-dedup 100 TB daily; you band
+    the index once, at rest, and join each day's batch against it).
+    Batch = the planted docs (>= +1e12, the prefix near-dups), index
+    = the natural corpus, signed and banded ONCE and written at rest
+    (dedup.write_band_index — docs/ + band-partitioned bands/); the
+    increment (dedup.dedup_increment_against_index, append=False)
+    reads it back instead of re-signing — per-increment work is
+    O(|batch|) signing + a batch-broadcast band join + one streamed
+    verify probe, never an O(corpus) sha256 pass. A new doc survives
+    only if it near-dups no indexed doc and no smaller-id batch doc.
+    Signatures are per-doc deterministic, so split-side signing is
+    bit-identical to q22's whole-corpus pass — the oracle pins that
+    equivalence with the same sha256 minima, and so proves that
+    persistence round-trips signatures, band keys, and shingle sets
+    exactly (tests/test_dedup_incremental.py pins the
+    multi-increment ≡ wholesale property)."""
     import tempfile
 
     corpus = _prefix_corpus(spark, sf_dir)
@@ -412,9 +389,8 @@ def q129_indexed_incremental_dedup(
     # files lazily — the caller collects after this function returns
     path = tempfile.mkdtemp(prefix="q129_band_index_")
     D.write_band_index(idx_sh, path)
-    idx_docs, idx_bands = D.read_band_index(spark, path)
-    return D.incremental_minhash_survivors_indexed(
-        new_sh, idx_docs, idx_bands, threshold_pct=_JACCARD_PCT
+    return D.dedup_increment_against_index(
+        new_sh, path, threshold_pct=_JACCARD_PCT, append=False
     ).select("doc_id", F.col("set_size").cast("long").alias("set_size"))
 
 
@@ -435,7 +411,7 @@ def q132_streaming_dedup_against_index(
     (streaming/dedup.DedupAgainstIndexBatch) and appended to it, so
     batch 2 sees batch 1's docs — the continuous-arrival production
     shape of the reference's incremental DAG (etl-dag.sql:33-46).
-    Shares q126/q129's oracle VERBATIM — but NOT unconditionally:
+    Shares q129's oracle VERBATIM — but NOT unconditionally:
     the increments ≡ wholesale property needs the split to be
     ID-MONOTONE and processed ascending (the index side dominates at
     ANY id, so a high-id doc processed before its low-id near-dup
@@ -1128,8 +1104,8 @@ def q130_ann_topk_lsh_banded(
     hyperplane bits — the SHIPPED ANN configuration for this corpus's
     low-similarity regime (r9 verdict #2 closed): q26's single-bucket
     AND-matching measured recall@10 ~5-7%, so the defaults were
-    re-picked from the measured frontier (tools/ann_frontier.py,
-    SCALING_r10.md) — (48 planes, 16 bands) is the only grid point
+    re-picked from the measured frontier (SCALING_r10.md) —
+    (48 planes, 16 bands) is the only grid point
     with recall >= 0.8 at BOTH measured scales (0.886 at sf0.1,
     0.922 at sf1), at ~0.7x brute-force candidate cost; the same
     frontier records IVF reaching 0.818 at ~0.15x cost once n >= 20k
@@ -1444,7 +1420,9 @@ def q133_ivf_index_persisted(
     probe reads the codebook plus ONLY the probed cluster
     partitions — the probed-cluster IN filter prunes directories at
     the file listing, so per-probe cost is independent of corpus
-    size instead of q32's train+assign pass per call. Shares q32's
+    size instead of q32's train+assign pass per call. The probe
+    routes through every cell (probe_cells=None), so it reads the
+    whole codebook and selects exactly q32's probes. Shares q32's
     oracle VERBATIM: probe/score is the same shared stage, so the
     DuckDB hash match proves the persistence round-trips codebook
     and assignments exactly (tests/test_ivf_index.py pins
@@ -1453,7 +1431,7 @@ def q133_ivf_index_persisted(
 
     from ..operators.similarity import (
         derived_cluster_count,
-        topk_ivf_indexed,
+        topk_ivf_indexed_hier,
         write_ivf_index,
     )
 
@@ -1466,9 +1444,9 @@ def q133_ivf_index_persisted(
         iters=_IVF_ITERS, dim=_DIM, train_sample=_IVF_SAMPLE,
         route_width=_ROUTE_WIDTH,
     )
-    out = topk_ivf_indexed(
+    out = topk_ivf_indexed_hier(
         spark, path, q.filter(F.col("vec_id") < 10),
-        k=10, nprobe=_IVF_NPROBE,
+        k=10, nprobe=_IVF_NPROBE, probe_cells=None,
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -1495,7 +1473,7 @@ def q134_ivf_index_append(
         append_ivf_index,
         derived_cluster_count,
         kmeans_centroids,
-        topk_ivf_indexed,
+        topk_ivf_indexed_hier,
         write_ivf_index,
     )
 
@@ -1514,9 +1492,9 @@ def q134_ivf_index_append(
         q.filter(F.col("vec_id") % 2 == 1), path,
         route_width=_ROUTE_WIDTH,
     )
-    out = topk_ivf_indexed(
+    out = topk_ivf_indexed_hier(
         spark, path, q.filter(F.col("vec_id") < 10),
-        k=10, nprobe=_IVF_NPROBE,
+        k=10, nprobe=_IVF_NPROBE, probe_cells=None,
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -1657,7 +1635,7 @@ def q135_semdedup_increment(
 ) -> DataFrame:
     """Incremental SemDeDup against the persisted IVF index — the
     third consumer of the q133/q134 index and the embedding-side
-    twin of q126/q129's incremental MinHash: the standing corpus is
+    twin of q129's incremental MinHash: the standing corpus is
     clustered AT REST, and a daily batch is assigned under the
     frozen codebook, compared only against its own clusters'
     members (partition-pruned read + broadcast batch), and appended.
@@ -5485,7 +5463,7 @@ def q125_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings (top-10 near cos ~0.5, each hyperplane bit near
     signal-free; the regime math that refuted q123's narrow bands,
     SCALING_r8_queries.md). That reading drove the r10 frontier
-    measurement (tools/ann_frontier.py, SCALING_r10.md) and the
+    measurement (SCALING_r10.md) and the
     re-picked defaults this audit now tracks: the banded
     (48, 16) OR-construction, recall@10 0.886/0.922 at sf0.1/sf1 —
     above the stated >= 0.8 target. q26 keeps the single-bucket
@@ -5930,7 +5908,7 @@ def q141_ivf_index_compacted_probe(
         append_ivf_index,
         derived_cluster_count,
         kmeans_centroids,
-        topk_ivf_indexed,
+        topk_ivf_indexed_hier,
         write_ivf_index,
     )
     from ..plans.maintenance import compact_index, vacuum_index
@@ -5956,9 +5934,9 @@ def q141_ivf_index_compacted_probe(
     # already tight is left untouched — the shipped nightly call
     compact_index(spark, path, "ivf", only_if_over=2)
     vacuum_index(spark, path)
-    out = topk_ivf_indexed(
+    out = topk_ivf_indexed_hier(
         spark, path, q.filter(F.col("vec_id") < 10),
-        k=10, nprobe=_IVF_NPROBE,
+        k=10, nprobe=_IVF_NPROBE, probe_cells=None,
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 

@@ -112,20 +112,20 @@ def windowed_counts(
 class DedupAgainstIndexBatch:
     """``foreachBatch`` handler: MinHash-dedup each micro-batch of
     documents against the PERSISTED band index, append the batch to
-    the index, and write surviving rows exactly-once — the streaming
-    twin of the batch increment (``operators/dedup.
+    the index, and write surviving rows exactly-once — a streaming
+    driver of the one batch-vs-index increment (``operators/dedup.
     dedup_increment_against_index``), which is itself the
     reference's watermark-driven touch-only-new-rows shape
     (etl-dag.sql:33-46) applied to dedup.
 
     Per batch: skip entirely if the output ledger already has
     ``(app_id, batch_id)`` (a fully-committed replay); otherwise
-    shingle the batch, dedup it via the REPLAY-SAFE increment (the
-    index side excludes the batch's own ids, so a crash between
-    index append and output commit replays bit-identically —
-    ``dedup_increment_against_index_replay_safe``), append the batch
-    to the index (every seen doc, survivors AND dropped: the min-id
-    shadow rule), and write the surviving document rows through the
+    shingle the batch, dedup it through the increment with
+    ``append=True`` — it is replay-safe (the index side excludes the
+    batch's own ids, so a crash between index append and output
+    commit replays bit-identically) and appends the batch to the
+    index (every seen doc, survivors AND dropped: the min-id shadow
+    rule) — and write the surviving document rows through the
     batch-id-partitioned exactly-once sink.
 
     Scale: per-batch work is O(|batch|) signing + one band join
@@ -168,12 +168,13 @@ class DedupAgainstIndexBatch:
         shingled = D.shingle_docs(
             batch_df.select("doc_id", "text"), ngram=self.ngram
         )
-        survivors = D.dedup_increment_against_index_replay_safe(
+        survivors = D.dedup_increment_against_index(
             shingled,
             self.index_path,
             num_perm=self.num_perm,
             bands=self.bands,
             threshold_pct=self.threshold_pct,
+            append=True,
         )
         # full surviving rows (all batch columns), not just ids — the
         # sink output is the deduped feed downstream jobs read

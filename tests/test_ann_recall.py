@@ -1,6 +1,6 @@
 """Recall contract of the shipped banded ANN (r9 verdict #2): the
-defaults re-picked from the measured frontier (tools/ann_frontier.py,
-SCALING_r10.md) must keep recall@10 >= 0.8 on the fixture corpus, and
+defaults re-picked from the measured frontier (SCALING_r10.md) must
+keep recall@10 >= 0.8 on the fixture corpus, and
 the banded OR-construction must dominate the single-bucket reference
 it replaced — if either pin breaks, the defaults regressed and the
 frontier needs re-measuring before shipping."""

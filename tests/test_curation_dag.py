@@ -242,67 +242,11 @@ def test_drifting_replay_no_duplicates(spark, tmp_path):
     assert f"run_id={orphan_run}" not in names
 
 
-def test_premanifest_store_first_landing_preserves_committed(
-    spark, tmp_path
-):
-    """A store created BEFORE the run manifest existed has committed
-    curated partitions with no runs/ rows (r12 advice): the first
-    landing under manifest code must backfill those partitions into
-    the manifest — NOT treat `fr is None` as "crashed" and delete
-    every previously committed run."""
-    import shutil
-
-    train = _train(spark).localCheckpoint(eager=True)
-    ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
-    mid = ids[len(ids) // 2]
-    want = _curated_rows(
-        _run_days(spark, str(tmp_path / "clean"), train, [mid])
-    )
-
-    root = str(tmp_path / "root")
-    dag = CurationDag(spark, root, _eval_toks(spark))
-    train.filter(F.col("doc_id") <= mid).write.mode("overwrite").parquet(
-        f"{root}/stage/day0"
-    )
-    dag.run_once()
-    day0_runs = {
-        r["run_id"]
-        for r in spark.read.parquet(dag.runs_path)
-        .select("run_id")
-        .distinct()
-        .collect()
-    }
-    # simulate the pre-manifest era: the committed run has curated/
-    # and ledger rows but no manifest
-    shutil.rmtree(dag.runs_path)
-
-    train.filter(F.col("doc_id") > mid).write.mode("overwrite").parquet(
-        f"{root}/stage/day1"
-    )
-    dag.run_once()
-    assert _curated_rows(dag) == want and len(want) > 0
-    # the committed partition survived on disk, manifest-backfilled
-    fs, jpath = dag._fs()
-    names = {
-        s.getPath().getName()
-        for s in fs.listStatus(jpath(dag.curated_path))
-    }
-    assert {f"run_id={r}" for r in day0_runs} <= names
-    backfilled = {
-        r["file_path"]
-        for r in spark.read.parquet(dag.runs_path)
-        .filter(F.col("run_id").isin(list(day0_runs)))
-        .collect()
-    }
-    assert backfilled == {CurationDag._PREMANIFEST}
-
-
 def test_fresh_store_first_landing_crash_still_gcs(spark, tmp_path):
-    """The backfill must NOT grandfather in a manifest-era crashed
-    attempt: on a store whose ledger is empty (nothing ever
-    committed), a first landing that died between the curated write
-    and its manifest record is a genuine orphan — the drifted replay
-    still garbage-collects it."""
+    """A crashed first attempt is never grandfathered in: on a store
+    whose ledger is empty (nothing ever committed), a first landing
+    that died between the curated write and its manifest record is a
+    genuine orphan — the drifted replay still garbage-collects it."""
     train = _train(spark).localCheckpoint(eager=True)
     ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
     mid = ids[len(ids) // 2]
@@ -476,59 +420,91 @@ def test_maintain_gated_second_run_touches_nothing(spark, tmp_path):
     assert set(out2["index"].values()) == {0}
 
 
-def test_premanifest_backfill_survives_empty_runs_dir(
-    spark, tmp_path
-):
-    """The crash window INSIDE the backfill (or first _record_run)
-    append: runs/ exists as a directory but holds zero committed
-    rows. The replay must re-run the backfill off the ROW count, not
-    directory existence — skipping it would read every pre-manifest
-    partition as unmanifested and GC committed data."""
-    import os
-    import shutil
-
-    train = _train(spark).localCheckpoint(eager=True)
-    ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
-    mid = ids[len(ids) // 2]
-    want = _curated_rows(
-        _run_days(spark, str(tmp_path / "clean"), train, [mid])
-    )
-
-    root = str(tmp_path / "root")
-    dag = CurationDag(spark, root, _eval_toks(spark))
-    train.filter(F.col("doc_id") <= mid).write.mode("overwrite").parquet(
-        f"{root}/stage/day0"
-    )
-    dag.run_once()
-    # pre-manifest era + a crashed append's leftover: empty runs/ dir
-    shutil.rmtree(dag.runs_path)
-    os.makedirs(dag.runs_path)
-
-    train.filter(F.col("doc_id") > mid).write.mode("overwrite").parquet(
-        f"{root}/stage/day1"
-    )
-    dag.run_once()
-    assert _curated_rows(dag) == want and len(want) > 0
-
-
 def test_curated_raises_in_empty_manifest_window(spark, tmp_path):
     """runs/ present with zero rows + curated data on disk is only
     ever the crashed-first-manifest-append window: curated() must
     raise a named error, not silently semi-join every committed
-    partition away (an empty pool that reads as 'no data')."""
+    partition away (an empty pool that reads as 'no data'). The
+    crash leaves the ledger empty and the files still staged, so
+    the next pass replays the day and heals the store."""
     import os
-    import shutil
 
     import pytest
 
-    train = _train(spark)
-    dag = _run_days(spark, str(tmp_path / "root"), train, [])
-    assert len(_curated_rows(dag)) > 0
-    shutil.rmtree(dag.runs_path)
-    os.makedirs(dag.runs_path)
+    train = _train(spark).localCheckpoint(eager=True)
+    want = _curated_rows(
+        _run_days(spark, str(tmp_path / "clean"), train, [])
+    )
+
+    root = str(tmp_path / "root")
+    dag = CurationDag(spark, root, _eval_toks(spark))
+    train.write.mode("overwrite").parquet(f"{root}/stage/day0")
+    state: dict = {}
+    dag._task_ingest(state)
+    dag._task_dedup(state)
+    dag._task_decontaminate(state)
+    dag._write_curated(state["gated"], state["run_id"])
+    dag._gc_superseded_runs(state["run_id"], state["files"])
+    os.makedirs(dag.runs_path)  # crash inside the first _record_run
     with pytest.raises(RuntimeError, match="holds no rows"):
         dag.curated().collect()
-    # the replay heals it (nothing newly staged: backfill re-runs off
-    # the row gate, re-recording the committed partition)
     dag.run_once()
-    assert len(_curated_rows(dag)) > 0
+    assert _curated_rows(dag) == want and len(want) > 0
+
+
+# Spark jobs a steady-state landing may launch: the curated write,
+# the GC's manifest collect and ledger read, the manifest append and
+# the ledger commit (measured 7 on the fixture at 4 cores). A no-op
+# pass lands nothing and launches none; the dedup task stays at or
+# under its measured 19 jobs.
+MAX_APPEND_JOBS = 7
+MAX_DEDUP_JOBS = 19
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_curation_task_job_counts(spark, tmp_path):
+    train = _train(spark).localCheckpoint(eager=True)
+    ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
+    mid = ids[len(ids) // 2]
+    root = str(tmp_path / "root")
+    dag = CurationDag(spark, root, _eval_toks(spark))
+
+    def one_pass(tag):
+        state: dict = {}
+        dag._task_ingest(state)
+        kept, dedup = _jobs(
+            spark, f"curation-dedup-{tag}", lambda: dag._task_dedup(state)
+        )
+        dag._task_decontaminate(state)
+        landed, append = _jobs(
+            spark, f"curation-append-{tag}",
+            lambda: dag._task_append(state),
+        )
+        return kept, dedup, landed, append
+
+    train.filter(F.col("doc_id") <= mid).write.mode("overwrite").parquet(
+        f"{root}/stage/day0"
+    )
+    kept, dedup, landed, _ = one_pass("bootstrap")
+    assert kept > 0 and landed == 1
+    assert dedup <= MAX_DEDUP_JOBS
+
+    train.filter(F.col("doc_id") > mid).write.mode("overwrite").parquet(
+        f"{root}/stage/day1"
+    )
+    kept, dedup, landed, append = one_pass("steady")
+    assert kept > 0 and landed == 1
+    assert dedup <= MAX_DEDUP_JOBS
+    assert 1 <= append <= MAX_APPEND_JOBS
+
+    _, dedup, landed, append = one_pass("noop")
+    assert landed == 0 and append == 0 and dedup == 0

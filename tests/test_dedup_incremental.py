@@ -47,32 +47,6 @@ def _wholesale(sh):
     )
 
 
-def test_indexed_path_equals_inline(spark, tmp_path):
-    """Same batch, same index corpus: reading the index at rest
-    (write_band_index → incremental_minhash_survivors_indexed) must
-    return byte-identical survivors to the inline path that signs
-    the index per run."""
-    sh = D.shingle_docs(_docs(spark), ngram=NGRAM)
-    new_sh = sh.filter(F.col("doc_id") >= 1_000_000)
-    idx_sh = sh.filter(F.col("doc_id") < 1_000_000)
-    inline = _survivor_ids(
-        D.incremental_minhash_survivors(new_sh, idx_sh, threshold_pct=PCT)
-    )
-    path = str(tmp_path / "band_index")
-    D.write_band_index(idx_sh, path)
-    idx_docs, idx_bands = D.read_band_index(spark, path)
-    at_rest = _survivor_ids(
-        D.incremental_minhash_survivors_indexed(
-            new_sh, idx_docs, idx_bands, threshold_pct=PCT
-        )
-    )
-    assert at_rest == inline
-    assert len(inline) > 0
-    # the planted near-dups did exercise the drop path
-    new_ids = _survivor_ids(new_sh)
-    assert inline < new_ids
-
-
 def test_increments_equal_wholesale(spark, tmp_path):
     """The incremental≡backfill property at dedup grain: build the
     index from batch 1, run batches 2 and 3 as increments (each
@@ -126,10 +100,9 @@ def test_append_is_idempotent(spark, tmp_path):
         idx_sh.filter(F.col("set_size") > 0), hash_mode="sha2"
     )
     D.append_band_index(signed_idx, path)
-    idx_docs, idx_bands = D.read_band_index(spark, path)
     again = _survivor_ids(
-        D.incremental_minhash_survivors_indexed(
-            new_sh, idx_docs, idx_bands, threshold_pct=PCT
+        D.dedup_increment_against_index(
+            new_sh, path, threshold_pct=PCT, append=False
         )
     )
     assert again == once

@@ -40,7 +40,9 @@ def test_indexed_probe_matches_inline(spark, tmp_path):
         q, path, n_centroids=8, iters=2,
         train_sample=(1, 4), route_width=4,
     )
-    indexed = S.topk_ivf_indexed(spark, path, probes, k=10, nprobe=2)
+    indexed = S.topk_ivf_indexed_hier(
+        spark, path, probes, k=10, nprobe=2, probe_cells=None
+    )
     assert _rows(indexed) == _rows(inline)
 
 
@@ -64,8 +66,12 @@ def test_append_equals_wholesale(spark, tmp_path):
         q.filter(F.col("vec_id") % 2 == 1), parts, route_width=4
     )
 
-    got = S.topk_ivf_indexed(spark, parts, probes, k=10, nprobe=2)
-    want = S.topk_ivf_indexed(spark, whole, probes, k=10, nprobe=2)
+    got = S.topk_ivf_indexed_hier(
+        spark, parts, probes, k=10, nprobe=2, probe_cells=None
+    )
+    want = S.topk_ivf_indexed_hier(
+        spark, whole, probes, k=10, nprobe=2, probe_cells=None
+    )
     assert _rows(got) == _rows(want)
 
 
@@ -81,7 +87,9 @@ def test_probe_prunes_partitions(spark, tmp_path):
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2)
     plan = (
-        S.topk_ivf_indexed(spark, path, probes, k=10, nprobe=2)
+        S.topk_ivf_indexed_hier(
+            spark, path, probes, k=10, nprobe=2, probe_cells=None
+        )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -129,9 +137,6 @@ def test_semdedup_increment_sequential_equals_union(spark, tmp_path):
 
 
 _PROBES = {
-    "flat": lambda spark, path, probes: S.topk_ivf_indexed(
-        spark, path, probes, k=10, nprobe=2
-    ),
     "hier": lambda spark, path, probes: S.topk_ivf_indexed_hier(
         spark, path, probes, k=10, nprobe=2
     ),
@@ -144,8 +149,7 @@ def test_probe_neutral_to_replayed_append(spark, tmp_path, probe):
     leaves bit-identical duplicate rows in vectors/; the probe must
     rank as if the append ran once — without the probe stage's
     (query_id, cand_id) dedup a duplicated vector takes two
-    row_number ranks and displaces a genuine neighbor (r10 advice).
-    Both at-rest probes share that stage."""
+    row_number ranks and displaces a genuine neighbor (r10 advice)."""
     run = _PROBES[probe]
     q = _corpus(spark)
     probes = q.filter(F.col("vec_id") < 10)
@@ -216,32 +220,6 @@ def test_codebook_guard_raises(spark, tmp_path, monkeypatch):
         S.read_ivf_index(spark, path)
 
 
-def test_semdedup_increment_inline_matches_indexed(spark, tmp_path):
-    """The measurement twin (index side assigned inline per call)
-    must produce identical survivors to the at-rest path under the
-    same codebook — assignment is per-row deterministic and the
-    decision core is shared code."""
-    q = _corpus(spark)
-    cents = S.kmeans_centroids(q, k=8, iters=2, train_sample=(1, 4))
-    idx_side = q.filter(F.col("vec_id") % 3 == 0)
-    batch = q.filter(F.col("vec_id") % 3 != 0)
-    path = str(tmp_path / "ivf")
-    S.write_ivf_index(idx_side, path, cents=cents, route_width=4)
-    indexed = sorted(
-        r["vec_id"]
-        for r in S.semdedup_increment_against_index(
-            batch, path, threshold_pct=35, route_width=4, append=False
-        ).collect()
-    )
-    inline = sorted(
-        r["vec_id"]
-        for r in S.semdedup_increment_inline(
-            batch, idx_side, cents, threshold_pct=35, route_width=4
-        ).collect()
-    )
-    assert inline == indexed and len(indexed) > 0
-
-
 def test_semdedup_increment_replay_identical(spark, tmp_path):
     """A replay after the append (crash window) must be
     bit-identical: the index side excludes the batch's own ids."""
@@ -270,19 +248,24 @@ def test_semdedup_increment_replay_identical(spark, tmp_path):
 
 # ---------------------------------------------------------------------
 # hierarchical codebook (r11 verdict #4): O(√k) driver pulls for probe
-# and append, exactness pinned against the flat paths.
+# and append, exactness pinned against the flat-codebook paths.
 
 
 def test_hier_probe_all_cells_equals_flat(spark, tmp_path):
     """probe_cells=None routes through ALL cells, so the sub-codebook
     union is the full codebook and the hierarchical probe must equal
-    the flat probe EXACTLY — the pure-plumbing identity that holds on
-    any data."""
+    the inline probe over the same (flat) codebook EXACTLY — the
+    pure-plumbing identity that holds on any data."""
     q = _corpus(spark)
     probes = q.filter(F.col("vec_id") < 10)
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
-    flat = _rows(S.topk_ivf_indexed(spark, path, probes, k=10, nprobe=2))
+    flat = _rows(
+        S.topk_ivf(
+            q, probes, k=10, n_centroids=8, iters=2, nprobe=2,
+            route_width=4,
+        )
+    )
     hier = _rows(
         S.topk_ivf_indexed_hier(
             spark, path, probes, k=10, nprobe=2, probe_cells=None
@@ -294,12 +277,17 @@ def test_hier_probe_all_cells_equals_flat(spark, tmp_path):
 def test_hier_probe_shipped_width_equals_flat(spark, tmp_path):
     """At the shipped probe width the routed cells must cover the
     true nprobe nearest centroids on the test corpus — the
-    data-dependent equality q140 also pins through DuckDB."""
+    data-dependent equality q140 also pins through DuckDB. The
+    all-cells probe reads the whole codebook."""
     q = _corpus(spark)
     probes = q.filter(F.col("vec_id") < 10)
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
-    flat = _rows(S.topk_ivf_indexed(spark, path, probes, k=10, nprobe=2))
+    flat = _rows(
+        S.topk_ivf_indexed_hier(
+            spark, path, probes, k=10, nprobe=2, probe_cells=None
+        )
+    )
     hier = _rows(
         S.topk_ivf_indexed_hier(
             spark, path, probes, k=10, nprobe=2, probe_cells=4
@@ -349,8 +337,14 @@ def test_hier_append_equals_flat_append(spark, tmp_path):
     )
     assert got == want and len(got) > 0
     assert _rows(
-        S.topk_ivf_indexed(spark, hier_p, probes, k=10, nprobe=2)
-    ) == _rows(S.topk_ivf_indexed(spark, flat_p, probes, k=10, nprobe=2))
+        S.topk_ivf_indexed_hier(
+            spark, hier_p, probes, k=10, nprobe=2, probe_cells=None
+        )
+    ) == _rows(
+        S.topk_ivf_indexed_hier(
+            spark, flat_p, probes, k=10, nprobe=2, probe_cells=None
+        )
+    )
 
 
 def test_hier_requires_cells_level(spark, tmp_path):
@@ -479,9 +473,6 @@ def test_planted_ties_break_to_lower_ids(spark, tmp_path):
     want = sorted(
         [(100, 5, 1, cos[0]), (100, 3, 2, cos[1]), (100, 7, 3, cos[1])]
     )
-    assert _rows(
-        S.topk_ivf_indexed(spark, path, query, k=10, nprobe=1)
-    ) == want
     for width in (1, None):
         assert _rows(
             S.topk_ivf_indexed_hier(
@@ -497,7 +488,6 @@ def test_empty_query_batch_returns_empty_frame(spark, tmp_path):
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
     for out in (
-        S.topk_ivf_indexed(spark, path, none),
         S.topk_ivf_indexed_hier(spark, path, none),
         S.topk_ivf(q, none, n_centroids=8),
     ):

@@ -217,13 +217,14 @@ def test_eval_span_excision(spark):
         D.excise_contaminated_spans(train, evals, k=8, max_eval_grams=2)
 
 
-def test_incremental_minhash_survivors(spark):
+def test_incremental_minhash_survivors(spark, tmp_path):
     """Incremental dedup contract: (a) a new doc near-dupping an
     INDEXED doc drops no matter the ids; (b) an intra-batch dup pair
     resolves by min-id (smaller survives, larger drops) even with no
     index match; (c) empty-shingle docs share the sentinel signature
     but must never pair (union > 0 guard); (d) a genuinely new doc
-    survives."""
+    survives. The index is written at rest and the batch runs
+    through the one batch-vs-index increment."""
     text_a = "alpha beta gamma delta epsilon zeta eta theta iota"
     text_b = "kappa lambda mu nu xi omicron pi rho sigma"
     idx = spark.createDataFrame(
@@ -242,10 +243,12 @@ def test_incremental_minhash_survivors(spark):
         ["doc_id", "text"],
     )
     sh = lambda d: D.shingle_docs(d, ngram=3)  # noqa: E731
+    path = str(tmp_path / "band_index")
+    D.write_band_index(sh(idx), path)
     out = {
         r["doc_id"]
-        for r in D.incremental_minhash_survivors(
-            sh(new), sh(idx), threshold_pct=50
+        for r in D.dedup_increment_against_index(
+            sh(new), path, threshold_pct=50, append=False
         ).collect()
     }
     assert out == {101, 103, 104, 105}

@@ -224,7 +224,9 @@ def test_compact_ivf_index_probe_and_increment_identical(spark, tmp_path):
                            route_width=4)
     key = lambda r: tuple(r)  # noqa: E731
     probe = lambda: sorted(  # noqa: E731
-        map(key, S.topk_ivf_indexed(spark, path, probes, k=10).collect())
+        map(key, S.topk_ivf_indexed_hier(
+            spark, path, probes, k=10, probe_cells=None
+        ).collect())
     )
     inc = lambda: sorted(  # noqa: E731
         r["vec_id"]
@@ -309,7 +311,9 @@ def test_compact_index_gate_is_partition_selective(spark, tmp_path):
 
     key = lambda r: tuple(r)  # noqa: E731
     want = sorted(
-        map(key, S.topk_ivf_indexed(spark, path, probes, k=10).collect())
+        map(key, S.topk_ivf_indexed_hier(
+            spark, path, probes, k=10, probe_cells=None
+        ).collect())
     )
     import os
 
@@ -335,6 +339,8 @@ def test_compact_index_gate_is_partition_selective(spark, tmp_path):
     }
     assert snap(cold) == cold_before
     got = sorted(
-        map(key, S.topk_ivf_indexed(spark, path, probes, k=10).collect())
+        map(key, S.topk_ivf_indexed_hier(
+            spark, path, probes, k=10, probe_cells=None
+        ).collect())
     )
     assert got == want and len(got) > 0

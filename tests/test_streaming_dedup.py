@@ -249,9 +249,7 @@ def test_streaming_dedup_replay_is_idempotent(spark, tmp_path):
     sh = D.shingle_docs(batch, ngram=3)
     first = sorted(
         r["doc_id"]
-        for r in D.dedup_increment_against_index_replay_safe(
-            sh, idx
-        ).collect()
+        for r in D.dedup_increment_against_index(sh, idx).collect()
     )
     handler(batch, 0)  # replay: batch docs are already in the index
     got = spark.read.parquet(out)
