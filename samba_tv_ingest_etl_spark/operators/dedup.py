@@ -35,7 +35,7 @@ Scale notes per operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -114,11 +114,21 @@ def shingle_docs(
     df = widen_to_cores(df)
     staged = df.select(
         F.col(id_col).alias("doc_id"),
-        tokens(F.col(text_col)).alias("_toks"),
+        tokens(F.col(text_col)).alias("toks"),
     ).localCheckpoint(eager=True)
-    return staged.select(
+    return shingle_tokens(staged, ngram)
+
+
+def shingle_tokens(toks_df: DataFrame, ngram: int = 3) -> DataFrame:
+    """(doc_id, shingles, set_size) from a (doc_id, toks) frame whose
+    token column is ALREADY materialized — the barrier
+    ``shingle_docs`` documents. Callers that hold such a frame for
+    other consumers too (the curation batch feeds both the dedup and
+    the excision) shingle from it directly instead of tokenizing and
+    checkpointing a second time."""
+    return toks_df.select(
         "doc_id",
-        word_shingles(F.col("_toks"), ngram).alias("shingles"),
+        word_shingles(F.col("toks"), ngram).alias("shingles"),
     ).select(
         "doc_id",
         "shingles",
@@ -709,36 +719,37 @@ def append_band_index(
     that was dropped as a near-dup still shadows future arrivals,
     exactly as it would in a wholesale q22 pass over the union).
     Caller MUST materialize anything computed FROM the index before
-    appending (``dedup_increment_against_index`` does): a lazy plan
-    re-executed after the append would see the batch on its own
-    index side and self-match every doc into the dropped set.
+    appending (``dedup_increment_against_index`` holds its survivors
+    on the driver): a lazy plan re-executed after the append would
+    see the batch on its own index side and self-match every doc
+    into the dropped set. ``signed_new`` feeds two writes, so hand
+    in a materialized frame (the increment passes its driver-held
+    batch) or accept that each write re-signs it.
+
+    The index's identity row (``meta/``) is checked on every append:
+    ``write_band_index`` commits it last, so an index without it is
+    incomplete and the read fails instead of appending to it.
 
     Append-safety: a duplicate append (retry after a crash between
     the two writes) changes results NOWHERE — candidates and the
-    dropped set are ``distinct()`` downstream — so the two appends
+    dropped set are deduplicated downstream — so the two appends
     need no cross-directory transaction, only idempotent re-runs."""
     from ..sources import writer
 
-    spark = signed_new.sparkSession
-    sc = spark.sparkContext
-    jmeta = sc._jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "/meta"
+    meta = (
+        signed_new.sparkSession.read.schema(_META_SCHEMA)
+        .parquet(path.rstrip("/") + "/meta")
+        .collect()[0]
     )
-    fs = jmeta.getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.exists(jmeta):  # pre-meta indexes skip (back-compat)
-        meta = spark.read.schema(_META_SCHEMA).parquet(
-            str(jmeta)
-        ).collect()[0]
-        if (meta["num_perm"], meta["bands"]) != (num_perm, bands):
-            raise ValueError(
-                f"band index at {path} was written with num_perm="
-                f"{meta['num_perm']}, bands={meta['bands']}; append "
-                f"called with num_perm={num_perm}, bands={bands}: "
-                "signature width and band split are part of the "
-                "index's identity — re-band via the persisted sig "
-                "(docs/) or rebuild, never mix slice layouts."
-            )
-    signed_new = signed_new.localCheckpoint(eager=True)
+    if (meta["num_perm"], meta["bands"]) != (num_perm, bands):
+        raise ValueError(
+            f"band index at {path} was written with num_perm="
+            f"{meta['num_perm']}, bands={meta['bands']}; append "
+            f"called with num_perm={num_perm}, bands={bands}: "
+            "signature width and band split are part of the "
+            "index's identity — re-band via the persisted sig "
+            "(docs/) or rebuild, never mix slice layouts."
+        )
     # concurrent jobs (guide §2.6): the duplicate-append contract
     # above already tolerates a crash leaving either directory
     # appended without the other — replays re-append both.
@@ -774,6 +785,26 @@ def read_band_index(
     )
 
 
+def _band_key_sql(band: str, slice_: str) -> str:
+    """SQL of the 64-bit hash of a (band, slice) bucket key — one
+    spelling for the batch side (computed in the signing job) and the
+    filter over ``bands/``, so equal keys hash equal."""
+    return f"xxhash64({band}, {slice_})"
+
+
+def ints_in(expr: str, values) -> Column:
+    """``<expr> IN (values)`` for integer values, as ONE parsed SQL
+    expression. ``Column.isin`` builds one JVM literal per value, a
+    Py4J round trip each (measured ~0.3 s for ~500 ids, local
+    session on 4 vCPU);
+    the SQL text crosses once, and the optimizer turns the list into
+    the same hash-set ``InSet``. An empty list is ``false``."""
+    values = sorted({int(v) for v in values})
+    if not values:
+        return F.lit(False)
+    return F.expr(f"{expr} IN ({', '.join(map(str, values))})")
+
+
 def dedup_increment_against_index(
     new_shingled: DataFrame,
     path: str,
@@ -787,10 +818,11 @@ def dedup_increment_against_index(
     index so the next increment sees it — the production shape of
     MinHash dedup at fleet size, where the corpus is never re-deduped
     wholesale: per-increment work is signing the batch (O(|batch|)),
-    one band join driven by the batch's keys, and one streamed verify
-    probe of the docs table, never an O(corpus) re-sign (the
+    one scan of ``bands/`` for candidates and one id-pruned scan of
+    ``docs/`` for the verify, never an O(corpus) re-sign (the
     reference's watermark discipline, etl-dag.sql:33-46: touch only
-    new rows). Returns surviving batch docs as (doc_id, set_size).
+    new rows). Returns surviving batch docs as (doc_id, set_size), a
+    driver-held local relation: collecting it launches no job.
 
     A new doc drops when exact Jaccard >= threshold against (a) ANY
     indexed doc — the index is the established corpus, it always
@@ -807,12 +839,11 @@ def dedup_increment_against_index(
     streaming ``foreachBatch`` handler): after a crash between
     "batch appended to the index" and "offsets/ledger committed",
     the replayed batch's docs are ON the index side, so the index
-    side anti-joins away the batch's own doc_ids (broadcast — the
-    batch is increment-sized), restoring exactly the pre-append
-    index: a replay is bit-identical to the first run. The same
-    exclusion means a batch that reuses a doc_id already in the
-    index is not dropped against that indexed doc — ids are keys,
-    and a reused id reads as a replay of it. The re-append then
+    side excludes the batch's own doc_ids, restoring exactly the
+    pre-append index: a replay is bit-identical to the first run.
+    The same exclusion means a batch that reuses a doc_id already in
+    the index is not dropped against that indexed doc — ids are
+    keys, and a reused id reads as a replay of it. The re-append then
     duplicates the batch's index rows, which ``append_band_index``
     documents as result-neutral; duplicate-tolerant re-append is
     REQUIRED, not just tolerated: skipping "already present" docs
@@ -820,103 +851,147 @@ def dedup_increment_against_index(
     Single-writer assumption: batch N+1 only runs after batch N
     commits, so the exclusion never races a sibling append.
 
-    Empty-shingle docs never sign or band: the sentinel
-    signature ``[HASH_P]*num_perm`` would put EVERY empty doc into
-    one band bucket — a corpus-wide hot key whose candidates the
-    exact verify always discards (``union > 0`` never holds for an
-    empty-vs-empty pair, and a sentinel slice never equals a real
-    one because every real minimum is ``< HASH_P``). Empty batch
-    docs pass through as survivors unconditionally.
+    Empty-shingle docs never band: the sentinel signature
+    ``[HASH_P]*num_perm`` would put EVERY empty doc into one band
+    bucket — a corpus-wide hot key whose candidates the exact verify
+    always discards (``union > 0`` never holds for an empty-vs-empty
+    pair, and a sentinel slice never equals a real one because every
+    real minimum is ``< HASH_P``). Empty batch docs pass through as
+    survivors unconditionally.
 
-    Join shape at scale: the batch's band keys BROADCAST and the
-    at-rest index streams through the map-side join (the index is
-    the 100 TB side — it must never shuffle); the candidate set is
-    O(|batch| · bucket width), so it broadcasts too and the verify
-    probe streams the docs table once, column-pruned. Survivors are
-    MATERIALIZED (localCheckpoint) before the append — the returned
-    frame must never lazily re-read index files the append just
-    grew (the footgun named on ``append_band_index``)."""
+    Join shape at scale: ONE driver-held copy of the signed batch.
+    The batch is signed and collected in one job (ids, set sizes,
+    shingle sets, signatures and the 64-bit hash of each band key),
+    and every batch-side operand comes from that copy, so no
+    batch-side frame is ever broadcast (a broadcast is a Spark job of
+    its own). The index side is scanned once per directory and never
+    shuffles: ``bands/`` streams through a literal hash filter on the
+    batch's band keys (|batch| · bands values), and ``docs/`` is
+    pruned by a literal filter on the candidate ids; both return only
+    matching rows. The exact key test, the batch-id exclusion, the
+    new x new candidates and every Jaccard verify run on the driver,
+    and the append writes the copy as a local relation. The job count
+    therefore does not grow with the index: sign, ``bands/``,
+    ``docs/`` (skipped without index candidates), and with
+    ``append`` the ``meta/`` check plus two writes. Driver bound: the
+    batch plus the candidate set (O(|batch| · bucket width) pairs and
+    the shingle sets of their index docs) — increment-sized by
+    contract, and no more than a broadcast of the batch side would
+    pull through the driver. Every index read is collected before
+    the append, so nothing returned can lazily re-read files the
+    append grows (the footgun named on ``append_band_index``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     spark = new_shingled.sparkSession
-    idx_docs, idx_bands = read_band_index(spark, path)
-    new_empty = new_shingled.filter(F.col("set_size") == 0).select(
-        "doc_id", "set_size"
+    # the one batch-side job: sign (the sha2 kernel), hash each band
+    # key the way the bands/ filter will, and collect
+    r = num_perm // bands
+    batch = minhash_signatures(
+        new_shingled, num_perm, hash_mode="sha2"
+    ).withColumn(
+        "_bkeys",
+        F.array(*[
+            F.expr(_band_key_sql(str(b), f"slice(sig, {b * r + 1}, {r})"))
+            for b in range(bands)
+        ]),
+    ).toArrow()
+    signed = batch.filter(pc.greater(batch["set_size"], 0))
+
+    def rows_by_id(t) -> dict[int, list]:
+        # doc_id -> [(shingle set, set size)], one entry per row
+        out: dict[int, list] = {}
+        for d, n, sh in zip(
+            t["doc_id"].to_pylist(),
+            t["set_size"].to_pylist(),
+            t["shingles"].to_pylist(),
+        ):
+            out.setdefault(d, []).append((set(sh), n))
+        return out
+
+    rows_of = rows_by_id(signed)
+    # (band, *slice) -> batch ids in that bucket; _banded's layout
+    keys: dict[tuple, set[int]] = {}
+    for d, sig in zip(
+        signed["doc_id"].to_pylist(), signed["sig"].to_pylist()
+    ):
+        for band in range(bands):
+            keys.setdefault(
+                (band, *sig[band * r:(band + 1) * r]), set()
+            ).add(d)
+
+    def similar(a: tuple, b: tuple) -> bool:
+        common = len(a[0] & b[0])
+        union = a[1] + b[1] - common
+        return union > 0 and common * 100 >= threshold_pct * union
+
+    dropped: set[int] = set()
+
+    def drop_similar(pairs, match_rows) -> None:
+        # exact Jaccard per (new_id, match_id) candidate; a dropped
+        # doc needs no further verify
+        for new_id, match_id in pairs:
+            if new_id not in dropped and any(
+                similar(a, b)
+                for a in rows_of[new_id]
+                for b in match_rows(match_id)
+            ):
+                dropped.add(new_id)
+
+    # new x new, on the driver: the smaller id wins
+    drop_similar(
+        (
+            (new_id, match_id)
+            for bucket in keys.values()
+            for new_id in bucket
+            for match_id in bucket
+            if match_id < new_id
+        ),
+        rows_of.__getitem__,
     )
-    signed_new = minhash_signatures(
-        new_shingled.filter(F.col("set_size") > 0),
-        num_perm,
-        hash_mode="sha2",
-    ).localCheckpoint(eager=True)
-    batch_ids = F.broadcast(signed_new.select("doc_id"))
-    index_docs = idx_docs.select("doc_id", "set_size", "shingles").join(
-        batch_ids, "doc_id", "left_anti"
-    )
-    index_bands = idx_bands.select("doc_id", "band", "slice").join(
-        batch_ids, "doc_id", "left_anti"
-    )
-    bn = _banded(signed_new, num_perm, bands)
-    b = bn.select(F.col("doc_id").alias("new_id"), "band", "slice")
-    cand_ni = (
-        F.broadcast(b)
-        .join(
-            index_bands.select(
-                F.col("doc_id").alias("match_id"), "band", "slice"
-            ),
-            ["band", "slice"],
+    if keys:
+        idx_docs, idx_bands = read_band_index(spark, path)
+        # new x index: the hash filter streams bands/, the exact key
+        # test and the batch-id exclusion (replay safety) run here
+        hits = idx_bands.filter(
+            ints_in(
+                _band_key_sql("band", "slice"),
+                {h for hs in signed["_bkeys"].to_pylist() for h in hs},
+            )
+        ).select("doc_id", "band", "slice").toArrow()
+        cand = {
+            (new_id, d)
+            for d, band, sl in zip(
+                hits["doc_id"].to_pylist(),
+                hits["band"].to_pylist(),
+                hits["slice"].to_pylist(),
+            )
+            if d not in rows_of
+            for new_id in keys.get((band, *sl), ())
+            # dropped batch docs need no index rows fetched
+            if new_id not in dropped
+        }
+        if cand:
+            found = idx_docs.filter(
+                ints_in("doc_id", {m for _, m in cand})
+            ).select("doc_id", "set_size", "shingles").toArrow()
+            index_rows = rows_by_id(found)
+            drop_similar(cand, lambda m: index_rows.get(m, ()))
+    keep = pc.invert(pc.is_in(signed["doc_id"], pa.array(
+        sorted(dropped), pa.int64()
+    )))
+    survivors = pa.concat_tables([
+        signed.filter(keep).select(["doc_id", "set_size"]),
+        batch.filter(pc.equal(batch["set_size"], 0)).select(
+            ["doc_id", "set_size"]
+        ),
+    ])
+    if append and keys:  # an all-empty batch has nothing to index
+        append_band_index(
+            spark.createDataFrame(signed.drop_columns(["_bkeys"])),
+            path, num_perm, bands,
         )
-        .select("new_id", "match_id")
-    )
-    cand_nn = (
-        b.join(
-            bn.select(
-                F.col("doc_id").alias("match_id"), "band", "slice"
-            ),
-            ["band", "slice"],
-        )
-        .filter(F.col("match_id") < F.col("new_id"))
-        .select("new_id", "match_id")
-    )
-    all_docs = index_docs.unionByName(
-        signed_new.select("doc_id", "set_size", "shingles")
-    )
-    ver = (
-        F.broadcast(cand_ni.unionByName(cand_nn).distinct())
-        .join(
-            all_docs.select(
-                F.col("doc_id").alias("match_id"),
-                F.col("set_size").alias("size_b"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "match_id",
-        )
-        .join(
-            signed_new.select(
-                F.col("doc_id").alias("new_id"),
-                F.col("set_size").alias("size_a"),
-                F.col("shingles").alias("sh_a"),
-            ),
-            "new_id",
-        )
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.col("size_a") + F.col("size_b") - common
-    dropped = (
-        ver.withColumn("_c", common)
-        .withColumn("_u", union)
-        .filter(
-            (F.col("_u") > 0)
-            & (F.col("_c") * 100 >= F.lit(threshold_pct) * F.col("_u"))
-        )
-        .select(F.col("new_id").alias("doc_id"))
-        .distinct()
-    )
-    survivors = (
-        signed_new.select("doc_id", "set_size")
-        .join(dropped, "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    if append:
-        append_band_index(signed_new, path, num_perm, bands)
-    return survivors.unionByName(new_empty)
+    return spark.createDataFrame(survivors)
 
 
 def lsh_band_stats(
@@ -1261,6 +1336,61 @@ def _apply_spans(
 EVAL_GRAM_BUDGET = 5_000_000
 
 
+def eval_gram_set(
+    eval_toks: DataFrame,
+    k: int = 8,
+    max_eval_grams: int = EVAL_GRAM_BUDGET,
+) -> DataFrame:
+    """The eval side of span decontamination: the DISTINCT k-gram
+    strings of the eval suite (``gram``), bounded by
+    ``max_eval_grams`` with a loud raise and held on the driver as a
+    local relation. Build it once per eval suite — a DAG that
+    decontaminates every pass against a fixed suite builds it at
+    construction (``plans/curation.CurationDag``) — and hand it to
+    ``excise_against_eval_grams``.
+
+    Driver-held, not checkpointed: the broadcast in the span join
+    pulls the gram set through the driver on every use anyway, so
+    the driver bound is the one the budget already sets, and the
+    frame carries its rows in the plan — no executor block to lose,
+    so a long-lived holder needs no recompute-on-loss story. One
+    bounded pull (``limit``) both materializes it and runs the
+    budget check; an over-budget suite stops at ``max_eval_grams``
+    + 1 rows."""
+    # NO .filter(size(toks) >= k) here: ngram_occurrences already
+    # returns [] for short docs (explode drops them — same rows out),
+    # and the filter is an anti-optimization — Catalyst pushes a
+    # predicate on a DERIVED column below the corpus-widening
+    # exchange, re-inlining the full tokenize into the scan-stage
+    # filter, where it is evaluated a second time (and serially, the
+    # scan being single-split at fixture scale) — the guide §4.4
+    # duplicated-evaluation trap in JVM-expression form. Plan-proven
+    # (plans/r13/q127 before/after: the scan Filter loses its
+    # split(lower(text)) term); fixture walls move within the host
+    # noise (q127 pooled-median -9%, q131 a wash over 6 interleaved
+    # A/B rounds) — the removed duplicate is the scale argument, not
+    # a fixture headline.
+    grams = (
+        eval_toks.select(
+            F.explode(
+                ngram_occurrences(F.col("toks"), k)
+            ).alias("gram")
+        )
+        .distinct()
+        .limit(max_eval_grams + 1)
+        .toArrow()
+    )
+    if grams.num_rows > max_eval_grams:
+        raise ValueError(
+            f"eval side exceeds the broadcast budget of "
+            f"{max_eval_grams} distinct {k}-grams: the eval suite "
+            "must be bounded by construction, not a "
+            "corpus-proportional split — shrink the eval selection "
+            "or raise max_eval_grams deliberately"
+        )
+    return eval_toks.sparkSession.createDataFrame(grams)
+
+
 def contaminated_span_intervals(
     train_toks: DataFrame,
     eval_toks: DataFrame,
@@ -1279,54 +1409,27 @@ def contaminated_span_intervals(
     Scale shape: the eval side collapses to its DISTINCT k-gram
     strings — bounded by the eval suite's size BY CONTRACT, enforced
     against ``max_eval_grams`` with a loud raise (the q122/q123
-    broadcast-budget discipline) — and broadcasts; the training
-    corpus streams through ONE gram explode + broadcast semi-join
-    (map-side, no shuffle of gram text), and only the HITS
-    (leak-density-bounded) reach the island merge. Matching is exact
-    string equality on the gram, so there is no hash round-trip to
-    verify."""
-    # NO .filter(size(toks) >= k) here: ngram_occurrences already
-    # returns [] for short docs (explode drops them — same rows out),
-    # and the filter is an anti-optimization — Catalyst pushes a
-    # predicate on a DERIVED column below the corpus-widening
-    # exchange, re-inlining the full tokenize into the scan-stage
-    # filter, where it is evaluated a second time (and serially, the
-    # scan being single-split at fixture scale) — the guide §4.4
-    # duplicated-evaluation trap in JVM-expression form. Plan-proven
-    # (plans/r13/q127 before/after: the scan Filter loses its
-    # split(lower(text)) term); fixture walls move within the host
-    # noise (q127 pooled-median -9%, q131 a wash over 6 interleaved
-    # A/B rounds) — the removed duplicate is the scale argument, not
-    # a fixture headline.
-    ev = (
-        eval_toks.select(
-            F.explode(
-                ngram_occurrences(F.col("toks"), k)
-            ).alias("gram")
-        )
-        .distinct()
-        # read twice — budget count below, broadcast semi-join after —
-        # and the tokenize -> explode -> distinct lineage is the
-        # expensive part of the eval side; materialize it once (house
-        # rule for any subtree consumed by two jobs)
-        .localCheckpoint(eager=True)
+    broadcast-budget discipline, ``eval_gram_set``) — and
+    broadcasts; the training corpus streams through ONE gram explode
+    + broadcast semi-join (map-side, no shuffle of gram text), and
+    only the HITS (leak-density-bounded) reach the island merge.
+    Matching is exact string equality on the gram, so there is no
+    hash round-trip to verify."""
+    return _spans_against_grams(
+        train_toks, eval_gram_set(eval_toks, k, max_eval_grams), k
     )
-    n = ev.count()
-    if n > max_eval_grams:
-        raise ValueError(
-            f"eval side has {n} distinct {k}-grams, over the "
-            f"broadcast budget of {max_eval_grams}: the eval suite "
-            "must be bounded by construction, not a "
-            "corpus-proportional split — shrink the eval selection "
-            "or raise max_eval_grams deliberately"
-        )
+
+
+def _spans_against_grams(
+    train_toks: DataFrame, grams: DataFrame, k: int
+) -> DataFrame:
     g = train_toks.select(
         "doc_id",
         F.posexplode(
             ngram_occurrences(F.col("toks"), k)
         ).alias("pos", "gram"),
     )
-    pos_df = g.join(F.broadcast(ev), "gram", "left_semi").select(
+    pos_df = g.join(F.broadcast(grams), "gram", "left_semi").select(
         "doc_id", "pos"
     )
     return _merge_islands(pos_df, k)
@@ -1342,7 +1445,17 @@ def excise_contaminated_spans(
     q120 pattern at the eval boundary): remove every training-doc
     token covered by a contaminated span, keep the rest of the
     document. Returns (doc_id, n_tokens, n_kept, toks_clean)."""
-    spans = contaminated_span_intervals(
-        train_toks, eval_toks, k, max_eval_grams
+    return excise_against_eval_grams(
+        train_toks, eval_gram_set(eval_toks, k, max_eval_grams), k
     )
-    return _apply_spans(train_toks, spans, k)
+
+
+def excise_against_eval_grams(
+    train_toks: DataFrame, grams: DataFrame, k: int = 8
+) -> DataFrame:
+    """``excise_contaminated_spans`` against a prebuilt
+    ``eval_gram_set`` — the one excision path; lazy, so building it
+    launches no job."""
+    return _apply_spans(
+        train_toks, _spans_against_grams(train_toks, grams, k), k
+    )

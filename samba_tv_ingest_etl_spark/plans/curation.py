@@ -34,7 +34,7 @@ Exactly-once, end to end: a crash ANYWHERE before the final ledger
 commit replays the whole day — the ingest re-lists the unrecorded
 files, the dedup increment (``dedup.dedup_increment_against_index``,
 the one batch-vs-index MinHash entry point) is replay-safe (the
-index side anti-joins the batch's own ids, and the re-append's
+index side excludes the batch's own ids, and the re-append's
 duplicate rows are result-neutral by the band index contract),
 decontamination is deterministic per doc, and the curated write
 dynamically overwrites the run's own partition (run_id = hash of
@@ -54,19 +54,30 @@ wholesale over ``curated/`` when a training mix is cut — an
 incremental top-k-by-score would need retraction semantics no
 append-only pipeline has.
 
-Scale shape: per-day work is O(|batch|) signing + batch-broadcast
-band join + streamed verify probe (the measured flat increment law,
-SCALING_r10) + per-doc excision of the batch only; the standing
-corpus is touched ONLY through the at-rest index. The eval set is
-benchmark-sized by the enforced broadcast budget
-(dedup.EVAL_GRAM_BUDGET).
+Scale shape: per-day work is O(|batch|) and touches the standing
+corpus ONLY through the at-rest index. Ingest tokenizes the batch
+once into one (doc_id, toks) checkpoint that both the dedup and the
+excision read. The dedup signs that batch in one job and holds ONE
+copy of it on the driver (ids, shingle sets, signatures); every
+batch-side operand comes from that copy, so no batch-side frame is
+broadcast. The index is scanned once per directory and never
+shuffles: ``bands/`` through a literal filter on the batch's
+band-key hashes for candidates, ``docs/`` pruned to the candidate
+ids for the exact verify; the new x new candidates, every Jaccard
+verify and the survivor list stay on the driver. Driver bound: the
+batch plus the candidate set — increment-sized by contract. The
+eval set is benchmark-sized by the enforced broadcast budget
+(dedup.EVAL_GRAM_BUDGET); its gram set is built once per DAG, so
+decontamination launches no job of its own. A steady pass makes 15
+Spark jobs on the test fixture, and the dedup's share does not grow
+with the index (``tests/test_curation_dag.py`` pins both).
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as D
@@ -80,6 +91,8 @@ CURATION_CRON = "0 5 * * * UTC"
 
 _STAGE_PATTERN = r".*\.parquet$"
 _FEED = "curation_docs"
+# declared on the drop read, so it launches no schema-inference job
+_DROP_SCHEMA = "doc_id long, text string"
 
 
 class CurationDag:
@@ -93,7 +106,8 @@ class CurationDag:
                           committed-run record curated() filters by
 
     ``eval_toks``: (doc_id, toks) token frame of the eval suite —
-    fixed and benchmark-sized by the decontamination contract."""
+    fixed and benchmark-sized by the decontamination contract; its
+    gram set is built once, at construction."""
 
     def __init__(
         self,
@@ -112,12 +126,13 @@ class CurationDag:
         self.ledger_path = f"{self.root}/ledger"
         self.curated_path = f"{self.root}/curated"
         self.runs_path = f"{self.root}/runs"
-        # bounded by the decon broadcast budget; read every run
-        self.eval_toks = eval_toks.localCheckpoint(eager=True)
         self.ngram = ngram
         self.threshold_pct = threshold_pct
         self.span_k = span_k
         self.min_kept = min_kept
+        # the eval suite is fixed for the DAG's lifetime: its gram set
+        # and budget check run once here, not on every pass
+        self.eval_grams = D.eval_gram_set(eval_toks, k=span_k)
 
     # -- setup ---------------------------------------------------------
 
@@ -130,30 +145,46 @@ class CurationDag:
         )
 
     def _index_exists(self) -> bool:
-        """True only when BOTH index halves exist: write_band_index
-        lands docs/ then bands/ as two separate atomic overwrites, so
-        a crash between them must route the replay back to the
-        BOOTSTRAP branch (whose overwrites are idempotent) — gating
-        on docs/ alone sent that replay to the steady-state branch,
-        whose read of the missing bands/ fails permanently (r11
-        advice: a manual-cleanup crash loop)."""
+        """True only when the WHOLE index exists: write_band_index
+        commits docs/, bands/ and then meta/ as separate atomic
+        overwrites, so a crash between any two must route the replay
+        back to the BOOTSTRAP branch (whose overwrites are
+        idempotent). Gating on docs/ alone sent that replay to the
+        steady-state branch, whose read of the missing bands/ fails
+        permanently (r11 advice: a manual-cleanup crash loop); a
+        missing meta/ would fail every steady append's identity
+        check the same way."""
         fs, jpath = self._fs()
-        return bool(
-            fs.exists(jpath(self.index_path + "/docs"))
-            and fs.exists(jpath(self.index_path + "/bands"))
+        return all(
+            fs.exists(jpath(f"{self.index_path}/{d}"))
+            for d in ("docs", "bands", "meta")
         )
 
     # -- tasks ---------------------------------------------------------
 
     def _task_ingest(self, state: dict) -> int:
+        """Materialize the batch ONCE as (doc_id, toks): the dedup
+        shingles from it and the excision cuts it, so each doc is
+        tokenized once per pass. The row count comes from an
+        observation on the checkpoint job, not a count job.
+
+        Recompute-on-loss: a ``localCheckpoint`` block has no lineage,
+        so losing one (executor loss) fails the task that reads it.
+        That failure lands before the pass's ledger commit, and a
+        failed pass is a crash the DAG already replays whole: the next
+        pass re-lists the unrecorded files and rebuilds the batch. The
+        checkpoint lives for one pass only."""
         from ..sources.ledger import LoadLedger
+        from ..sources.splits import widen_to_cores
         from ..sources.stage import list_stage_files
 
-        ledger = LoadLedger(self.spark, self.ledger_path)
         discovered = list_stage_files(
             self.spark, self.stage_path, _STAGE_PATTERN
         )
-        new = ledger.new_files(_FEED, discovered)
+        # one ledger read per pass: the landing's GC reuses it
+        seen = LoadLedger(self.spark, self.ledger_path).seen(_FEED)
+        new = [f for f in discovered if f not in seen]
+        state["ledgered"] = seen
         state["files"] = new
         if not new:
             state["batch"] = None
@@ -163,29 +194,32 @@ class CurationDag:
         state["run_id"] = hashlib.sha256(
             "\n".join(sorted(new)).encode()
         ).hexdigest()[:16]
-        batch = (
-            self.spark.read.parquet(*new)
-            .select("doc_id", "text")
+        rows = Observation()
+        state["batch"] = (
+            widen_to_cores(
+                self.spark.read.schema(_DROP_SCHEMA).parquet(*new)
+            )
+            .select("doc_id", tokens(F.col("text")).alias("toks"))
+            .observe(rows, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        state["batch"] = batch
-        return batch.count()
+        return rows.get["n"]
 
     def _task_dedup(self, state: dict) -> int:
         if state.get("batch") is None:
             state["survivor_docs"] = None
             return 0
         batch = state["batch"]
-        shingled = D.shingle_docs(batch, ngram=self.ngram)
+        shingled = D.shingle_tokens(batch, ngram=self.ngram)
         # Bootstrap: the FIRST batch becomes the index (parquet can't
         # persist a zero-row partitioned frame's schema, so there is
         # no "empty index" on disk), and the replay-safe increment
-        # then runs against it — its anti-join of the batch's own ids
+        # then runs against it — its exclusion of the batch's own ids
         # makes the index side effectively empty, so survivors reduce
         # to the batch-internal smaller-id rule: ONE code path for
         # bootstrap, steady state, and crash replay (a crash after
         # the bootstrap write lands in the steady-state branch, whose
-        # anti-join + result-neutral re-append reproduce the same
+        # exclusion + result-neutral re-append reproduce the same
         # survivors bit-for-bit).
         bootstrap = not self._index_exists()
         if bootstrap:
@@ -196,21 +230,17 @@ class CurationDag:
             threshold_pct=self.threshold_pct,
             append=not bootstrap,
         )
-        state["survivor_docs"] = batch.join(
-            F.broadcast(survivors.select("doc_id")), "doc_id",
-            "left_semi",
-        ).localCheckpoint(eager=True)
-        return state["survivor_docs"].count()
+        # driver-held survivors: the collect and the count are free
+        ids = [r["doc_id"] for r in survivors.collect()]
+        state["survivor_docs"] = batch.filter(D.ints_in("doc_id", ids))
+        return len(ids)
 
     def _task_decontaminate(self, state: dict) -> int:
         if state.get("survivor_docs") is None:
             state["gated"] = None
             return 0
-        t = state["survivor_docs"].select(
-            "doc_id", tokens(F.col("text")).alias("toks")
-        )
-        out = D.excise_contaminated_spans(
-            t, self.eval_toks, k=self.span_k
+        out = D.excise_against_eval_grams(
+            state["survivor_docs"], self.eval_grams, k=self.span_k
         )
         state["gated"] = out.filter(
             (F.col("n_kept") * 2 >= F.col("n_tokens"))
@@ -224,7 +254,9 @@ class CurationDag:
         if state.get("gated") is None:
             return 0
         self._write_curated(state["gated"], state["run_id"])
-        self._gc_superseded_runs(state["run_id"], state["files"])
+        self._gc_superseded_runs(
+            state["run_id"], state["files"], state["ledgered"]
+        )
         self._record_run(state["run_id"], state["files"])
         # watermark LAST: only a fully-landed run marks its files
         # loaded; any earlier crash replays the whole day
@@ -291,10 +323,16 @@ class CurationDag:
         )
 
     def _gc_superseded_runs(
-        self, current_run_id: str, current_files: list[str]
+        self,
+        current_run_id: str,
+        current_files: list[str],
+        ledgered: set[str] | None = None,
     ) -> list[str]:
         """Delete curated partitions of crashed attempts the current
-        run supersedes. Returns the removed run_ids."""
+        run supersedes. Returns the removed run_ids. ``ledgered`` is
+        the feed's ledger as this pass's ingest read it (the ledger
+        only changes in the pass's own final commit); it is read here
+        when not given."""
         from ..sources.ledger import LoadLedger
 
         fs, jpath = self._fs()
@@ -307,7 +345,10 @@ class CurationDag:
                 manifest.setdefault(r["run_id"], set()).add(
                     r["file_path"]
                 )
-        ledgered = LoadLedger(self.spark, self.ledger_path).seen(_FEED)
+        if ledgered is None:
+            ledgered = LoadLedger(self.spark, self.ledger_path).seen(
+                _FEED
+            )
         cur = set(current_files)
         removed = []
         for status in fs.listStatus(jpath(self.curated_path)):

@@ -370,9 +370,10 @@ def q129_indexed_incremental_dedup(
     (dedup.write_band_index — docs/ + band-partitioned bands/); the
     increment (dedup.dedup_increment_against_index, append=False)
     reads it back instead of re-signing — per-increment work is
-    O(|batch|) signing + a batch-broadcast band join + one streamed
-    verify probe, never an O(corpus) sha256 pass. A new doc survives
-    only if it near-dups no indexed doc and no smaller-id batch doc.
+    O(|batch|) signing + one hash-filtered scan of bands/ + one
+    id-pruned scan of docs/, never an O(corpus) sha256 pass. A new
+    doc survives only if it near-dups no indexed doc and no
+    smaller-id batch doc.
     Signatures are per-doc deterministic, so split-side signing is
     bit-identical to q22's whole-corpus pass — the oracle pins that
     equivalence with the same sha256 minima, and so proves that
@@ -385,13 +386,16 @@ def q129_indexed_incremental_dedup(
     sh = D.shingle_docs(corpus, ngram=_NGRAM)
     new_sh = sh.filter(F.col("doc_id") >= _SPAN_OFFSET)
     idx_sh = sh.filter(F.col("doc_id") < _SPAN_OFFSET)
-    # mkdtemp, not TemporaryDirectory: the returned frame reads these
-    # files lazily — the caller collects after this function returns
-    path = tempfile.mkdtemp(prefix="q129_band_index_")
-    D.write_band_index(idx_sh, path)
-    return D.dedup_increment_against_index(
-        new_sh, path, threshold_pct=_JACCARD_PCT, append=False
-    ).select("doc_id", F.col("set_size").cast("long").alias("set_size"))
+    # the increment returns driver-held survivors, so the index can go
+    # before the caller collects
+    with tempfile.TemporaryDirectory(prefix="q129_band_index_") as path:
+        D.write_band_index(idx_sh, path)
+        survivors = D.dedup_increment_against_index(
+            new_sh, path, threshold_pct=_JACCARD_PCT, append=False
+        )
+    return survivors.select(
+        "doc_id", F.col("set_size").cast("long").alias("set_size")
+    )
 
 
 # ---------------------------------------------------------------- q132

@@ -128,10 +128,10 @@ class DedupAgainstIndexBatch:
     rule) — and write the surviving document rows through the
     batch-id-partitioned exactly-once sink.
 
-    Scale: per-batch work is O(|batch|) signing + one band join
-    driven by the batch's band keys (the ``bands/`` side is
-    partition-pruned to those bands) + one column-pruned verify
-    probe of ``docs/`` — the index is never re-signed, so a
+    Scale: per-batch work is O(|batch|) signing + one scan of
+    ``bands/`` filtered by the batch's band-key hashes + one scan of
+    ``docs/`` pruned to the candidate ids — the index is never
+    re-signed and never shuffles, so a
     long-running stream's per-batch cost is flat in index size
     (measured in SCALING_r10.md for the batch path this wraps).
     State lives in the index files + the sink ledger, NOT the
@@ -177,15 +177,10 @@ class DedupAgainstIndexBatch:
             append=True,
         )
         # full surviving rows (all batch columns), not just ids — the
-        # sink output is the deduped feed downstream jobs read
-        self._sink(
-            batch_df.join(
-                F.broadcast(survivors.select("doc_id")),
-                "doc_id",
-                "left_semi",
-            ),
-            batch_id,
-        )
+        # sink output is the deduped feed downstream jobs read. The
+        # survivors are driver-held, so the ids filter as literals
+        ids = [r["doc_id"] for r in survivors.collect()]
+        self._sink(batch_df.filter(D.ints_in("doc_id", ids)), batch_id)
 
 
 def dedup_stream_against_index(

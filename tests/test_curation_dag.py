@@ -452,13 +452,51 @@ def test_curated_raises_in_empty_manifest_window(spark, tmp_path):
     assert _curated_rows(dag) == want and len(want) > 0
 
 
-# Spark jobs a steady-state landing may launch: the curated write,
-# the GC's manifest collect and ledger read, the manifest append and
-# the ledger commit (measured 7 on the fixture at 4 cores). A no-op
-# pass lands nothing and launches none; the dedup task stays at or
-# under its measured 19 jobs.
-MAX_APPEND_JOBS = 7
-MAX_DEDUP_JOBS = 19
+def test_bootstrap_crash_before_meta_rebootstraps(spark, tmp_path):
+    """Crash window between the bootstrap's bands/ and meta/ commits:
+    docs/ and bands/ landed, the identity row did not. The replay
+    must re-bootstrap (the index is incomplete without meta/), not
+    take the steady branch, whose append cannot check the index's
+    width — and the curated pool must equal a clean run's."""
+    import os
+    import shutil
+
+    from samba_tv_ingest_etl_spark.operators import dedup as D
+
+    train = _train(spark).localCheckpoint(eager=True)
+    want = _curated_rows(_run_days(spark, str(tmp_path / "clean"), train, []))
+
+    root = str(tmp_path / "root")
+    dag = CurationDag(spark, root, _eval_toks(spark))
+    train.write.mode("overwrite").parquet(f"{root}/stage/day0")
+    D.write_band_index(
+        D.shingle_docs(train.select("doc_id", "text"), ngram=dag.ngram),
+        dag.index_path,
+    )
+    shutil.rmtree(dag.index_path + "/meta")
+    dag.run_once()  # the replay
+    assert _curated_rows(dag) == want and len(want) > 0
+    assert os.path.isdir(dag.index_path + "/meta")
+
+
+# Spark jobs each task may launch, measured on the fixture at 4
+# cores (steady pass):
+#   ingest         3  the ledger read and the batch checkpoint (its
+#                     widening shuffle is a job of its own)
+#   dedup          6  sign+collect, bands/ probe, docs/ verify, meta/
+#                     check, two appends (bootstrap: the index write's
+#                     checkpoint and three writes, sign+collect,
+#                     bands/ probe)
+#   decontaminate  0  the eval grams are built by the constructor
+#   append         6  the curated write (3: its excision plan's
+#                     eval-gram broadcast and shuffle stage are jobs
+#                     of their own), manifest collect, manifest
+#                     append, ledger commit
+# A no-op pass reads the ledger and launches nothing else.
+MAX_INGEST_JOBS = 3
+MAX_DEDUP_JOBS = 6
+MAX_APPEND_JOBS = 6
+TASKS = ("ingest", "dedup", "decontaminate", "append")
 
 
 def _jobs(spark, group, fn):
@@ -471,6 +509,19 @@ def _jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _pass_jobs(spark, dag, tag):
+    """{task: (result, jobs)} for one pass run task by task."""
+    state: dict = {}
+    return {
+        t: _jobs(
+            spark,
+            f"curation-{t}-{tag}",
+            lambda t=t: getattr(dag, f"_task_{t}")(state),
+        )
+        for t in TASKS
+    }
+
+
 def test_curation_task_job_counts(spark, tmp_path):
     train = _train(spark).localCheckpoint(eager=True)
     ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
@@ -478,33 +529,61 @@ def test_curation_task_job_counts(spark, tmp_path):
     root = str(tmp_path / "root")
     dag = CurationDag(spark, root, _eval_toks(spark))
 
-    def one_pass(tag):
-        state: dict = {}
-        dag._task_ingest(state)
-        kept, dedup = _jobs(
-            spark, f"curation-dedup-{tag}", lambda: dag._task_dedup(state)
-        )
-        dag._task_decontaminate(state)
-        landed, append = _jobs(
-            spark, f"curation-append-{tag}",
-            lambda: dag._task_append(state),
-        )
-        return kept, dedup, landed, append
-
     train.filter(F.col("doc_id") <= mid).write.mode("overwrite").parquet(
         f"{root}/stage/day0"
     )
-    kept, dedup, landed, _ = one_pass("bootstrap")
-    assert kept > 0 and landed == 1
-    assert dedup <= MAX_DEDUP_JOBS
+    got = _pass_jobs(spark, dag, "bootstrap")
+    assert got["dedup"][0] > 0 and got["append"][0] == 1, got
+    assert got["ingest"][1] <= MAX_INGEST_JOBS, got
+    assert got["dedup"][1] <= MAX_DEDUP_JOBS, got
+    assert got["decontaminate"][1] == 0, got
 
     train.filter(F.col("doc_id") > mid).write.mode("overwrite").parquet(
         f"{root}/stage/day1"
     )
-    kept, dedup, landed, append = one_pass("steady")
-    assert kept > 0 and landed == 1
-    assert dedup <= MAX_DEDUP_JOBS
-    assert 1 <= append <= MAX_APPEND_JOBS
+    got = _pass_jobs(spark, dag, "steady")
+    assert got["dedup"][0] > 0 and got["append"][0] == 1, got
+    assert got["ingest"][1] <= MAX_INGEST_JOBS, got
+    assert got["dedup"][1] <= MAX_DEDUP_JOBS, got
+    assert got["decontaminate"][1] == 0, got
+    assert 1 <= got["append"][1] <= MAX_APPEND_JOBS, got
 
-    _, dedup, landed, append = one_pass("noop")
-    assert landed == 0 and append == 0 and dedup == 0
+    got = _pass_jobs(spark, dag, "noop")
+    assert got["ingest"][0] == 0 and got["append"][0] == 0, got
+    assert [got[t][1] for t in TASKS[1:]] == [0, 0, 0], got
+
+
+def test_steady_dedup_jobs_flat_in_index_size(spark, tmp_path):
+    """The dedup's job count depends on the batch, not the index: the
+    same steady batch against a 4x larger index launches exactly as
+    many jobs."""
+    train = _train(spark).localCheckpoint(eager=True)
+    ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
+    mid = ids[len(ids) // 2]
+    boot = train.filter(F.col("doc_id") <= mid)
+    # three more edited copies of the bootstrap, all below its ids
+    big = boot
+    for i in (1, 2, 3):
+        big = big.unionByName(
+            boot.select(
+                (F.col("doc_id") - F.lit(i * 10**13)).alias("doc_id"),
+                F.concat("text", F.lit(f" copy {i}")).alias("text"),
+            )
+        )
+    day = train.filter(F.col("doc_id") > mid)
+
+    def steady_dedup_jobs(name, index_docs):
+        root = str(tmp_path / name)
+        dag = CurationDag(spark, root, _eval_toks(spark))
+        index_docs.write.mode("overwrite").parquet(f"{root}/stage/day0")
+        dag.run_once()
+        day.write.mode("overwrite").parquet(f"{root}/stage/day1")
+        state: dict = {}
+        dag._task_ingest(state)
+        kept, n = _jobs(
+            spark, f"curation-dedup-{name}", lambda: dag._task_dedup(state)
+        )
+        assert kept > 0
+        return n
+
+    assert steady_dedup_jobs("x1", boot) == steady_dedup_jobs("x4", big)

@@ -128,3 +128,58 @@ def test_append_rejects_width_mismatch(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="identity"):
         D.append_band_index(signed, path, num_perm=64, bands=8)
+
+
+def test_double_match_empties_and_replay_equal_wholesale(spark, tmp_path):
+    """One batch doc is a near-dup of BOTH an indexed doc and a
+    smaller-id batch doc (both candidate paths hit it), next to
+    empty-shingle docs, and the batch's append is replayed (the crash
+    window between the index append and the caller's commit). The
+    first run and the replay must both return exactly the wholesale
+    min-id survivors of the batch, row for row."""
+    base = (
+        "the quick brown fox jumps over the lazy dog while seven "
+        "wise owls watch from an old oak tree at dusk"
+    )
+    planted_idx = spark.createDataFrame(
+        [(900_000, base)], "doc_id long, text string"
+    )
+    planted_new = spark.createDataFrame(
+        [
+            (3_000_000, base + " omega"),       # near-dup of 900_000
+            (3_000_001, base + " omega zeta"),  # of 900_000 AND 3_000_000
+            (3_000_002, "x"),                   # empty shingle sets
+            (3_000_003, "y z"),
+        ],
+        "doc_id long, text string",
+    )
+    docs = _docs(spark)
+    idx_sh = D.shingle_docs(
+        docs.filter(F.col("doc_id") < 1_000_000).unionByName(planted_idx),
+        ngram=NGRAM,
+    ).localCheckpoint(eager=True)
+    new_sh = D.shingle_docs(
+        docs.filter(F.col("doc_id") >= 1_000_000).unionByName(planted_new),
+        ngram=NGRAM,
+    ).localCheckpoint(eager=True)
+    path = str(tmp_path / "band_index")
+    D.write_band_index(idx_sh, path)
+
+    def rows(df):
+        return sorted((r["doc_id"], r["set_size"]) for r in df.collect())
+
+    first = rows(
+        D.dedup_increment_against_index(new_sh, path, threshold_pct=PCT)
+    )
+    replay = rows(
+        D.dedup_increment_against_index(new_sh, path, threshold_pct=PCT)
+    )
+    new_ids = _survivor_ids(new_sh)
+    want = _wholesale(idx_sh.unionByName(new_sh)) & new_ids
+    assert first == replay
+    assert {d for d, _ in first} == want
+    assert 3_000_001 not in want and 3_000_000 not in want
+    assert {3_000_002, 3_000_003} <= want
+    # every survivor keeps its own set size; empties pass through at 0
+    sizes = {r["doc_id"]: r["set_size"] for r in new_sh.collect()}
+    assert all(sizes[d] == n for d, n in first)
