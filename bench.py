@@ -72,9 +72,9 @@ HEADLINE = [
     # not a throughput one)
     "q136_ann_banded_index_persisted",
     # r12 joiner — sf1->sf10 gate row 3.17x (SCALING_r12.md) BEFORE
-    # joining: the hierarchical-codebook probe, the O(sqrt(k))
-    # driver path past MAX_CODEBOOK_ROWS. q139 measured there too
-    # but stays out (append variant, the q134 precedent)
+    # joining: the probe through the persisted cells/ level, which
+    # pulls O(sqrt(k)) codebook rows per routed cell. q139 measured
+    # there too but stays out (append variant, the q134 precedent)
     "q140_ivf_hier_codebook_probe",
 ]
 

@@ -664,35 +664,6 @@ def lsh_buckets(
     return quantized.mapInPandas(add_bucket, schema=out_schema)
 
 
-def _dist_to(centroid: list[int]) -> Column:
-    """Exact int64 squared L2 to a literal centroid:
-    ||q - c||^2 = norm2 - 2<q,c> + ||c||^2."""
-    cn = sum(v * v for v in centroid)
-    lit_c = F.array(*[F.lit(int(v)).cast("long") for v in centroid])
-    return (
-        F.col("norm2")
-        - F.lit(2).cast("long") * _dot(F.col("q"), lit_c)
-        + F.lit(int(cn)).cast("long")
-    )
-
-
-def _centroid_structs(cents: dict[int, list[int]]) -> list[Column]:
-    """(dist, cluster_id) structs for every live centroid — struct
-    ordering (dist asc, then id asc) is the deterministic tie-break
-    shared with the oracle's ``ORDER BY dist, c``."""
-    return [
-        F.struct(
-            _dist_to(vec).alias("d"),
-            F.lit(int(c)).cast("long").alias("c"),
-        )
-        for c, vec in sorted(cents.items())
-    ]
-
-
-def _assign_expr(cents: dict[int, list[int]]) -> Column:
-    return F.array_min(F.array(*_centroid_structs(cents)))["c"]
-
-
 def _centroid_df(spark, cents: dict[int, list[int]]) -> DataFrame:
     """Centroids as a tiny broadcastable table (c, cv, cn=||c||^2)."""
     rows = [
@@ -700,62 +671,6 @@ def _centroid_df(spark, cents: dict[int, list[int]]) -> DataFrame:
         for c, vec in sorted(cents.items())
     ]
     return local_df(spark, rows, "c long, cv array<long>, cn long")
-
-
-def _assign_pandas(
-    quantized: DataFrame, cents: dict[int, list[int]], keep: list[str]
-) -> DataFrame:
-    """Exact nearest-centroid assignment as one vectorized Arrow map
-    pass: each batch computes the full int64 distance matrix
-    ``D = norm2 - 2*Q@C^T + |C|^2`` with numpy and takes the per-row
-    argmin. Arithmetic and tie-break are identical to the
-    broadcast-join form this replaced (a joined-centroid ``_dot`` +
-    ``min(struct(d, c))``): centroid columns are ordered by ascending
-    centroid id, so numpy's first-minimum argmin IS the lowest-id
-    tie-break, and every value is exact int64 (quantized inputs bound
-    ``|q_i| <= QUANT`` so ``|D| <= 4*dim*QUANT^2 < 2^39``) — the
-    unrolled-SQL oracle reproduces assignments bit-for-bit.
-
-    Why not the broadcast join: with derived k (k ∝ n, the bound
-    that keeps per-cluster pair candidates flat), assignment is
-    O(n*k) dot products either way — but the join form evaluates one
-    interpreted higher-order-function dot per (row, centroid) pair,
-    which measured 71 s for n=20k, k=313 at sf1 vs ~1 s for the same
-    arithmetic as a numpy matmul. No shuffle either way: this pass
-    is map-side, and the only data movement is the k x dim centroid
-    matrix riding the serialized closure (k = n/target centroids x
-    64 dims x 8 B ~ 160 KB at sf1)."""
-    import numpy as np
-    import pandas as pd
-
-    ids = sorted(cents)
-    C = np.asarray([cents[i] for i in ids], dtype=np.int64)
-    cn = (C * C).sum(axis=1)
-    id_arr = np.asarray(ids, dtype=np.int64)
-    cols = ["vec_id", "cluster", *keep]
-    in_fields = {f.name: f for f in quantized.schema.fields}
-    out_schema = T.StructType(
-        [in_fields["vec_id"], T.StructField("cluster", T.LongType())]
-        + [in_fields[k] for k in keep]
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q_mat = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-            d = (
-                pdf["norm2"].to_numpy().astype(np.int64)[:, None]
-                - 2 * _imatmul(q_mat, C.T)
-                + cn[None, :]
-            )
-            out = pd.DataFrame({"vec_id": pdf["vec_id"]})
-            out["cluster"] = id_arr[np.argmin(d, axis=1)]
-            for k in keep:
-                out[k] = pdf[k]
-            yield out[cols]
-
-    return quantized.mapInPandas(assign, schema=out_schema)
 
 
 # Coarse-routing Lloyd steps over the centroid set (tiny: k rows).
@@ -852,37 +767,51 @@ def _assign_pandas_routed(
     quantized: DataFrame,
     cents: dict[int, list[int]],
     route: tuple[dict[int, list[int]], dict[int, int]],
-    route_width: int,
-    keep: list[str],
+    route_width: int | None,
 ) -> DataFrame:
-    """Two-level nearest-centroid assignment as one vectorized Arrow
-    map pass: each vector first scores the ``mc ~ √k`` coarse cells
-    (one n×mc int64 matmul), routes to its ``route_width`` nearest
-    cells (ties -> lowest cell id: stable argsort over ascending-id
-    columns), then takes the exact argmin over only the fine
-    centroids owned by those cells (ties -> lowest centroid id). Same
-    output contract as ``_assign_pandas``; the result differs from
-    exact argmin only when the true nearest centroid lives in a cell
-    the vector did not route to — an approximation the SQL oracle
-    reproduces exactly because every step is deterministic integer /
-    correctly-rounded IEEE arithmetic.
+    """The one nearest-centroid assignment kernel, for a corpus
+    (``write_ivf_index``, ``topk_ivf``, ``semdedup_drops``) and for a
+    batch appended to an at-rest index (``append_ivf_index``,
+    ``semdedup_increment_against_index``): one vectorized Arrow map
+    pass that yields ``(vec_id, cluster, q, norm2)``. Each vector
+    first scores the ``mc ~ √k`` coarse cells (one n×mc int64
+    matmul), routes to its ``route_width`` nearest cells (ties ->
+    lowest cell id: stable argsort over ascending-id columns), then
+    takes the exact argmin over only the fine centroids owned by
+    those cells (ties -> lowest centroid id). ``route_width=None``
+    routes through every cell, which is the exact flat argmin bit for
+    bit. A narrower width differs from it only when the true nearest
+    centroid lives in a cell the vector did not route to — an
+    approximation the SQL oracle reproduces exactly because every
+    step is deterministic integer / correctly-rounded IEEE arithmetic
+    (quantized inputs bound ``|q_i| <= QUANT``, so every distance is
+    an exact int64 below 2^39).
 
     Scale shape: O(√k + rw·k/√k) = O(√k) dots per vector vs O(k) for
-    the flat pass — with k ∝ n (``derived_cluster_count``) that turns
-    total assignment cost from O(n²/target) into O(n^1.5/√target).
-    Still map-side only: the k×dim fine matrix plus the mc×dim coarse
-    matrix ride the closure; no shuffle."""
+    the full width — with k ∝ n (``derived_cluster_count``) that
+    turns total assignment cost from O(n²/target) into
+    O(n^1.5/√target). ``cents`` may be a sub-codebook, provided it
+    holds every centroid of each cell a row can route to (the append
+    reads exactly those). Map-side only: the fine and coarse
+    matrices ride the closure; no shuffle. A numpy matmul, not a
+    join against a centroid table: the join form evaluates one
+    interpreted dot per (row, centroid) pair, measured 71 s against
+    ~1 s for n=20k, k=313 at sf1."""
     import numpy as np
     import pandas as pd
 
     coarse, cell_of = route
     ids = sorted(cents)
     id_arr = np.asarray(ids, dtype=np.int64)
-    C = np.asarray([cents[i] for i in ids], dtype=np.int64)
-    cn = (C * C).sum(axis=1)
     g_ids = sorted(coarse)
     G = np.asarray([coarse[g] for g in g_ids], dtype=np.int64)
     gn = (G * G).sum(axis=1)
+    # reshape keeps an empty sub-codebook (an empty batch routes to
+    # no cell) two-dimensional
+    C = np.asarray(
+        [cents[i] for i in ids], dtype=np.int64
+    ).reshape(len(ids), G.shape[1])
+    cn = (C * C).sum(axis=1)
     members = [
         np.asarray(
             [j for j, cid in enumerate(ids) if cell_of[cid] == g],
@@ -890,13 +819,12 @@ def _assign_pandas_routed(
         )
         for g in g_ids
     ]
-    rw = min(route_width, len(g_ids))
-    cols = ["vec_id", "cluster", *keep]
+    rw = len(g_ids) if route_width is None else min(route_width, len(g_ids))
     in_fields = {f.name: f for f in quantized.schema.fields}
-    out_schema = T.StructType(
-        [in_fields["vec_id"], T.StructField("cluster", T.LongType())]
-        + [in_fields[k] for k in keep]
-    )
+    out_schema = T.StructType([
+        in_fields["vec_id"], T.StructField("cluster", T.LongType()),
+        in_fields["q"], in_fields["norm2"],
+    ])
 
     def assign(batches):
         for pdf in batches:
@@ -931,9 +859,9 @@ def _assign_pandas_routed(
                 best_c[upd] = cj[better]
             out = pd.DataFrame({"vec_id": pdf["vec_id"]})
             out["cluster"] = best_c
-            for k in keep:
-                out[k] = pdf[k]
-            yield out[cols]
+            out["q"] = pdf["q"]
+            out["norm2"] = pdf["norm2"]
+            yield out
 
     return quantized.mapInPandas(assign, schema=out_schema)
 
@@ -959,10 +887,10 @@ def derived_cluster_count(
     the ASSIGNMENT: two-level routing (``coarse_route`` +
     ``_assign_pandas_routed`` — cluster the centroids into
     ``derived_coarse_count(k) = ⌈√k⌉`` cells, route each vector
-    through its nearest cells → O(n·√k)), enabled via the
-    ``route_width`` parameter of ``topk_ivf`` / ``semdedup_drops``.
-    The pair-join bound this formula buys is what makes that
-    investment worthwhile."""
+    through its ``route_width`` nearest cells → O(n·√k)); every
+    caller that passes a width gets it, and ``route_width=None``
+    keeps the O(n·k) exact argmin. The pair-join bound this formula
+    buys is what makes that investment worthwhile."""
     if n < 0:
         raise ValueError(f"negative corpus size {n}")
     if kmin < 1 or target_cluster_size < 1:
@@ -1083,14 +1011,6 @@ def kmeans_centroids(
     }
 
 
-def ivf_assign(
-    quantized: DataFrame, cents: dict[int, list[int]]
-) -> DataFrame:
-    """Add the coarse-quantizer ``cluster`` column. At 100 TB this is
-    the table's partition key: a probe touches nprobe partitions."""
-    return quantized.withColumn("cluster", _assign_expr(cents))
-
-
 def _collect_queries(queries_q: DataFrame):
     """The query batch on the driver as ``(ids, Q, norm2)`` numpy
     arrays — ONE bounded collect per probe. The batch is
@@ -1174,16 +1094,14 @@ def topk_ivf(
     distribution instead of fixed hyperplanes, so recall holds on
     clustered corpora where sign-bit buckets fragment.
 
-    Corpus assignment runs as the vectorized Arrow matmul pass:
-    flat O(n·k) (``_assign_pandas``) by default, or — with
-    ``route_width`` set — two-level O(n·√k) routing
-    (``coarse_route`` + ``_assign_pandas_routed``), the scale path
-    once k derives from corpus size. The tiny query side is routed
-    on the driver against the codebook it already holds
-    (``_nearest``), and the shared ``_probe_topk`` kernel skips every
-    cluster no query probes. Nothing here re-codegens per run; the
-    literal map-side ``ivf_assign`` remains the partition-key writer
-    for a persisted 100 TB index."""
+    Corpus assignment is the one Arrow kernel
+    (``_assign_pandas_routed``): two-level O(n·√k) routing through
+    ``route_width`` cells, the scale path once k derives from corpus
+    size, or the exact O(n·k) argmin at ``route_width=None``. The
+    tiny query side is routed on the driver against the codebook it
+    already holds (``_nearest``), and the shared ``_probe_topk``
+    kernel skips every cluster no query probes. Nothing here
+    re-codegens per run."""
     # no persist here: training manages (and releases) its own cache
     # inside kmeans_centroids; after it returns eagerly, the corpus is
     # scanned exactly once more for the final assignment.
@@ -1191,13 +1109,9 @@ def topk_ivf(
         corpus_q, k=n_centroids, iters=iters, dim=dim,
         train_sample=train_sample,
     )
-    if route_width is not None:
-        assigned = _assign_pandas_routed(
-            corpus_q, cents, coarse_route(cents), route_width,
-            keep=["q", "norm2"],
-        )
-    else:
-        assigned = _assign_pandas(corpus_q, cents, keep=["q", "norm2"])
+    assigned = _assign_pandas_routed(
+        corpus_q, cents, coarse_route(cents), route_width
+    )
     queries = _collect_queries(queries_q)
     probes = _nearest(queries[1], queries[2], cents, nprobe)
     return _probe_topk(assigned, queries, probes, k)
@@ -1366,11 +1280,11 @@ def write_ivf_index(
         )
     # hierarchical codebook at rest (r11 verdict #4): centroids/ is
     # hive-partitioned on the coarse cell and cells/ persists the
-    # first-level (cell-centroid) codebook, so consumers that know
-    # their cells (hier probe/append) read O(√k) rows driver-side
-    # instead of collecting the flat codebook — the successor
-    # MAX_CODEBOOK_ROWS names. coarse_route is a pure function of
-    # the codebook, so both levels are derivable and deterministic.
+    # first-level (cell-centroid) codebook, so every reader (probe,
+    # append, increment) routes through cells/ and pulls O(√k) rows
+    # per routed cell instead of the whole codebook. coarse_route is
+    # a pure function of the codebook, so both levels are derivable
+    # and deterministic.
     coarse, cell_of = coarse_route(cents)
     cdf = _centroid_df(spark, cents)
     cmap = local_df(
@@ -1397,8 +1311,12 @@ def write_ivf_index(
             None,
         ),
         (
-            _with_cell(_assign_with(corpus_q, cents, route_width), cents)
-            .repartition("cell"),
+            _with_cell(
+                _assign_pandas_routed(
+                    corpus_q, cents, (coarse, cell_of), route_width
+                ),
+                cell_of,
+            ).repartition("cell"),
             path.rstrip("/") + "/vectors",
             ["cell"],
         ),
@@ -1406,82 +1324,28 @@ def write_ivf_index(
     return cents
 
 
-def _assign_with(
-    corpus_q: DataFrame,
-    cents: dict[int, list[int]],
-    route_width: int | None,
-) -> DataFrame:
-    if route_width is not None:
-        return _assign_pandas_routed(
-            corpus_q, cents, coarse_route(cents), route_width,
-            keep=["q", "norm2"],
-        )
-    return _assign_pandas(corpus_q, cents, keep=["q", "norm2"])
-
-
-def _with_cell(
-    assigned: DataFrame, cents: dict[int, list[int]]
-) -> DataFrame:
+def _with_cell(assigned: DataFrame, cell_of: dict[int, int]) -> DataFrame:
     """Attach the coarse partition cell (``coarse_route``'s
-    cluster→cell map) via a broadcast join on the tiny mapping table
-    — a literal CASE/map over k entries would re-codegen per build
-    and blow up Janino at derived k."""
-    _, cell_of = coarse_route(cents)
-    spark = assigned.sparkSession
+    cluster→cell map, whole or for a sub-codebook) via a broadcast
+    join on the tiny mapping table — a literal CASE/map over k
+    entries would re-codegen per build and blow up Janino at derived
+    k."""
     m = local_df(
-        spark, sorted(cell_of.items()), "cluster long, cell long"
+        assigned.sparkSession, sorted(cell_of.items()),
+        "cluster long, cell long",
     )
     return assigned.join(F.broadcast(m), "cluster")
 
 
-def append_ivf_index(
-    new_q: DataFrame,
-    path: str,
-    route_width: int | None = None,
-) -> None:
-    """Append new vectors to an at-rest IVF index under the FROZEN
-    codebook — the daily-increment shape (the reference's
-    touch-only-new-rows discipline, etl-dag.sql:33-46, applied to
-    the vector side): per-increment work is one assignment pass over
-    the batch, never a retrain or corpus re-assign. Assignment is a
-    pure per-row function of the codebook, so incremental appends
-    are bit-identical to having written the union at once. Retrain
-    (a fresh ``write_ivf_index``) remains a deliberate offline event
-    when drift degrades recall — the q125-style audit is the meter.
-    ``route_width`` must match the index's writer: routed assignment
-    is part of the index's (oracle-pinned) assignment function, not
-    a per-call tuning knob.
-
-    Replay semantics: a RETRIED append (crash before the caller's
-    offset/ledger commit) duplicates the batch's rows in
-    ``vectors/``. Consumers are hardened individually — the probe
-    stage (``_probe_topk``) dedupes its scored ``(query_id,
-    cand_id)`` pairs before ranking, the increment
-    (``semdedup_increment_against_index``)
-    is duplicate-neutral by distinct + anti-join — so duplicate
-    appends are result-neutral for every shipped reader, matching
-    the band index's contract. A consumer added later must either
-    dedupe by ``vec_id`` or tolerate duplicates."""
-    from ..sources import writer
-
-    cents, _ = read_ivf_index(new_q.sparkSession, path)
-    writer.append(
-        _with_cell(_assign_with(new_q, cents, route_width), cents)
-        .repartition("cell"),
-        path.rstrip("/") + "/vectors",
-        partition_by=["cell"],
-    )
-
-
-# Driver-memory contract for the codebook collect: one row per
+# Driver-memory contract for a sub-codebook collect
+# (``_read_sub_codebook``, the one codebook reader): one row per
 # centroid at ~0.5 KB each (64-dim int64 + ids) -> 1M rows ~ 0.5 GiB
 # on the driver, the same ceiling class as MAX_TRAIN_ROWS. k derives
-# from corpus size (k = n / target), so at true fleet scale (n ~ 1e11
-# -> k ~ 1e9) a FLAT codebook stops being driver-material at all —
-# the successor is a hierarchical codebook (the coarse_route cells as
-# a persisted first level, per-cell sub-codebooks read on demand),
-# which keeps every driver pull O(√k). Until that exists, the guard
-# raises loudly instead of letting the collect OOM the driver.
+# from corpus size (k = n / target), so at fleet scale (n ~ 1e11 ->
+# k ~ 1e9) the whole codebook is not driver-material; routing through
+# the persisted cells/ level keeps a pull at O(routed cells · √k).
+# Past the cap the read raises instead of letting the collect OOM
+# the driver.
 MAX_CODEBOOK_ROWS = 1_000_000
 
 # On-disk schemas of the index directories (``write_ivf_index``):
@@ -1491,41 +1355,6 @@ _CENTROIDS_SCHEMA = _CELLS_SCHEMA + ", cell long"
 _VECTORS_SCHEMA = (
     "cluster long, vec_id long, q array<long>, norm2 long, cell long"
 )
-
-
-def read_ivf_index(
-    spark, path: str
-) -> tuple[dict[int, list[int]], DataFrame]:
-    """(codebook dict, vectors frame) of an at-rest IVF index. The
-    codebook is a bounded collect by construction (one row per
-    centroid; k ∝ corpus/target with a 64-dim int64 vector each —
-    the same driver-size class as the broadcast it feeds), and the
-    bound is ENFORCED: past ``MAX_CODEBOOK_ROWS`` the read raises.
-    The guard is a single ``limit(MAX+1).collect()`` — the driver
-    pull stays bounded whatever the on-disk size, without the
-    separate count job (a full extra scan per probe) the guard used
-    to pay; the error names the hierarchical append.
-    Both reads declare their schemas (no schema-inference job), the
-    cell partition column as the long the probe filters expect."""
-    p = path.rstrip("/")
-    cdf = spark.read.schema(_CENTROIDS_SCHEMA).parquet(p + "/centroids")
-    rows = cdf.limit(MAX_CODEBOOK_ROWS + 1).collect()
-    if len(rows) > MAX_CODEBOOK_ROWS:
-        raise ValueError(
-            f"IVF codebook at {p} has over "
-            f"MAX_CODEBOOK_ROWS={MAX_CODEBOOK_ROWS:,} centroids "
-            "(~0.5 GiB of driver memory) for a flat-codebook "
-            "append or SemDeDup increment: use the hierarchical "
-            "append (append_ivf_index_hier), which reads the "
-            "persisted cells/ level plus only the routed cells' "
-            "sub-codebooks as the probe (topk_ivf_indexed_hier) "
-            "always does — or retrain with a larger per-cluster "
-            "target."
-        )
-    cents = {
-        int(r["c"]): [int(v) for v in r["cv"]] for r in rows
-    }
-    return cents, _read_vectors(spark, p)
 
 
 def _read_vectors(spark, path: str) -> DataFrame:
@@ -1574,25 +1403,16 @@ def _prune_to_clusters(
 def read_ivf_cells(spark, path: str) -> dict[int, list[int]]:
     """The persisted FIRST-LEVEL codebook (coarse cell centroids) —
     an O(√k) collect by construction (``derived_coarse_count``), so
-    it stays driver-material long after the flat codebook hits
-    ``MAX_CODEBOOK_ROWS`` (√1e9 ≈ 32k rows ≈ 16 MB). Raises a named
-    error on a pre-hierarchical index (written before cells/ was
-    part of the layout) instead of a path-not-found surprise."""
-    p = path.rstrip("/") + "/cells"
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(p)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        raise ValueError(
-            f"IVF index at {path} has no cells/ level: it was "
-            "written before the hierarchical layout existed — "
-            "rewrite it with write_ivf_index (same codebook via "
-            "cents=read_ivf_index(...)[0]) to use the hierarchical "
-            "consumers."
-        )
+    it stays driver-material long after a whole codebook would pass
+    ``MAX_CODEBOOK_ROWS`` (√1e9 ≈ 32k rows ≈ 16 MB). Every index
+    reader routes through it: the probe, the append and the SemDeDup
+    increment. An index without ``cells/`` fails with Spark's
+    path-not-found error."""
     return {
         int(r["c"]): [int(v) for v in r["cv"]]
-        for r in spark.read.schema(_CELLS_SCHEMA).parquet(p).collect()
+        for r in spark.read.schema(_CELLS_SCHEMA)
+        .parquet(path.rstrip("/") + "/cells")
+        .collect()
     }
 
 
@@ -1600,14 +1420,14 @@ def _read_sub_codebook(
     spark, path: str, cells: list[int]
 ) -> tuple[dict[int, list[int]], dict[int, int]]:
     """(cents, cell_of) for ONLY the given cells — the on-demand
-    second level: a partition-pruned read of ``centroids/`` (the
-    cell filter is a literal ``IN`` up to ``ISIN_LITERAL_CAP`` so
-    the file listing prunes to the probed directories; past the cap
-    a broadcast semi-join keeps codegen bounded — at that width the
-    read is a large fraction of the codebook anyway). The collect is
-    guarded by the same ``MAX_CODEBOOK_ROWS`` driver contract; with
-    cells bounded by |queries|·probe_width the pull is
-    O(probed cells · k/√k) = O(√k) per probe batch."""
+    second level and the one codebook reader: a partition-pruned
+    read of ``centroids/`` (the cell filter is a literal ``IN`` up to
+    ``ISIN_LITERAL_CAP`` so the file listing prunes to the routed
+    directories; past the cap a broadcast semi-join keeps codegen
+    bounded — at that width the read is a large fraction of the
+    codebook anyway). The collect enforces ``MAX_CODEBOOK_ROWS``;
+    with the cells a batch routes to, the pull is
+    O(routed cells · k/√k) = O(√k) per probe or append batch."""
     p = path.rstrip("/") + "/centroids"
     cell_ids = sorted({int(g) for g in cells})
     cdf = spark.read.schema(_CENTROIDS_SCHEMA).parquet(p)
@@ -1621,10 +1441,10 @@ def _read_sub_codebook(
     rows = sub.limit(MAX_CODEBOOK_ROWS + 1).collect()
     if len(rows) > MAX_CODEBOOK_ROWS:
         raise ValueError(
-            f"probed sub-codebook at {p} has over MAX_CODEBOOK_ROWS="
+            f"sub-codebook at {p} has over MAX_CODEBOOK_ROWS="
             f"{MAX_CODEBOOK_ROWS:,} centroids across "
-            f"{len(cell_ids)} cells: narrow the probe width or "
-            "retrain with a larger per-cluster target."
+            f"{len(cell_ids)} cells: narrow the probe or route "
+            "width, or retrain with a larger per-cluster target."
         )
     return (
         {int(r["c"]): [int(v) for v in r["cv"]] for r in rows},
@@ -1703,41 +1523,79 @@ def topk_ivf_indexed_hier(
     )
 
 
-def append_ivf_index_hier(
-    new_q: DataFrame,
-    path: str,
-    route_width: int = 4,
-) -> None:
-    """``append_ivf_index`` with O(√k) driver pulls: route the batch
-    through the persisted ``cells/`` level, read only the routed
-    cells' sub-codebooks, and assign with the SAME routed kernel —
-    bit-identical to ``append_ivf_index`` at the same ``route_width``
-    BY CONSTRUCTION, not by luck: ``_assign_pandas_routed`` only ever
+def _assign_to_index(
+    new_q: DataFrame, path: str, route_width: int | None
+) -> tuple[DataFrame, dict[int, int]]:
+    """Assign a batch under an at-rest index's frozen codebook with
+    O(√k) driver pulls: read ``cells/``, route the batch map-side to
+    the cells it reaches (``_routed_ids``; every cell at
+    ``route_width=None``), read only those cells' sub-codebooks, and
+    run the one assignment kernel. The result equals assigning
+    against the whole codebook BY CONSTRUCTION: the kernel only ever
     scores centroids inside a row's ``route_width`` nearest cells,
-    and the sub-codebook read covers exactly the union of the batch's
-    routed cells, so restricting the dict changes nothing the kernel
-    looks at (pinned by ``tests/test_ivf_index.py``). Driver memory:
-    O(√k) cells + O(routed cells · √k) sub-centroids, vs the flat
-    append's O(k) codebook collect. Same replay semantics as the
-    flat append (duplicate rows are consumer-neutralized)."""
-    from ..sources import writer
-
+    and the sub-codebook covers exactly the union of the batch's
+    routed cells. Returns the assigned frame and the sub-codebook's
+    cluster→cell map, the one ``_with_cell`` needs."""
     spark = new_q.sparkSession
     cells_cb = read_ivf_cells(spark, path)
-    routed = _routed_ids(new_q, cells_cb, route_width)
-    cents_sub, cell_of_sub = _read_sub_codebook(spark, path, routed)
+    cells = (
+        sorted(cells_cb)
+        if route_width is None
+        else _routed_ids(new_q, cells_cb, route_width)
+    )
+    cents_sub, cell_of = _read_sub_codebook(spark, path, cells)
     assigned = _assign_pandas_routed(
-        new_q, cents_sub, (cells_cb, cell_of_sub), route_width,
-        keep=["q", "norm2"],
+        new_q, cents_sub, (cells_cb, cell_of), route_width
     )
-    m = local_df(
-        spark, sorted(cell_of_sub.items()), "cluster long, cell long"
-    )
+    return assigned, cell_of
+
+
+def _append_vectors(
+    assigned: DataFrame, cell_of: dict[int, int], path: str
+) -> None:
+    """Append assigned rows to the index's cell-partitioned
+    ``vectors/``."""
+    from ..sources import writer
+
     writer.append(
-        assigned.join(F.broadcast(m), "cluster").repartition("cell"),
+        _with_cell(assigned, cell_of).repartition("cell"),
         path.rstrip("/") + "/vectors",
         partition_by=["cell"],
     )
+
+
+def append_ivf_index(
+    new_q: DataFrame,
+    path: str,
+    route_width: int | None = None,
+) -> None:
+    """Append new vectors to an at-rest IVF index under the FROZEN
+    codebook — the daily-increment shape (the reference's
+    touch-only-new-rows discipline, etl-dag.sql:33-46, applied to
+    the vector side): per-increment work is one assignment pass over
+    the batch (``_assign_to_index``: routed through ``cells/``, with
+    only the routed cells' sub-codebooks on the driver), never a
+    retrain or corpus re-assign. Assignment is a pure per-row
+    function of the codebook, so incremental appends are
+    bit-identical to having written the union at once.
+    ``route_width`` must match the index's writer (``None`` in
+    both, as in ``write_ivf_index``, is the exact argmin): routed
+    assignment is part of the index's (oracle-pinned) assignment
+    function, not a per-call tuning knob. Retrain (a fresh
+    ``write_ivf_index``) remains a deliberate offline event when
+    drift degrades recall — the q125-style audit is the meter.
+
+    Replay semantics: a RETRIED append (crash before the caller's
+    offset/ledger commit) duplicates the batch's rows in
+    ``vectors/``. Consumers are hardened individually — the probe
+    stage (``_probe_topk``) dedupes its scored ``(query_id,
+    cand_id)`` pairs before ranking, the increment
+    (``semdedup_increment_against_index``)
+    is duplicate-neutral by distinct + anti-join — so duplicate
+    appends are result-neutral for every shipped reader, matching
+    the band index's contract. A consumer added later must either
+    dedupe by ``vec_id`` or tolerate duplicates."""
+    _append_vectors(*_assign_to_index(new_q, path, route_width), path)
 
 
 def semdedup_increment_against_index(
@@ -1761,33 +1619,32 @@ def semdedup_increment_against_index(
     the shadow rule — so the next increment sees it.
 
     Scale shape: per-increment work is one O(|batch|) assignment
-    pass under the frozen codebook, then the index is read ONLY for
-    the clusters the batch actually landed in (the collected cluster
-    set is bounded by |batch| and pushed down as a partition ``IN``
-    filter — directory-level pruning), with the batch broadcast into
-    that scan: candidate volume is Σ |batch_c| · width_c, never
-    corpus-sized, and nothing is retrained or re-assigned. Replay-
+    pass under the frozen codebook — the append's own
+    ``_assign_to_index``, so the driver pulls ``cells/`` and only the
+    routed cells' sub-codebooks, never the whole codebook — then the
+    index is read ONLY for the clusters the batch actually landed in
+    (the collected cluster set is bounded by |batch| and pushed down
+    as a partition ``IN`` filter — directory-level pruning), with the
+    batch broadcast into that scan: candidate volume is
+    Σ |batch_c| · width_c, never corpus-sized, and nothing is
+    retrained or re-assigned. Replay-
     safe like the MinHash twin: the index side anti-joins away the
     batch's own ids, so an at-least-once re-run after a crashed
     append is bit-identical."""
-    from ..sources import writer
-
-    spark = new_q.sparkSession
-    cents, vectors = read_ivf_index(spark, path)
-    assigned = _assign_with(
-        new_q, cents, route_width
-    ).localCheckpoint(eager=True)
+    assigned, cell_of = _assign_to_index(new_q, path, route_width)
+    assigned = assigned.localCheckpoint(eager=True)
     clusters = [
         r["cluster"]
         for r in assigned.select("cluster").distinct().collect()
     ]
-    _, cell_of = coarse_route(cents)
     cells = sorted({cell_of[c] for c in clusters})
     # a batch vector drops when a cosine-τ near-dup shares its
     # cluster and is indexed (any id) or a smaller-id batch member
     ids = assigned.select("vec_id")
     dom_idx = (
-        _prune_to_clusters(vectors, cells, clusters)
+        _prune_to_clusters(
+            _read_vectors(new_q.sparkSession, path), cells, clusters
+        )
         .select("vec_id", "q", "norm2", "cluster")
         .join(F.broadcast(ids), "vec_id", "left_anti")
         .select(
@@ -1835,11 +1692,7 @@ def semdedup_increment_against_index(
         .localCheckpoint(eager=True)
     )
     if append:
-        writer.append(
-            _with_cell(assigned, cents).repartition("cell"),
-            path.rstrip("/") + "/vectors",
-            partition_by=["cell"],
-        )
+        _append_vectors(assigned, cell_of, path)
     return survivors
 
 
@@ -2583,13 +2436,9 @@ def semdedup_drops(
         quantized, k=n_centroids, iters=iters, dim=dim,
         train_sample=train_sample,
     )
-    if route_width is not None:
-        assigned = _assign_pandas_routed(
-            quantized, cents, coarse_route(cents), route_width,
-            keep=["q", "norm2"],
-        )
-    else:
-        assigned = _assign_pandas(quantized, cents, keep=["q", "norm2"])
+    assigned = _assign_pandas_routed(
+        quantized, cents, coarse_route(cents), route_width
+    )
 
     pct2 = threshold_pct * threshold_pct
     out_schema = (

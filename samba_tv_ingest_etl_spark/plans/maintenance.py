@@ -265,23 +265,15 @@ def compact_index(
         )
     p = path.rstrip("/")
     # existence-check every component up front (r12 advice): a
-    # pre-hierarchical IVF index (no cells/) — or any half-written
-    # index — must fail with the same named rebuild-pointing error
-    # the readers raise, not a raw path-not-found AnalysisException
-    # after some components were already rewritten.
+    # half-written index must fail with a named rebuild-pointing
+    # error, not a raw path-not-found AnalysisException after some
+    # components were already rewritten.
     fs, jp = _jfs(spark, p)
     for sub, _, _ in INDEX_LAYOUTS[kind]:
         if not fs.exists(jp(f"{p}/{sub}")):
-            hint = (
-                "it was written before the hierarchical layout "
-                "existed — rewrite it with write_ivf_index (same "
-                "codebook via cents=read_ivf_index(...)[0])"
-                if kind == "ivf" and sub == "cells"
-                else "rebuild it with its writer before compacting"
-            )
             raise ValueError(
                 f"{kind} index at {path} has no {sub}/ component: "
-                f"{hint}."
+                "rebuild it with its writer before compacting."
             )
     counts: dict[str, int] = {}
     for sub, part_cols, sort_cols in INDEX_LAYOUTS[kind]:

@@ -1420,17 +1420,18 @@ def q133_ivf_index_persisted(
 ) -> DataFrame:
     """q32 through the PERSISTED IVF index (the q129 treatment on
     the ANN side): codebook trained once and written at rest with
-    the cluster-partitioned corpus (similarity.write_ivf_index),
-    probe reads the codebook plus ONLY the probed cluster
-    partitions — the probed-cluster IN filter prunes directories at
-    the file listing, so per-probe cost is independent of corpus
-    size instead of q32's train+assign pass per call. The probe
-    routes through every cell (probe_cells=None), so it reads the
-    whole codebook and selects exactly q32's probes. Shares q32's
-    oracle VERBATIM: probe/score is the same shared stage, so the
-    DuckDB hash match proves the persistence round-trips codebook
-    and assignments exactly (tests/test_ivf_index.py pins
-    indexed≡inline, append≡wholesale, and the partition pruning)."""
+    the cell-partitioned corpus (similarity.write_ivf_index),
+    probe reads the cells/ level, the routed cells' sub-codebooks
+    and ONLY the probed cluster partitions — the probed-cell IN
+    filter prunes directories at the file listing, so per-probe cost
+    is independent of corpus size instead of q32's train+assign pass
+    per call. The probe routes through every cell (probe_cells=None),
+    so it reads the whole codebook and selects exactly q32's probes.
+    Shares q32's oracle VERBATIM: probe/score is the same shared
+    stage, so the DuckDB hash match proves the persistence
+    round-trips codebook and assignments exactly
+    (tests/test_ivf_index.py pins indexed≡inline, append≡wholesale,
+    and the partition pruning)."""
     import tempfile
 
     from ..operators.similarity import (
@@ -1464,8 +1465,10 @@ def q134_ivf_index_append(
 ) -> DataFrame:
     """The IVF daily-increment shape: index written from HALF the
     corpus, the other half APPENDED under the frozen codebook
-    (similarity.append_ivf_index — one assignment pass over the
-    batch, no retrain, no corpus re-assign), then probed. The
+    (similarity.append_ivf_index — the batch routes through the
+    persisted cells/ level, only its routed cells' sub-codebooks are
+    read, and one assignment pass runs over it: no retrain, no
+    corpus re-assign), then probed. The
     codebook is trained on the full corpus's deterministic sample
     exactly as q32 does, so assignment-per-row determinism makes the
     parts-then-append index bit-identical to the wholesale one —
@@ -1641,8 +1644,10 @@ def q135_semdedup_increment(
     third consumer of the q133/q134 index and the embedding-side
     twin of q129's incremental MinHash: the standing corpus is
     clustered AT REST, and a daily batch is assigned under the
-    frozen codebook, compared only against its own clusters'
-    members (partition-pruned read + broadcast batch), and appended.
+    frozen codebook exactly as q134's append assigns it (routed
+    through cells/, reading only the routed cells' sub-codebooks),
+    compared only against its own clusters' members
+    (partition-pruned read + broadcast batch), and appended.
     A batch doc survives unless a cosine-τ near-dup is indexed or a
     smaller-id batch member shares its cluster
     (similarity.semdedup_increment_against_index). The codebook is
@@ -5856,8 +5861,8 @@ def q140_ivf_hier_codebook_probe(
     probe routes each query through the persisted cells/ first level
     (an O(√k) collect) and reads only the routed cells' sub-codebooks
     from the cell-partitioned centroids/ — driver memory is O(√k)
-    instead of the flat O(k) collect that MAX_CODEBOOK_ROWS guards,
-    the last driver-side ceiling in the ANN family at k ∝ n. Shares
+    instead of a whole O(k) codebook, the last driver-side ceiling
+    in the ANN family at k ∝ n. Shares
     q32's oracle VERBATIM: at the shipped probe width the routed
     cells cover each query's true nprobe nearest centroids on this
     corpus, so the hash match pins the two-level layout (cells/,
@@ -5896,8 +5901,9 @@ def q141_ivf_index_compacted_probe(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The nightly-maintenance lifecycle pinned through the driver
-    hash: q134's write+append index, FRAGMENTED by four daily-shape
-    appends, then compacted through the GATED path
+    hash: q134's write+append index (each append routed through
+    cells/), FRAGMENTED by four daily-shape appends, then compacted
+    through the GATED path
     (plans/maintenance.compact_index with only_if_over — the r12
     fragmentation gate, exercising the dynamic-partition-overwrite
     branch on exactly the cells the gate selects) and vacuumed, then

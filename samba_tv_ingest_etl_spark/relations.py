@@ -9,8 +9,8 @@ for a 313-row codebook frame on local[32] (OPTIMIZATION_r13). At
 cluster scale the waste is the same shape: tasks, not data. The slice
 count here scales with the row count (one slice per ``rows_per_slice``
 rows, capped at the session parallelism), so small frames get one or
-two tasks and a cap-sized frame (e.g. ``MAX_CODEBOOK_ROWS``) still
-parallelizes its unpickling.
+two tasks and a large one (a whole codebook at derived k, as
+``write_ivf_index`` writes it) still parallelizes its unpickling.
 """
 
 from __future__ import annotations

@@ -32,23 +32,36 @@ _DEFAULTS = {
 }
 
 
+def machine_defaults() -> tuple[int, str]:
+    """(cores, driver heap) that fit the machine this process runs on:
+    the CPUs it may be scheduled on, and half of physical memory
+    capped at 16g, leaving the other half to Python workers and the
+    OS."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap_mb = min(16 << 10, phys // 2 >> 20)
+    return len(os.sched_getaffinity(0)), f"{heap_mb}m"
+
+
 def get_spark(app_name: str = "samba_tv_ingest_etl_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) else 32.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) and the
+    driver heap to $SPARK_DRIVER_MEMORY; either one unset falls back
+    to ``machine_defaults()``.
     """
+    cores, heap = machine_defaults()
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", cores))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", heap))
     )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)

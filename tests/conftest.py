@@ -9,6 +9,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from samba_tv_ingest_etl_spark.session import get_spark  # noqa: E402
 
+# The suite pins its heap rather than take session.machine_defaults(),
+# so its runs do not depend on the host's memory.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.001")
 

@@ -9,8 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from samba_tv_ingest_etl_spark.operators.similarity import (
+    _assign_pandas_routed,
+    coarse_route,
     derived_cluster_count,
-    ivf_assign,
     kmeans_centroids,
 )
 from samba_tv_ingest_etl_spark.queries.llmdata import (
@@ -74,7 +75,7 @@ def test_per_cluster_candidates_bounded(spark):
     )
     sizes = [
         r["c"]
-        for r in ivf_assign(q, cents)
+        for r in _assign_pandas_routed(q, cents, coarse_route(cents), None)
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("c"))
         .collect()
@@ -123,12 +124,12 @@ def test_coarse_count_matches_sql_exactly():
 
 def test_routed_assignment_totality_and_agreement(spark):
     """Routed assignment must (a) assign EVERY vector to a live
-    cluster, (b) be deterministic, (c) degenerate to the exact flat
-    argmin when route_width covers every coarse cell."""
+    cluster, (b) be deterministic, (c) degenerate to the exact
+    driver argmin when route_width covers every coarse cell, or is
+    None."""
     from samba_tv_ingest_etl_spark.operators.similarity import (
-        _assign_pandas,
-        _assign_pandas_routed,
-        coarse_route,
+        _collect_queries,
+        _nearest,
         quantize,
     )
 
@@ -142,30 +143,28 @@ def test_routed_assignment_totality_and_agreement(spark):
     from samba_tv_ingest_etl_spark.queries.llmdata import _ROUTE_WIDTH
 
     route = coarse_route(cents)
-    routed = _assign_pandas_routed(q, cents, route, _ROUTE_WIDTH, keep=[])
+    routed = _assign_pandas_routed(q, cents, route, _ROUTE_WIDTH)
     rows = {r["vec_id"]: r["cluster"] for r in routed.collect()}
     assert len(rows) == n  # total: nobody lost to an empty cell
     assert set(rows.values()) <= set(cents)
     rows2 = {
         r["vec_id"]: r["cluster"]
         for r in _assign_pandas_routed(
-            q, cents, route, _ROUTE_WIDTH, keep=[]
+            q, cents, route, _ROUTE_WIDTH
         ).collect()
     }
     assert rows == rows2  # deterministic
-    # route everywhere -> exact flat argmin, bit for bit
-    full_rw = len(route[0])
-    wide = {
-        r["vec_id"]: r["cluster"]
-        for r in _assign_pandas_routed(
-            q, cents, route, full_rw, keep=[]
-        ).collect()
-    }
-    flat = {
-        r["vec_id"]: r["cluster"]
-        for r in _assign_pandas(q, cents, keep=[]).collect()
-    }
-    assert wide == flat
+    # route everywhere -> exact argmin, bit for bit
+    ids, Q, n2 = _collect_queries(q)
+    flat = dict(zip(ids.tolist(), _nearest(Q, n2, cents, 1)[:, 0].tolist()))
+    for width in (len(route[0]), None):
+        wide = {
+            r["vec_id"]: r["cluster"]
+            for r in _assign_pandas_routed(
+                q, cents, route, width
+            ).collect()
+        }
+        assert wide == flat, width
     # rw=_ROUTE_WIDTH agrees with exact argmin on the vast majority
     agree = sum(1 for v, c in rows.items() if flat[v] == c)
     assert agree / n >= 0.9, f"routing agreement {agree}/{n}"

@@ -28,6 +28,20 @@ def _rows(df):
     )
 
 
+def _codebook(spark, path):
+    """The whole at-rest codebook: every cell's sub-codebook."""
+    return S._read_sub_codebook(
+        spark, path, sorted(S.read_ivf_cells(spark, path))
+    )[0]
+
+
+def _vector_rows(spark, path):
+    return sorted(
+        (r["vec_id"], r["cluster"], r["cell"])
+        for r in S._read_vectors(spark, path).collect()
+    )
+
+
 def test_indexed_probe_matches_inline(spark, tmp_path):
     q = _corpus(spark)
     probes = q.filter(F.col("vec_id") < 10)
@@ -46,25 +60,32 @@ def test_indexed_probe_matches_inline(spark, tmp_path):
     assert _rows(indexed) == _rows(inline)
 
 
-def test_append_equals_wholesale(spark, tmp_path):
+@pytest.mark.parametrize("route_width", [None, 4])
+def test_append_equals_wholesale(spark, tmp_path, route_width):
     """Assignment is per-row given the codebook, so write(part1) +
     append(part2) must be bit-identical to write(whole) — the
-    increments≡wholesale property, ported from the dedup index."""
+    increments≡wholesale property, ported from the dedup index. The
+    append routes through cells/ and reads only the routed cells'
+    sub-codebooks, so the equal vectors/ rows also pin that this
+    reads every centroid the kernel can score."""
     q = _corpus(spark)
     probes = q.filter(F.col("vec_id") < 10)
     cents = S.kmeans_centroids(q, k=8, iters=2, train_sample=(1, 4))
 
     whole = str(tmp_path / "whole")
-    S.write_ivf_index(q, whole, cents=cents, route_width=4)
+    S.write_ivf_index(q, whole, cents=cents, route_width=route_width)
 
     parts = str(tmp_path / "parts")
     S.write_ivf_index(
         q.filter(F.col("vec_id") % 2 == 0), parts,
-        cents=cents, route_width=4,
+        cents=cents, route_width=route_width,
     )
     S.append_ivf_index(
-        q.filter(F.col("vec_id") % 2 == 1), parts, route_width=4
+        q.filter(F.col("vec_id") % 2 == 1), parts,
+        route_width=route_width,
     )
+    got_rows = _vector_rows(spark, parts)
+    assert got_rows == _vector_rows(spark, whole) and len(got_rows) > 0
 
     got = S.topk_ivf_indexed_hier(
         spark, parts, probes, k=10, nprobe=2, probe_cells=None
@@ -182,7 +203,7 @@ def test_prune_to_clusters_semi_join_equals_literals(spark, tmp_path):
     q = _corpus(spark)
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2)
-    _, vectors = S.read_ivf_index(spark, path)
+    vectors = S._read_vectors(spark, path)
     clusters = sorted(
         r["cluster"]
         for r in vectors.select("cluster").distinct().collect()
@@ -206,18 +227,19 @@ def test_prune_to_clusters_semi_join_equals_literals(spark, tmp_path):
 
 
 def test_codebook_guard_raises(spark, tmp_path, monkeypatch):
-    """read_ivf_index must refuse a codebook past MAX_CODEBOOK_ROWS
-    loudly (counted before collecting), naming the hierarchical
-    successor — the MAX_TRAIN_ROWS pattern applied to the driver
-    pull that grows with derived k."""
-    import pytest
-
+    """The codebook reader (_read_sub_codebook) must refuse a pull
+    past MAX_CODEBOOK_ROWS loudly — the MAX_TRAIN_ROWS pattern
+    applied to the driver pull that grows with derived k. An append
+    at route_width=None routes through every cell, so it pulls all
+    8 centroids."""
     q = _corpus(spark)
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2)
     monkeypatch.setattr(S, "MAX_CODEBOOK_ROWS", 7)
-    with pytest.raises(ValueError, match="hierarchical"):
-        S.read_ivf_index(spark, path)
+    with pytest.raises(ValueError, match="MAX_CODEBOOK_ROWS=7"):
+        S.append_ivf_index(
+            q.filter(F.col("vec_id") < 10), path, route_width=None
+        )
 
 
 def test_semdedup_increment_replay_identical(spark, tmp_path):
@@ -244,6 +266,47 @@ def test_semdedup_increment_replay_identical(spark, tmp_path):
         ).collect()
     )
     assert replay == first
+
+
+def test_semdedup_increment_reads_only_routed_sub_codebooks(
+    spark, tmp_path, monkeypatch
+):
+    """At route_width=4 the increment pulls only the centroids of
+    the cells its batch routes to — fewer than the whole codebook —
+    and its survivors equal the all-cells (route_width=None) run's on
+    this corpus."""
+    q = _corpus(spark)
+    cents = S.kmeans_centroids(q, k=64, iters=2, train_sample=(1, 4))
+    batch = q.filter(F.col("vec_id") % 100 == 1)
+    pulled = []
+    read = S._read_sub_codebook
+
+    def recording(spark, path, cells):
+        out = read(spark, path, cells)
+        pulled.append(len(out[0]))
+        return out
+
+    monkeypatch.setattr(S, "_read_sub_codebook", recording)
+    survivors = {}
+    for width in (4, None):
+        path = str(tmp_path / f"ivf_{width}")
+        S.write_ivf_index(
+            q.filter(F.col("vec_id") % 100 != 1), path,
+            cents=cents, route_width=width,
+        )
+        pulled.clear()
+        survivors[width] = sorted(
+            (r["vec_id"], r["cluster"])
+            for r in S.semdedup_increment_against_index(
+                batch, path, threshold_pct=35, route_width=width
+            ).collect()
+        )
+        assert len(pulled) == 1
+        if width is None:
+            assert pulled == [len(cents)]
+        else:
+            assert 0 < pulled[0] < len(cents)
+    assert survivors[4] == survivors[None] and survivors[4]
 
 
 # ---------------------------------------------------------------------
@@ -303,63 +366,13 @@ def test_hier_sub_codebook_reads_only_probed_cells(spark, tmp_path):
     q = _corpus(spark)
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
-    cents_full, _ = S.read_ivf_index(spark, path)
+    cents_full = _codebook(spark, path)
     _, cell_of = S.coarse_route(cents_full)
     some_cell = min(cell_of.values())
     sub, sub_cells = S._read_sub_codebook(spark, path, [some_cell])
     assert set(sub_cells.values()) == {some_cell}
     assert set(sub) == {c for c, g in cell_of.items() if g == some_cell}
     assert 0 < len(sub) < len(cents_full)
-
-
-def test_hier_append_equals_flat_append(spark, tmp_path):
-    """append_ivf_index_hier must land bit-identical vectors/ rows to
-    the flat append at the same route_width: the routed kernel only
-    scores centroids in a row's routed cells, which the sub-codebook
-    read covers exactly."""
-    q = _corpus(spark)
-    probes = q.filter(F.col("vec_id") < 10)
-    half1 = q.filter(F.col("vec_id") % 2 == 0)
-    half2 = q.filter(F.col("vec_id") % 2 == 1)
-    flat_p = str(tmp_path / "flat")
-    hier_p = str(tmp_path / "hier")
-    cents = S.kmeans_centroids(q, k=8, iters=2, train_sample=(1, 4))
-    S.write_ivf_index(half1, flat_p, cents=cents, route_width=4)
-    S.write_ivf_index(half1, hier_p, cents=cents, route_width=4)
-    S.append_ivf_index(half2, flat_p, route_width=4)
-    S.append_ivf_index_hier(half2, hier_p, route_width=4)
-    key = lambda r: (r["vec_id"], r["cluster"], r["cell"])  # noqa: E731
-    got = sorted(
-        map(key, spark.read.parquet(hier_p + "/vectors").collect())
-    )
-    want = sorted(
-        map(key, spark.read.parquet(flat_p + "/vectors").collect())
-    )
-    assert got == want and len(got) > 0
-    assert _rows(
-        S.topk_ivf_indexed_hier(
-            spark, hier_p, probes, k=10, nprobe=2, probe_cells=None
-        )
-    ) == _rows(
-        S.topk_ivf_indexed_hier(
-            spark, flat_p, probes, k=10, nprobe=2, probe_cells=None
-        )
-    )
-
-
-def test_hier_requires_cells_level(spark, tmp_path):
-    """A pre-hierarchical index (no cells/) must raise a named error
-    pointing at the rebuild path, not a path-not-found surprise."""
-    import shutil
-
-    import pytest
-
-    q = _corpus(spark)
-    path = str(tmp_path / "ivf")
-    S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
-    shutil.rmtree(path + "/cells")
-    with pytest.raises(ValueError, match="cells/"):
-        S.topk_ivf_indexed_hier(spark, path, q.filter(F.col("vec_id") < 2))
 
 
 # ---------------------------------------------------------------------
@@ -411,7 +424,7 @@ def test_probe_stage_merges_duplicates_across_partitions(spark, tmp_path):
     q = _corpus(spark)
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
-    cents, vectors = S.read_ivf_index(spark, path)
+    cents, vectors = _codebook(spark, path), S._read_vectors(spark, path)
     queries = S._collect_queries(q.filter(F.col("vec_id") < 10))
     probes = S._nearest(queries[1], queries[2], cents, 2)
     probed = sorted(set(probes.ravel().tolist()))
@@ -464,7 +477,7 @@ def test_planted_ties_break_to_lower_ids(spark, tmp_path):
     path. Routing the tie to centroid 1 would return 4 and 6."""
     path = str(tmp_path / "ivf")
     query = _planted_index(spark, path)
-    _, cell_of = S.coarse_route(S.read_ivf_index(spark, path)[0])
+    _, cell_of = S.coarse_route(_codebook(spark, path))
     assert cell_of == {0: 0, 1: 1, 2: 1, 3: 0}
     cos = [
         int(1e6 * 5500 / (5000 * 7300) ** 0.5),

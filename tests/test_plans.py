@@ -144,18 +144,19 @@ def test_watermark_filter_prunes_partitions(spark, tmp_path):
 
 
 def test_ivf_assignment_is_map_side_only(spark):
-    """IVF cluster assignment is a pure projection over literal
-    centroids — no join, no exchange: it scales as a map over the
-    corpus however large."""
+    """IVF cluster assignment is one Arrow map over the corpus with
+    the codebook in its closure — no join, no exchange: it scales as
+    a map over the corpus however large."""
     from samba_tv_ingest_etl_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = S.quantize(emb).filter(F.col("norm2") > 0)
     cents = S.kmeans_centroids(q, k=4, iters=1)
-    plan = plan_of(S.ivf_assign(q, cents))
+    plan = plan_of(
+        S._assign_pandas_routed(q, cents, S.coarse_route(cents), None)
+    )
     assert "Join" not in plan
     assert "Exchange" not in plan
-    assert "Python" not in plan  # all JVM-side expressions
 
 
 def test_ivf_probe_scores_corpus_in_place(spark, registry):
