@@ -44,7 +44,6 @@ HEADLINE = [
     "q26_ann_topk_lsh",
     "q32_ann_topk_ivf",
     "q33_reach_frequency_rollup",
-    "q39_asof_order_attribution",
     "q46_top_characteristic_terms",
     "q48_dedup_components",
     "q58_training_data_prep",
@@ -119,7 +118,8 @@ def host_io_canary(runs: int = 3, mb: int = 64) -> float:
     CPU-bound canary is blind to host I/O-window drift, which on this
     box swings disk-heavy queries 1.3-1.7x between adjacent idle runs.
     Round-over-round comparisons of lifecycle queries must be
-    qualified by BOTH canaries (tools/compare_bench.py does)."""
+    qualified by BOTH canaries: divide each query's seconds by the
+    matching canary of its own run before comparing."""
     import tempfile
     import time as _t
 

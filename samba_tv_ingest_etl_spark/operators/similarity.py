@@ -1051,12 +1051,15 @@ def _routed_ids(
 ) -> list[int]:
     """Distinct ids among every row's ``n`` nearest codebook entries
     (``_nearest``), computed map-side — for an append batch, which
-    is not bounded like a probe's query batch. The collect is
-    bounded by the codebook size."""
+    is not bounded like a probe's query batch. Each partition yields
+    its distinct ids once, after its last Arrow batch, so the union
+    happens on the driver with no shuffle; the collect is bounded by
+    partitions × codebook size."""
     import numpy as np
     import pandas as pd
 
     def route(batches):
+        seen = np.zeros(0, dtype=np.int64)
         for pdf in batches:
             if len(pdf):
                 near = _nearest(
@@ -1064,15 +1067,16 @@ def _routed_ids(
                     pdf["norm2"].to_numpy(dtype=np.int64),
                     codebook, n,
                 )
-                yield pd.DataFrame({"c": np.unique(near)})
+                seen = np.union1d(seen, near)
+        if len(seen):
+            yield pd.DataFrame({"c": seen})
 
-    return sorted(
+    return sorted({
         r["c"]
         for r in quantized.select("q", "norm2")
         .mapInPandas(route, schema="c long")
-        .distinct()
         .collect()
-    )
+    })
 
 
 def topk_ivf(

@@ -6,8 +6,8 @@ kill them —
 
 - **error** ``CartesianProduct``: an unkeyed join neither side of
   which is broadcastable; O(n*m) rows through one stage. Always a
-  bug at fleet size (the engine's interval/asof/similarity operators
-  exist precisely to avoid these).
+  bug at fleet size (the engine's similarity operators exist
+  precisely to avoid these).
 - **error** ``BatchEvalPython``: a row-at-a-time Python UDF in the
   plan — 10-100x slower than Arrow-vectorized exchange. The engine
   permits Python only through Arrow (``ArrowEvalPython``,

@@ -90,7 +90,7 @@ _LOADED = False
 def _load() -> None:
     global _LOADED
     if not _LOADED:
-        from . import analytics, behavior, core, llmdata, scale, temporal  # noqa: F401
+        from . import analytics, behavior, core, llmdata, scale  # noqa: F401
         _LOADED = True
 
 

@@ -1,12 +1,11 @@
-"""Scale-pattern queries: skew-safe aggregation/joins, rank-based
-percentiles, and pivoted matrices over the events table.
+"""Scale-pattern queries over the events table: rank-based
+percentiles, pivoted matrices, JSON extraction, gap and rolling
+windows, winsorized statistics and calendar densification.
 
 These cover analytics surface the reference's SQL never needed
 (ranking window functions, top-k selection, PIVOT — all listed as
-"absent" in SURVEY §2.6-2.7) plus the physical skew patterns from
-``operators/skew.py`` that a 100 TB deployment of the same pipeline
-would require. Every query returns salt-free, engine-independent
-values, so all four oracle-check against plain ANSI SQL.
+"absent" in SURVEY §2.6-2.7). Every query returns engine-independent
+values, so each one oracle-checks against plain ANSI SQL.
 """
 
 from __future__ import annotations
@@ -14,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import skew as K
 from . import query
 
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -42,48 +40,6 @@ ev AS (
   FROM events
 )
 """
-
-
-# ---------------------------------------------------------------- q35
-
-@query(
-    "q35_skew_salted_agg",
-    oracle=f"""
-WITH {_EV_CTE}
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(sum(cents) AS BIGINT) AS value_cents
-FROM ev GROUP BY event_type
-""",
-)
-def q35_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type totals computed skew-safely: sums/counts go
-    through a salted two-phase shuffle (the 5-value grouping key
-    would otherwise hotspot 5 reducers at 100 TB) and the exact
-    user count dedups on the high-cardinality (type, user) key
-    first. The salt never reaches the output, so the result equals
-    the naive GROUP BY."""
-    ev = _typed_events(spark, sf_dir)
-    sums = K.salted_sum(
-        ev,
-        keys=["event_type"],
-        sums={
-            "n_events": F.count(F.lit(1)),
-            "value_cents": F.sum("cents"),
-        },
-        salt_source="event_id",
-        n_salts=32,
-    )
-    users = K.distinct_count(
-        ev, keys=["event_type"], col="user_id", alias="n_users"
-    )
-    return sums.join(users, "event_type").select(
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        "n_users",
-        F.col("value_cents").cast("long").alias("value_cents"),
-    )
 
 
 # ---------------------------------------------------------------- q36
@@ -191,46 +147,6 @@ def q37_pivot_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dma",
         *[F.col(t).cast("long").alias(f"{t}_cents") for t in _EVENT_TYPES],
     )
-
-
-# ---------------------------------------------------------------- q38
-
-@query(
-    "q38_salted_join_above_avg",
-    oracle=f"""
-WITH {_EV_CTE},
-dim AS (
-  SELECT event_type, CAST(sum(cents) AS BIGINT) AS s,
-         CAST(count(*) AS BIGINT) AS n
-  FROM ev GROUP BY event_type
-)
-SELECT e.event_id, e.event_type, e.cents
-FROM ev e JOIN dim d ON e.event_type = d.event_type
-WHERE e.cents * d.n > d.s
-""",
-)
-def q38_salted_join_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Above-type-average events through a salted replicate-right
-    join on the 5-value key — the shape of any fact-to-aggregate
-    reattach where the key skews and the right side outgrows the
-    broadcast budget. The mean compare stays in integers
-    (cents * n > sum) so no division enters the hash. Output equals
-    the plain join bit-for-bit; `tests/test_plans.py` pins the
-    salted shuffle shape."""
-    ev = _typed_events(spark, sf_dir)
-    dim = ev.groupBy("event_type").agg(
-        F.sum("cents").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    joined = K.salted_join(
-        ev.select("event_id", "event_type", "cents"),
-        dim,
-        on=["event_type"],
-        salt_source="event_id",
-        n_salts=8,
-    )
-    return joined.filter(
-        F.col("cents") * F.col("n") > F.col("s")
-    ).select("event_id", "event_type", "cents")
 
 
 # ---------------------------------------------------------------- q54

@@ -533,3 +533,33 @@ def test_hier_probe_job_count(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(rows) == 100
     assert 1 <= len(jobs) <= MAX_HIER_PROBE_JOBS, sorted(jobs)
+
+
+# Spark jobs one routed append may launch on this fixture: the cells/
+# read, the routing collect, the sub-codebook read and the vectors/
+# write. Learning the routed cells must add no shuffle job.
+MAX_ROUTED_APPEND_JOBS = 7
+
+
+def test_routed_append_job_count(spark, tmp_path):
+    """Each partition of the routing kernel yields its cell ids once
+    and the driver unions them, so learning which cells a batch
+    reaches costs no shuffle job."""
+    q = _corpus(spark)
+    cents = S.kmeans_centroids(q, k=64, iters=2, train_sample=(1, 4))
+    path = str(tmp_path / "ivf")
+    S.write_ivf_index(
+        q.filter(F.col("vec_id") % 2 == 0), path,
+        cents=cents, route_width=4,
+    )
+    sc = spark.sparkContext
+    group = "routed-append-job-count"
+    sc.setJobGroup(group, "one routed append")
+    try:
+        S.append_ivf_index(
+            q.filter(F.col("vec_id") % 2 == 1), path, route_width=4
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= MAX_ROUTED_APPEND_JOBS, sorted(jobs)

@@ -266,18 +266,6 @@ def test_star_join_broadcasts_all_dims(spark, registry):
     assert "SortMergeJoin" not in plan
 
 
-def test_scd2_single_key_exchange(spark, registry):
-    """q77: change-detection LAG, version ROW_NUMBER and validity
-    LEAD all share the (user_id) x (ts, event_id) window spec — one
-    hash exchange on user_id, no re-partitioning between windows."""
-    plan = plan_of(registry["q77_scd2_user_tier_history"](spark, SF_DIR))
-    n_ex = len(re.findall(r"Exchange hashpartitioning", plan))
-    assert n_ex == 1, plan
-    assert "user_id" in re.findall(
-        r"Exchange hashpartitioning\(([^)]*)\)", plan
-    )[0]
-
-
 def test_semdedup_pair_join_on_cluster(spark, registry):
     """q76: the within-cluster prune is ONE grouped Arrow kernel
     keyed on the cluster id — exactly one hash exchange on

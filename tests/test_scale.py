@@ -1,125 +1,10 @@
-"""Skew operators: salted results must equal the naive plans, and the
-plans must actually carry the salt through the shuffle."""
+"""Join skew at runtime: AQE must split a hot join partition, both in
+the real weighting pipeline and in a minimal sort-merge join, without
+changing the result."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from samba_tv_ingest_etl_spark.operators import skew as K
-
-from .conftest import SF_DIR
-
-
-def _events(spark):
-    return spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-
-
-def test_salted_sum_equals_naive_groupby(spark):
-    ev = _events(spark)
-    salted = K.salted_sum(
-        ev,
-        keys=["event_type"],
-        sums={"n": F.count(F.lit(1)), "s": F.sum("cents")},
-        salt_source="event_id",
-        n_salts=7,
-    )
-    naive = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
-    )
-    a = {r["event_type"]: (r["n"], r["s"]) for r in salted.collect()}
-    b = {r["event_type"]: (r["n"], r["s"]) for r in naive.collect()}
-    assert a == b
-
-
-def test_distinct_count_equals_count_distinct(spark):
-    ev = _events(spark)
-    two_phase = {
-        r["event_type"]: r["n_users"]
-        for r in K.distinct_count(
-            ev, ["event_type"], "user_id", "n_users"
-        ).collect()
-    }
-    naive = {
-        r["event_type"]: r["n"]
-        for r in ev.groupBy("event_type")
-        .agg(F.count_distinct("user_id").alias("n"))
-        .collect()
-    }
-    assert two_phase == naive
-
-
-def test_salted_join_equals_plain_join(spark):
-    ev = _events(spark)
-    dim = ev.groupBy("event_type").agg(F.sum("cents").alias("s"))
-    salted = K.salted_join(
-        ev, dim, on=["event_type"], salt_source="event_id", n_salts=5
-    )
-    plain = ev.join(dim, "event_type")
-    assert sorted(salted.columns) == sorted(plain.columns)
-    cols = sorted(salted.columns)
-    a = sorted(tuple(r) for r in salted.select(*cols).collect())
-    b = sorted(tuple(r) for r in plain.select(*cols).collect())
-    assert a == b
-
-
-def test_salted_join_left_preserves_unmatched(spark):
-    ev = _events(spark).limit(100)
-    dim = spark.createDataFrame(
-        [("click", 1)], "event_type string, flag int"
-    )
-    out = K.salted_join(
-        ev, dim, on=["event_type"], salt_source="event_id",
-        n_salts=3, how="left",
-    )
-    plain = ev.join(dim, "event_type", "left")
-    assert out.count() == plain.count()
-    assert (
-        out.filter(F.col("flag").isNull()).count()
-        == plain.filter(F.col("flag").isNull()).count()
-    )
-
-
-def test_salt_is_deterministic(spark):
-    ev = _events(spark).limit(1000)
-    s1 = ev.select("event_id", K.salt_column("event_id", 16).alias("s"))
-    s2 = ev.select("event_id", K.salt_column("event_id", 16).alias("s"))
-    assert sorted(map(tuple, s1.collect())) == sorted(
-        map(tuple, s2.collect())
-    )
-    vals = {r["s"] for r in s1.collect()}
-    assert vals <= set(range(16)) and len(vals) > 1
-
-
-def test_salted_join_shuffles_on_key_and_salt(spark):
-    """With the right side too big to broadcast (forced here), the
-    join's exchanges must hash on (key, _salt) — that IS the skew
-    mitigation; without _salt in the clustering the operator
-    silently degenerates to the hot-key plan. (When the right side
-    DOES fit the broadcast budget Spark broadcasts it and no shuffle
-    exists at all — also correct, just not the case under test.)"""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        ev = _events(spark)
-        dim = ev.groupBy("event_type").agg(F.sum("cents").alias("s"))
-        out = K.salted_join(
-            ev, dim, on=["event_type"], salt_source="event_id",
-            n_salts=5,
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        import re
-
-        parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
-        assert any(
-            "event_type" in p and "_salt" in p for p in parts
-        ), parts
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_aqe_splits_skew_in_real_weighting_pipeline(spark, tmp_path):
@@ -140,9 +25,7 @@ def test_aqe_splits_skew_in_real_weighting_pipeline(spark, tmp_path):
     partition to 1.3x the median's BYTES — byte-based skew detection
     correctly saw nothing worth splitting for that consumer. With
     sessionize consuming the full rows the same 10% hot key clears
-    the bar. (Fleet note: for narrow consumers of a skewed join the
-    deterministic salting operators — operators/skew.py — remain the
-    row-semantic mitigation.)"""
+    the bar."""
     import time
 
     from samba_tv_ingest_etl_spark.plans.backfill import (
@@ -256,10 +139,10 @@ def test_aqe_splits_skew_in_real_weighting_pipeline(spark, tmp_path):
 
 
 def test_aqe_splits_skewed_join_partition(spark):
-    """Runtime complement to the deterministic salting operators: with
-    AQE skew-join on, a sort-merge join whose left side piles onto one
-    hot key gets its oversized partition SPLIT at runtime (the final
-    adaptive plan marks the join skew=true). Thresholds are lowered so
+    """Mechanism check for the pipeline test above: with AQE skew-join
+    on, a sort-merge join whose left side piles onto one hot key gets
+    its oversized partition SPLIT at runtime (the final adaptive plan
+    marks the join skew=true). Thresholds are lowered so
     the fixture-sized skew triggers the same code path a 100 TB hot
     key would."""
     from pyspark.sql import functions as F
