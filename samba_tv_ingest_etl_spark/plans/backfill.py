@@ -12,11 +12,15 @@ tables (the Snowflake schema analog).
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 from dataclasses import dataclass
+from zoneinfo import ZoneInfo
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from .. import schemas
@@ -25,6 +29,7 @@ from ..operators.panels import attribute_panels, panel_windows
 from ..operators.sessionize import sessionize
 from ..operators.union_events import raw_viewing_events
 from ..operators.weighting import weighted_events
+from ..sources import control
 from ..sources.writer import append as writer_append
 from ..sources.writer import atomic_overwrite
 
@@ -35,6 +40,9 @@ SESSION_GROUP = [
     "title", "content_id", "episode_title", "season", "episode",
     "network", "panel_monday", "panel_weight",
 ]
+
+
+_TASK_CONTROL = to_arrow_schema(schemas.TASK_CONTROL)
 
 
 @dataclass
@@ -195,7 +203,6 @@ def backfill(wh: Warehouse, acr: DataFrame, stb: DataFrame,
     """panel_windows -> raw_viewing_events -> weighted_events ->
     viewing_sessions (+ task_control seed). Each step materializes
     with created_at audit columns like the reference CTAS chain."""
-    spark = wh.spark
     now = F.current_timestamp()
 
     pw = panel_windows(geo_weights).withColumn("created_at", now)
@@ -216,10 +223,41 @@ def backfill(wh: Warehouse, acr: DataFrame, stb: DataFrame,
     sessions = build_viewing_sessions(weighted).withColumn("created_at", now)
     wh.write(sessions, "viewing_sessions")
 
-    seed = spark.createDataFrame(
-        [("raw_events_update",), ("panel_windows_update",)], ["task_name"]
-    ).withColumn("last_successful_run_date", F.current_date())
-    wh.write(seed.coalesce(1), "task_control")
+    seed_task_control(wh)
+
+
+def seed_task_control(wh: Warehouse) -> None:
+    """Both watermarks at CURRENT_DATE() in the session's time zone,
+    as Spark evaluates it (``etl-ddl-backfill.sql``'s seed INSERT)."""
+    today = dt.datetime.now(
+        ZoneInfo(wh.spark.conf.get("spark.sql.session.timeZone"))
+    ).date()
+    write_task_control(
+        wh, [("raw_events_update", today), ("panel_windows_update", today)]
+    )
+
+
+def write_task_control(wh: Warehouse, rows: list[tuple[str, dt.date]]) -> None:
+    """Replace ``task_control`` with ``(task_name, date)`` rows, on
+    the driver (``sources/control.py``): no Spark job, no Python
+    worker, and the directory swap of ``atomic_overwrite``."""
+    names, dates = zip(*rows)
+    control.overwrite_table(
+        wh.spark,
+        wh.path("task_control"),
+        pa.table([list(names), list(dates)], schema=_TASK_CONTROL),
+    )
+
+
+def read_watermarks(wh: Warehouse) -> dict[str, dt.date]:
+    """Every ``last_successful_run_date`` by task name (reference
+    ``etl-dag.sql:22`` et al; SURVEY §2.2-P11), read on the driver
+    (``sources/control.py``): no Spark job."""
+    t = control.read_table(wh.spark, wh.path("task_control"), _TASK_CONTROL)
+    return dict(zip(
+        t["task_name"].to_pylist(),
+        t["last_successful_run_date"].to_pylist(),
+    ))
 
 
 def v_audience_metrics(wh: Warehouse) -> DataFrame:

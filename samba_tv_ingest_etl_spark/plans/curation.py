@@ -68,7 +68,7 @@ verify and the survivor list stay on the driver. Driver bound: the
 batch plus the candidate set — increment-sized by contract. The
 eval set is benchmark-sized by the enforced broadcast budget
 (dedup.EVAL_GRAM_BUDGET); its gram set is built once per DAG, so
-decontamination launches no job of its own. A steady pass makes 15
+decontamination launches no job of its own. A steady pass makes 13
 Spark jobs on the test fixture, and the dedup's share does not grow
 with the index (``tests/test_curation_dag.py`` pins both).
 """

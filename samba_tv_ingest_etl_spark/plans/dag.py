@@ -24,9 +24,10 @@ by executor work: traced TV spans keep the executors busy 6-21% of
 their wall time, so overlapping two tasks' planning, collects and job
 launches shortens the pass without adding executor load. Tasks that
 run together must not write into the same directory; the engine's
-DAGs keep each task on its own tables, and the one shared directory
-(the ingest load ledger) serialises its appends. A chain (one ready
-task at a time) runs on the calling thread, exactly as before.
+DAGs keep each task on its own tables. The one shared directory, the
+ingest load ledger, takes each task's entry file by a rename of its
+own and serialises its folds. A chain (one ready task at a time)
+runs on the calling thread, exactly as before.
 """
 
 from __future__ import annotations

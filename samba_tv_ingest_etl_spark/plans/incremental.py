@@ -45,18 +45,18 @@ deletes.
 At daily-drop sizes the pass is bound by driver round trips, not by
 executor work (traced spans keep the executors 6-21% busy), so the
 pass is built to make few of them: tasks 1 and 2 run concurrently
-(``TaskDag.run``); the root reads ``task_control`` once, with its
-declared schema, for every task, and every modelling table is read
-with its declared schema (``Warehouse.SCHEMAS``), so no read infers
-one; the merges take their row counts from the append job
-(``Observation``) instead of a count job over a materialized delta;
-the sessions task is one plan with one write action, whose
-observation reports the recomputed-session count and the touched
-Mondays; and the control task gets all three feed maxima from one job
-and writes its two rows as JVM literals. On 4 vCPUs (default
-perfbench scale) the ingest plus incremental pass makes 30 Spark
-jobs, 67 before any of this. The feed maxima are still a full-history
-scan of ``metadata_date``.
+(``TaskDag.run``); the root reads ``task_control`` once for every
+task, on the driver (``sources/control.py``, no Spark job), and every
+modelling table is read with its declared schema
+(``Warehouse.SCHEMAS``), so no read infers one; the merges take their
+row counts from the append job (``Observation``) instead of a count
+job over a materialized delta; the sessions task is one plan with one
+write action, whose observation reports the recomputed-session count
+and the touched Mondays; and the control task gets all three feed
+maxima from one job and writes its two rows on the driver. On 4
+vCPUs (default perfbench scale) the ingest plus incremental pass
+makes 24 Spark jobs, 67 before any of this. The feed maxima
+are still a full-history scan of ``metadata_date``.
 """
 
 from __future__ import annotations
@@ -72,7 +72,12 @@ from ..operators.merge import delete_by_keys, merge_insert_only, semi_join_keys
 from ..operators.panels import attribute_panels, panel_windows
 from ..operators.union_events import raw_viewing_events
 from ..operators.weighting import weighted_events
-from .backfill import Warehouse, build_viewing_sessions
+from .backfill import (
+    Warehouse,
+    build_viewing_sessions,
+    read_watermarks,
+    write_task_control,
+)
 from .dag import TaskDag
 
 EPOCH_DEFAULT = dt.date(1900, 1, 1)
@@ -82,21 +87,6 @@ RAW_EVENTS_KEY = ["smba_id", "exposure_start_ts"]
 
 RAW_WATERMARK = "raw_events_update"
 PANEL_WATERMARK = "panel_windows_update"
-
-
-def read_watermarks(wh: Warehouse) -> dict[str, dt.date]:
-    """Every ``last_successful_run_date`` by task name, in one collect
-    (reference ``etl-dag.sql:22`` et al; SURVEY §2.2-P11). The
-    declared schema spares the footer-inference job a bare parquet
-    read costs."""
-    if not wh.exists("task_control"):
-        return {}
-    rows = (
-        wh.spark.read.schema(schemas.TASK_CONTROL)
-        .parquet(wh.path("task_control"))
-        .collect()
-    )
-    return {r["task_name"]: r["last_successful_run_date"] for r in rows}
 
 
 def read_watermark(wh: Warehouse, task_name: str) -> dt.date:
@@ -388,17 +378,15 @@ def update_control_table(
 ) -> None:
     """Task 5 (``etl-dag.sql:127-145``): advance both watermarks.
     raw_events trails the slower feed (LEAST), panel_windows follows
-    geo; empty feeds default to 1900-01-01."""
-    from ..sources.writer import overwrite_small
-
+    geo; empty feeds default to 1900-01-01. One Spark job (the feed
+    maxima); the write is a driver file swap."""
     acr_max, stb_max, geo_max = (
         m or EPOCH_DEFAULT for m in _max_dates(acr, stb, geo_weights)
     )
-    rows = [
+    write_task_control(wh, [
         (RAW_WATERMARK, min(acr_max, stb_max)),
         (PANEL_WATERMARK, geo_max),
-    ]
-    overwrite_small(wh.spark, rows, schemas.TASK_CONTROL, wh.path("task_control"))
+    ])
 
 
 def build_dag(

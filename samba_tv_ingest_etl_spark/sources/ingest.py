@@ -15,6 +15,7 @@ intent: "read only new data per run").
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -22,9 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schemas
+from . import control
 from .ledger import LoadLedger
 from .stage import discover_feed, read_stage_files
-from .writer import append
+from .writer import _fs, append
 
 FEED_SCHEMAS: dict[str, T.StructType] = {
     "ACR": schemas.ACR,
@@ -68,6 +70,13 @@ class IngestResult:
     rows_loaded: int
 
 
+# A load stages its rows under <feed table>/_staging/<load_id>/, a
+# hidden directory no table read lists, with its ledger entry inside
+# as _ENTRY until the entry is committed.
+_STAGING = "_staging"
+_ENTRY = "_ledger.parquet"
+
+
 def ingest_feed(
     spark: SparkSession,
     stage_base: str,
@@ -77,12 +86,28 @@ def ingest_feed(
     subdir: str = "",
 ) -> IngestResult:
     """One COPY-INTO run: discover -> minus ledger -> transform ->
-    append -> ledger. Re-running with no new files is a no-op."""
+    commit. Re-running with no new files is a no-op and launches no
+    Spark job.
+
+    A load commits once, at its ledger entry. The append job writes
+    the rows to ``_staging/<load_id>/`` (``load_id`` hashes the file
+    set) beside the entry file; renaming the entry into the ledger is
+    the commit; only then do the staged files move into their
+    ``yyyy/mm/dd`` directories. So a load is never visible without
+    its ledger entry, nor recorded without its rows: a run that stops
+    anywhere is finished or undone by the next run's
+    ``_recover_staged``, which every run calls first. One run per
+    feed table at a time (the ingest DAG has one task per feed)."""
     ledger = LoadLedger(spark, ledger_path)
+    _recover_staged(spark, target_path)
     discovered = discover_feed(spark, stage_base, feed, subdir)
     new = ledger.new_files(feed, discovered)
     if not new:
         return IngestResult(feed, 0, 0)
+    load_id = hashlib.sha256("\n".join(sorted(new)).encode()).hexdigest()[:16]
+    staging = f"{target_path.rstrip('/')}/{_STAGING}/{load_id}"
+    entry = f"{staging}/{_ENTRY}"
+    control.write_table(spark, entry, ledger.entry(feed, new))
     raw = read_stage_files(spark, new)
     # path-derived columns win over any same-named file columns
     projected = project_declared_schema(raw, FEED_SCHEMAS[feed])
@@ -90,11 +115,47 @@ def ingest_feed(
     obs = Observation()
     append(
         projected.observe(obs, F.count(F.lit(1)).alias("n")),
-        target_path,
+        staging,
         ["yyyy", "mm", "dd"],
     )
-    ledger.record(feed, new)
+    ledger.commit(entry, load_id)
+    _recover_staged(spark, target_path)
     return IngestResult(feed, len(new), int(obs.get["n"]))
+
+
+def _recover_staged(spark: SparkSession, target_path: str) -> None:
+    """Finish or undo every load staged under ``target_path``, then
+    drop ``_staging/``. A load whose entry file is still staged never
+    committed: its rows go. A committed load's rows move into place
+    (a load that stopped halfway through its moves resumes with what
+    is still staged). Driver file operations only."""
+    table = target_path.rstrip("/")
+    root = f"{table}/{_STAGING}"
+    fs, jroot = _fs(spark, root)
+    if not fs.exists(jroot):
+        return
+    for load in fs.listStatus(jroot):
+        jload = load.getPath()
+        if not fs.exists(jload.suffix("/" + _ENTRY)):
+            _merge_into(spark, fs, jload.toString(), table)
+    if not fs.delete(jroot, True):
+        raise RuntimeError(f"ingest: cannot remove {root}")
+
+
+def _merge_into(spark: SparkSession, fs, src: str, dst: str) -> None:
+    """Move the visible entries of directory ``src`` into ``dst``. An
+    entry ``dst`` lacks moves whole, in one rename (a new ``dd=``
+    partition is one rename, not one per file); a directory both hold
+    is merged level by level."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    for st in fs.listStatus(path(src)):
+        name = st.getPath().getName()
+        if control.is_hidden(name):
+            continue
+        if st.isDirectory() and fs.exists(path(f"{dst}/{name}")):
+            _merge_into(spark, fs, f"{src}/{name}", f"{dst}/{name}")
+        else:
+            control.move(spark, f"{src}/{name}", f"{dst}/{name}")
 
 
 # The reference schedules all three ingest tasks at 00:04 LOCAL New
@@ -119,8 +180,10 @@ def build_ingest_dag(
     (STB/ACR/GEO_WEIGHTS), each on the reference's New-York daily
     cron, all resumed — no edges between them, matching the
     reference's flat task set, so a run loads the three feeds
-    concurrently. Each task appends to its own feed table; their
-    shared load-ledger appends are serialised by ``writer.append``."""
+    concurrently. Each task stages into its own feed table and
+    commits by publishing one entry file into the shared load ledger
+    (``LoadLedger.commit``, a rename; folds of the ledger are
+    serialised per directory)."""
     import os
 
     from ..plans.dag import TaskDag

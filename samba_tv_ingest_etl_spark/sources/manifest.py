@@ -38,6 +38,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from . import control
 from .writer import _fs
 
 # Spark's own directory name for a NULL partition value — reusing it
@@ -66,40 +67,19 @@ class ManifestTable:
     def _jpath(self, p: str):
         return self.spark.sparkContext._jvm.org.apache.hadoop.fs.Path(p)
 
-    def _read_text(self, fs, p: str) -> str:
-        stream = fs.open(self._jpath(p))
-        try:
-            out = []
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                out.append(chr(b))
-            return "".join(out)
-        finally:
-            stream.close()
+    def _read_text(self, p: str) -> str:
+        return control.read_bytes(self.spark, p).decode("utf-8")
 
     def _write_text_atomic(self, fs, p: str, content: str) -> None:
-        tmp = p + ".__tmp__"
-        stream = fs.create(self._jpath(tmp), True)
-        try:
-            stream.write(bytearray(content.encode("utf-8")))
-        finally:
-            stream.close()
-        # single-file rename-over: delete-then-rename with checked
-        # returns (the pointer is recoverable from _manifests if a
-        # crash lands between the two)
-        target = self._jpath(p)
-        if fs.exists(target) and not fs.delete(target, False):
-            raise RuntimeError(f"manifest: cannot replace {p}")
-        if not fs.rename(self._jpath(tmp), target):
-            raise RuntimeError(f"manifest: pointer swap failed for {p}")
+        # the pointer is recoverable from _manifests if a crash lands
+        # between write_bytes' delete and rename
+        control.write_bytes(self.spark, p, content.encode("utf-8"))
 
     def _current_version(self, fs) -> int:
         cur = f"{self.path}/_CURRENT"
         if not fs.exists(self._jpath(cur)):
             return 0
-        return int(self._read_text(fs, cur).strip())
+        return int(self._read_text(cur).strip())
 
     def _read_partition(self, key: str, entry: dict) -> DataFrame:
         """One live partition's files, its value restored as a typed
@@ -118,13 +98,10 @@ class ManifestTable:
         )
 
     def _manifest(self, version: int) -> dict:
-        fs, _ = _fs(self.spark, self.path)
         if version == 0:
             return {}
         return json.loads(
-            self._read_text(
-                fs, f"{self.path}/_manifests/manifest_{version}.json"
-            )
+            self._read_text(f"{self.path}/_manifests/manifest_{version}.json")
         )
 
     # -- public API ---------------------------------------------------

@@ -318,24 +318,6 @@ def overwrite_partitions(
             )
 
 
-def overwrite_small(spark: SparkSession, rows, schema, path: str) -> None:
-    """Overwrite a tiny control table (task_control is 2 rows —
-    reference etl-dag.sql:136-142) from driver-side rows. The rows are
-    JVM literals (``inline`` over an array of structs), like
-    ``ledger.literal_strings_frame``: a ``createDataFrame`` frame
-    would drain through the Python runner, about 1 s per write."""
-    from pyspark.sql import functions as F
-
-    structs = [
-        F.struct(*[
-            F.lit(v).cast(f.dataType).alias(f.name)
-            for v, f in zip(row, schema.fields)
-        ])
-        for row in rows
-    ]
-    atomic_overwrite(spark.range(1).select(F.inline(F.array(*structs))), path)
-
-
 def write_clustered(
     df: DataFrame,
     path: str,
