@@ -13,11 +13,11 @@ watermark-driven touch-only-new-rows):
                            span-grain eval excision + quality gate
                            (q127/q131 machinery)
               └─ curation_append
-                           land curated rows (idempotent: dynamic
-                           overwrite of the run's own partition),
-                           THEN commit the file ledger — the
-                           watermark write is last, as in the
-                           reference (etl-dag.sql:147-156)
+                           stage the run's ledger entry and curated
+                           rows, commit the entry, then move the rows
+                           into curated/ — one load, one commit
+                           (sources/ledger.py), the watermark as in
+                           the reference (etl-dag.sql:147-156)
 
 q131 proved the stage composition as one lazy plan and q132 proved
 streaming dedup against the index; this composes the same operators
@@ -30,29 +30,32 @@ wholesale pairwise min-id rule); it is pinned Spark-vs-Spark by
 ``tests/test_curation_dag.py`` and against DuckDB by q137's oracle,
 which computes the WHOLESALE pass in SQL.
 
-Exactly-once, end to end: a crash ANYWHERE before the final ledger
-commit replays the whole day — the ingest re-lists the unrecorded
-files, the dedup increment (``dedup.dedup_increment_against_index``,
-the one batch-vs-index MinHash entry point) is replay-safe (the
-index side excludes the batch's own ids, and the re-append's
-duplicate rows are result-neutral by the band index contract),
-decontamination is deterministic per doc, and the curated write
-dynamically overwrites the run's own partition (run_id = hash of
-the file set) instead of appending blind. A replay whose file set
-DRIFTED (new files staged after the crash) lands under a different
-run_id; the run manifest makes that safe too (r11 advice): curated()
-shows only manifest-recorded runs, and the crashed attempt's
-partition — never recorded, or recorded but fully superseded by the
-wider replay — is garbage-collected before the replay commits (see
-``_gc_superseded_runs``). Every store is written under the manifest,
-so a curated partition with no manifest row can only be a crashed
-attempt, and a pass with nothing newly staged launches no job in
-its landing task. The global
-token-budget head (q111/q131's final stage) is deliberately NOT in
-the DAG: it is a global selection over the curated pool, re-run
-wholesale over ``curated/`` when a training mix is cut — an
-incremental top-k-by-score would need retraction semantics no
-append-only pipeline has.
+Exactly-once, end to end: a run lands through the load ledger's
+commit protocol, as the TV ingest does. Its ledger entry and its
+curated rows stage under ``runs/<run_id>/`` (run_id = hash of the
+file set); renaming the entry into the ledger commits the run; only
+then does the ``run_id=<h>`` partition move into ``curated/``. Every
+pass first finishes or undoes what an earlier pass left staged
+(``ledger.recover_staged``), so a partition under ``curated/`` is
+committed by construction and ``curated()`` is a plain read. A crash
+before the commit replays the whole day: the ingest re-lists the
+unrecorded files, the dedup increment
+(``dedup.dedup_increment_against_index``, the one batch-vs-index
+MinHash entry point) is replay-safe (the index side excludes the
+batch's own ids, and the re-append's duplicate rows are
+result-neutral by the band index contract), and decontamination is
+deterministic per doc. A replay whose file set drifted (files staged
+or vanished after the crash) stages under a different run_id; the
+crashed attempt never reached ``curated/``, so nothing double-counts.
+A crash after the commit is rolled forward by the next pass, which
+then finds nothing new. A pass with nothing newly staged launches no
+job in its landing task.
+
+The global token-budget head (q111/q131's final stage) is
+deliberately NOT in the DAG: it is a global selection over the
+curated pool, re-run wholesale over ``curated/`` when a training mix
+is cut — an incremental top-k-by-score would need retraction
+semantics no append-only pipeline has.
 
 Scale shape: per-day work is O(|batch|) and touches the standing
 corpus ONLY through the at-rest index. Ingest tokenizes the batch
@@ -68,14 +71,12 @@ verify and the survivor list stay on the driver. Driver bound: the
 batch plus the candidate set — increment-sized by contract. The
 eval set is benchmark-sized by the enforced broadcast budget
 (dedup.EVAL_GRAM_BUDGET); its gram set is built once per DAG, so
-decontamination launches no job of its own. A steady pass makes 13
+decontamination launches no job of its own. A steady pass makes 11
 Spark jobs on the test fixture, and the dedup's share does not grow
 with the index (``tests/test_curation_dag.py`` pins both).
 """
 
 from __future__ import annotations
-
-import hashlib
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -102,8 +103,9 @@ class CurationDag:
         root/band_index/  persisted MinHash band index (docs/+bands/)
         root/ledger/      load ledger (file-grain watermark)
         root/curated/     run_id=<h>/ (doc_id, n_tokens, n_kept)
-        root/runs/        run manifest (run_id, file_path) — the
-                          committed-run record curated() filters by
+        root/runs/        runs in flight: <run_id>/ holds a run's
+                          staged ledger entry and curated rows until
+                          the next pass finishes or undoes it
 
     ``eval_toks``: (doc_id, toks) token frame of the eval suite —
     fixed and benchmark-sized by the decontamination contract; its
@@ -174,26 +176,24 @@ class CurationDag:
         failed pass is a crash the DAG already replays whole: the next
         pass re-lists the unrecorded files and rebuilds the batch. The
         checkpoint lives for one pass only."""
-        from ..sources.ledger import LoadLedger
+        from ..sources.ledger import LoadLedger, load_id, recover_staged
         from ..sources.splits import widen_to_cores
         from ..sources.stage import list_stage_files
 
+        # an earlier pass's staged run is committed or not: settle it
+        # before the ledger read
+        recover_staged(self.spark, self.runs_path, self.curated_path)
         discovered = list_stage_files(
             self.spark, self.stage_path, _STAGE_PATTERN
         )
-        # one ledger read per pass: the landing's GC reuses it
-        seen = LoadLedger(self.spark, self.ledger_path).seen(_FEED)
-        new = [f for f in discovered if f not in seen]
-        state["ledgered"] = seen
+        new = LoadLedger(self.spark, self.ledger_path).new_files(
+            _FEED, discovered
+        )
         state["files"] = new
         if not new:
             state["batch"] = None
             return 0
-        # run identity = the file set, so a crashed run's replay
-        # lands on the SAME curated partition (idempotent overwrite)
-        state["run_id"] = hashlib.sha256(
-            "\n".join(sorted(new)).encode()
-        ).hexdigest()[:16]
+        state["run_id"] = load_id(new)
         rows = Observation()
         state["batch"] = (
             widen_to_cores(
@@ -249,146 +249,37 @@ class CurationDag:
         return 0  # lazy by design: the append is the action
 
     def _task_append(self, state: dict) -> int:
-        from ..sources.ledger import LoadLedger
+        from ..sources.ledger import LoadLedger, recover_staged
 
         if state.get("gated") is None:
             return 0
-        self._write_curated(state["gated"], state["run_id"])
-        self._gc_superseded_runs(
-            state["run_id"], state["files"], state["ledgered"]
+        entry = self._stage_run(state)
+        LoadLedger(self.spark, self.ledger_path).commit(
+            entry, state["run_id"]
         )
-        self._record_run(state["run_id"], state["files"])
-        # watermark LAST: only a fully-landed run marks its files
-        # loaded; any earlier crash replays the whole day
-        LoadLedger(self.spark, self.ledger_path).record(
-            _FEED, state["files"]
-        )
+        recover_staged(self.spark, self.runs_path, self.curated_path)
         return 1
 
-    # -- run manifest: exactly-once across DRIFTING replays ------------
-    #
-    # run_id = hash of the ingested file SET, so a replay that picks
-    # up files staged AFTER the crash lands under a DIFFERENT run_id
-    # and the crashed attempt's partition would otherwise survive as
-    # an orphan, double-counting its docs (r11 advice). The manifest
-    # (runs/: one (run_id, file_path) row per ingested file, written
-    # AFTER the curated landing and BEFORE the file ledger) makes
-    # committed-ness observable:
-    #   * a curated partition NOT in the manifest is a crashed
-    #     attempt that never reached the manifest write — invisible
-    #     to curated() (left-semi on manifest run_ids) and deleted by
-    #     the next pass's GC;
-    #   * a manifest run whose files are ALL ledger-unrecorded and
-    #     OVERLAP the current pass's ingest set is a crashed attempt
-    #     (by the write order, a run with NO ledgered file never
-    #     committed) that the current run supersedes — its partition
-    #     is deleted before the manifest records the current run, so
-    #     at any instant at most ONE manifest-visible partition holds
-    #     a given doc (no read-side dedup pass needed). Overlap, not
-    #     subset (r12 advice): if some of the crashed attempt's
-    #     staged files disappeared before the replay, the narrower
-    #     replay still supersedes it — a subset test would strand the
-    #     orphan manifest-visible while the replay re-lands its
-    #     surviving files' docs (a double count). A zero-overlap
-    #     unledgered run (ALL its files vanished) stays visible —
-    #     its docs exist nowhere else, so nothing double-counts —
-    #     and self-heals if the files ever reappear in the stage:
-    #     they are still unledgered, so the pass that re-ingests
-    #     them overlaps and supersedes it then;
-    #   * a fully-ledgered run's files can never ALL be unrecorded,
-    #     so GC can never touch committed data.
-    # Single-writer assumption as documented on the dedup stage.
+    def _stage_run(self, state: dict) -> str:
+        """Stage the run under ``runs/<run_id>/``: its ledger entry
+        first, then its gated rows as the ``run_id=<h>`` partition.
+        Returns the staged entry's path."""
+        from ..sources import control
+        from ..sources.ledger import ENTRY, LoadLedger
+        from ..sources.writer import append
 
-    def _record_run(self, run_id: str, files: list[str]) -> None:
-        from ..sources.ledger import literal_strings_frame
-
-        (
-            literal_strings_frame(self.spark, files, "file_path")
-            .select(F.lit(run_id).alias("run_id"), "file_path")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.runs_path)
+        staging = f"{self.runs_path}/{state['run_id']}"
+        entry = f"{staging}/{ENTRY}"
+        control.write_table(
+            self.spark, entry, LoadLedger.entry(_FEED, state["files"])
         )
-
-    _RUNS_SCHEMA = "run_id string, file_path string"
-
-    def _manifest(self) -> DataFrame | None:
-        fs, jpath = self._fs()
-        if not fs.exists(jpath(self.runs_path)):
-            return None
-        # explicit schema: a crashed append can leave runs/ with no
-        # committed data files, which schema inference cannot read
-        return self.spark.read.schema(self._RUNS_SCHEMA).parquet(
-            self.runs_path
+        # append, not overwrite: an overwrite would delete the entry
+        append(
+            state["gated"].withColumn("run_id", F.lit(state["run_id"])),
+            staging,
+            ["run_id"],
         )
-
-    def _gc_superseded_runs(
-        self,
-        current_run_id: str,
-        current_files: list[str],
-        ledgered: set[str] | None = None,
-    ) -> list[str]:
-        """Delete curated partitions of crashed attempts the current
-        run supersedes. Returns the removed run_ids. ``ledgered`` is
-        the feed's ledger as this pass's ingest read it (the ledger
-        only changes in the pass's own final commit); it is read here
-        when not given."""
-        from ..sources.ledger import LoadLedger
-
-        fs, jpath = self._fs()
-        if not fs.exists(jpath(self.curated_path)):
-            return []
-        manifest: dict[str, set[str]] = {}
-        mdf = self._manifest()
-        if mdf is not None:
-            for r in mdf.collect():
-                manifest.setdefault(r["run_id"], set()).add(
-                    r["file_path"]
-                )
-        if ledgered is None:
-            ledgered = LoadLedger(self.spark, self.ledger_path).seen(
-                _FEED
-            )
-        cur = set(current_files)
-        removed = []
-        for status in fs.listStatus(jpath(self.curated_path)):
-            name = status.getPath().getName()
-            if not name.startswith("run_id="):
-                continue
-            rid = name.removeprefix("run_id=")
-            if rid == current_run_id:
-                continue
-            fr = manifest.get(rid)
-            # fr is None: unmanifested = crashed before its manifest
-            # record. Otherwise: fully-unledgered (never committed) AND
-            # overlapping the current ingest set (the replay re-lands
-            # at least one of its files' docs) — overlap, not subset,
-            # so staged files vanishing between crash and replay
-            # cannot strand a double-counting orphan (r12 advice).
-            superseded = fr is None or (
-                not (fr & ledgered) and bool(fr & cur)
-            )
-            if superseded:
-                if not fs.delete(status.getPath(), True):
-                    raise RuntimeError(
-                        f"curation GC: failed to delete superseded "
-                        f"partition {name} under {self.curated_path}"
-                    )
-                removed.append(rid)
-        return sorted(removed)
-
-    def _write_curated(self, gated: DataFrame, run_id: str) -> None:
-        """Idempotent landing: dynamic partition overwrite replaces
-        ONLY this run's partition, so a replayed append after a crash
-        rewrites the same rows instead of duplicating them. The mode is
-        a per-write option, so the session conf stays untouched."""
-        (
-            gated.withColumn("run_id", F.lit(run_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id")
-            .parquet(self.curated_path)
-        )
+        return entry
 
     # -- surface -------------------------------------------------------
 
@@ -432,28 +323,23 @@ class CurationDag:
         reference's scheduled-task cadence applied to the engine's
         metadata: compact the band index (daily appends fragment
         bands/ one file set per day, eroding exactly the pruning the
-        dedup increment reads through), squash the load ledger and
-        run manifest (one small file per day each), and vacuum crash
-        leftovers. Content-preserving end to end: curated() and the
-        NEXT increment are byte-identical pre/post (pinned by
+        dedup increment reads through) and vacuum crash leftovers.
+        The load ledger bounds itself (``LoadLedger`` folds its entry
+        files on commit). Content-preserving end to end: curated()
+        and the NEXT increment are byte-identical pre/post (pinned by
         tests/test_curation_dag.py). Run between passes — same
         single-writer assumption as the dedup stage.
 
         ``only_if_over`` gates EVERY rewrite on fragmentation (r12
-        verdict #1): an index partition / the ledger / the manifest
-        is rewritten only when its data-file count exceeds the gate,
-        so the nightly pass at daily-append cadence is a listing-only
-        no-op ~``only_if_over``−1 nights out of ``only_if_over`` —
+        verdict #1): an index partition is rewritten only when its
+        data-file count exceeds the gate, so the nightly pass at
+        daily-append cadence is a listing-only no-op
+        ~``only_if_over``−1 nights out of ``only_if_over`` —
         O(appended-since-last-compaction) amortized, never O(index)
         per night. A second consecutive maintain touches zero data
         files (pinned by tests/test_curation_dag.py). Pass
         ``only_if_over=0`` for the old unconditional rewrite."""
-        from ..sources.writer import atomic_overwrite
-        from .maintenance import (
-            _scope_file_counts,
-            compact_index,
-            vacuum_index,
-        )
+        from .maintenance import compact_index, vacuum_index
 
         out: dict[str, object] = {}
         if self._index_exists():
@@ -464,50 +350,12 @@ class CurationDag:
             out["index_vacuumed"] = vacuum_index(
                 self.spark, self.index_path
             )
-        fs, jpath = self._fs()
-        for name, p in (
-            ("ledger", self.ledger_path),
-            ("runs", self.runs_path),
-        ):
-            if not fs.exists(jpath(p)):
-                continue
-            nf = _scope_file_counts(self.spark, p, False).get(None, 0)
-            if nf <= only_if_over:
-                out[name] = 0
-                continue
-            df = self.spark.read.parquet(p)
-            atomic_overwrite(df.repartition(1), p)
-            out[name] = self.spark.read.parquet(p).count()
         return out
 
     def curated(self) -> DataFrame:
-        """The accumulated curated pool (doc_id, n_tokens, n_kept) —
-        COMMITTED runs only: the left-semi against the run manifest
-        (a broadcast over one row per ingested file — metadata-sized)
-        hides partitions a crashed attempt wrote but never recorded,
-        so a read between a crash and its replay can never see an
-        uncommitted or double-counted doc. The GC invariant (at most
-        one manifest-visible partition per doc) makes this filter the
-        WHOLE read-side story: no doc-grain dedup shuffle."""
-        mdf = self._manifest()
-        df = self.spark.read.parquet(self.curated_path)
-        if mdf is not None:
-            if mdf.limit(1).count() == 0:
-                # runs/ exists but holds zero rows: only a crash
-                # inside the very first manifest append leaves this
-                # state (any committed landing wrote its rows first).
-                # Raise rather than semi-join everything away — a
-                # consumer in this window must see a named error, not
-                # an empty pool that reads as "no data"
-                raise RuntimeError(
-                    f"curation manifest at {self.runs_path} exists "
-                    "but holds no rows while curated data is present "
-                    "— a crashed first manifest append; replay the "
-                    "curation pass (run_once) to heal before reading."
-                )
-            df = df.join(
-                F.broadcast(mdf.select("run_id").distinct()),
-                "run_id",
-                "left_semi",
-            )
-        return df.select("doc_id", "n_tokens", "n_kept")
+        """The accumulated curated pool (doc_id, n_tokens, n_kept).
+        Only a committed run's rows ever reach ``curated/``, so this
+        is a plain read."""
+        return self.spark.read.parquet(self.curated_path).select(
+            "doc_id", "n_tokens", "n_kept"
+        )

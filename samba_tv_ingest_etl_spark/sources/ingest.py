@@ -5,17 +5,20 @@ the same statement, idempotent through the load ledger).
 Schema-on-read: the declared feed schema is projected onto whatever
 the parquet files contain — present columns are cast, missing columns
 become typed NULLs (the ``$1:field::TYPE`` idiom nulls missing paths,
-SURVEY §1.3). Path-derived yyyy/mm/dd/metadata_date override any
-same-named file columns, exactly like the ingest SELECTs.
+SURVEY §1.3). A drop is read with its files' schemas merged, so a
+column only some of its files carry keeps their values. Path-derived
+yyyy/mm/dd/metadata_date override any same-named file columns,
+exactly like the ingest SELECTs.
 
 The raw table is written partitioned by yyyy/mm/dd, mirroring the S3
 layout so watermark predicates prune partitions downstream (BASELINE
-intent: "read only new data per run").
+intent: "read only new data per run"). Each load commits once, at its
+ledger entry, through the protocol in ``sources/ledger.py`` that the
+curation landing shares.
 """
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -24,7 +27,7 @@ from pyspark.sql import types as T
 
 from .. import schemas
 from . import control
-from .ledger import LoadLedger
+from .ledger import ENTRY, LoadLedger, load_id, recover_staged
 from .stage import discover_feed, read_stage_files
 from .writer import _fs, append
 
@@ -70,11 +73,9 @@ class IngestResult:
     rows_loaded: int
 
 
-# A load stages its rows under <feed table>/_staging/<load_id>/, a
-# hidden directory no table read lists, with its ledger entry inside
-# as _ENTRY until the entry is committed.
+# A load stages under <feed table>/_staging/<load_id>/, a hidden
+# directory no table read lists (the protocol: sources/ledger.py).
 _STAGING = "_staging"
-_ENTRY = "_ledger.parquet"
 
 
 def ingest_feed(
@@ -89,24 +90,23 @@ def ingest_feed(
     commit. Re-running with no new files is a no-op and launches no
     Spark job.
 
-    A load commits once, at its ledger entry. The append job writes
-    the rows to ``_staging/<load_id>/`` (``load_id`` hashes the file
-    set) beside the entry file; renaming the entry into the ledger is
-    the commit; only then do the staged files move into their
-    ``yyyy/mm/dd`` directories. So a load is never visible without
-    its ledger entry, nor recorded without its rows: a run that stops
-    anywhere is finished or undone by the next run's
-    ``_recover_staged``, which every run calls first. One run per
-    feed table at a time (the ingest DAG has one task per feed)."""
+    A load commits once, at its ledger entry (the protocol of
+    ``sources/ledger.py``). The append job writes the rows to
+    ``_staging/<load_id>/`` beside the entry file; renaming the entry
+    into the ledger is the commit; only then do the staged files move
+    into their ``yyyy/mm/dd`` directories. A run that stops anywhere
+    is finished or undone by the next run's ``_recover``, which every
+    run calls first. One run per feed table at a time (the ingest DAG
+    has one task per feed)."""
     ledger = LoadLedger(spark, ledger_path)
-    _recover_staged(spark, target_path)
+    _recover(spark, target_path)
     discovered = discover_feed(spark, stage_base, feed, subdir)
     new = ledger.new_files(feed, discovered)
     if not new:
         return IngestResult(feed, 0, 0)
-    load_id = hashlib.sha256("\n".join(sorted(new)).encode()).hexdigest()[:16]
-    staging = f"{target_path.rstrip('/')}/{_STAGING}/{load_id}"
-    entry = f"{staging}/{_ENTRY}"
+    lid = load_id(new)
+    staging = f"{target_path.rstrip('/')}/{_STAGING}/{lid}"
+    entry = f"{staging}/{ENTRY}"
     control.write_table(spark, entry, ledger.entry(feed, new))
     raw = read_stage_files(spark, new)
     # path-derived columns win over any same-named file columns
@@ -118,44 +118,20 @@ def ingest_feed(
         staging,
         ["yyyy", "mm", "dd"],
     )
-    ledger.commit(entry, load_id)
-    _recover_staged(spark, target_path)
+    ledger.commit(entry, lid)
+    _recover(spark, target_path)
     return IngestResult(feed, len(new), int(obs.get["n"]))
 
 
-def _recover_staged(spark: SparkSession, target_path: str) -> None:
-    """Finish or undo every load staged under ``target_path``, then
-    drop ``_staging/``. A load whose entry file is still staged never
-    committed: its rows go. A committed load's rows move into place
-    (a load that stopped halfway through its moves resumes with what
-    is still staged). Driver file operations only."""
+def _recover(spark: SparkSession, target_path: str) -> None:
+    """Finish or undo every load staged in the feed table, then drop
+    its ``_staging/``."""
     table = target_path.rstrip("/")
     root = f"{table}/{_STAGING}"
+    recover_staged(spark, root, table)
     fs, jroot = _fs(spark, root)
-    if not fs.exists(jroot):
-        return
-    for load in fs.listStatus(jroot):
-        jload = load.getPath()
-        if not fs.exists(jload.suffix("/" + _ENTRY)):
-            _merge_into(spark, fs, jload.toString(), table)
-    if not fs.delete(jroot, True):
+    if fs.exists(jroot) and not fs.delete(jroot, True):
         raise RuntimeError(f"ingest: cannot remove {root}")
-
-
-def _merge_into(spark: SparkSession, fs, src: str, dst: str) -> None:
-    """Move the visible entries of directory ``src`` into ``dst``. An
-    entry ``dst`` lacks moves whole, in one rename (a new ``dd=``
-    partition is one rename, not one per file); a directory both hold
-    is merged level by level."""
-    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    for st in fs.listStatus(path(src)):
-        name = st.getPath().getName()
-        if control.is_hidden(name):
-            continue
-        if st.isDirectory() and fs.exists(path(f"{dst}/{name}")):
-            _merge_into(spark, fs, f"{src}/{name}", f"{dst}/{name}")
-        else:
-            control.move(spark, f"{src}/{name}", f"{dst}/{name}")
 
 
 # The reference schedules all three ingest tasks at 00:04 LOCAL New

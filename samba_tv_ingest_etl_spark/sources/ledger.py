@@ -4,15 +4,19 @@ history (file-level exactly-once, SURVEY §2.1-S5 / §4.2-3).
 A directory of small parquet entry files (``schemas.LOAD_LEDGER``:
 one row per already-ingested file path, per feed), read and written
 on the driver through ``sources/control.py``, so neither a lookup nor
-a record launches a Spark job. Ingest = discovered files MINUS ledger
--> read -> append -> ledger entry.
+a record launches a Spark job. A load = discovered files MINUS
+ledger -> stage (entry, then rows) -> commit -> move into place.
 
-An entry file is the commit point of a load: it is published whole
-by one rename, and a load's data becomes visible only after it
-(``ingest.ingest_feed`` stages the data, commits the entry, then
-moves the data into place; a replay finds the files either recorded
-or not, never half-recorded). A directory that a Spark job wrote,
-such as curation's nightly squash, reads the same way.
+An entry file is the commit point of a load, for the TV ingest and
+for curation alike. A load stages under ``<staging root>/<load_id>/``
+(``load_id`` hashes its file set): its entry file ``ENTRY`` first,
+then its rows. Renaming the entry into the ledger (``commit``) is the
+commit; only then does ``recover_staged`` move the rows into their
+table. So a load is never visible without its entry, nor recorded
+without its rows, and a replay finds its files either recorded or
+not, never half-recorded. Every load first calls ``recover_staged``,
+which finishes or undoes whatever an earlier run left staged. A
+ledger directory that a Spark job wrote reads the same way.
 
 Scale: each lookup reads every entry file (about 1 ms each on the
 driver), so ``record`` folds the entries into one file whenever more
@@ -23,50 +27,17 @@ driver-side set for a broadcast anti-join on the file list.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
 from . import control
 from .writer import _dir_lock, _fs
-
-# Past this many values, a literal F.array(...) becomes one giant
-# generated expression (the ISIN_LITERAL_CAP / Janino blowup class):
-# fall back to a Python-local relation, whose one-off ~seconds of
-# Python-runner cost is the bounded price of a bounded plan.
-LITERAL_ROWS_CAP = 1024
-
-
-def literal_strings_frame(spark, values: list[str], name: str):
-    """One-column (``name`` string) DataFrame from a driver-side list
-    of strings — the row source of curation's run manifest. JVM-born
-    rows (range+explode over literals) instead of a Python-local
-    relation: writing a ``createDataFrame`` result through one task
-    drains every pickled partition through the Python runner at
-    ~4-5 s per write action (measured, r12); the literal form writes
-    in ~0.1 s. Past
-    ``LITERAL_ROWS_CAP`` values the literal expression itself would
-    blow up codegen, so it falls back to ``createDataFrame`` —
-    ``repartition(1)``, not ``coalesce(1)``, so the pickled
-    partitions drain on parallel map tasks before the single-file
-    shuffle."""
-    if not values:
-        # explode(array()) yields a VOID column parquet refuses even
-        # for zero rows — hand back a typed empty relation instead
-        return spark.createDataFrame([], f"{name} string")
-    if len(values) <= LITERAL_ROWS_CAP:
-        return spark.range(1).select(
-            F.explode(F.array(*[F.lit(v) for v in values])).alias(name)
-        )
-    return spark.createDataFrame(
-        [(v,) for v in values], f"{name} string"
-    ).repartition(1)
-
 
 # A record that leaves more visible entry files than this folds them
 # into one, so a lookup reads a bounded number of files.
@@ -149,3 +120,48 @@ class LoadLedger:
             jvm = self.spark.sparkContext._jvm
             for f in files:
                 fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
+
+
+# The name of a staged load's entry file while it is uncommitted:
+# hidden, so neither a table read nor a merge picks it up.
+ENTRY = "_ledger.parquet"
+
+
+def load_id(files: list[str]) -> str:
+    """A load's identity: a hash of its file set, so a replay of the
+    same files stages under the same name."""
+    return hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()[:16]
+
+
+def recover_staged(spark: SparkSession, staging_root: str, table: str) -> None:
+    """Finish or undo every load staged under ``staging_root`` and
+    remove its directory (the root itself stays). A load whose
+    ``ENTRY`` is still inside never committed: its rows go. A
+    committed load's rows merge into ``table`` (a load that stopped
+    halfway through its moves resumes with what is still staged).
+    Driver file operations only; one writer per table at a time."""
+    fs, jroot = _fs(spark, staging_root)
+    if not fs.exists(jroot):
+        return
+    for load in fs.listStatus(jroot):
+        jload = load.getPath()
+        if not fs.exists(jload.suffix("/" + ENTRY)):
+            _merge_into(spark, fs, jload.toString(), table.rstrip("/"))
+        if not fs.delete(jload, True):
+            raise RuntimeError(f"ledger: cannot remove staged load {jload}")
+
+
+def _merge_into(spark: SparkSession, fs, src: str, dst: str) -> None:
+    """Move the visible entries of directory ``src`` into ``dst``. An
+    entry ``dst`` lacks moves whole, in one rename (a new partition
+    is one rename, not one per file); a directory both hold is merged
+    level by level."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    for st in fs.listStatus(path(src)):
+        name = st.getPath().getName()
+        if control.is_hidden(name):
+            continue
+        if st.isDirectory() and fs.exists(path(f"{dst}/{name}")):
+            _merge_into(spark, fs, f"{src}/{name}", f"{dst}/{name}")
+        else:
+            control.move(spark, f"{src}/{name}", f"{dst}/{name}")

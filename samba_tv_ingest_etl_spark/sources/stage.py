@@ -50,15 +50,19 @@ def list_stage_files(
     return sorted(out)
 
 
-def read_stage_files(
-    spark: SparkSession, files: list[str], declared_columns: list[str] | None = None
-) -> DataFrame:
+def read_stage_files(spark: SparkSession, files: list[str]) -> DataFrame:
     """Read an explicit file list, exposing the source path as
     ``_file_path`` (reference ``metadata$filename``, SURVEY §2.1-S6)
-    and deriving yyyy/mm/dd/metadata_date from it."""
+    and deriving yyyy/mm/dd/metadata_date from it.
+
+    The schema is the union of every file's (``mergeSchema``): a drop
+    whose files span two schema versions keeps the columns only some
+    files carry, and the others read them as NULL. Inference from one
+    file would drop those columns for the whole drop. The merge is
+    one Spark job."""
     if not files:
         raise ValueError("empty file list")
-    df = spark.read.parquet(*files).withColumn(
+    df = spark.read.option("mergeSchema", "true").parquet(*files).withColumn(
         "_file_path", F.col("_metadata.file_path")
     )
     for name, col in partition_columns(F.col("_file_path")).items():

@@ -18,11 +18,7 @@ from pyspark.sql import functions as F
 from samba_tv_ingest_etl_spark import schemas
 from samba_tv_ingest_etl_spark.sources import control
 from samba_tv_ingest_etl_spark.sources import ledger as ledger_mod
-from samba_tv_ingest_etl_spark.sources.ledger import (
-    MAX_ENTRY_FILES,
-    LoadLedger,
-    literal_strings_frame,
-)
+from samba_tv_ingest_etl_spark.sources.ledger import MAX_ENTRY_FILES, LoadLedger
 from samba_tv_ingest_etl_spark.sources.manifest import ManifestTable
 
 
@@ -75,11 +71,10 @@ def test_round_trip_through_nonlocal_fs_scheme(spark, tmp_path):
 def test_control_tables_keep_spark_formats(spark, tmp_path):
     """Files the driver writes read back through Spark with the
     declared schemas, and the driver reads files Spark wrote (INT96
-    timestamps included) — so old ledgers and curation's squash keep
-    working."""
+    timestamps included) — so ledgers a Spark job wrote keep working."""
     path = str(tmp_path / "ledger")
     (
-        literal_strings_frame(spark, ["/old/a", "/old/b"], "file_path")
+        spark.createDataFrame([("/old/a",), ("/old/b",)], "file_path string")
         .withColumn("feed", F.lit("STB"))
         .withColumn("loaded_at", F.current_timestamp())
         .coalesce(1)

@@ -1,15 +1,19 @@
 """Incremental curation DAG (plans/curation.CurationDag): the
 pipeline-grain incremental≡backfill property (N id-monotone daily
-increments ≡ one wholesale pass), no-op re-runs, idempotent curated
-landing, and the task-graph wiring (AFTER chain, suspended-root
-skip)."""
+increments ≡ one wholesale pass), no-op re-runs, crash replay of the
+landing's commit protocol, and the task-graph wiring (AFTER chain,
+suspended-root skip)."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from samba_tv_ingest_etl_spark.operators.text import tokens
 from samba_tv_ingest_etl_spark.plans.curation import CurationDag
+from samba_tv_ingest_etl_spark.sources.ledger import LoadLedger
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -90,29 +94,11 @@ def test_rerun_without_new_files_is_noop(spark, tmp_path):
     assert _curated_rows(dag) == before
 
 
-def test_curated_landing_idempotent(spark, tmp_path):
-    """The curated write is a dynamic overwrite of the run's own
-    partition: replaying it (the crash-before-ledger-commit window)
-    must not duplicate rows."""
-    train = _train(spark)
-    dag = _run_days(spark, str(tmp_path / "root"), train, [])
-    before = _curated_rows(dag)
-    gated = dag.curated().withColumnRenamed("doc_id", "doc_id")
-    run_id = (
-        dag.spark.read.parquet(dag.curated_path)
-        .select("run_id")
-        .distinct()
-        .collect()[0]["run_id"]
-    )
-    dag._write_curated(gated, run_id)  # the replay
-    assert _curated_rows(dag) == before
-
-
 def test_crash_replay_bit_identical(spark, tmp_path):
-    """Crash window: index appended + curated landed, but the ledger
+    """Crash window: index appended + run staged, but the ledger
     commit never ran. The next pass re-ingests the same files and
     must reproduce the same curated pool bit-for-bit (replay-safe
-    dedup increment + idempotent landing)."""
+    dedup increment + the uncommitted staging undone)."""
     train = _train(spark).localCheckpoint(eager=True)
     ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
     mid = ids[len(ids) // 2]
@@ -121,9 +107,8 @@ def test_crash_replay_bit_identical(spark, tmp_path):
     want = _curated_rows(dag)
 
     # same two days, but day 2's first attempt crashes after dedup +
-    # landing and BEFORE the ledger commit: simulate by running the
-    # tasks directly without recording the ledger, then replay the
-    # full pass
+    # staging and BEFORE the ledger commit: simulate by running the
+    # tasks directly without committing, then replay the full pass
     root2 = str(tmp_path / "root2")
     dag2 = CurationDag(spark, root2, _eval_toks(spark))
     train.filter(F.col("doc_id") <= mid).write.mode("overwrite").parquet(
@@ -137,7 +122,7 @@ def test_crash_replay_bit_identical(spark, tmp_path):
     dag2._task_ingest(state)
     dag2._task_dedup(state)
     dag2._task_decontaminate(state)
-    dag2._write_curated(state["gated"], state["run_id"])  # no ledger!
+    dag2._stage_run(state)  # no commit!
     dag2.run_once()  # the replay: files still unrecorded
     assert _curated_rows(dag2) == want
 
@@ -191,12 +176,12 @@ def test_bootstrap_crash_between_index_writes_recovers(spark, tmp_path):
 
 
 def test_drifting_replay_no_duplicates(spark, tmp_path):
-    """The r11-advice orphan window: a crash AFTER the curated write
-    but BEFORE the run manifest/ledger commit, with NEW files staged
-    before the replay — the replay ingests old+new under a DIFFERENT
-    run_id, so the crashed attempt's partition would double-count its
-    docs if it stayed visible. curated() must hide it immediately
-    (manifest left-semi) and the replay must garbage-collect it."""
+    """The r11-advice orphan window: a crash AFTER the run is staged
+    but BEFORE the ledger commit, with NEW files staged before the
+    replay — the replay ingests old+new under a DIFFERENT run_id, so
+    the crashed attempt's rows would double-count its docs if they
+    became visible. curated() must not show them, and the replay must
+    remove them."""
     train = _train(spark).localCheckpoint(eager=True)
     ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
     b1, b2 = ids[len(ids) // 3], ids[2 * len(ids) // 3]
@@ -213,7 +198,7 @@ def test_drifting_replay_no_duplicates(spark, tmp_path):
     dag.run_once()
     committed = _curated_rows(dag)
 
-    # day 1 attempt crashes right after the curated landing
+    # day 1 attempt crashes right after staging its run
     train.filter(
         (F.col("doc_id") > b1) & (F.col("doc_id") <= b2)
     ).write.mode("overwrite").parquet(f"{root}/stage/day1")
@@ -221,7 +206,7 @@ def test_drifting_replay_no_duplicates(spark, tmp_path):
     dag._task_ingest(state)
     dag._task_dedup(state)
     dag._task_decontaminate(state)
-    dag._write_curated(state["gated"], state["run_id"])  # then crash
+    dag._stage_run(state)  # then crash
     orphan_run = state["run_id"]
     # a read between the crash and the replay sees ONLY committed runs
     assert _curated_rows(dag) == committed
@@ -233,7 +218,7 @@ def test_drifting_replay_no_duplicates(spark, tmp_path):
     )
     dag.run_once()
     assert _curated_rows(dag) == want
-    # the orphan partition itself was garbage-collected, not just hidden
+    # the orphan partition never reached curated/
     fs, jpath = dag._fs()
     names = {
         s.getPath().getName()
@@ -245,8 +230,8 @@ def test_drifting_replay_no_duplicates(spark, tmp_path):
 def test_fresh_store_first_landing_crash_still_gcs(spark, tmp_path):
     """A crashed first attempt is never grandfathered in: on a store
     whose ledger is empty (nothing ever committed), a first landing
-    that died between the curated write and its manifest record is a
-    genuine orphan — the drifted replay still garbage-collects it."""
+    that died between staging and its ledger commit is a genuine
+    orphan — the drifted replay still removes it."""
     train = _train(spark).localCheckpoint(eager=True)
     ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
     mid = ids[len(ids) // 2]
@@ -263,7 +248,7 @@ def test_fresh_store_first_landing_crash_still_gcs(spark, tmp_path):
     dag._task_ingest(state)
     dag._task_dedup(state)
     dag._task_decontaminate(state)
-    dag._write_curated(state["gated"], state["run_id"])  # then crash
+    dag._stage_run(state)  # then crash
     orphan_run = state["run_id"]
 
     # drift: more files staged before the replay -> different run_id
@@ -281,18 +266,17 @@ def test_fresh_store_first_landing_crash_still_gcs(spark, tmp_path):
 
 
 def test_vanished_staged_file_cannot_strand_orphan(spark, tmp_path):
-    """Overlap-supersession (r12 advice): a crashed attempt that
-    reached its manifest record but not the ledger, one of whose
-    staged files VANISHED before the replay — the narrower replay's
-    file set is no superset of the orphan's, but it overlaps, and
-    that must be enough to supersede (a subset test would leave the
-    orphan manifest-visible while the replay re-lands its surviving
-    file's docs: a double count). The crashed attempt's index append
-    legitimately persists (the shadow rule: dropped/uncommitted docs
-    may stay index-side and suppress later near-duplicates), so the
-    pins are the GC/visibility invariants — no doc appears twice,
-    committed rows survive, f2's uncommitted docs never become
-    visible — not equality with a twin that never saw f2."""
+    """A crashed attempt that staged its run but never committed it,
+    one of whose staged files VANISHED before the replay — the
+    narrower replay's file set is no superset of the orphan's, and
+    the orphan must still not survive beside the replay, which
+    re-lands its surviving file's docs (a double count). The crashed
+    attempt's index append legitimately persists (the shadow rule:
+    dropped/uncommitted docs may stay index-side and suppress later
+    near-duplicates), so the pins are the visibility invariants — no
+    doc appears twice, committed rows survive, f2's uncommitted docs
+    never become visible — not equality with a twin that never saw
+    f2."""
     train = _docs(spark).filter(F.col("doc_id") % 50 != 0).localCheckpoint(
         eager=True
     )
@@ -311,7 +295,7 @@ def test_vanished_staged_file_cannot_strand_orphan(spark, tmp_path):
     d0.write.mode("overwrite").parquet(f"{root}/stage/day0")
     dag.run_once()
     day0_rows = set(_curated_rows(dag))
-    # day 1 attempt over BOTH files crashes after its manifest record
+    # day 1 attempt over BOTH files crashes after staging its run
     # but before the ledger commit
     f1.write.mode("overwrite").parquet(f"{root}/stage/day1f1")
     f2.write.mode("overwrite").parquet(f"{root}/stage/day1f2")
@@ -319,9 +303,7 @@ def test_vanished_staged_file_cannot_strand_orphan(spark, tmp_path):
     dag._task_ingest(state)
     dag._task_dedup(state)
     dag._task_decontaminate(state)
-    dag._write_curated(state["gated"], state["run_id"])
-    dag._gc_superseded_runs(state["run_id"], state["files"])
-    dag._record_run(state["run_id"], state["files"])  # then crash
+    dag._stage_run(state)  # then crash
     orphan_run = state["run_id"]
 
     shutil.rmtree(f"{root}/stage/day1f2")  # f2 vanishes
@@ -343,9 +325,70 @@ def test_vanished_staged_file_cannot_strand_orphan(spark, tmp_path):
     assert f"run_id={orphan_run}" not in names
 
 
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash_before_commit(monkeypatch):
+    def commit(self, staged_entry, name):
+        raise _Crash("crash after staging the run")
+
+    monkeypatch.setattr(LoadLedger, "commit", commit)
+
+
+def _crash_after_commit(monkeypatch):
+    orig = LoadLedger.commit
+
+    def commit(self, staged_entry, name):
+        orig(self, staged_entry, name)
+        raise _Crash("crash after the ledger commit")
+
+    monkeypatch.setattr(LoadLedger, "commit", commit)
+
+
+@pytest.mark.parametrize(
+    "crash", [_crash_before_commit, _crash_after_commit],
+    ids=["before_commit", "after_commit"],
+)
+def test_landing_crash_replays_exactly_once(spark, tmp_path, monkeypatch, crash):
+    """A run commits once, at its ledger entry. A pass that stops after
+    staging its run, or after committing it but before moving its rows
+    into curated/, must leave curated() at the pool committed before
+    it; the next pass must then reach a clean run's pool, with no doc
+    twice and no run left in flight under runs/."""
+    train = _train(spark).localCheckpoint(eager=True)
+    ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
+    mid = ids[len(ids) // 2]
+    want = _curated_rows(
+        _run_days(spark, str(tmp_path / "clean"), train, [mid])
+    )
+
+    root = str(tmp_path / "root")
+    dag = CurationDag(spark, root, _eval_toks(spark))
+    train.filter(F.col("doc_id") <= mid).write.mode("overwrite").parquet(
+        f"{root}/stage/day0"
+    )
+    dag.run_once()
+    committed = _curated_rows(dag)
+    train.filter(F.col("doc_id") > mid).write.mode("overwrite").parquet(
+        f"{root}/stage/day1"
+    )
+    crash(monkeypatch)
+    with pytest.raises(_Crash):
+        dag.run_once()
+    monkeypatch.undo()
+    assert _curated_rows(dag) == committed
+
+    dag.run_once()
+    rows = _curated_rows(dag)
+    assert rows == want and len(want) > len(committed)
+    assert len({r[0] for r in rows}) == len(rows)
+    assert os.listdir(dag.runs_path) == []
+
+
 def test_maintain_preserves_results(spark, tmp_path):
-    """Nightly maintenance (index compaction + ledger/manifest squash
-    + vacuum) between daily passes must change NOTHING observable:
+    """Nightly maintenance (index compaction + vacuum) between daily
+    passes must change NOTHING observable:
     curated() identical before/after, and the next increment lands
     the same rows a maintenance-free twin lands."""
     train = _train(spark).localCheckpoint(eager=True)
@@ -372,13 +415,11 @@ def test_maintain_preserves_results(spark, tmp_path):
         assert _curated_rows(dag) == before
         lo = hi
     assert _curated_rows(dag) == want and len(want) > 0
-    # the squashed ledger still gates re-ingest: a re-run is a no-op
+    # the ledger still gates re-ingest: a re-run is a no-op
     assert dag.run_once()["curation_ingest"] == 0
 
 
 def _data_file_snapshot(root):
-    import os
-
     out = {}
     for dirpath, _, files in os.walk(root):
         for f in files:
@@ -420,45 +461,12 @@ def test_maintain_gated_second_run_touches_nothing(spark, tmp_path):
     assert set(out2["index"].values()) == {0}
 
 
-def test_curated_raises_in_empty_manifest_window(spark, tmp_path):
-    """runs/ present with zero rows + curated data on disk is only
-    ever the crashed-first-manifest-append window: curated() must
-    raise a named error, not silently semi-join every committed
-    partition away (an empty pool that reads as 'no data'). The
-    crash leaves the ledger empty and the files still staged, so
-    the next pass replays the day and heals the store."""
-    import os
-
-    import pytest
-
-    train = _train(spark).localCheckpoint(eager=True)
-    want = _curated_rows(
-        _run_days(spark, str(tmp_path / "clean"), train, [])
-    )
-
-    root = str(tmp_path / "root")
-    dag = CurationDag(spark, root, _eval_toks(spark))
-    train.write.mode("overwrite").parquet(f"{root}/stage/day0")
-    state: dict = {}
-    dag._task_ingest(state)
-    dag._task_dedup(state)
-    dag._task_decontaminate(state)
-    dag._write_curated(state["gated"], state["run_id"])
-    dag._gc_superseded_runs(state["run_id"], state["files"])
-    os.makedirs(dag.runs_path)  # crash inside the first _record_run
-    with pytest.raises(RuntimeError, match="holds no rows"):
-        dag.curated().collect()
-    dag.run_once()
-    assert _curated_rows(dag) == want and len(want) > 0
-
-
 def test_bootstrap_crash_before_meta_rebootstraps(spark, tmp_path):
     """Crash window between the bootstrap's bands/ and meta/ commits:
     docs/ and bands/ landed, the identity row did not. The replay
     must re-bootstrap (the index is incomplete without meta/), not
     take the steady branch, whose append cannot check the index's
     width — and the curated pool must equal a clean run's."""
-    import os
     import shutil
 
     from samba_tv_ingest_etl_spark.operators import dedup as D
@@ -488,14 +496,14 @@ def test_bootstrap_crash_before_meta_rebootstraps(spark, tmp_path):
 #                     checkpoint and three writes, sign+collect,
 #                     bands/ probe)
 #   decontaminate  0  the eval grams are built by the constructor
-#   append         5  the curated write (3: its excision plan's
+#   append         3  the staged curated write (its excision plan's
 #                     eval-gram broadcast and shuffle stage are jobs
-#                     of their own), manifest collect, manifest
-#                     append; the ledger commit is a driver file write
+#                     of their own); the entry, the commit and the
+#                     move into curated/ are driver file operations
 # A no-op pass launches no job at all.
 MAX_INGEST_JOBS = 2
 MAX_DEDUP_JOBS = 6
-MAX_APPEND_JOBS = 5
+MAX_APPEND_JOBS = 3
 TASKS = ("ingest", "dedup", "decontaminate", "append")
 
 

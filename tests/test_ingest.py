@@ -164,37 +164,96 @@ def test_ingest_through_nonlocal_fs_scheme(spark, stage, tmp_path):
     }
 
 
-def test_literal_strings_frame_both_branches(spark):
-    """The shared control-row source (ledger records, run manifest —
-    r12 advice: one helper, one cap): JVM-literal rows under the cap,
-    createDataFrame fallback past it, identical content either way."""
-    from samba_tv_ingest_etl_spark.sources.ledger import (
-        LITERAL_ROWS_CAP,
-        literal_strings_frame,
-    )
+def _stb_file(path, n, start, **extra):
+    """One STB parquet file of ``n`` rows with ids from ``start``;
+    ``extra`` adds columns (name -> pyarrow array)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    small = [f"/stage/day0/f{i}" for i in range(7)]
-    got = sorted(
-        r["p"] for r in literal_strings_frame(spark, small, "p").collect()
-    )
-    assert got == sorted(small)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    cols = {
+        "smba_id": [f"dev_{start + k}" for k in range(n)],
+        "exposure_start_ts": pa.array(range(start, start + n), pa.int64()),
+        "exposure_end_ts": pa.array(range(start + 1, start + n + 1), pa.int64()),
+        "duration": pa.array([1] * n, pa.int64()),
+    }
+    cols.update(extra)
+    pq.write_table(pa.table(cols), path)
 
-    big = [f"f{i:05d}" for i in range(LITERAL_ROWS_CAP + 200)]
-    df = literal_strings_frame(spark, big, "file_path")
-    assert df.schema.fieldNames() == ["file_path"]
-    assert sorted(r["file_path"] for r in df.collect()) == sorted(big)
+
+def test_ingest_drop_spanning_two_schemas_keeps_columns(spark, tmp_path):
+    """A drop whose second file carries a column the first lacks
+    (``zip``) keeps that file's values: the stage read merges the
+    file schemas instead of inferring them from one file."""
+    base = str(tmp_path / "stage")
+    day = os.path.join(base, "STB/yyyy=2025/mm=06/dd=02")
+    _stb_file(os.path.join(day, "part-00000.parquet"), 2, 0)
+    _stb_file(
+        os.path.join(day, "part-00001.parquet"), 2, 10, zip=["10001", "10002"]
+    )
+    target = str(tmp_path / "raw_stb")
+    res = ingest_feed(spark, base, "STB", target, str(tmp_path / "ledger"))
+    assert res.files_loaded == 2 and res.rows_loaded == 4
+    got = {
+        r["smba_id"]: r["zip"]
+        for r in read_feed_table(spark, target, "STB").collect()
+    }
+    assert got == {
+        "dev_0": None, "dev_1": None, "dev_10": "10001", "dev_11": "10002"
+    }
+
+
+def test_ingest_old_files_null_fill_new_columns(spark, tmp_path):
+    """A feed table whose loads span schema versions reads as the
+    declared schema: rows of the older load null-fill the column the
+    newer load added, a column the declaration lacks is dropped, and
+    the columns come in declared order."""
+    import pyarrow as pa
+
+    from samba_tv_ingest_etl_spark import schemas
+
+    base = str(tmp_path / "stage")
+    target, ledger = str(tmp_path / "raw_stb"), str(tmp_path / "ledger")
+    _stb_file(os.path.join(base, "STB/yyyy=2025/mm=06/dd=02/p.parquet"), 2, 0)
+    ingest_feed(spark, base, "STB", target, ledger)
+    _stb_file(
+        os.path.join(base, "STB/yyyy=2025/mm=06/dd=03/p.parquet"), 1, 10,
+        zip=["10001"], debug=pa.array(["extra"]),
+    )
+    ingest_feed(spark, base, "STB", target, ledger)
+    out = read_feed_table(spark, target, "STB")
+    assert out.columns == schemas.STB.fieldNames()
+    assert {r["smba_id"]: r["zip"] for r in out.collect()} == {
+        "dev_0": None, "dev_1": None, "dev_10": "10001"
+    }
+    assert "debug" not in spark.read.parquet(target).columns
+
+
+def test_ingest_widens_int_to_long(spark, tmp_path):
+    """A file that stores a declared long column as int32 lands as
+    long, values unchanged."""
+    import pyarrow as pa
+
+    base = str(tmp_path / "stage")
+    day = os.path.join(base, "STB/yyyy=2025/mm=06/dd=02")
+    _stb_file(
+        os.path.join(day, "p.parquet"), 1, 0,
+        duration=pa.array([5], pa.int32()),
+    )
+    target = str(tmp_path / "raw_stb")
+    ingest_feed(spark, base, "STB", target, str(tmp_path / "ledger"))
+    landed = spark.read.parquet(target)
+    assert dict(landed.dtypes)["duration"] == "bigint"
+    assert landed.collect()[0]["duration"] == 5
 
 
 def test_ledger_record_past_literal_cap(spark, tmp_path):
-    """LoadLedger.record through the >cap fallback keeps exactly-once
+    """A record of more than a thousand files keeps exactly-once
     semantics: all files recorded, re-ingest sees them all."""
-    from samba_tv_ingest_etl_spark.sources.ledger import (
-        LITERAL_ROWS_CAP,
-        LoadLedger,
-    )
+    from samba_tv_ingest_etl_spark.sources.ledger import LoadLedger
 
     ledger = LoadLedger(spark, str(tmp_path / "ledger"))
-    files = [f"/stage/f{i:05d}.parquet" for i in range(LITERAL_ROWS_CAP + 5)]
+    files = [f"/stage/f{i:05d}.parquet" for i in range(1029)]
     ledger.record("FEED", files)
     assert ledger.seen("FEED") == set(files)
     assert ledger.new_files("FEED", files) == []
