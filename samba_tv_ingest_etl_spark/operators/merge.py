@@ -19,11 +19,14 @@ write-new-then-swap discipline in ``sources.writer``.
 
 Scale: the anti-join shuffles on the merge key — the same key the
 target would be bucketed by on a real deployment, so the exchange is
-one-sided there. The keys side of ``delete_by_keys`` /
-``semi_join_keys`` is a DISTINCT over the incremental slice (small) —
-broadcast. A full-table rewrite for DELETE is the plain-parquet cost;
-the Delta backend (drop-in at the Warehouse layer) turns it into a
-file-level operation.
+one-sided there. No keys side is made DISTINCT first: duplicate keys
+cannot change a semi-join's or an anti-join's result, and under AQE a
+DISTINCT costs an aggregate and a job of its own — over the whole
+target's history, for ``merge_insert_only``. The keys side of
+``delete_by_keys`` / ``semi_join_keys`` is the incremental slice
+(small) — broadcast. A full-table rewrite for DELETE is the
+plain-parquet cost; the Delta backend (drop-in at the Warehouse
+layer) turns it into a file-level operation.
 """
 
 from __future__ import annotations
@@ -45,7 +48,7 @@ def merge_insert_only(
     if target is None:
         return source
     return source.join(
-        target.select(*keys).distinct(), on=list(keys), how="left_anti"
+        target.select(*keys), on=list(keys), how="left_anti"
     ).select(*source.columns)
 
 
@@ -60,14 +63,12 @@ def delete_by_keys(
     No broadcast hint: the key set is usually a daily increment (tiny),
     but a multi-day backfill can make it arbitrarily large, and a
     forced ``F.broadcast`` would collect it to the driver regardless.
-    AQE sizes the distinct key set at runtime and picks broadcast when
+    AQE sizes the key set at runtime and picks broadcast when
     it actually fits (``spark.sql.adaptive.autoBroadcastJoinThreshold``).
     The survivors keep ``target``'s column order, so a rewrite lands in
     the table's own order."""
     return target.join(
-        keys_df.select(*keys).distinct(),
-        on=list(keys),
-        how="left_anti",
+        keys_df.select(*keys), on=list(keys), how="left_anti"
     ).select(*target.columns)
 
 
@@ -78,7 +79,5 @@ def semi_join_keys(
     tuple-IN / INNER-join-to-keys pattern (``etl-dag.sql:97,103-104``).
     The keys side is tiny by construction -> broadcast."""
     return df.join(
-        F.broadcast(keys_df.select(*keys).distinct()),
-        on=list(keys),
-        how="left_semi",
+        F.broadcast(keys_df.select(*keys)), on=list(keys), how="left_semi"
     )

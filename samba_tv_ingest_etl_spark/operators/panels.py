@@ -16,13 +16,17 @@ engine rewrites it (SURVEY §4.2-1). Two strategies:
 
 - ``array`` (default): panel_windows is tiny by construction (one row
   per panel Monday — weekly cadence means a few hundred rows for a
-  decade), so collect the Mondays and evaluate
+  decade), so take the Mondays to the driver and evaluate
   ``array_max(filter(mondays, m -> d < m AND m <= d+28))`` per row.
   Because windows are exactly ``[m-28, m-1]``, membership in the
   window is equivalent to ``d < m <= d+28``; the filter checks against
-  the *actual* collected Mondays so irregular/missing panels stay
-  honest. Map-side only: no join, no shuffle, whole-stage codegen —
-  the optimal plan at any scale while panel cadence is weekly.
+  the *actual* Mondays so irregular/missing panels stay honest.
+  Map-side only: no join, no shuffle, whole-stage codegen — the
+  optimal plan at any scale while panel cadence is weekly. The
+  caller may pass the Monday list itself instead of the windows
+  frame: the incremental weighting task reads it from the
+  ``panel_windows`` files on the driver (``sources/control.py``),
+  which spares the collect job.
 - ``join``: broadcast range join + per-event MAX, the general rewrite
   when the windows relation is too large or windows are arbitrary
   intervals. A surrogate row id keeps duplicate event rows distinct
@@ -34,6 +38,9 @@ rows survive attribution and die at the weighting filter
 """
 
 from __future__ import annotations
+
+import datetime as dt
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,18 +65,23 @@ def panel_windows(geo_weights: DataFrame, date_col: str = "metadata_date") -> Da
 
 def attribute_panels(
     events: DataFrame,
-    windows: DataFrame,
+    windows: DataFrame | Sequence[dt.date],
     date_col: str = "metadata_date",
     out_col: str = "panel_monday",
     strategy: str = "array",
 ) -> DataFrame:
-    """events + ``panel_monday`` = MAX covering Monday (NULL if none)."""
+    """events + ``panel_monday`` = MAX covering Monday (NULL if none).
+    ``windows``: the panel windows frame, or (``array`` strategy only)
+    its ``panel_monday`` values."""
     if strategy == "array":
+        if isinstance(windows, DataFrame):
+            windows = [
+                r["panel_monday"]
+                for r in windows.select("panel_monday").collect()
+            ]
         # dedupe on the driver: a DISTINCT would cost an exchange job
         # for a relation of one row per panel Monday
-        mondays = sorted(
-            {r["panel_monday"] for r in windows.select("panel_monday").collect()}
-        )
+        mondays = sorted(set(windows))
         if not mondays:
             return events.withColumn(out_col, F.lit(None).cast("date"))
         d = F.col(date_col)

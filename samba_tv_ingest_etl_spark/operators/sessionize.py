@@ -78,10 +78,11 @@ def sessionize(
     duration_col: str,
     group_cols: Sequence[str] | None = None,
     gap_seconds: int = DEFAULT_GAP_SECONDS,
-    min_total_duration: int = DEFAULT_MIN_TOTAL_DURATION,
+    min_total_duration: int | None = DEFAULT_MIN_TOTAL_DURATION,
     tiebreak_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Full sessionization: ids -> per-session MIN/MAX/SUM + HAVING.
+    ``min_total_duration=None`` drops the HAVING: every session.
 
     ``group_cols`` defaults to ``partition_cols`` and, per the
     reference (keys at ``etl-ddl-backfill.sql:190-192`` include
@@ -93,12 +94,11 @@ def sessionize(
         df, partition_cols, order_col, end_col, gap_seconds, tiebreak_cols
     )
     keys = list(group_cols or partition_cols) + ["session_id"]
-    return (
-        ids.groupBy(*keys)
-        .agg(
-            F.min(order_col).alias("session_start_ts"),
-            F.max(end_col).alias("session_end_ts"),
-            F.sum(duration_col).alias("total_duration"),
-        )
-        .filter(F.col("total_duration") >= F.lit(min_total_duration))
+    out = ids.groupBy(*keys).agg(
+        F.min(order_col).alias("session_start_ts"),
+        F.max(end_col).alias("session_end_ts"),
+        F.sum(duration_col).alias("total_duration"),
     )
+    if min_total_duration is None:
+        return out
+    return out.filter(F.col("total_duration") >= F.lit(min_total_duration))

@@ -26,7 +26,7 @@ from pyspark.sql.types import StructType
 from .. import schemas
 from ..operators.metrics import audience_metrics
 from ..operators.panels import attribute_panels, panel_windows
-from ..operators.sessionize import sessionize
+from ..operators.sessionize import DEFAULT_MIN_TOTAL_DURATION, sessionize
 from ..operators.union_events import raw_viewing_events
 from ..operators.weighting import weighted_events
 from ..sources import control
@@ -180,8 +180,12 @@ class Warehouse:
         return bool(p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p))
 
 
-def build_viewing_sessions(weighted: DataFrame) -> DataFrame:
-    """Sessionize weighted events with the reference's exact keys."""
+def build_viewing_sessions(
+    weighted: DataFrame,
+    min_total_duration: int | None = DEFAULT_MIN_TOTAL_DURATION,
+) -> DataFrame:
+    """Sessionize weighted events with the reference's exact keys.
+    ``min_total_duration=None`` keeps the sessions below the floor."""
     return sessionize(
         weighted,
         partition_cols=SESSION_PARTITION,
@@ -189,6 +193,7 @@ def build_viewing_sessions(weighted: DataFrame) -> DataFrame:
         end_col="exposure_end_ts",
         duration_col="duration",
         group_cols=SESSION_GROUP,
+        min_total_duration=min_total_duration,
     ).select(
         "hh_id", "dma", "source_table", "content_type", "application",
         "title", "content_id", "episode_title", "season", "episode",

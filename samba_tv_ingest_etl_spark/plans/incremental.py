@@ -9,6 +9,9 @@ Five tasks with the reference's exact edge structure::
                   └─ update_viewing_sessions    (affected-key recompute)
                       └─ update_control_table   (advance watermarks)
 
+One engine task joins them: ``feed_maxima``, after the root, scans
+the feeds for the control task, which also waits for it.
+
 State crosses task boundaries only through tables (``task_control``
 and the modelling tables), exactly like the reference — every task is
 restartable from storage. All incremental filters read the watermark
@@ -33,9 +36,10 @@ Fidelity notes (each a correctness trap the oracle tests pin):
 
 Scale: each task reads only the watermark slice (partition pruning on
 ``metadata_date`` when raw tables are date-partitioned); the affected
-keys set is a DISTINCT over that slice, planned into the recompute
-semi-join (broadcast) and the DELETE anti-join rather than cached. The
-recompute shuffles only the affected groups. With the default flat
+keys are that slice's key columns, planned into the recompute
+semi-join (broadcast) and the DELETE anti-join rather than cached,
+with no DISTINCT (duplicates change neither join). The recompute
+shuffles only the affected groups. With the default flat
 layout the DELETE rewrites ``viewing_sessions`` once per pass (atomic
 swap); with ``Warehouse.SCALE_LAYOUT`` the pass reads and rewrites
 ONLY the touched ``panel_monday`` partitions — the 100 TB path. A
@@ -48,15 +52,19 @@ pass is built to make few of them: tasks 1 and 2 run concurrently
 (``TaskDag.run``); the root reads ``task_control`` once for every
 task, on the driver (``sources/control.py``, no Spark job), and every
 modelling table is read with its declared schema
-(``Warehouse.SCHEMAS``), so no read infers one; the merges take their
-row counts from the append job (``Observation``) instead of a count
-job over a materialized delta; the sessions task is one plan with one
-write action, whose observation reports the recomputed-session count
-and the touched Mondays; and the control task gets all three feed
-maxima from one job and writes its two rows on the driver. On 4
-vCPUs (default perfbench scale) the ingest plus incremental pass
-makes 24 Spark jobs, 67 before any of this. The feed maxima
-are still a full-history scan of ``metadata_date``.
+(``Warehouse.SCHEMAS``), so no read infers one; the merges anti-join
+the target's keys without a DISTINCT and take their row counts from
+the append job (``Observation``) instead of a count job over a
+materialized delta; the weighting task reads the panel Mondays from
+the ``panel_windows`` files on the driver; the sessions task is one
+plan with one write action, whose observation reports the
+recomputed-session count and the touched Mondays; and the feed
+maxima come from one job that the pass starts at the root
+(``feed_maxima``, concurrent with tasks 1 and 2), so the control task
+only writes its two rows on the driver. On 4 vCPUs (default
+perfbench scale) the ingest plus incremental pass makes 17 Spark
+jobs, 67 before any of this. The feed maxima are still a
+full-history scan of ``metadata_date``, now off the critical path.
 """
 
 from __future__ import annotations
@@ -64,14 +72,16 @@ from __future__ import annotations
 import datetime as dt
 import functools
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .. import schemas
 from ..operators.merge import delete_by_keys, merge_insert_only, semi_join_keys
 from ..operators.panels import attribute_panels, panel_windows
+from ..operators.sessionize import DEFAULT_MIN_TOTAL_DURATION
 from ..operators.union_events import raw_viewing_events
 from ..operators.weighting import weighted_events
+from ..sources import control
 from .backfill import (
     Warehouse,
     build_viewing_sessions,
@@ -161,13 +171,29 @@ def update_raw_events(
     return _append_delta(wh, delta, "raw_viewing_events", target is None)
 
 
+_PANEL_MONDAY = pa.schema([("panel_monday", pa.date32())])
+
+
+def _panel_mondays(wh: Warehouse) -> list[dt.date]:
+    """The merged ``panel_windows``' Mondays, read from its parquet
+    files on the driver (``sources/control.py``): the table holds one
+    small row per panel Monday, so a collect job would cost far more
+    than the read. A table that is absent (tables exist from DDL in
+    the reference; no parquet dir means "no windows yet") has none,
+    so every attribution comes back NULL."""
+    if not wh.exists("panel_windows"):
+        return []
+    t = control.read_table(wh.spark, wh.path("panel_windows"), _PANEL_MONDAY)
+    return t["panel_monday"].to_pylist()
+
+
 def update_weighted_events(
     wh: Warehouse, geo_weights: DataFrame, wm: dt.date | None = None
 ) -> int:
     """Task 3 (``etl-dag.sql:49-83``): panel-attribute + weight the new
     raw slice, MERGE on the same weak key. Reads the merged
     ``raw_viewing_events`` (not the feeds) and the merged
-    ``panel_windows``, like the reference."""
+    ``panel_windows``' Mondays, like the reference."""
     if wm is None:
         wm = read_watermark(wh, RAW_WATERMARK)
     if not wh.exists("raw_viewing_events"):
@@ -177,13 +203,7 @@ def update_weighted_events(
         .drop("created_at")
         .filter(F.col("metadata_date") > F.lit(wm))
     )
-    if wh.exists("panel_windows"):
-        pw = wh.read("panel_windows")
-    else:
-        # tables exist from DDL in the reference; an absent parquet dir
-        # means "no windows yet" -> every attribution comes back NULL
-        pw = wh.spark.createDataFrame([], schemas.PANEL_WINDOWS)
-    with_panel = attribute_panels(new_raw, pw)
+    with_panel = attribute_panels(new_raw, _panel_mondays(wh))
     src = weighted_events(with_panel, geo_weights)
     target = (
         wh.read("weighted_events") if wh.exists("weighted_events") else None
@@ -234,7 +254,9 @@ def update_viewing_sessions(wh: Warehouse, wm: dt.date | None = None) -> int:
     A touched Monday can lose every session (a late event re-cuts a
     group's sessions into parts below the 180 s floor); both
     partitioned commits clear such a Monday, using the expected
-    Mondays the write job observes.
+    Mondays the write job observes: the Mondays of the recomputed
+    sessions before the floor, which are the Mondays of the affected
+    events.
     """
     from ..sources.writer import overwrite_partitions
 
@@ -243,17 +265,14 @@ def update_viewing_sessions(wh: Warehouse, wm: dt.date | None = None) -> int:
     if not wh.exists("weighted_events"):
         return 0
     weighted = wh.read("weighted_events").drop("created_at")
-    # TEMP TABLE affected_sessions_keys: a DISTINCT over the new slice,
-    # planned into every consumer (no cache, no extra job)
-    keys = (
-        weighted.filter(F.col("metadata_date") > F.lit(wm))
-        .select(*AFFECTED_KEYS)
-        .distinct()
+    # TEMP TABLE affected_sessions_keys: the new slice's keys, planned
+    # into every consumer (no cache, no extra job); no DISTINCT, as
+    # duplicate keys change neither the semi-join nor the anti-join
+    keys = weighted.filter(F.col("metadata_date") > F.lit(wm)).select(
+        *AFFECTED_KEYS
     )
     affected_events = semi_join_keys(weighted, keys, AFFECTED_KEYS)
-    new_sessions = build_viewing_sessions(affected_events).withColumn(
-        "created_at", F.current_timestamp()
-    )
+    now = F.current_timestamp()
     if not wh.exists("viewing_sessions"):
         # bootstrap: the count is only the RETURN value, never a
         # decision, so take it from the write job itself
@@ -262,7 +281,9 @@ def update_viewing_sessions(wh: Warehouse, wm: dt.date | None = None) -> int:
         # on executor disks the way a localCheckpoint would
         obs = Observation()
         wh.write(
-            new_sessions.observe(obs, F.count(F.lit(1)).alias("n")),
+            build_viewing_sessions(affected_events)
+            .withColumn("created_at", now)
+            .observe(obs, F.count(F.lit(1)).alias("n")),
             "viewing_sessions",
         )
         return int(obs.get["n"])
@@ -281,9 +302,11 @@ def update_viewing_sessions(wh: Warehouse, wm: dt.date | None = None) -> int:
         )
     else:
         existing = wh.read("viewing_sessions")
-    out, obs = _rewrite_sessions(
-        existing, keys, new_sessions, mondays, by_monday
-    )
+    # every recomputed session, the ones below the floor included
+    sessions = build_viewing_sessions(
+        affected_events, min_total_duration=None
+    ).withColumn("created_at", now)
+    out, obs = _rewrite_sessions(existing, keys, sessions, by_monday)
 
     def expected() -> list:
         return obs.get["expected"]
@@ -304,50 +327,52 @@ def update_viewing_sessions(wh: Warehouse, wm: dt.date | None = None) -> int:
     return int(obs.get["n_new"])
 
 
-_ROW = "_row"  # 0 survivor, 1 recomputed session, 2 expected-Monday marker
+_ROW = "_row"  # 0 survivor, 1 recomputed session, 2 below-floor marker
 
 
 def _rewrite_sessions(
     existing: DataFrame,
     keys: DataFrame,
-    new_sessions: DataFrame,
-    mondays: DataFrame,
+    sessions: DataFrame,
     by_monday: bool,
 ) -> tuple[DataFrame, Observation]:
     """The rows every backend commits: ``existing`` minus the affected
-    groups' sessions (``delete_by_keys``), plus ``new_sessions``.
+    groups' sessions (``delete_by_keys``), plus the ``sessions`` that
+    reach the 180 s floor. ``sessions`` are the affected groups'
+    recomputed sessions before the floor.
 
     The returned frame carries ONE ``Observation`` at its root, so the
     write job reports ``n_new`` (the recomputed sessions) and
-    ``expected`` (the touched Mondays, ``mondays``). The expected
-    Mondays ride along as marker rows, dropped right above the
-    observation. Every observation sits at the root on purpose: one
-    placed below a join or union can be pruned away by AQE when its
-    input is empty, and ``Observation.get`` then fails.
+    ``expected`` (the touched Mondays: those of every recomputed
+    session, which are the Mondays of the affected events). The
+    sessions below the floor ride along as marker rows for the
+    Mondays they alone cover, dropped right above the observation.
+    Every observation sits at the root on purpose: one placed below a
+    join or union can be pruned away by AQE when its input is empty,
+    and ``Observation.get`` then fails.
 
     ``by_monday``: hash the rows on ``panel_monday`` before the write,
     so that each touched Monday lands as one file."""
+    floor = F.col("total_duration") >= F.lit(DEFAULT_MIN_TOTAL_DURATION)
     tagged = (
         delete_by_keys(existing, keys, AFFECTED_KEYS)
         .withColumn(_ROW, F.lit(0))
-        .unionByName(new_sessions.withColumn(_ROW, F.lit(1)))
         .unionByName(
-            mondays.withColumn(_ROW, F.lit(2)), allowMissingColumns=True
+            sessions.withColumn(_ROW, F.when(floor, 1).otherwise(2))
         )
     )
     if by_monday:
         tagged = tagged.repartition("panel_monday")
     obs = Observation()
-    marker = F.col(_ROW) == 2
     out = (
         tagged.observe(
             obs,
             F.count(F.when(F.col(_ROW) == 1, 1)).alias("n_new"),
-            F.collect_set(F.when(marker, F.col("panel_monday"))).alias(
-                "expected"
-            ),
+            F.collect_set(
+                F.when(F.col(_ROW) > 0, F.col("panel_monday"))
+            ).alias("expected"),
         )
-        .filter(~marker)
+        .filter(F.col(_ROW) < 2)
         .drop(_ROW)
     )
     return out, obs
@@ -373,16 +398,28 @@ def _max_dates(*dfs: DataFrame, col: str = "metadata_date") -> list:
     return [got[f"m{i}"] for i in range(len(dfs))]
 
 
+def feed_maxima(
+    acr: DataFrame, stb: DataFrame, geo_weights: DataFrame
+) -> list[dt.date]:
+    """Each feed's max ``metadata_date``, 1900-01-01 for an empty
+    feed; one Spark job."""
+    return [m or EPOCH_DEFAULT for m in _max_dates(acr, stb, geo_weights)]
+
+
 def update_control_table(
-    wh: Warehouse, acr: DataFrame, stb: DataFrame, geo_weights: DataFrame
+    wh: Warehouse,
+    acr: DataFrame,
+    stb: DataFrame,
+    geo_weights: DataFrame,
+    maxima: list[dt.date] | None = None,
 ) -> None:
     """Task 5 (``etl-dag.sql:127-145``): advance both watermarks.
     raw_events trails the slower feed (LEAST), panel_windows follows
-    geo; empty feeds default to 1900-01-01. One Spark job (the feed
-    maxima); the write is a driver file swap."""
-    acr_max, stb_max, geo_max = (
-        m or EPOCH_DEFAULT for m in _max_dates(acr, stb, geo_weights)
-    )
+    geo; empty feeds default to 1900-01-01. ``maxima``: the feeds'
+    ``feed_maxima``, when the pass has already scanned them; else
+    this task does, in one Spark job. The write is a driver file
+    swap."""
+    acr_max, stb_max, geo_max = maxima or feed_maxima(acr, stb, geo_weights)
     write_task_control(wh, [
         (RAW_WATERMARK, min(acr_max, stb_max)),
         (PANEL_WATERMARK, geo_max),
@@ -393,15 +430,23 @@ def build_dag(
     wh: Warehouse, acr: DataFrame, stb: DataFrame, geo_weights: DataFrame
 ) -> TaskDag:
     """The five-task DAG with the reference's exact edges
-    (``etl-dag.sql`` AFTER clauses; cron '0 5 * * *' UTC on the root).
-    Tasks 1 and 2 run concurrently.
+    (``etl-dag.sql`` AFTER clauses; cron '0 5 * * *' UTC on the root),
+    plus one engine task, ``feed_maxima``. Tasks 1 and 2 run
+    concurrently.
 
     The root reads ``task_control`` once for the whole pass and hands
     each task its watermark, so the pass sees one snapshot without a
     read per task; the control task drops the snapshot before it
-    advances the table. A task run on its own (``run_task``, no root
-    in the pass) reads its watermark itself."""
+    advances the table. ``feed_maxima`` scans the feeds for the
+    control task as soon as the root has run, beside tasks 1 and 2;
+    the feeds do not change during a pass, so the control task
+    writes the same watermarks as when it scanned them itself, and
+    the scan is off the pass's critical path. Being a task, it never
+    outlives ``run()``: a pass waits for every running task, a failed
+    one included. A task run on its own (``run_task``, no root in the
+    pass) reads its watermark and scans the feeds itself."""
     marks: dict[str, dt.date] = {}
+    maxima: list[dt.date] = []  # the pass's scan, until task 5 uses it
 
     def kickoff() -> str:
         got = read_watermarks(wh)
@@ -412,12 +457,18 @@ def build_dag(
         })
         return "kickoff"
 
+    def prefetch() -> list[dt.date]:
+        maxima[:] = feed_maxima(acr, stb, geo_weights)
+        return list(maxima)
+
     def advance() -> None:
         marks.clear()
-        update_control_table(wh, acr, stb, geo_weights)
+        got, maxima[:] = list(maxima), []
+        update_control_table(wh, acr, stb, geo_weights, got or None)
 
     dag = TaskDag()
     dag.add("root_kickoff", kickoff, schedule="0 5 * * * UTC")
+    dag.add("feed_maxima", prefetch, after=["root_kickoff"])
     dag.add(
         "update_panel_windows",
         lambda: update_panel_windows(
@@ -445,7 +496,7 @@ def build_dag(
     dag.add(
         "update_control_table",
         advance,
-        after=["update_viewing_sessions"],
+        after=["update_viewing_sessions", "feed_maxima"],
     )
     return dag
 

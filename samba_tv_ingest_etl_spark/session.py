@@ -29,6 +29,16 @@ _DEFAULTS = {
     # driver testdata writes TIMESTAMP(NANOS) parquet
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
+    # Generated classes, cached by their source code. Spark's 100
+    # entries are fewer than one daily pass needs: on the perfbench
+    # default scale, tv_daily's set-up compiles 130 classes and its
+    # first pass 56 more (llm_daily: 121 and 26), so at 100 a pass
+    # recompiles what set-up compiled and every later pass recompiles
+    # about 60 classes; with the working set cached, a warm pass
+    # compiles the 8 whose code inlines a fresh timestamp literal.
+    # The cache evicts per segment, not by one global LRU, so it is
+    # sized with room to spare over those ~190.
+    "spark.sql.codegen.cache.maxEntries": "512",
 }
 
 

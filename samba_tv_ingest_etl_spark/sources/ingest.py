@@ -5,10 +5,11 @@ the same statement, idempotent through the load ledger).
 Schema-on-read: the declared feed schema is projected onto whatever
 the parquet files contain — present columns are cast, missing columns
 become typed NULLs (the ``$1:field::TYPE`` idiom nulls missing paths,
-SURVEY §1.3). A drop is read with its files' schemas merged, so a
-column only some of its files carry keeps their values. Path-derived
-yyyy/mm/dd/metadata_date override any same-named file columns,
-exactly like the ingest SELECTs.
+SURVEY §1.3). A drop is read with its files' schemas merged from
+their footers on the driver, so a column only some of its files carry
+keeps their values, and a column stored at two integer widths reads
+at the wider. Path-derived yyyy/mm/dd/metadata_date override any
+same-named file columns, exactly like the ingest SELECTs.
 
 The raw table is written partitioned by yyyy/mm/dd, mirroring the S3
 layout so watermark predicates prune partitions downstream (BASELINE

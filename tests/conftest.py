@@ -23,3 +23,21 @@ def spark():
     # many tiny-fixture jobs don't pay 32-task scheduling overhead.
     return get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
                      shuffle_partitions=8)
+
+
+def count_jobs(spark, name, fn):
+    """``(fn(), jobs, compiles)``: the Spark jobs ``fn`` launched,
+    counted under job group ``name`` (the engine's DAG threads inherit
+    it), and the classes Spark's code generator compiled meanwhile.
+    The compile count is JVM-wide, so run nothing else concurrently."""
+    sc = spark.sparkContext
+    compiled = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    before = compiled.getCount()
+    sc.setJobGroup(name, name)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+    return out, jobs, compiled.getCount() - before

@@ -15,6 +15,8 @@ from samba_tv_ingest_etl_spark.operators.text import tokens
 from samba_tv_ingest_etl_spark.plans.curation import CurationDag
 from samba_tv_ingest_etl_spark.sources.ledger import LoadLedger
 
+from .conftest import count_jobs
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -507,25 +509,15 @@ MAX_APPEND_JOBS = 3
 TASKS = ("ingest", "dedup", "decontaminate", "append")
 
 
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _pass_jobs(spark, dag, tag):
     """{task: (result, jobs)} for one pass run task by task."""
     state: dict = {}
     return {
-        t: _jobs(
+        t: count_jobs(
             spark,
             f"curation-{t}-{tag}",
             lambda t=t: getattr(dag, f"_task_{t}")(state),
-        )
+        )[:2]
         for t in TASKS
     }
 
@@ -588,7 +580,7 @@ def test_steady_dedup_jobs_flat_in_index_size(spark, tmp_path):
         day.write.mode("overwrite").parquet(f"{root}/stage/day1")
         state: dict = {}
         dag._task_ingest(state)
-        kept, n = _jobs(
+        kept, n, _ = count_jobs(
             spark, f"curation-dedup-{name}", lambda: dag._task_dedup(state)
         )
         assert kept > 0

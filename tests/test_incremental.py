@@ -234,6 +234,37 @@ def test_watermarks_advance(spark, tmp_path, feeds):
     assert read_watermark(wh, "panel_windows_update") == geo_max
 
 
+def test_failed_pass_waits_for_the_feed_maxima_scan(
+    spark, tmp_path, feeds, monkeypatch
+):
+    """The pass scans the feed maxima beside tasks 1 and 2; when a
+    task fails, ``run()`` still returns only after that scan, and the
+    watermarks do not advance."""
+    import time
+
+    from samba_tv_ingest_etl_spark.plans import incremental as inc
+
+    acr, stb, geo = feeds
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    real = inc.feed_maxima
+    scanned = []
+
+    def slow_maxima(*dfs):
+        time.sleep(0.5)  # still scanning when the raw merge fails
+        scanned.append(real(*dfs))
+        return scanned[-1]
+
+    def failing_merge(*args):
+        raise RuntimeError("raw merge failed")
+
+    monkeypatch.setattr(inc, "feed_maxima", slow_maxima)
+    monkeypatch.setattr(inc, "update_raw_events", failing_merge)
+    with pytest.raises(RuntimeError, match="raw merge failed"):
+        inc.build_dag(wh, acr, stb, geo).run()
+    assert len(scanned) == 1
+    assert read_watermark(wh, "raw_events_update") == inc.EPOCH_DEFAULT
+
+
 def test_dag_structure():
     from samba_tv_ingest_etl_spark.plans.dag import TaskDag
 

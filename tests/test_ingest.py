@@ -247,6 +247,32 @@ def test_ingest_widens_int_to_long(spark, tmp_path):
     assert landed.collect()[0]["duration"] == 5
 
 
+def test_ingest_drop_mixing_int_widths(spark, tmp_path):
+    """One drop whose files store ``duration`` as int32 in one file
+    and int64 in the other loads every row, as long: the drop's
+    schema widens the column instead of failing to merge it."""
+    import pyarrow as pa
+
+    base = str(tmp_path / "stage")
+    day = os.path.join(base, "STB/yyyy=2025/mm=06/dd=02")
+    _stb_file(
+        os.path.join(day, "part-00000.parquet"), 2, 0,
+        duration=pa.array([5, 6], pa.int32()),
+    )
+    _stb_file(
+        os.path.join(day, "part-00001.parquet"), 2, 10,
+        duration=pa.array([2**40, 7], pa.int64()),
+    )
+    target = str(tmp_path / "raw_stb")
+    res = ingest_feed(spark, base, "STB", target, str(tmp_path / "ledger"))
+    assert res.files_loaded == 2 and res.rows_loaded == 4
+    landed = spark.read.parquet(target)
+    assert dict(landed.dtypes)["duration"] == "bigint"
+    assert {r["smba_id"]: r["duration"] for r in landed.collect()} == {
+        "dev_0": 5, "dev_1": 6, "dev_10": 2**40, "dev_11": 7
+    }
+
+
 def test_ledger_record_past_literal_cap(spark, tmp_path):
     """A record of more than a thousand files keeps exactly-once
     semantics: all files recorded, re-ingest sees them all."""

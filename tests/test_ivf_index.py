@@ -10,6 +10,8 @@ import pytest
 
 from samba_tv_ingest_etl_spark.operators import similarity as S
 
+from .conftest import count_jobs
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -521,18 +523,14 @@ def test_hier_probe_job_count(spark, tmp_path):
     probes = q.filter(F.col("vec_id") < 10)
     path = str(tmp_path / "ivf")
     S.write_ivf_index(q, path, n_centroids=8, iters=2, route_width=4)
-    sc = spark.sparkContext
-    group = "hier-probe-job-count"
-    sc.setJobGroup(group, "one hierarchical probe")
-    try:
-        rows = S.topk_ivf_indexed_hier(
+    rows, jobs, _ = count_jobs(
+        spark, "hier-probe-job-count",
+        lambda: S.topk_ivf_indexed_hier(
             spark, path, probes, k=10, nprobe=2
-        ).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+        ).collect(),
+    )
     assert len(rows) == 100
-    assert 1 <= len(jobs) <= MAX_HIER_PROBE_JOBS, sorted(jobs)
+    assert 1 <= jobs <= MAX_HIER_PROBE_JOBS, jobs
 
 
 # Spark jobs one routed append may launch on this fixture: the cells/
@@ -552,14 +550,10 @@ def test_routed_append_job_count(spark, tmp_path):
         q.filter(F.col("vec_id") % 2 == 0), path,
         cents=cents, route_width=4,
     )
-    sc = spark.sparkContext
-    group = "routed-append-job-count"
-    sc.setJobGroup(group, "one routed append")
-    try:
-        S.append_ivf_index(
+    _, jobs, _ = count_jobs(
+        spark, "routed-append-job-count",
+        lambda: S.append_ivf_index(
             q.filter(F.col("vec_id") % 2 == 1), path, route_width=4
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 1 <= len(jobs) <= MAX_ROUTED_APPEND_JOBS, sorted(jobs)
+        ),
+    )
+    assert 1 <= jobs <= MAX_ROUTED_APPEND_JOBS, jobs

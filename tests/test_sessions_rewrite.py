@@ -9,8 +9,10 @@ Checks here:
   declared schema of each modelling table (``Warehouse.schema``)
   equals what a schema-inferring parquet read finds on disk, and
   planning a read of any of them launches no Spark job;
-- round trips: ``update_viewing_sessions`` on the partitioned layout
-  stays within a pinned Spark job budget;
+- round trips: ``update_viewing_sessions``, ``update_raw_events`` and
+  ``update_weighted_events`` on the partitioned layout stay within
+  pinned Spark job budgets, and a second identical sessions rewrite
+  finds its generated classes in Spark's codegen cache;
 - plan: the existing-sessions scan of the rewrite is pruned on
   ``panel_monday`` (dynamic partition pruning), not a full scan.
 """
@@ -19,6 +21,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +40,7 @@ from samba_tv_ingest_etl_spark.plans.incremental import (
 from samba_tv_ingest_etl_spark.sources import writer
 
 from . import samba_fixtures as fx
+from .conftest import count_jobs
 from .test_incremental import _BACKENDS, _sessions_set
 
 MODEL_TABLES = [
@@ -47,8 +51,18 @@ MODEL_TABLES = [
 # the DAG runs it (watermark passed in): the rewrite is one write
 # action, and AQE runs its broadcast and shuffle stages as jobs of
 # their own. The shape with a checkpointed recompute, a Monday
-# collect and a count launched 16.
-MAX_SESSIONS_JOBS = 8
+# collect and a count launched 16; DISTINCTs on the keys and a
+# second Monday DISTINCT for the expected Mondays launched 8.
+MAX_SESSIONS_JOBS = 6
+# jobs of the two event merges on the same fixture: the append job
+# and the exchange of the anti-join against the target's keys (with
+# no DISTINCT over the target); the weighting reads the panel Mondays
+# on the driver
+MAX_RAW_EVENTS_JOBS = 2
+MAX_WEIGHTED_EVENTS_JOBS = 3
+# classes a second identical sessions rewrite compiles: the ones whose
+# generated code inlines the fresh ``created_at`` timestamp literal
+MAX_WARM_SESSIONS_COMPILES = 10
 
 D1 = dt.date(2025, 6, 3)   # first drop: A and C (panel Monday M2)
 D2 = dt.date(2025, 6, 4)   # late drop: B (M2)
@@ -139,47 +153,78 @@ def test_model_table_reads_launch_no_job(spark, tmp_path, backend):
     """A declared schema spares every read its footer-inference job,
     including the manifest's one read per live partition."""
     wh = _backfilled_then_one_pass(spark, str(tmp_path / "wh"), backend)
-    sc = spark.sparkContext
-    group = f"model-reads-{backend}"
-    sc.setJobGroup(group, "plan the modelling table reads")
-    try:
+
+    def plan_reads():
         frames = [wh.read(t) for t in MODEL_TABLES]
         if backend != "flat":
-            pruned = wh.read_partitions("viewing_sessions", [fx.M1, fx.M2])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+            frames.append(
+                wh.read_partitions("viewing_sessions", [fx.M1, fx.M2])
+            )
+        return frames
+
+    frames, jobs, _ = count_jobs(spark, f"model-reads-{backend}", plan_reads)
+    assert jobs == 0
     if backend != "flat":
+        pruned = frames.pop()
         assert pruned.count() == frames[-1].count() > 0
 
 
-def _partitioned_before_sessions(spark, root):
-    """A partitioned warehouse loaded with the drops up to 05-15,
-    then the remaining drops merged by every task before the
-    sessions task."""
+def _partitioned_loaded(spark, root):
+    """A partitioned warehouse loaded with the drops up to 05-15, and
+    the feeds holding every drop."""
     acr, stb, geo = fx.acr(spark), fx.stb(spark), fx.geo_weights(spark)
     wh = Warehouse(spark, root, layout=Warehouse.SCALE_LAYOUT)
     first = F.col("metadata_date") <= F.lit(dt.date(2025, 5, 15))
     run_incremental(wh, acr.filter(first), stb.filter(first), geo)
+    return wh, acr, stb, geo
+
+
+def _partitioned_before_sessions(spark, root):
+    """``_partitioned_loaded``, then the remaining drops merged by
+    every task before the sessions task."""
+    wh, acr, stb, geo = _partitioned_loaded(spark, root)
     update_panel_windows(wh, geo)
     update_raw_events(wh, acr, stb)
     update_weighted_events(wh, geo)
     return wh
 
 
+def test_event_merge_job_counts(spark, tmp_path):
+    wh, acr, stb, geo = _partitioned_loaded(spark, str(tmp_path / "wh"))
+    update_panel_windows(wh, geo)
+    n_raw, jobs, _ = count_jobs(
+        spark, "raw-events-job-count",
+        lambda: update_raw_events(wh, acr, stb),
+    )
+    assert n_raw > 0
+    assert 1 <= jobs <= MAX_RAW_EVENTS_JOBS, jobs
+    n_weighted, jobs, _ = count_jobs(
+        spark, "weighted-events-job-count",
+        lambda: update_weighted_events(wh, geo),
+    )
+    assert n_weighted > 0
+    assert 1 <= jobs <= MAX_WEIGHTED_EVENTS_JOBS, jobs
+
+
 def test_update_viewing_sessions_job_count(spark, tmp_path):
     wh = _partitioned_before_sessions(spark, str(tmp_path / "wh"))
+    twin_root = str(tmp_path / "twin")
+    shutil.copytree(wh.root, twin_root)
+    twin = Warehouse(spark, twin_root, layout=Warehouse.SCALE_LAYOUT)
     wm = read_watermark(wh, RAW_WATERMARK)
-    sc = spark.sparkContext
-    group = "sessions-rewrite-job-count"
-    sc.setJobGroup(group, "one update_viewing_sessions")
-    try:
-        n_new = update_viewing_sessions(wh, wm)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    n_new, jobs, _ = count_jobs(
+        spark, "sessions-rewrite-job-count",
+        lambda: update_viewing_sessions(wh, wm),
+    )
     assert n_new > 0
-    assert 1 <= len(jobs) <= MAX_SESSIONS_JOBS, sorted(jobs)
+    assert 1 <= jobs <= MAX_SESSIONS_JOBS, jobs
+    # the same rewrite of an identical copy: a warm pass
+    again, _, compiles = count_jobs(
+        spark, "sessions-rewrite-warm",
+        lambda: update_viewing_sessions(twin, wm),
+    )
+    assert again == n_new
+    assert compiles <= MAX_WARM_SESSIONS_COMPILES, compiles
 
 
 def test_existing_sessions_scan_is_partition_pruned(
