@@ -26,7 +26,7 @@ from samba_tv_ingest_etl_spark import queries as Q  # noqa: E402
 from samba_tv_ingest_etl_spark.session import get_spark  # noqa: E402
 
 # Headline set: flagship pipeline stages + the heaviest operators.
-# 31 queries (q129 indexed incremental dedup / q130 banded ANN /
+# 30 queries (q129 indexed incremental dedup / q130 banded ANN /
 # q131 full curation pipeline / q133 persisted IVF probe / q135
 # incremental SemDeDup joined in round 10; q124, q125, q127, q128
 # in r9, q121/q123 in r8, q115/q117 in r6) — round-over-round
@@ -178,7 +178,7 @@ def main() -> None:
     spark = get_spark("bench")
 
     registry = Q.registry()
-    names = [n for n in HEADLINE if n in registry]
+    names = list(HEADLINE)  # every name is registered (test_imports)
 
     # Idle-box gate, BEFORE the warm-up (our own warm-up inflates the
     # 1m loadavg, which would both trip the gate spuriously and make

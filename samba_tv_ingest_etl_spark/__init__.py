@@ -7,7 +7,7 @@ sessionization -> reach/frequency metrics), re-expressed Spark-first:
 declarative DataFrame/SQL plans optimized by Catalyst, partition-aware
 sources, anti-join based mutation suite, and a set of large-scale
 training-data-pipeline operators (dedup, similarity search, text
-analysis, multimodal plumbing) beyond the reference's own surface.
+analysis) beyond the reference's own surface.
 
 Layout
 ------
@@ -16,7 +16,7 @@ Layout
 - ``sources``    Stage reader (hive path extraction), load ledger, writers.
 - ``operators``  Relational/dataflow operators: sessionization, panel
                  attribution (range-join rewrite), weighting, merge/delete,
-                 dedup family, similarity search, text stats, multimodal.
+                 dedup family, similarity search, text stats.
 - ``plans``      Backfill chain + incremental DAG runner.
 - ``streaming``  Structured Streaming variants (file ingest, sessions).
 """

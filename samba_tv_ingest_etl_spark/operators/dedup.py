@@ -1391,35 +1391,6 @@ def eval_gram_set(
     return eval_toks.sparkSession.createDataFrame(grams)
 
 
-def contaminated_span_intervals(
-    train_toks: DataFrame,
-    eval_toks: DataFrame,
-    k: int = 8,
-    max_eval_grams: int = EVAL_GRAM_BUDGET,
-) -> DataFrame:
-    """Span-grain eval decontamination (the ExactSubstr machinery
-    pointed at a REFERENCE set): one row per maximal span of a
-    training doc whose every k-gram appears verbatim in SOME eval
-    doc — (doc_id, p0, p1, npos), span covering [p0, p1 + k). The
-    doc-level decontaminators (exact q62, fuzzy q119, semantic
-    q122/q123) decide keep-or-drop; this one finds WHERE the leak
-    sits so the excision transform can cut the quoted eval passage
-    and keep the rest of the document.
-
-    Scale shape: the eval side collapses to its DISTINCT k-gram
-    strings — bounded by the eval suite's size BY CONTRACT, enforced
-    against ``max_eval_grams`` with a loud raise (the q122/q123
-    broadcast-budget discipline, ``eval_gram_set``) — and
-    broadcasts; the training corpus streams through ONE gram explode
-    + broadcast semi-join (map-side, no shuffle of gram text), and
-    only the HITS (leak-density-bounded) reach the island merge.
-    Matching is exact string equality on the gram, so there is no
-    hash round-trip to verify."""
-    return _spans_against_grams(
-        train_toks, eval_gram_set(eval_toks, k, max_eval_grams), k
-    )
-
-
 def _spans_against_grams(
     train_toks: DataFrame, grams: DataFrame, k: int
 ) -> DataFrame:
@@ -1441,10 +1412,14 @@ def excise_contaminated_spans(
     k: int = 8,
     max_eval_grams: int = EVAL_GRAM_BUDGET,
 ) -> DataFrame:
-    """The transform half of ``contaminated_span_intervals`` (the
-    q120 pattern at the eval boundary): remove every training-doc
-    token covered by a contaminated span, keep the rest of the
-    document. Returns (doc_id, n_tokens, n_kept, toks_clean)."""
+    """Span-grain eval decontamination (the q120 pattern at the eval
+    boundary): find each maximal span of a training doc whose every
+    k-gram appears verbatim in SOME eval doc, remove the tokens it
+    covers and keep the rest of the document. The eval side collapses
+    to its distinct k-grams, checked against ``max_eval_grams``
+    (``eval_gram_set``); the corpus streams through one gram explode
+    and a broadcast semi-join, and only the hits reach the island
+    merge. Returns (doc_id, n_tokens, n_kept, toks_clean)."""
     return excise_against_eval_grams(
         train_toks, eval_gram_set(eval_toks, k, max_eval_grams), k
     )

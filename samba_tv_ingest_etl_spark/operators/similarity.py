@@ -440,9 +440,9 @@ def contamination_matches(
     threshold (``dot > 0 and dot² · 10⁴ >= pct² · n_c · n_e`` — the
     q24 exact-arithmetic test), return its best-matching eval vector:
     (``vec_id``, ``eval_id``, ``cos_scaled``), argmax broken by
-    smallest ``eval_id``. The n-gram decontaminators (exact q62,
-    fuzzy q119) miss paraphrased eval leakage; this catches it at the
-    embedding layer.
+    smallest ``eval_id``. Verbatim k-gram decontamination
+    (``dedup.excise_against_eval_grams``) misses paraphrased eval
+    leakage; this catches it at the embedding layer.
 
     Scale shape: eval sets are tiny BY CONTRACT — bounded by a fixed
     suite or fixed id range, and ENFORCED by ``max_eval_rows``
@@ -611,33 +611,17 @@ def contamination_matches_lsh(
     )
 
 
-def hyperplane_bit(q: Column, plane: int, dim: int) -> Column:
-    """Sign bit of <q, h_plane> with the deterministic integer
-    hyperplane h_plane[d] = ((plane·dim + d)·2654435761 mod 2^31)
-    - 2^30 (Knuth multiplicative mixing — portable arithmetic, no
-    RNG)."""
-    weights = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda d: (
-            (F.lit(plane * dim).cast("long") + d) * F.lit(2_654_435_761)
-        )
-        % F.lit(2_147_483_648)
-        - F.lit(1_073_741_824),
-    )
-    return (_dot(q, weights) >= 0).cast("int")
-
-
 def lsh_buckets(
     quantized: DataFrame, planes: int = 8, dim: int = 64
 ) -> DataFrame:
     """Add a ``bucket`` column: the ``planes``-bit sign signature,
     computed as ONE Arrow matmul pass (n x planes sign bits from
-    ``Q @ W^T``) instead of ``planes`` interpreted HOF dots per row.
-    Bit-identical to the expression form (``hyperplane_bit``, kept as
-    the single-plane reference): the hyperplane weights are exact
-    int64, |dot| <= dim·QUANT·2^30 < 2^53 so ``_imatmul`` is exact,
-    and the sign rule is the same ``>= 0``. Map-side only — no
-    shuffle, the planes ride the closure."""
+    ``Q @ W^T``). Hyperplane ``p`` has the deterministic integer
+    weights ``((p·dim + d)·2654435761 mod 2^31) - 2^30`` (Knuth
+    multiplicative mixing, no RNG); they are exact int64, |dot| <=
+    dim·QUANT·2^30 < 2^53 so ``_imatmul`` is exact, and bit ``p`` is
+    ``dot >= 0``. Map-side only — no shuffle, the planes ride the
+    closure."""
     import numpy as np
 
     idx = np.arange(planes * dim, dtype=np.int64)
@@ -1840,36 +1824,18 @@ def topk_lsh_banded(
     )
 
 
-def _write_band_meta(
-    spark, path: str, planes: int, bands: int, band_payload: bool
-) -> None:
-    """Persist the index's IDENTITY — the knobs that are part of what
-    the index IS, not per-call tuning (r11 advice): an append or
-    probe at different planes/bands would join 3-bit keys against
-    8-bit keys (silently empty/partial results), and a slim batch
-    appended to a payload index leaves a mixed ``bands/`` layout that
-    one sampled footer resolves arbitrarily. One row, written LAST so
-    a complete index always carries it; pre-meta indexes (or a crash
-    before this write) degrade to the schema-sniff check in
-    ``append_vector_band_index``.
-
-    JVM-born row on purpose (``range(1).select(lit(...))``, not
-    ``createDataFrame``): a Python-local relation routes the write
-    job through a Python runner at ~4-5 s per action (measured,
-    r12), which would triple the cost of every index write for one
-    metadata row."""
-    from ..sources import writer
-
-    writer.atomic_overwrite(
-        _band_meta_df(spark, planes, bands, band_payload),
-        path.rstrip("/") + "/meta",
-    )
-
-
 def _band_meta_df(
     spark, planes: int, bands: int, band_payload: bool
 ) -> DataFrame:
-    """The one-row identity frame ``_write_band_meta`` persists."""
+    """The index's one-row IDENTITY — the knobs that are part of what
+    the index IS, not per-call tuning: an append or probe at different
+    planes/bands would join 3-bit keys against 8-bit keys (silently
+    empty/partial results), and a slim batch appended to a payload
+    index leaves a mixed ``bands/`` layout. Written last as ``meta/``,
+    so a complete index always carries it. JVM-born on purpose
+    (``range(1).select(lit(...))``, not ``createDataFrame``): a
+    Python-local relation routes the write job through a Python
+    runner."""
     return spark.range(1).select(
         F.lit(int(planes)).cast("int").alias("planes"),
         F.lit(int(bands)).cast("int").alias("bands"),

@@ -83,6 +83,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as D
 from ..operators.text import tokens
+from ..sources.writer import recover_swap
 from .dag import TaskDag
 
 __all__ = ["CurationDag", "CURATION_CRON"]
@@ -138,14 +139,6 @@ class CurationDag:
 
     # -- setup ---------------------------------------------------------
 
-    def _fs(self):
-        sc = self.spark.sparkContext
-        jroot = sc._jvm.org.apache.hadoop.fs.Path(self.root)
-        return (
-            jroot.getFileSystem(sc._jsc.hadoopConfiguration()),
-            sc._jvm.org.apache.hadoop.fs.Path,
-        )
-
     def _index_exists(self) -> bool:
         """True only when the WHOLE index exists: write_band_index
         commits docs/, bands/ and then meta/ as separate atomic
@@ -155,10 +148,12 @@ class CurationDag:
         steady-state branch, whose read of the missing bands/ fails
         permanently (r11 advice: a manual-cleanup crash loop); a
         missing meta/ would fail every steady append's identity
-        check the same way."""
-        fs, jpath = self._fs()
+        check the same way. Each directory first finishes a swap that
+        crashed between its renames (``writer.recover_swap``): a crash
+        inside ``maintain``'s compaction would otherwise read as "no
+        index" and bootstrap over the indexed corpus."""
         return all(
-            fs.exists(jpath(f"{self.index_path}/{d}"))
+            recover_swap(self.spark, f"{self.index_path}/{d}")
             for d in ("docs", "bands", "meta")
         )
 

@@ -312,8 +312,8 @@ def compact_index(
         keys = [F.col(c) for c in part_cols]
         if target_files > 1:
             # deterministic split of the sort key pins extra write
-            # parallelism per partition (the write_clustered recipe;
-            # explicit numPartitions so AQE can't fuse splits back)
+            # parallelism per partition (explicit numPartitions so AQE
+            # can't fuse splits back)
             n = int(
                 spark.conf.get("spark.sql.shuffle.partitions")
             )

@@ -1,13 +1,14 @@
-"""Beyond-reference analytics surface: portable distinct sketches,
-deterministic sampling / train-test splits, set operations, and
-grouping-sets aggregation.
+"""Beyond-reference analytics surface over the engine's sketch,
+sampling and packing operators: portable distinct and histogram
+sketches, deterministic train/test splits and samples, and a
+two-phase global cumulative sum.
 
 The reference's SQL never needed these (SURVEY §2.5-§2.7), but a
 100 TB training-data pipeline does: sketches for cheap cardinality
 tracking across rollups, hash-splits for reproducible train/val/test
-partitioning, set ops for cohort algebra, grouping sets for one-pass
-multi-grain reporting. All outputs are integer/string-exact so every
-query oracle-checks.
+partitioning, and a global running total with no single-partition
+exchange. All outputs are integer/string-exact so every query
+oracle-checks.
 """
 
 from __future__ import annotations
@@ -164,248 +165,6 @@ def q43_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- q44
-
-_SETOP_ORACLE = """
-WITH purchasers AS (
-  SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-),
-big_spenders AS (
-  SELECT DISTINCT o_custkey AS user_id FROM orders
-  WHERE CAST(round(o_totalprice * 100) AS BIGINT) > 15000000
-)
-SELECT 'both' AS cohort, user_id
-FROM (SELECT user_id FROM purchasers
-      INTERSECT SELECT user_id FROM big_spenders)
-UNION ALL
-SELECT 'purchase_only' AS cohort, user_id
-FROM (SELECT user_id FROM purchasers
-      EXCEPT SELECT user_id FROM big_spenders)
-"""
-
-
-@query("q44_cohort_set_ops", oracle=_SETOP_ORACLE)
-def q44_cohort_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort algebra via native INTERSECT/EXCEPT (left-semi /
-    left-anti hash joins under AQE, both sides pre-deduped by the
-    distinct). The reference has no set operators at all (SURVEY
-    §2.4: UNION ALL only)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    purchasers = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("user_id")
-        .distinct()
-    )
-    spenders = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .filter(
-            F.round(F.col("o_totalprice") * 100).cast("long")
-            > 15_000_000
-        )
-        .select(F.col("o_custkey").alias("user_id"))
-        .distinct()
-    )
-    both = purchasers.intersect(spenders).select(
-        F.lit("both").alias("cohort"), "user_id"
-    )
-    only = purchasers.exceptAll(spenders).select(
-        F.lit("purchase_only").alias("cohort"), "user_id"
-    )
-    return both.unionByName(only)
-
-
-# ---------------------------------------------------------------- q45
-
-_CUBE_ORACLE = """
-WITH dma_map AS (
-  SELECT c.c_custkey AS user_id, n.n_name AS dma
-  FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-),
-ev AS (
-  SELECT coalesce(d.dma, '(unknown)') AS dma, e.event_type,
-         CAST(round(e.value * 100) AS BIGINT) AS cents
-  FROM events e LEFT JOIN dma_map d ON e.user_id = d.user_id
-)
-SELECT coalesce(event_type, '(all)') AS event_type,
-       coalesce(dma, '(all)') AS dma,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(cents) AS BIGINT) AS value_cents
-FROM ev GROUP BY CUBE (event_type, dma)
-"""
-
-
-@query("q45_cube_event_matrix", oracle=_CUBE_ORACLE)
-def q45_cube_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass multi-grain reporting over CUBE(event_type, dma):
-    Spark expands grouping sets in a single Expand + hash aggregate
-    (4 grains in one shuffle, vs 4 separate jobs). The additive
-    measures make the cube valid — contrast q33's rollup, which
-    re-aggregates per level because reach is NOT additive. Labels are
-    coalesced so the all-grain rows are engine-portable (no nulls in
-    the hash)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        F.col("c_custkey").alias("user_id"), "c_nationkey"
-    )
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
-        "n_nationkey", F.col("n_name").alias("dma")
-    )
-    dma_map = F.broadcast(
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .select("user_id", "dma")
-    )
-    tagged = ev.join(dma_map, "user_id", "left").select(
-        "event_type",
-        F.coalesce("dma", F.lit("(unknown)")).alias("dma"),
-        "cents",
-    )
-    return (
-        tagged.cube("event_type", "dma")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum("cents").cast("long").alias("value_cents"),
-        )
-        .select(
-            F.coalesce("event_type", F.lit("(all)")).alias("event_type"),
-            F.coalesce("dma", F.lit("(all)")).alias("dma"),
-            "n_events",
-            "value_cents",
-        )
-    )
-
-
-# ---------------------------------------------------------------- q49
-
-_RECON_ORACLE = """
-WITH ev AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1
-),
-cust AS (
-  SELECT c_custkey AS user_id,
-         CAST(count(o.o_custkey) AS BIGINT) AS n_orders
-  FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-  GROUP BY 1
-)
-SELECT coalesce(ev.user_id, cust.user_id) AS user_id,
-       CASE WHEN ev.user_id IS NULL THEN 'customer_only'
-            WHEN cust.user_id IS NULL THEN 'events_only'
-            ELSE 'both' END AS presence,
-       coalesce(ev.n_events, 0) AS n_events,
-       coalesce(cust.n_orders, 0) AS n_orders
-FROM ev FULL OUTER JOIN cust ON ev.user_id = cust.user_id
-"""
-
-
-@query("q49_full_outer_reconciliation", oracle=_RECON_ORACLE)
-def q49_full_outer_reconciliation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Two-sided audit of the events-vs-customer universe via FULL
-    OUTER join on pre-aggregated sides (aggregate FIRST: the outer
-    join then runs on one row per key instead of the raw fact
-    tables — at 100 TB that's the difference between joining ~10^6
-    key rows and ~10^11 events). The reference has no full-outer
-    surface (SURVEY §2.3)."""
-    ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        F.col("c_custkey").alias("user_id")
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_custkey").alias("user_id"),
-        F.lit(1).alias("_ord"),
-    )
-    cust_agg = (
-        cust.join(orders, "user_id", "left_outer")
-        .groupBy("user_id")
-        .agg(F.count("_ord").cast("long").alias("n_orders"))
-    )
-    e, c = ev.alias("e"), cust_agg.alias("c")
-    return e.join(
-        c, F.col("e.user_id") == F.col("c.user_id"), "full_outer"
-    ).select(
-        F.coalesce("e.user_id", "c.user_id").alias("user_id"),
-        F.when(F.col("e.user_id").isNull(), F.lit("customer_only"))
-        .when(F.col("c.user_id").isNull(), F.lit("events_only"))
-        .otherwise(F.lit("both"))
-        .alias("presence"),
-        F.coalesce("e.n_events", F.lit(0)).alias("n_events"),
-        F.coalesce("c.n_orders", F.lit(0)).alias("n_orders"),
-    )
-
-
-# ---------------------------------------------------------------- q73
-
-
-@query(
-    "q73_star_join_revenue",
-    oracle="""
-SELECT n.n_name AS nation,
-       CAST(count(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(l.l_extendedprice
-                           * (100 - CAST(round(l.l_discount * 100)
-                                     AS BIGINT))) AS BIGINT))
-            AS BIGINT) AS revenue_c
-FROM lineitem l
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n   ON c.c_nationkey = n.n_nationkey
-JOIN region r   ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = 'EUROPE' AND l.l_returnflag <> 'R'
-GROUP BY 1
-""",
-)
-def q73_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-shaped star join: fact lineitem through orders to the
-    customer/nation/region dimension chain, region filter, grouped
-    revenue. Declared as plain joins — Catalyst reorders and
-    broadcasts every dim (the region filter prunes nation keys
-    BEFORE the fact scan's join), the fact table shuffles once for
-    the final aggregate. Revenue in exact integer cents with the
-    discount quantized to integer percent (engine-exact — float
-    products never reach the hash)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_extendedprice", "l_discount", "l_returnflag"
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_nationkey"
-    )
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    region = spark.read.parquet(f"{sf_dir}/region.parquet").select(
-        "r_regionkey", "r_name"
-    )
-    disc_pct = F.round(F.col("l_discount") * 100).cast("long")
-    rev_c = F.round(
-        F.col("l_extendedprice") * (F.lit(100) - disc_pct)
-    ).cast("long")
-    return (
-        li.filter(F.col("l_returnflag") != "R")
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(nation, cust.c_nationkey == nation.n_nationkey)
-        .join(region, nation.n_regionkey == region.r_regionkey)
-        .filter(F.col("r_name") == "EUROPE")
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.countDistinct("o_orderkey").cast("long").alias("n_orders"),
-            F.sum(rev_c).cast("long").alias("revenue_c"),
-        )
-    )
-
-
 # ---------------------------------------------------------------- q78
 
 _HIST_W = 500  # cents per bin
@@ -488,171 +247,6 @@ def q78_histogram_quantile_sketch(
     ).unionByName(total)
 
 
-# ---------------------------------------------------------------- q86
-
-_ANOMALY_ORACLE = """
-WITH ev AS (
-  SELECT event_type,
-         CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day
-  FROM events
-),
-daily AS (
-  SELECT event_type, day, CAST(count(*) AS BIGINT) AS n_events
-  FROM ev GROUP BY 1, 2
-),
-stats AS (
-  SELECT event_type, day, n_events,
-         count(*) OVER (PARTITION BY event_type) AS nd,
-         SUM(n_events) OVER (PARTITION BY event_type) AS s,
-         SUM(n_events * n_events) OVER (PARTITION BY event_type) AS sq
-  FROM daily
-)
-SELECT event_type, day, n_events,
-       CAST(CASE WHEN (nd * n_events - s) * (nd * n_events - s)
-                      > 4 * (nd * sq - s * s)
-                 THEN 1 ELSE 0 END AS BIGINT) AS is_anomaly
-FROM stats
-"""
-
-
-@query("q86_daily_volume_anomalies", oracle=_ANOMALY_ORACLE)
-def q86_daily_volume_anomalies(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Volume-anomaly flags: a day is anomalous when its count sits
-    more than 2 sigma from its type's mean — evaluated in EXACT
-    integer arithmetic ((n*x - s)^2 > k^2 * (n*sq - s^2), the
-    sigma test cleared of divisions), so the flag is bit-stable
-    across engines, unlike any float mean/stddev pipeline. Two-grain
-    plan: one event-grain aggregate to day counts, then stats
-    windows over day-grain rows only. The monitoring primitive for
-    feed-health checks on the ingest DAG."""
-    from .core import _epoch_seconds
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    daily = (
-        ev.select(
-            "event_type",
-            _epoch_seconds(ev, "ts").alias("ts_sec"),
-        )
-        .select(
-            "event_type", F.expr("ts_sec DIV 86400").alias("day")
-        )
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type")
-    stats = daily.select(
-        "event_type",
-        "day",
-        "n_events",
-        F.count(F.lit(1)).over(w).alias("nd"),
-        F.sum("n_events").over(w).alias("s"),
-        F.sum(F.col("n_events") * F.col("n_events")).over(w).alias("sq"),
-    )
-    dev = F.col("nd") * F.col("n_events") - F.col("s")
-    return stats.select(
-        "event_type",
-        "day",
-        "n_events",
-        F.when(
-            dev * dev > 4 * (F.col("nd") * F.col("sq") - F.col("s") * F.col("s")),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("is_anomaly"),
-    )
-
-
-# ---------------------------------------------------------------- q88
-
-_RI_ORACLE = """
-SELECT 'orders->customer' AS relation,
-       CAST((SELECT count(*) FROM orders) AS BIGINT) AS n_rows,
-       CAST((SELECT count(*) FROM orders o
-             WHERE NOT EXISTS (SELECT 1 FROM customer c
-                               WHERE c.c_custkey = o.o_custkey))
-         AS BIGINT) AS n_orphans
-UNION ALL
-SELECT 'lineitem->orders',
-       CAST((SELECT count(*) FROM lineitem) AS BIGINT),
-       CAST((SELECT count(*) FROM lineitem l
-             WHERE NOT EXISTS (SELECT 1 FROM orders o
-                               WHERE o.o_orderkey = l.l_orderkey))
-         AS BIGINT)
-UNION ALL
-SELECT 'lineitem->part',
-       CAST((SELECT count(*) FROM lineitem) AS BIGINT),
-       CAST((SELECT count(*) FROM lineitem l
-             WHERE NOT EXISTS (SELECT 1 FROM part p
-                               WHERE p.p_partkey = l.l_partkey))
-         AS BIGINT)
-UNION ALL
-SELECT 'lineitem->supplier',
-       CAST((SELECT count(*) FROM lineitem) AS BIGINT),
-       CAST((SELECT count(*) FROM lineitem l
-             WHERE NOT EXISTS (SELECT 1 FROM supplier s
-                               WHERE s.s_suppkey = l.l_suppkey))
-         AS BIGINT)
-"""
-
-
-@query("q88_referential_integrity_audit", oracle=_RI_ORACLE)
-def q88_referential_integrity_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Data-quality audit: orphan counts for every fact->dimension
-    edge of the star schema (parquet has no FK enforcement — the
-    audit IS the constraint). Each edge is a LEFT ANTI join against
-    the dimension's key set; dimensions broadcast, so the fact table
-    never shuffles — four narrow scans, zero wide exchanges. Runs as
-    a DAG gate next to q86's volume checks."""
-    def tbl(name: str) -> DataFrame:
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-    def edge(label, fact, fk, dim, pk):
-        # one pass over the fact: LEFT join to the broadcast key set,
-        # count rows and misses in the same aggregate (no separate
-        # count job, no second scan)
-        keys = F.broadcast(
-            dim.select(F.col(pk).alias(fk))
-            .distinct()
-            .withColumn("_hit", F.lit(1))
-        )
-        return (
-            fact.select(fk)
-            .join(keys, fk, "left")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum(
-                    F.when(F.col("_hit").isNull(), 1).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_orphans"),
-            )
-            .select(F.lit(label).alias("relation"), "n_rows", "n_orphans")
-        )
-
-    orders, li = tbl("orders"), tbl("lineitem")
-    edges = [
-        edge("orders->customer", orders, "o_custkey",
-             tbl("customer"), "c_custkey"),
-        edge("lineitem->orders", li, "l_orderkey",
-             orders, "o_orderkey"),
-        edge("lineitem->part", li, "l_partkey", tbl("part"),
-             "p_partkey"),
-        edge("lineitem->supplier", li, "l_suppkey",
-             tbl("supplier"), "s_suppkey"),
-    ]
-    out = edges[0]
-    for e in edges[1:]:
-        out = out.unionByName(e)
-    return out
-
-
 # ---------------------------------------------------------------- q90
 
 _MAU_K = 128
@@ -724,133 +318,6 @@ def q90_rolling_active_user_sketch(
     merged = SK.kmv_merge(fan, keys=["target_day"], k=_MAU_K)
     return merged.select(
         "target_day", "sketch_size", "kth_min_hash"
-    )
-
-
-# ---------------------------------------------------------------- q95
-
-_LIFT_ORACLE = """
-WITH dim AS (
-  SELECT c.c_custkey AS user_id, n.n_name AS nation
-  FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-),
-cells AS (
-  SELECT d.nation, e.event_type, CAST(count(*) AS BIGINT) AS n
-  FROM events e JOIN dim d ON e.user_id = d.user_id
-  GROUP BY 1, 2
-),
-m AS (
-  SELECT nation, event_type, n,
-         SUM(n) OVER (PARTITION BY nation) AS row_tot,
-         SUM(n) OVER (PARTITION BY event_type) AS col_tot,
-         SUM(n) OVER () AS total
-  FROM cells
-)
-SELECT nation, event_type, n,
-       CAST((n * total * 1000000) // (row_tot * col_tot) AS BIGINT)
-         AS lift_ppm
-FROM m
-"""
-
-
-@query("q95_joint_lift_cells", oracle=_LIFT_ORACLE)
-def q95_joint_lift_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Joint-distribution lift audit: observed (nation x event_type)
-    counts vs the independence expectation from the marginals, as
-    integer ppm (1e6 = independent, higher = over-represented) — the
-    mix-shift / bias-detection primitive for corpus and audience
-    composition. Event-grain work is one broadcast-dim join + one
-    aggregate; all three marginals come from windows over the
-    |nations| x |types| cell table."""
-    from pyspark.sql import Window
-
-    dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .select(F.col("c_custkey").alias("user_id"), "c_nationkey")
-        .join(
-            F.broadcast(
-                spark.read.parquet(f"{sf_dir}/nation.parquet").select(
-                    "n_nationkey", F.col("n_name").alias("nation")
-                )
-            ),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select("user_id", "nation")
-    )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "user_id", "event_type"
-    )
-    cells = (
-        ev.join(F.broadcast(dim), "user_id")
-        .groupBy("nation", "event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    m = cells.select(
-        "nation",
-        "event_type",
-        "n",
-        F.sum("n").over(Window.partitionBy("nation")).alias("row_tot"),
-        F.sum("n").over(Window.partitionBy("event_type")).alias("col_tot"),
-        F.sum("n").over(Window.partitionBy()).alias("total"),
-    )
-    return m.select(
-        "nation",
-        "event_type",
-        "n",
-        F.expr("n * total * 1000000 DIV (row_tot * col_tot)")
-        .cast("long")
-        .alias("lift_ppm"),
-    )
-
-
-# ---------------------------------------------------------------- q100
-
-_PSEUDO_SALT = "v1"
-
-_PSEUDO_ORACLE = f"""
-WITH p AS (
-  SELECT event_type, user_id,
-         sha256('{_PSEUDO_SALT}:' || CAST(user_id AS VARCHAR))
-           AS pseudo_id
-  FROM events
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(count(DISTINCT pseudo_id) AS BIGINT) AS n_pseudonyms,
-       min(pseudo_id) AS sample_pseudonym
-FROM p GROUP BY 1
-"""
-
-
-@query("q100_pseudonymized_rollup", oracle=_PSEUDO_ORACLE)
-def q100_pseudonymized_rollup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Privacy-preserving ID handling: salted-hash pseudonymization
-    (sha256 over salt:user_id) applied as a narrow map before any
-    aggregation — the downstream pipeline never sees raw IDs, yet
-    joins/distincts still work because the mapping is deterministic
-    per salt epoch. The checked output pins n_users == n_pseudonyms
-    (injectivity on this corpus) and a deterministic sample
-    pseudonym; rotating the salt unlinks epochs without touching the
-    pipeline."""
-    p = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        "user_id",
-        F.sha2(
-            F.concat(
-                F.lit(f"{_PSEUDO_SALT}:"),
-                F.col("user_id").cast("string"),
-            ),
-            256,
-        ).alias("pseudo_id"),
-    )
-    return p.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-        F.countDistinct("pseudo_id").cast("long").alias("n_pseudonyms"),
-        F.min("pseudo_id").alias("sample_pseudonym"),
     )
 
 

@@ -1680,45 +1680,6 @@ def q135_semdedup_increment(
     )
 
 
-# ---------------------------------------------------------------- q30
-
-@query(
-    "q30_multimodal_features",
-    oracle="""
-WITH media AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         hex(encode(text)) AS hx,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1]
-           AS media_type
-  FROM documents
-)
-SELECT doc_id, media_type, n_bytes,
-       CAST(list_sum(list_transform(range(1, length(hx) // 2 + 1),
-         i -> strpos('123456789ABCDEF', substr(hx, 2*i-1, 1)) * 16
-            + strpos('123456789ABCDEF', substr(hx, 2*i, 1))))
-         AS BIGINT) AS byte_sum,
-       CAST(8 AS BIGINT) AS feat_dim
-FROM media
-""",
-)
-def q30_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: opaque binary payloads + Arrow-batched
-    mapInPandas feature extraction (decode stubbed with a
-    deterministic byte-bucket fake — the Spark-side schema,
-    batching and partition-preserving execution are real)."""
-    from ..operators.multimodal import attach_payload, extract_features
-
-    media = attach_payload(_documents(spark, sf_dir))
-    feats = extract_features(media)
-    return feats.select(
-        "doc_id",
-        "media_type",
-        "n_bytes",
-        "byte_sum",
-        F.size("feature").cast("long").alias("feat_dim"),
-    )
-
 # ---------------------------------------------------------------- q46
 
 _TOP_TERMS_ORACLE = rf"""
@@ -2182,155 +2143,6 @@ def q59_fuzzy_blocked_match(
     )
 
 
-# ---------------------------------------------------------------- q62
-
-_DECON_NGRAM = 5
-_DECON_MIN_SHARED = 3
-# eval split under a FIXED id cap (≤ _Q62_EVAL_CAP/20 = 10k docs no
-# matter how large the corpus) — the q122/q123 _EVAL_MAX_ID treatment
-# (r9 advice applied to q127; same flaw here): a bare % 20 split is
-# corpus-proportional, so its exploded gram side grows linearly and
-# eventually trips contamination's EVAL_GRAM_BUDGET_ROWS raise while
-# the docstring claims the eval side is benchmark-sized.
-_Q62_EVAL_CAP = 200_000
-
-
-@query(
-    "q62_benchmark_decontamination",
-    oracle=rf"""
-WITH evals AS (
-  SELECT doc_id AS eval_id,
-         substr(text, 1, CAST(floor(length(text) * 0.8) AS INT)) AS text
-  FROM documents WHERE doc_id % 20 = 0 AND doc_id < {_Q62_EVAL_CAP}
-),
-td AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '{_TOKEN_RE}'),
-                     t -> t <> '') AS toks
-  FROM documents
-),
-sd AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) >= {_DECON_NGRAM} THEN
-           list_distinct(list_transform(
-             range(1, len(toks) - {_DECON_NGRAM - 2}),
-             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                            toks[i+3], toks[i+4])))
-         ELSE CAST([] AS VARCHAR[]) END AS sh
-  FROM td
-),
-te AS (
-  SELECT eval_id,
-         list_filter(regexp_split_to_array(lower(text), '{_TOKEN_RE}'),
-                     t -> t <> '') AS toks
-  FROM evals
-),
-se AS (
-  SELECT eval_id,
-         CASE WHEN len(toks) >= {_DECON_NGRAM} THEN
-           list_distinct(list_transform(
-             range(1, len(toks) - {_DECON_NGRAM - 2}),
-             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                            toks[i+3], toks[i+4])))
-         ELSE CAST([] AS VARCHAR[]) END AS sh
-  FROM te
-),
-xd AS (SELECT doc_id, unnest(sh) AS g FROM sd),
-xe AS (SELECT eval_id, unnest(sh) AS g FROM se)
-SELECT xd.doc_id, xe.eval_id,
-       CAST(count(*) AS BIGINT) AS shared_ngrams
-FROM xd JOIN xe ON xd.g = xe.g
-GROUP BY xd.doc_id, xe.eval_id
-HAVING count(*) >= {_DECON_MIN_SHARED}
-""",
-)
-def q62_benchmark_decontamination(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Benchmark decontamination: flag training docs sharing >=
-    {min_shared} distinct 5-grams with an eval set (here: 80%
-    prefixes of every 20th doc UNDER THE FIXED id cap _Q62_EVAL_CAP —
-    planted positives, plus whatever natural near-dups cross the
-    line). Eval side broadcast — the corpus never shuffles — and
-    bounded by construction via the cap, enforced by the operator's
-    gram-budget raise (operators/contamination.py)."""
-    from ..operators.contamination import contamination
-
-    docs = _documents(spark, sf_dir).select("doc_id", "text")
-    evals = docs.filter(
-        (F.col("doc_id") % 20 == 0) & (F.col("doc_id") < _Q62_EVAL_CAP)
-    ).select(
-        F.col("doc_id").alias("eval_id"),
-        F.expr(
-            "substring(text, 1, CAST(floor(length(text) * 0.8) AS INT))"
-        ).alias("text"),
-    )
-    return contamination(
-        docs, evals, ngram=_DECON_NGRAM, min_shared=_DECON_MIN_SHARED
-    )
-
-
-# ---------------------------------------------------------------- q63
-
-_BOILER_CHUNK = 8
-_BOILER_MIN_DF = 2
-
-
-@query(
-    "q63_boilerplate_chunks",
-    oracle=rf"""
-WITH {_PREFIX_SQL},
-toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '{_TOKEN_RE}'),
-                     t -> t <> '') AS toks
-  FROM corpus
-),
-chunked AS (
-  SELECT doc_id,
-         list_transform(
-           range(0, CAST(floor(len(toks) / {_BOILER_CHUNK}) AS INT)),
-           i -> array_to_string(
-             toks[(i*{_BOILER_CHUNK}+1):(i*{_BOILER_CHUNK}+{_BOILER_CHUNK})],
-             ' ')) AS chunks
-  FROM toks
-  WHERE len(toks) >= {_BOILER_CHUNK}
-),
-inst AS (SELECT doc_id, unnest(chunks) AS chunk FROM chunked),
-dfs AS (
-  SELECT chunk FROM (SELECT DISTINCT doc_id, chunk FROM inst)
-  GROUP BY chunk HAVING count(*) >= {_BOILER_MIN_DF}
-),
-marked AS (
-  SELECT i.doc_id, CAST(count(*) AS BIGINT) AS n_boiler_chunks
-  FROM inst i JOIN dfs d ON i.chunk = d.chunk
-  GROUP BY i.doc_id
-),
-totals AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks FROM inst
-  GROUP BY doc_id
-)
-SELECT t.doc_id, t.n_chunks,
-       CAST(COALESCE(m.n_boiler_chunks, 0) AS BIGINT) AS n_boiler_chunks,
-       CAST(floor(COALESCE(m.n_boiler_chunks, 0) * 1000000.0 / t.n_chunks)
-            AS BIGINT) AS boiler_ppm
-FROM totals t LEFT JOIN marked m ON t.doc_id = m.doc_id
-""",
-)
-def q63_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boilerplate detection over fixed-width token chunks on the
-    prefix-copy corpus (planted near-dups guarantee df >= 2 chunks).
-    The df count shuffles sha2 digests, never chunk text
-    (operators/contamination.py)."""
-    from ..operators.contamination import boilerplate_chunks
-
-    return boilerplate_chunks(
-        _prefix_corpus(spark, sf_dir),
-        chunk=_BOILER_CHUNK,
-        min_df=_BOILER_MIN_DF,
-    )
-
-
 # ---------------------------------------------------------------- q64
 
 
@@ -2361,76 +2173,6 @@ def q64_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOF over the materialized token array, no explode, no shuffle
     (operators/text.token_stats)."""
     return X.token_stats(_documents(spark, sf_dir))
-
-
-# ---------------------------------------------------------------- q65
-
-_RESIZE_W = 32
-_RESIZE_H = 32
-_N_FRAMES = 4
-
-
-@query(
-    "q65_multimodal_resize_frames",
-    oracle=f"""
-WITH media AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n,
-         ['image', 'audio', 'video'][CAST(doc_id % 3 AS INT) + 1]
-           AS media_type
-  FROM documents
-)
-SELECT doc_id, media_type,
-       CAST(CASE WHEN media_type = 'image'
-                 THEN least(n, {_RESIZE_W * _RESIZE_H}) ELSE n END
-            AS BIGINT) AS resized_bytes,
-       CAST(CASE WHEN media_type = 'video'
-                 THEN least({_N_FRAMES}, n) ELSE 0 END
-            AS BIGINT) AS n_frames,
-       CAST(CASE WHEN media_type = 'video'
-                 THEN least({_N_FRAMES}, n) *
-                      (CASE WHEN n >= {_N_FRAMES}
-                            THEN n // {_N_FRAMES} ELSE 1 END)
-                 ELSE 0 END
-            AS BIGINT) AS frame_bytes
-FROM media
-""",
-)
-def q65_multimodal_resize_frames(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Multimodal transform plumbing: resize (1:1 payload transform)
-    and video frame sampling (1:N fan-out), both Arrow-batched
-    mapInPandas with deterministic byte-level fakes behind the codec
-    boundary. The oracle checks the SIZE arithmetic of both
-    transforms — the part expressible without the codec — so the
-    batch shapes, fan-out row counts, and pass-through rules are all
-    pinned."""
-    from ..operators.multimodal import (
-        attach_payload,
-        resize_images,
-        sample_frames,
-    )
-
-    media = attach_payload(_documents(spark, sf_dir))
-    resized = resize_images(media, _RESIZE_W, _RESIZE_H).select(
-        "doc_id", "media_type", F.col("n_bytes").alias("resized_bytes")
-    )
-    frames = (
-        sample_frames(media, _N_FRAMES)
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_frames"),
-            F.sum("n_bytes").cast("long").alias("frame_bytes"),
-        )
-    )
-    return resized.join(frames, "doc_id", "left").select(
-        "doc_id",
-        "media_type",
-        "resized_bytes",
-        F.coalesce("n_frames", F.lit(0)).cast("long").alias("n_frames"),
-        F.coalesce("frame_bytes", F.lit(0)).cast("long").alias("frame_bytes"),
-    )
 
 
 # ---------------------------------------------------------------- q67
@@ -4426,174 +4168,6 @@ def q118_cross_source_dup_matrix(
     )
 
 
-# ---------------------------------------------------------------- q119
-
-_FUZZY_N = 5           # word n-gram size (q62's exact-overlap gram)
-_FUZZY_PPM = 300_000   # Jaccard >= 30% -> contaminated
-# corpus-gram df cap for CANDIDACY (verification recounts exactly):
-# 2 binds at fixture scale (max natural 5-gram df there is 4), so
-# the driver gate exercises the hot-recount path, and at sf10 it
-# collapses the near-cartesian min_shared=1 join (measured 103 s ->
-# see COVERAGE) to cap * eval-gram-occurrence volume
-_FUZZY_STOP_DF = 2
-
-# planted eval set: every 50th doc's 60%-character prefix — a
-# paraphrase-grade overlap (big shared prefix, different tail) that
-# exact-match decontamination misses when even one gram differs.
-# FIXED id cap (≤ _FUZZY_EVAL_CAP/50 = 10k docs at any corpus size):
-# the q122/q123/_DECON_EVAL_CAP treatment — without it the eval gram
-# side is corpus-proportional and trips the operator's
-# EVAL_GRAM_BUDGET_ROWS raise at a large enough scale factor.
-_FUZZY_EVAL_CAP = 500_000
-_FUZZY_EVAL_SQL = f"""
-evals AS (
-  SELECT doc_id AS eval_id,
-         substr(text, 1, CAST(floor(length(text) * 0.6) AS INT))
-           AS text
-  FROM documents
-  WHERE doc_id % 50 = 0 AND doc_id < {_FUZZY_EVAL_CAP}
-)
-"""
-
-_FUZZY_ORACLE = f"""
-WITH {_FUZZY_EVAL_SQL},
-dg AS (
-  SELECT doc_id, unnest(sh) AS g, len(sh) AS size_d
-  FROM (
-    SELECT doc_id,
-           list_distinct(list_transform(
-             range(1, len(toks) - {_FUZZY_N - 2}),
-             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                            toks[i+3], toks[i+4]))) AS sh
-    FROM (
-      SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text),
-                         '{_TOKEN_RE}'), x -> x <> '') AS toks
-      FROM documents
-    ) WHERE len(toks) >= {_FUZZY_N}
-  )
-),
-eg AS (
-  SELECT eval_id, unnest(sh) AS g, len(sh) AS size_e
-  FROM (
-    SELECT eval_id,
-           list_distinct(list_transform(
-             range(1, len(toks) - {_FUZZY_N - 2}),
-             i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2],
-                            toks[i+3], toks[i+4]))) AS sh
-    FROM (
-      SELECT eval_id,
-             list_filter(regexp_split_to_array(lower(text),
-                         '{_TOKEN_RE}'), x -> x <> '') AS toks
-      FROM evals
-    ) WHERE len(toks) >= {_FUZZY_N}
-  )
-),
-hotg AS (
-  SELECT g FROM dg GROUP BY g HAVING count(*) > {_FUZZY_STOP_DF}
-),
-pairs AS (
-  SELECT dg.doc_id, eg.eval_id, dg.size_d, eg.size_e,
-         CAST(count(*) AS BIGINT) AS shared_ngrams,
-         CAST(count(*) FILTER (WHERE hotg.g IS NULL) AS BIGINT)
-           AS cold_common
-  FROM dg JOIN eg USING (g) LEFT JOIN hotg USING (g)
-  GROUP BY 1, 2, 3, 4
-),
-scored AS (
-  SELECT doc_id, eval_id, shared_ngrams,
-         shared_ngrams * 1000000
-           // (size_d + size_e - shared_ngrams) AS jaccard_ppm
-  FROM pairs
-  WHERE cold_common >= 1
-),
-hits AS (
-  SELECT doc_id, eval_id, shared_ngrams, jaccard_ppm
-  FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY doc_id
-      ORDER BY jaccard_ppm DESC, eval_id) AS rn
-    FROM scored WHERE jaccard_ppm >= {_FUZZY_PPM}
-  ) WHERE rn = 1
-)
-SELECT d.doc_id,
-       COALESCE(h.eval_id, -1) AS best_eval_id,
-       COALESCE(h.shared_ngrams, 0) AS shared_ngrams,
-       COALESCE(h.jaccard_ppm, 0) AS jaccard_ppm,
-       h.eval_id IS NULL AS keep
-FROM documents d LEFT JOIN hits h USING (doc_id)
-"""
-
-
-@query("q119_fuzzy_decontamination", oracle=_FUZZY_ORACLE)
-def q119_fuzzy_decontamination(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Fuzzy benchmark decontamination with attribution: q62 counts
-    exact shared n-grams; this normalizes the overlap to a Jaccard
-    similarity over DISTINCT {_FUZZY_N}-gram sets and attributes
-    each contaminated doc to its single best-matching eval item
-    (argmax by jaccard_ppm, eval_id tie-break) — the report a
-    release process needs is "which eval items leaked", not just
-    "which docs to drop". keep = no eval item reaches 30% Jaccard.
-    All integer arithmetic (common*1e6 div union), q21's exactness
-    discipline.
-
-    Scale shape (operators/contamination.fuzzy_contamination): the
-    eval side is BROADCAST throughout — bounded by construction via
-    the fixed id cap _FUZZY_EVAL_CAP and enforced by the operator's
-    gram-budget raise; candidacy excludes grams
-    whose corpus df exceeds {_FUZZY_STOP_DF} (min_shared=1 on a
-    vocabulary-dense corpus is near-cartesian — the uncapped
-    variant measured 103 s at sf10, the capped one is bounded by
-    cap * eval-gram occurrences) while verification re-counts
-    EXACTLY via hot-gram arrays, so the checked similarity is the
-    true full-set value and the only approximation is candidacy
-    itself (a pair is missed iff it shares NO sub-cap gram — the
-    oracle models the identical rule via its cold_common clause).
-    Attribution is a doc_id-partitioned window over hit rows only;
-    the final verdict attach is a doc_id equi-join."""
-    from ..operators.contamination import fuzzy_contamination
-
-    docs = _documents(spark, sf_dir).select("doc_id", "text")
-    evals = docs.filter(
-        (F.col("doc_id") % 50 == 0) & (F.col("doc_id") < _FUZZY_EVAL_CAP)
-    ).select(
-        F.col("doc_id").alias("eval_id"),
-        F.expr(
-            "substr(text, 1, CAST(floor(length(text) * 0.6) AS INT))"
-        ).alias("text"),
-    )
-    scored = fuzzy_contamination(
-        docs,
-        evals,
-        ngram=_FUZZY_N,
-        threshold_ppm=_FUZZY_PPM,
-        stop_gram_df=_FUZZY_STOP_DF,
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("jaccard_ppm").desc(), F.col("eval_id")
-    )
-    hits = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    return docs.select("doc_id").join(hits, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("eval_id", F.lit(-1)).cast("long").alias(
-            "best_eval_id"
-        ),
-        F.coalesce("shared_ngrams", F.lit(0)).cast("long").alias(
-            "shared_ngrams"
-        ),
-        F.coalesce("jaccard_ppm", F.lit(0)).cast("long").alias(
-            "jaccard_ppm"
-        ),
-        F.col("eval_id").isNull().alias("keep"),
-    )
-
-
 # ---------------------------------------------------------------- q120
 
 _EXCISE_ORACLE = f"""
@@ -4682,7 +4256,7 @@ def q120_substring_span_excision(
 # matter how large the corpus) is the q122/q123 _EVAL_MAX_ID treatment
 # at span grain (r9 advice): an uncapped % 50 split is
 # corpus-proportional, so its distinct-gram count grows linearly and
-# eventually trips contaminated_span_intervals' EVAL_GRAM_BUDGET
+# eventually trips eval_gram_set's EVAL_GRAM_BUDGET
 # raise while the docstring claims the eval side is bounded. Training
 # corpus = the complement PLUS planted leaks — every doc with
 # doc_id % 100 == 10 (same cap, so plants track the eval set) re-
@@ -4780,8 +4354,8 @@ def q127_eval_span_excision(
     training-doc span whose k-grams appear verbatim in some eval
     doc, keep the rest of the document
     (dedup.excise_contaminated_spans). Completes the
-    decontamination family along the second axis — q62/q119/q122/
-    q123 decide keep-or-drop at DOC grain; this excises at SPAN
+    decontamination family along the second axis — q122/q123
+    decide keep-or-drop at DOC grain; this excises at SPAN
     grain, the right tool when a training doc merely QUOTES an eval
     passage (dropping it wholesale wastes the original 95%). The
     planted leaks (eval-prefix quotes appended to natural docs at
@@ -5553,7 +5127,7 @@ def q122_semantic_decontamination(
     whose cosine to some eval vector passes tau=0.35, with its
     best-matching eval item (operators/similarity
     .contamination_matches). Catches PARAPHRASED eval leakage that
-    the n-gram decontaminators (exact q62, fuzzy q119) cannot see.
+    n-gram decontamination (q127's verbatim k-grams) cannot see.
     Eval = vec_id % 97 == 0 under the FIXED id cap _EVAL_MAX_ID
     (bounded by construction, so the broadcast budget holds at any
     corpus size — r8 verdict); the corpus is the complement. The

@@ -21,7 +21,7 @@ _DEFAULTS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Deterministic tz for epoch<->date conversions (oracle parity).
     "spark.sql.session.timeZone": "UTC",
-    # Arrow for the pandas-UDF slow path (vector ops, multimodal).
+    # Arrow for pandas UDFs and mapInPandas (vector ops, MinHash signing).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Snowflake's '::' casts are permissive (NULL on garbage); ANSI off
     # keeps cast/to_date NULL-on-failure semantics (SURVEY §2.8 F3/F5).

@@ -28,7 +28,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
-from .writer import _commit_overwrite, _fs
+from .writer import _commit_overwrite, _fs, recover_swap
 
 
 def is_hidden(name: str) -> bool:
@@ -127,6 +127,7 @@ def overwrite_table(spark: SparkSession, path: str, table: pa.Table) -> None:
     """Replace the table at ``path`` with ``table``: write one file
     into the ``__tmp__`` sibling, then swap directories with the two
     checked renames of ``writer.atomic_overwrite``."""
+    recover_swap(spark, path)
     tmp = path.rstrip("/") + "__tmp__"
     fs, jtmp = _fs(spark, tmp)
     if fs.exists(jtmp):

@@ -7,8 +7,9 @@ committed. ``atomic_overwrite`` writes to a ``__tmp__`` sibling
 directory first (a full Spark job with its own file-commit protocol),
 then swaps directories with two metadata renames. A crash before the
 swap leaves the table untouched; a crash between the renames leaves
-the committed tmp dir recoverable on disk — the
-write-new-then-swap discipline of SURVEY §4.2-4.
+the committed tmp dir on disk, and the next overwrite of that path
+rolls it forward first (``recover_swap``) — the write-new-then-swap
+discipline of SURVEY §4.2-4.
 """
 
 from __future__ import annotations
@@ -197,6 +198,7 @@ def _stage_overwrite(
     """The Spark-job half of ``atomic_overwrite``: write ``df`` to
     ``path``'s ``__tmp__`` sibling. No visible state changes."""
     spark = df.sparkSession
+    recover_swap(spark, path)
     tmp = path.rstrip("/") + "__tmp__"
     fs, jtmp = _fs(spark, tmp)
     if fs.exists(jtmp):
@@ -242,6 +244,41 @@ def _commit_overwrite(spark: SparkSession, path: str) -> None:
             f"atomic_overwrite: swap committed but cleanup of {old} "
             "failed; table is consistent, remove the directory manually"
         )
+
+
+def recover_swap(spark: SparkSession, path: str) -> bool:
+    """Finish a directory swap that crashed between its two renames,
+    and return whether ``path`` exists afterwards.
+
+    ``_commit_overwrite`` renames ``path`` to ``__old__`` and then
+    ``__tmp__`` to ``path``, and it starts only once the staging job
+    has committed. So a missing ``path`` beside an ``__old__`` means
+    the staged ``__tmp__`` is complete: rename it in and delete
+    ``__old__``. Without a ``__tmp__``, rename ``__old__`` back, the
+    only copy left. Any other state is left alone: one ``exists``
+    call when ``path`` is present. Call it before anything that
+    would delete a sibling (the next overwrite's staging) or read a
+    missing ``path`` as "no table"."""
+    fs, jpath = _fs(spark, path)
+    if fs.exists(jpath):
+        return True
+    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jold = jvm_path(path.rstrip("/") + "__old__")
+    if not fs.exists(jold):
+        return False
+    jtmp = jvm_path(path.rstrip("/") + "__tmp__")
+    forward = fs.exists(jtmp)
+    src = jtmp if forward else jold
+    if not fs.rename(src, jpath):
+        raise RuntimeError(
+            f"recover_swap: rename {src.toString()} -> {path} failed"
+        )
+    if forward and not fs.delete(jold, True):
+        raise RuntimeError(
+            f"recover_swap: {path} restored but cleanup of "
+            f"{jold.toString()} failed; remove the directory manually"
+        )
+    return True
 
 
 def overwrite_partitions(
@@ -316,76 +353,3 @@ def overwrite_partitions(
                 f"overwrite_partitions: failed to clear emptied "
                 f"partition {col}={val} under {path}"
             )
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    cluster_by: list[str],
-    files_per_partition: int = 1,
-) -> None:
-    """Scale-layout writer: hive-partition on ``partition_by`` (reads
-    with equality/range predicates on those columns prune whole
-    directories before any I/O) and sort each output file on
-    ``cluster_by`` (parquet row-group min/max stats become tight and
-    non-overlapping, so predicate pushdown on the cluster columns
-    skips row groups inside the files that survive pruning).
-
-    The repartition keys = partition columns + a deterministic split
-    of the cluster key, so each task writes exactly one file per
-    hive partition instead of tasks x partitions small files — the
-    small-file problem is a write-time decision, fixed here rather
-    than by a post-hoc compaction job. ``files_per_partition``
-    scales write parallelism for huge partitions; within each file
-    the sort order still holds.
-    """
-    from pyspark.sql import functions as F
-
-    keys = [F.col(c) for c in partition_by]
-    if files_per_partition > 1:
-        # explicit numPartitions pins the exchange (a column-only
-        # repartition is AQE-coalescible, which would fuse the splits
-        # back into one task and one file)
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        part = df.withColumn(
-            "_split",
-            F.pmod(F.xxhash64(*cluster_by), F.lit(files_per_partition)),
-        ).repartition(n, *keys, F.col("_split"))
-    else:
-        part = df.withColumn("_split", F.lit(0)).repartition(*keys)
-    (
-        part.sortWithinPartitions(*partition_by, "_split", *cluster_by)
-        .drop("_split")
-        .write.mode("overwrite")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int,
-    sort_cols: list[str] | None = None,
-    path: str | None = None,
-) -> None:
-    """Bucketed catalog table: pre-shuffle the data into
-    ``num_buckets`` hash buckets on ``bucket_cols`` at WRITE time, so
-    every later join or aggregation on those columns skips its
-    exchange entirely (the scan reports the bucketing as its output
-    partitioning). This is the co-located-join answer for repeated
-    fact-to-fact joins at 100 TB: pay the shuffle once when the table
-    lands, never again per query.
-
-    Needs the session catalog (``saveAsTable``) — bucketing metadata
-    lives there, not in the parquet files; a plain ``.parquet(path)``
-    write silently drops it. ``sort_cols`` additionally sorts within
-    buckets (merge-friendly reads + tight row-group stats)."""
-    w = df.write.mode("overwrite").format("parquet")
-    if path is not None:
-        w = w.option("path", path)
-    w = w.bucketBy(num_buckets, *bucket_cols)
-    w = w.sortBy(*(sort_cols or bucket_cols))
-    w.saveAsTable(table)

@@ -221,12 +221,7 @@ def test_drifting_replay_no_duplicates(spark, tmp_path):
     dag.run_once()
     assert _curated_rows(dag) == want
     # the orphan partition never reached curated/
-    fs, jpath = dag._fs()
-    names = {
-        s.getPath().getName()
-        for s in fs.listStatus(jpath(dag.curated_path))
-    }
-    assert f"run_id={orphan_run}" not in names
+    assert f"run_id={orphan_run}" not in os.listdir(dag.curated_path)
 
 
 def test_fresh_store_first_landing_crash_still_gcs(spark, tmp_path):
@@ -259,12 +254,7 @@ def test_fresh_store_first_landing_crash_still_gcs(spark, tmp_path):
     )
     dag.run_once()
     assert _curated_rows(dag) == want and len(want) > 0
-    fs, jpath = dag._fs()
-    names = {
-        s.getPath().getName()
-        for s in fs.listStatus(jpath(dag.curated_path))
-    }
-    assert f"run_id={orphan_run}" not in names
+    assert f"run_id={orphan_run}" not in os.listdir(dag.curated_path)
 
 
 def test_vanished_staged_file_cannot_strand_orphan(spark, tmp_path):
@@ -319,12 +309,7 @@ def test_vanished_staged_file_cannot_strand_orphan(spark, tmp_path):
     # f2's uncommitted docs never became visible; f1's replay landed
     assert not (set(got_ids) & f2_ids)
     assert set(got_ids) & f1_ids
-    fs, jpath = dag._fs()
-    names = {
-        s.getPath().getName()
-        for s in fs.listStatus(jpath(dag.curated_path))
-    }
-    assert f"run_id={orphan_run}" not in names
+    assert f"run_id={orphan_run}" not in os.listdir(dag.curated_path)
 
 
 class _Crash(RuntimeError):
@@ -419,6 +404,48 @@ def test_maintain_preserves_results(spark, tmp_path):
     assert _curated_rows(dag) == want and len(want) > 0
     # the ledger still gates re-ingest: a re-run is a no-op
     assert dag.run_once()["curation_ingest"] == 0
+
+
+def test_maintain_crash_mid_docs_swap_keeps_index(
+    spark, tmp_path, monkeypatch
+):
+    """A crash inside ``maintain``'s docs/ compaction, between the
+    rename of ``docs`` to ``docs__old__`` and of ``docs__tmp__`` to
+    ``docs``, must not lose the index: the next pass finishes the
+    swap and dedups against the whole indexed corpus, so its curated
+    pool equals a crash-free run's. Read as "no index", the pass
+    would bootstrap from its own batch and keep the next day's copies
+    of day-one documents."""
+    from samba_tv_ingest_etl_spark.sources import writer
+
+    from .test_writer_atomic import _FailRenameTo
+
+    train = _train(spark).localCheckpoint(eager=True)
+    ids = sorted(r["doc_id"] for r in train.select("doc_id").collect())
+    mid = ids[len(ids) // 2]
+    want = _curated_rows(
+        _run_days(spark, str(tmp_path / "clean"), train, [mid])
+    )
+
+    root = str(tmp_path / "root")
+    dag = _run_days(spark, root, train.filter(F.col("doc_id") <= mid), [])
+    real_fs = writer._fs
+
+    def failing(sp, p):
+        fs, jp = real_fs(sp, p)
+        return _FailRenameTo(fs, "/docs"), jp
+
+    # the second rename fails: docs/ is gone, both siblings stay
+    monkeypatch.setattr(writer, "_fs", failing)
+    with pytest.raises(RuntimeError, match="rename"):
+        dag.maintain(only_if_over=0)
+    monkeypatch.undo()
+    assert not os.path.exists(dag.index_path + "/docs")
+
+    train.filter(F.col("doc_id") > mid).write.parquet(f"{root}/stage/day1")
+    dag.run_once()
+    assert _curated_rows(dag) == want and len(want) > 0
+    assert sorted(os.listdir(dag.index_path)) == ["bands", "docs", "meta"]
 
 
 def _data_file_snapshot(root):

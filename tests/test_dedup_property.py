@@ -147,85 +147,6 @@ def test_duplicated_spans_matches_reference(spark, case):
     assert got == want
 
 
-# ------------------------------------------------ fuzzy candidacy law
-
-
-@st.composite
-def fuzzy_corpora(draw):
-    """Docs + evals over a small vocabulary; a drawn df cap."""
-    vocab = [f"t{i}" for i in range(draw(st.integers(6, 10)))]
-    n_docs = draw(st.integers(2, 6))
-    rows = []
-    for d in range(n_docs):
-        toks = draw(
-            st.lists(st.sampled_from(vocab), min_size=5, max_size=14)
-        )
-        rows.append((d, " ".join(toks)))
-    n_evals = draw(st.integers(1, 3))
-    evals = []
-    for e in range(n_evals):
-        toks = draw(
-            st.lists(st.sampled_from(vocab), min_size=5, max_size=10)
-        )
-        evals.append((100 + e, " ".join(toks)))
-    cap = draw(st.integers(1, 4))
-    return rows, evals, cap
-
-
-@settings(max_examples=8, deadline=None)
-@given(fuzzy_corpora())
-def test_fuzzy_contamination_cap_law(spark, case):
-    """The cap law the q119 oracle encodes: capped output == the
-    uncapped output restricted to pairs sharing >= 1 gram whose
-    corpus df is within the cap — and similarity values on surviving
-    pairs are IDENTICAL (verification recounts hot grams exactly)."""
-    from collections import Counter
-
-    from samba_tv_ingest_etl_spark.operators.contamination import (
-        fuzzy_contamination,
-    )
-
-    rows, evals, cap = case
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    ev = spark.createDataFrame(evals, "eval_id long, text string")
-    thr = 100_000  # 10%: low so candidacy, not the threshold, decides
-    uncapped = {
-        (r["doc_id"], r["eval_id"]): (
-            r["shared_ngrams"], r["jaccard_ppm"]
-        )
-        for r in fuzzy_contamination(
-            docs, ev, ngram=3, threshold_ppm=thr, stop_gram_df=None
-        ).collect()
-    }
-    capped = {
-        (r["doc_id"], r["eval_id"]): (
-            r["shared_ngrams"], r["jaccard_ppm"]
-        )
-        for r in fuzzy_contamination(
-            docs, ev, ngram=3, threshold_ppm=thr, stop_gram_df=cap
-        ).collect()
-    }
-    # reference candidacy: corpus gram df from doc-side distinct grams
-    def grams(text):
-        toks = text.split()
-        return {
-            " ".join(toks[i:i + 3]) for i in range(len(toks) - 2)
-        }
-
-    df = Counter()
-    for _, text in rows:
-        for g in grams(text):
-            df[g] += 1
-    expected_keys = set()
-    for (d, e), _ in uncapped.items():
-        shared = grams(rows[d][1]) & grams(dict(evals)[e])
-        if any(df[g] <= cap for g in shared):
-            expected_keys.add((d, e))
-    assert set(capped) == expected_keys
-    for key in capped:
-        assert capped[key] == uncapped[key]  # exact recount
-
-
 # ---------------------------------------------------------------
 # span-excision law: the Spark kernel (gram explode -> island merge
 # -> indexed-lambda filter) must agree with a direct Python

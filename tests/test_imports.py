@@ -1,10 +1,11 @@
-"""Static import check: every ``samba_tv_ingest_etl_spark`` module and
-every name imported from it must exist.
+"""Static reference checks: every ``samba_tv_ingest_etl_spark`` module
+and every name imported from it must exist, and every query named
+outside the registry must be registered.
 
 Many engine imports are lazy, inside function bodies, so a dangling
 one fails only once that code path runs. This walks the source with
 ``ast`` instead — function-level imports included — and needs no
-Spark."""
+Spark session."""
 
 from __future__ import annotations
 
@@ -129,4 +130,25 @@ def test_every_engine_import_resolves():
             if name not in names_cache[mod_path]:
                 missing.append(f"{where}: {module} has no {name}")
     assert checked > 100
+    assert not missing, "\n".join(missing)
+
+
+def test_every_named_query_is_registered():
+    """``bench.HEADLINE`` and the plan audit's allow-list name queries
+    by string; a name whose query was deleted must fail here, not be
+    skipped by the benchmark or linger in the allow-list."""
+    import bench
+    from samba_tv_ingest_etl_spark import queries as Q
+
+    from .test_plan_audit import _ALLOW_SP_WINDOW
+
+    registry = Q.registry()
+    named = {"bench.HEADLINE": bench.HEADLINE,
+             "test_plan_audit._ALLOW_SP_WINDOW": _ALLOW_SP_WINDOW}
+    missing = [
+        f"{where}: {name}"
+        for where, names in named.items()
+        for name in names
+        if name not in registry
+    ]
     assert not missing, "\n".join(missing)

@@ -1,5 +1,5 @@
 """Operator-level tests for the LLM-data surface (dedup, similarity,
-text, multimodal) on hand-built fixtures — the oracle parity suite
+text) on hand-built fixtures — the oracle parity suite
 covers the same operators end-to-end on the driver corpus."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from samba_tv_ingest_etl_spark.operators import dedup as D
-from samba_tv_ingest_etl_spark.operators import multimodal as M
 from samba_tv_ingest_etl_spark.operators import similarity as S
 from samba_tv_ingest_etl_spark.operators import text as X
 
@@ -374,78 +373,6 @@ def test_quantized_cosine_symmetry(spark):
     assert len(out) == 1 and out[0]["cos_scaled"] == 1_000_000
 
 
-def test_multimodal_stub_and_plumbing(spark, docs):
-    media = M.attach_payload(docs)
-    feats = {r["doc_id"]: r for r in M.extract_features(media).collect()}
-    payload = DOCS[0][1].encode()
-    assert feats[1]["n_bytes"] == len(payload)
-    assert feats[1]["byte_sum"] == sum(payload)
-    assert len(feats[1]["feature"]) == M.FEATURE_DIM
-    assert sum(feats[1]["feature"]) == feats[1]["byte_sum"]
-    # no video codec exists anywhere; image ALWAYS has one (PIL or the
-    # pure-Python fallback), so undecodable bytes are a ValueError/
-    # OSError (malformed input), never NotImplementedError
-    with pytest.raises(NotImplementedError):
-        M.decode_payload(b"xx", "video")
-    assert {"image", "audio"} <= set(M.available_codecs())
-    with pytest.raises((ValueError, OSError)):
-        M.decode_payload(b"xx", "image")
-
-
-def test_vendored_fixtures_are_wellformed():
-    """Runs in EVERY environment (no codec libs needed): the vendored
-    pure-Python PNG/WAV fixture bytes must be structurally valid, so
-    the real-codec tests below never skip for lack of a fixture —
-    only for lack of a decoder."""
-    import struct
-    import zlib
-
-    from .media_fixtures import PNG_MAGIC, WAV_MAGIC, tiny_png, tiny_wav
-
-    png = tiny_png(4, 4, gray=7)
-    assert png.startswith(PNG_MAGIC) and png.endswith(
-        b"IEND" + struct.pack(">I", zlib.crc32(b"IEND") & 0xFFFFFFFF)
-    )
-    w, h, depth, ctype = struct.unpack(">IIBB", png[16:26])
-    assert (w, h, depth, ctype) == (4, 4, 8, 0)
-    wav = tiny_wav(list(range(-8, 8)))
-    assert wav.startswith(WAV_MAGIC) and wav[8:12] == b"WAVE"
-    assert struct.unpack("<I", wav[4:8])[0] == len(wav) - 8
-    n = struct.unpack("<I", wav[-32 - 4:-32])[0]
-    assert n == 32  # 16 samples * 2 bytes
-
-
-def test_multimodal_real_image_codec(spark):
-    """Real-codec path, decoding the VENDORED (independently encoded)
-    PNG — runs in EVERY environment: PIL where installed, else the
-    pure-Python grayscale decoder. Both yield identical features on
-    the uniform fixture (any resample of a constant image is that
-    constant)."""
-    from .media_fixtures import tiny_png
-
-    payload = tiny_png(4, 4, gray=7)
-    feats = M.decode_payload(payload, "image")
-    # uniform gray 7: every resized pixel is 7 -> row sums are exact
-    assert feats == [7 * M.FEATURE_DIM] * M.FEATURE_DIM
-    media = spark.createDataFrame(
-        [(1, payload, "image", len(payload))], M.MEDIA_SCHEMA
-    )
-    out = M.extract_features(media, fake=False).collect()
-    assert out[0]["feature"] == feats
-
-
-def test_multimodal_real_audio_codec():
-    """Real-codec audio path in every environment: soundfile where
-    installed, else the pure struct-parsed PCM_16 decoder — integer
-    arithmetic end to end, so the two are bit-identical."""
-    from .media_fixtures import tiny_wav
-
-    samples = list(range(-8, 8))
-    feats = M.decode_payload(tiny_wav(samples), "audio")
-    assert len(feats) == M.FEATURE_DIM
-    assert sum(feats) == sum(abs(s) for s in samples)
-
-
 def test_language_id_on_clear_text(spark):
     rows = [
         (1, "the cat and the dog went to the house of the king"),
@@ -460,310 +387,23 @@ def test_language_id_on_clear_text(spark):
     assert got == {1: "en", 2: "de", 3: "es", 4: "fr", 5: "zh", 6: "und"}
 
 
-def test_resize_images_fake_path(spark):
-    rows = [
-        (1, b"x" * 5000, "image", 5000),
-        (2, b"y" * 100, "image", 100),   # already under target
-        (3, b"z" * 5000, "audio", 5000), # non-image passes through
-    ]
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    out = {r["doc_id"]: r for r in M.resize_images(media, 32, 32).collect()}
-    assert out[1]["n_bytes"] == 32 * 32 and len(out[1]["payload"]) == 1024
-    assert out[2]["n_bytes"] == 100
-    assert bytes(out[3]["payload"]) == b"z" * 5000
-
-
-def test_sample_frames_fan_out(spark):
-    rows = [
-        (1, bytes(range(100)), "video", 100),
-        (2, b"img", "image", 3),  # dropped: not video
-    ]
-    media = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
-    frames = sorted(
-        M.sample_frames(media, n_frames=4).collect(),
-        key=lambda r: r["frame_idx"],
+def test_token_stats_bpe_estimate(spark):
+    docs = spark.createDataFrame(
+        [
+            (1, "hi supercalifragilistic a"),  # 2+5+1 pieces @4 chars
+            (2, ""),
+        ],
+        ["doc_id", "text"],
     )
-    assert [r["doc_id"] for r in frames] == [1, 1, 1, 1]
-    assert [r["n_bytes"] for r in frames] == [25, 25, 25, 25]
-    assert bytes(frames[1]["frame"]) == bytes(range(25, 50))
-    with pytest.raises(NotImplementedError):
-        M.sample_frames(media, fake=False)
-
-
-def test_resize_images_real_codec(spark):
-    """Real resize path in every environment; the round-trip check
-    reads the output PNG back through the PURE decoder, which both
-    encoders (PIL and fallback) produce bytes for — grayscale in,
-    grayscale out."""
-    from .media_fixtures import tiny_png
-
-    payload = tiny_png(64, 64, gray=9)
-    media = spark.createDataFrame(
-        [(1, payload, "image", len(payload))], M.MEDIA_SCHEMA
-    )
-    out = M.resize_images(media, 8, 8, fake=False).collect()[0]
-    w, h, rows = M._png_decode_gray(bytes(out["payload"]))
-    assert (w, h) == (8, 8)
-    assert all(px == 9 for r in rows for px in r)
-
-
-def test_pure_png_decoder_all_filters():
-    """The vendored PNG decoder must reconstruct every per-row filter
-    type (None/Sub/Up/Average/Paeth), not just the filter-0 rows our
-    own encoder emits — hand-filter a known image and decode."""
-    import struct
-    import zlib
-
-    from samba_tv_ingest_etl_spark.operators import multimodal as MM
-
-    # 5 rows x 4 cols, values chosen to exercise carries
-    img = [
-        [10, 20, 30, 40],
-        [15, 25, 35, 45],
-        [200, 210, 220, 230],
-        [5, 0, 255, 128],
-        [100, 101, 102, 103],
-    ]
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-    raw = bytearray()
-    prev = [0, 0, 0, 0]
-    for y, (row, f) in enumerate(zip(img, [0, 1, 2, 3, 4])):
-        raw.append(f)
-        for x, v in enumerate(row):
-            left = row[x - 1] if x else 0
-            up = prev[x]
-            ul = prev[x - 1] if x else 0
-            pred = {
-                0: 0,
-                1: left,
-                2: up,
-                3: (left + up) >> 1,
-                4: paeth(left, up, ul),
-            }[f]
-            raw.append((v - pred) & 0xFF)
-        prev = row
-
-    def chunk(tag, body):
-        return (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
+    out = {
+        r["doc_id"]: (
+            r["n_tokens"], r["bpe_est_tokens"], r["chars_per_token_ppm"]
         )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 5, 8, 0, 0, 0, 0))
-        # split across two IDATs: multi-IDAT streams are legal
-        + chunk(b"IDAT", zlib.compress(bytes(raw))[:10])
-        + chunk(b"IDAT", zlib.compress(bytes(raw))[10:])
-        + chunk(b"IEND", b"")
-    )
-    w, h, rows = MM._png_decode_gray(png)
-    assert (w, h) == (4, 5)
-    assert [list(r) for r in rows] == img
-
-
-def _png_chunks(*chunks: tuple[bytes, bytes]) -> bytes:
-    import struct
-    import zlib
-
-    out = b"\x89PNG\r\n\x1a\n"
-    for tag, body in chunks:
-        out += (
-            struct.pack(">I", len(body)) + tag + body
-            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-        )
-    return out
-
-
-def test_pure_png_decoder_rgb_with_filters():
-    """Color type 2 (8-bit RGB): per-row filters must predict at the
-    PIXEL stride (3 bytes back, not 1) and the decoded triplets must
-    reduce by the pinned integer luma (299R+587G+114B)//1000."""
-    import struct
-    import zlib
-
-    from samba_tv_ingest_etl_spark.operators import multimodal as MM
-
-    img = [  # 3 rows x 3 cols of (R, G, B)
-        [(250, 10, 3), (0, 128, 255), (7, 7, 7)],
-        [(255, 255, 0), (1, 2, 3), (200, 100, 50)],
-        [(0, 0, 0), (255, 255, 255), (33, 66, 99)],
-    ]
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-    raw = bytearray()
-    prev = [0] * 9
-    for row, f in zip(img, [1, 2, 4]):  # Sub, Up, Paeth at bpp=3
-        flat = [v for px in row for v in px]
-        raw.append(f)
-        for x, v in enumerate(flat):
-            left = flat[x - 3] if x >= 3 else 0
-            up = prev[x]
-            ul = prev[x - 3] if x >= 3 else 0
-            pred = {1: left, 2: up, 4: paeth(left, up, ul)}[f]
-            raw.append((v - pred) & 0xFF)
-        prev = flat
-    png = _png_chunks(
-        (b"IHDR", struct.pack(">IIBBBBB", 3, 3, 8, 2, 0, 0, 0)),
-        (b"IDAT", zlib.compress(bytes(raw))),
-        (b"IEND", b""),
-    )
-    w, h, rows = MM._png_decode_gray(png)
-    assert (w, h) == (3, 3)
-    want = [
-        [(299 * r + 587 * g + 114 * b) // 1000 for (r, g, b) in row]
-        for row in img
-    ]
-    assert [list(r) for r in rows] == want
-
-
-def test_pure_png_decoder_palette():
-    """Color type 3: indices map through PLTE, then the same luma."""
-    import struct
-    import zlib
-
-    from samba_tv_ingest_etl_spark.operators import multimodal as MM
-
-    plte = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 10, 20, 30])
-    idx_rows = [[0, 1, 2, 3], [3, 2, 1, 0]]
-    raw = b"".join(b"\x00" + bytes(r) for r in idx_rows)
-    png = _png_chunks(
-        (b"IHDR", struct.pack(">IIBBBBB", 4, 2, 8, 3, 0, 0, 0)),
-        (b"PLTE", plte),
-        (b"IDAT", zlib.compress(raw)),
-        (b"IEND", b""),
-    )
-    w, h, rows = MM._png_decode_gray(png)
-    lut = [
-        (299 * plte[3 * i] + 587 * plte[3 * i + 1]
-         + 114 * plte[3 * i + 2]) // 1000
-        for i in range(4)
-    ]
-    assert [list(r) for r in rows] == [
-        [lut[i] for i in r] for r in idx_rows
-    ]
-
-
-def test_pure_png_decoder_rejects_unsupported_profiles():
-    """A mixed corpus must never silently mis-decode: 16-bit, alpha
-    and interlaced PNGs raise loudly instead of producing garbage."""
-    import struct
-    import zlib
-
-    import pytest
-
-    from samba_tv_ingest_etl_spark.operators import multimodal as MM
-
-    raw = zlib.compress(b"\x00\x01")
-    for depth, ctype, interlace in [
-        (16, 0, 0),  # 16-bit grayscale
-        (8, 4, 0),   # gray + alpha
-        (8, 6, 0),   # RGBA
-        (8, 0, 1),   # Adam7 interlaced
-    ]:
-        png = _png_chunks(
-            (b"IHDR",
-             struct.pack(">IIBBBBB", 1, 1, depth, ctype, 0, 0, interlace)),
-            (b"IDAT", raw),
-            (b"IEND", b""),
-        )
-        with pytest.raises(NotImplementedError):
-            MM._png_decode_gray(png)
-
-
-def test_codec_param_pins_decoder():
-    """codec='pure' must ALWAYS run the vendored decoders (identical
-    on every machine); codec='lib' must either run the library or
-    fail loudly — never silently fall back (the determinism advice:
-    auto-dispatch is opt-in, not the only mode)."""
-    import pytest
-
-    from samba_tv_ingest_etl_spark.operators import multimodal as MM
-
-    from .media_fixtures import tiny_png, tiny_wav
-
-    png, wav = tiny_png(4, 4, gray=7), tiny_wav(list(range(-8, 8)))
-    assert MM.decode_payload(png, "image", codec="pure") == \
-        MM._image_features_pure(png)
-    assert MM.decode_payload(wav, "audio", codec="pure") == \
-        MM._audio_features_pure(wav)
-    with pytest.raises(ValueError):
-        MM.decode_payload(png, "image", codec="best")
-    try:
-        import PIL.Image  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if has_pil:
-        assert MM.codec_name("image", "lib") == "PIL"
-        assert MM.decode_payload(png, "image", codec="lib") == \
-            MM._image_features(png)
-    else:
-        assert MM.codec_name("image", "auto") == "pure"
-        with pytest.raises(ImportError):
-            MM.decode_payload(png, "image", codec="lib")
-    assert MM.codec_name("video", "auto") == "none"
-    assert MM.codec_name("image", "pure") == "pure"
-
-
-def test_lib_vs_pure_codec_parity():
-    """Library-vs-vendored agreement on the fixture media (closes the
-    heterogeneity caveat with evidence where the libs exist; the pure
-    path is already always-tested, so skipping here loses nothing)."""
-    import pytest
-
-    from samba_tv_ingest_etl_spark.operators import multimodal as MM
-
-    from .media_fixtures import tiny_png, tiny_wav
-
-    try:
-        import PIL.Image  # noqa: F401
-    except ImportError:
-        pytest.skip("PIL not importable in this environment")
-    # uniform image: any resample of a constant is that constant, so
-    # PIL (bicubic, rounded luma) and pure (nearest, floor luma) agree
-    png = tiny_png(16, 16, gray=42)
-    assert MM._image_features(png) == MM._image_features_pure(png)
-    try:
-        import soundfile  # noqa: F401
-    except ImportError:
-        pytest.skip("soundfile not importable in this environment")
-    # PCM_16 is integer end to end: bit-identical, not just close
-    wav = tiny_wav([0, 5, -5, 32767, -32768, 7, 8, 9] * 4)
-    assert MM._audio_features(wav) == MM._audio_features_pure(wav)
-
-
-def test_pure_wav_decoder_stereo_and_chunk_walk():
-    """The vendored WAV decoder must WALK chunks (extra chunk before
-    data) and fold channels per frame like the soundfile path."""
-    import struct
-
-    from samba_tv_ingest_etl_spark.operators import multimodal as MM
-
-    frames = [(100, -50), (-3, 7), (0, 0), (32767, -32768)]
-    data = b"".join(
-        struct.pack("<hh", left, right) for left, right in frames
-    )
-    fmt = struct.pack("<HHIIHH", 1, 2, 8000, 8000 * 4, 4, 16)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"LIST" + struct.pack("<I", 4) + b"INFO"  # skipped chunk
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    wav = b"RIFF" + struct.pack("<I", len(body)) + body
-    mono = MM._wav_decode(wav)
-    assert mono == [150, 10, 0, 32767 + 32768]
+        for r in X.token_stats(docs).collect()
+    }
+    # lens: hi=2 (1 piece), supercalifragilistic=20 (5), a=1 (1)
+    assert out[1] == (3, 7, int(23 * 1_000_000 / 3))
+    assert out[2] == (0, 0, 0)
 
 
 def test_semdedup_drops_subset_of_allpairs(spark):
@@ -1081,93 +721,6 @@ def test_commonness_buckets_survive_empty_tokenizing_doc(
     g = got[cols].astype(str).sort_values(by=cols).reset_index(drop=True)
     w = want[cols].astype(str).sort_values(by=cols).reset_index(drop=True)
     assert g.equals(w)
-
-
-# ---------------------------------------------------- fuzzy decontam
-
-
-def test_fuzzy_decontamination_attribution(spark):
-    from samba_tv_ingest_etl_spark.queries import registry
-    from samba_tv_ingest_etl_spark.queries.llmdata import _FUZZY_PPM
-
-    from .conftest import SF_DIR_ORACLE
-
-    out = registry()["q119_fuzzy_decontamination"](
-        spark, SF_DIR_ORACLE
-    ).collect()
-    by_id = {r["doc_id"]: r for r in out}
-    planted = [d for d in by_id if d % 50 == 0]
-    assert planted
-    # each eval item is a 60% prefix of its source doc. Candidacy is
-    # capped (a pair sharing NO sub-cap gram is missed — documented
-    # approximation, exercised by the short formulaic fixture docs
-    # whose every gram is corpus-hot), so assert the rule's shape:
-    # a clear majority flagged, and flagged sources self-attributed
-    # unless a closer natural near-dup exists.
-    flagged = [d for d in planted if not by_id[d]["keep"]]
-    assert len(flagged) * 3 >= len(planted) * 2
-    for d in flagged:
-        assert by_id[d]["jaccard_ppm"] >= _FUZZY_PPM
-    assert sum(
-        1 for d in flagged if by_id[d]["best_eval_id"] == d
-    ) >= len(flagged) // 2
-    # clean docs carry the deterministic sentinel shape
-    clean = [r for r in out if r["keep"]]
-    assert clean
-    assert all(
-        r["best_eval_id"] == -1
-        and r["jaccard_ppm"] == 0
-        and r["shared_ngrams"] == 0
-        for r in clean
-    )
-    # verdict is exhaustive: one row per corpus doc
-    assert len(out) == len(by_id)
-
-
-def test_fuzzy_contamination_hot_recount_is_exact(spark):
-    """The cap only gates CANDIDACY; verification re-counts hot
-    grams exactly. Doc/eval pairs sharing one cold + one hot gram
-    must report common=2; a pair sharing ONLY the hot gram is
-    missed (the documented approximation)."""
-    from samba_tv_ingest_etl_spark.operators.contamination import (
-        fuzzy_contamination,
-    )
-
-    hot = "h1 h2 h3 h4 h5"  # one 5-gram, shared by 3 docs -> df 3
-    docs = spark.createDataFrame(
-        [
-            (1, hot + " c1 c2 c3 c4 c5"),   # hot + cold-shared tail
-            (2, hot + " z1 z2 z3 z4 z5"),   # hot only vs eval
-            (3, hot + " y1 y2 y3 y4 y5"),   # hot only vs eval
-        ],
-        "doc_id long, text string",
-    )
-    evals = spark.createDataFrame(
-        [(7, hot + " c1 c2 c3 c4 c5")],
-        "eval_id long, text string",
-    )
-    out = {
-        r["doc_id"]: (r["shared_ngrams"], r["jaccard_ppm"])
-        for r in fuzzy_contamination(
-            docs, evals, ngram=5, threshold_ppm=100_000,
-            stop_gram_df=2,
-        ).collect()
-    }
-    # doc 1: 10 tokens -> 6 distinct 5-grams; eval identical ->
-    # common=6: 5 cold + the hot gram recovered by the exact
-    # recount (cold-only counting would report 5), jaccard = 1.0
-    assert out[1] == (6, 1_000_000)
-    # docs 2/3 share only the hot gram -> no cold candidacy -> missed
-    assert 2 not in out and 3 not in out
-    # uncapped reference finds them (common=1 of union 13)
-    unc = {
-        r["doc_id"]
-        for r in fuzzy_contamination(
-            docs, evals, ngram=5, threshold_ppm=1,
-            stop_gram_df=None,
-        ).collect()
-    }
-    assert {1, 2, 3} <= unc
 
 
 # ---------------------------------------------------------- excision

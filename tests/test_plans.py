@@ -189,16 +189,6 @@ def test_rollup_reuses_per_hh_without_cache_pin(spark, registry):
     assert jcm.isEmpty(), "rollup must not pin CacheManager entries"
 
 
-def test_cube_single_expand_single_exchange(spark, registry):
-    """q45: all four grains come from one Expand + one hash-partition
-    exchange — not four separate aggregation jobs; the dim joins
-    broadcast."""
-    plan = plan_of(registry["q45_cube_event_matrix"](spark, SF_DIR))
-    assert plan.count("Expand") == 1
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
-    assert "BroadcastHashJoin" in plan
-
-
 def test_sample_and_split_are_shuffle_free_before_agg(spark, registry):
     """q42/q43: the split/sample assignment is a narrow projection or
     filter — the ONLY exchange is the final tiny aggregation's."""
@@ -209,43 +199,12 @@ def test_sample_and_split_are_shuffle_free_before_agg(spark, registry):
         assert "Python" not in plan, name
 
 
-def test_funnel_single_user_shuffle(spark, registry):
-    """q50: conditional-min funnel = one exchange on user_id plus the
-    final single-partition rollup; no window, no join."""
-    plan = plan_of(registry["q50_ordered_funnel"](spark, SF_DIR))
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
-    assert "Join" not in plan
-    assert "Window" not in plan
-
-
 def test_pii_scan_stays_jvm_side(spark, registry):
     """q53: regexp counting is codegen'd JVM work over a narrow scan —
     no Python nodes, no shuffle before the single rollup."""
     plan = plan_of(registry["q53_pii_scan"](spark, SF_DIR))
     assert "Python" not in plan
     assert "Exchange hashpartitioning" not in plan
-
-
-def test_decontamination_single_exchange_eval_broadcast(spark, registry):
-    """q62: the corpus side never shuffles for the match — the eval
-    n-gram side broadcasts, and the only exchange is the final
-    per-(doc, eval) count."""
-    plan = plan_of(registry["q62_benchmark_decontamination"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    n_ex = len(re.findall(r"Exchange hashpartitioning", plan))
-    assert n_ex == 1, f"expected 1 exchange, got {n_ex}"
-    assert "Python" not in plan
-
-
-def test_boilerplate_shuffles_digests_not_text(spark, registry):
-    """q63: every hash exchange carries doc ids / sha2 digests — the
-    chunk text column never appears in an exchange's partitioning
-    keys (the shuffle payload is what kills full-text groupBys)."""
-    plan = plan_of(registry["q63_boilerplate_chunks"](spark, SF_DIR))
-    n_ex = len(re.findall(r"Exchange hashpartitioning", plan))
-    assert n_ex == 3, f"expected 3 exchanges, got {n_ex}"
-    for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
-        assert "_chunk" not in keys and "chunk#" not in keys, keys
 
 
 def test_mixture_sample_no_corpus_shuffle(spark, registry):
@@ -256,14 +215,6 @@ def test_mixture_sample_no_corpus_shuffle(spark, registry):
     for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "doc_id" not in keys, keys
     assert "BroadcastHashJoin" in plan
-
-
-def test_star_join_broadcasts_all_dims(spark, registry):
-    """q73: all four dimension hops broadcast — the fact table never
-    shuffles for a join, only for the final aggregate."""
-    plan = plan_of(registry["q73_star_join_revenue"](spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") == 4
-    assert "SortMergeJoin" not in plan
 
 
 def test_semdedup_pair_join_on_cluster(spark, registry):

@@ -1,11 +1,13 @@
 """atomic_overwrite crash-safety: rename failures must never destroy
-the last remaining copy of the table, and the happy path must clean up
-both sibling directories. delete_by_keys must not force a driver-side
-broadcast (AQE sizes the key set at runtime)."""
+the last remaining copy of the table, a swap that crashed between its
+renames is finished before the next overwrite, and the happy path must
+clean up both sibling directories. delete_by_keys must not force a
+driver-side broadcast (AQE sizes the key set at runtime)."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -99,6 +101,48 @@ def test_atomic_overwrite_failed_backup_rename_leaves_table(
     # path itself never moved — table still readable and intact
     got = sorted(r.k for r in spark.read.parquet(path).collect())
     assert got == [1, 2, 3]
+
+
+def _crash_between_renames(spark, path, live, staged):
+    """The on-disk state of an ``atomic_overwrite`` that crashed
+    between its two renames: ``live`` moved to ``__old__``, the
+    complete staging of ``staged`` at ``__tmp__``, no ``path``."""
+    writer.atomic_overwrite(_mk(spark, live), path)
+    _mk(spark, staged).write.parquet(path + "__tmp__")
+    os.rename(path, path + "__old__")
+
+
+def test_crashed_swap_rolls_forward_before_next_overwrite(spark, tmp_path):
+    """The next overwrite first finishes the crashed swap: if its own
+    staging job then fails, the table holds the staged rows, not
+    nothing (deleting ``__tmp__`` there, and ``__old__`` at its
+    commit, would lose both copies)."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t")
+    _crash_between_renames(spark, path, [1, 2, 3], [4, 5])
+    failing = spark.range(1).select(
+        F.raise_error(F.lit("staging crash")).cast("int").alias("k")
+    )
+    with pytest.raises(Exception, match="staging crash"):
+        writer.atomic_overwrite(failing, path)
+    got = sorted(r.k for r in spark.read.parquet(path).collect())
+    assert got == [4, 5]
+    assert not os.path.exists(path + "__old__")
+
+
+def test_recover_swap_restores_old_copy_without_staging(spark, tmp_path):
+    """With no ``__tmp__`` beside ``__old__``, the previous table is
+    the only copy: it is renamed back. A present table is left alone."""
+    path = str(tmp_path / "t")
+    _crash_between_renames(spark, path, [1, 2, 3], [4, 5])
+    shutil.rmtree(path + "__tmp__")
+    assert writer.recover_swap(spark, path)
+    got = sorted(r.k for r in spark.read.parquet(path).collect())
+    assert got == [1, 2, 3]
+    assert not os.path.exists(path + "__old__")
+    assert writer.recover_swap(spark, path)
+    assert not writer.recover_swap(spark, str(tmp_path / "absent"))
 
 
 def test_delete_by_keys_no_forced_broadcast(spark):

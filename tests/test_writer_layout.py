@@ -1,92 +1,11 @@
-"""Clustered writer: partition pruning reaches the scan, files are
-sorted so row-group stats are tight, and file counts stay bounded."""
+"""Write layout: ``sized`` sets the file count from the data size, and
+a fresh band index lands below the maintenance fragmentation gate."""
 
 from __future__ import annotations
 
 import os
 
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
-
-from samba_tv_ingest_etl_spark.sources.writer import write_clustered
-
-from .conftest import SF_DIR
-
-
-def _events(spark):
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    return ev.select(
-        "event_id", "user_id", "event_type", F.col("ts").alias("ts")
-    )
-
-
-def test_partition_pruning_and_file_sort(spark, tmp_path):
-    out = str(tmp_path / "clustered")
-    write_clustered(
-        _events(spark),
-        out,
-        partition_by=["event_type"],
-        cluster_by=["ts"],
-    )
-
-    # one file per hive partition (no task x partition explosion)
-    for d in os.scandir(out):
-        if not d.name.startswith("event_type="):
-            continue
-        files = [
-            f for f in os.listdir(d.path) if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, (d.name, files)
-        # file internally sorted on ts -> row-group stats usable
-        pf = pq.ParquetFile(os.path.join(d.path, files[0]))
-        mins, maxs = [], []
-        idx = pf.schema_arrow.names.index("ts")
-        for rg in range(pf.metadata.num_row_groups):
-            st = pf.metadata.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        assert all(
-            maxs[i] <= mins[i + 1] for i in range(len(mins) - 1)
-        ), "row groups overlap — file not sorted"
-
-    # equality predicate on the partition column prunes at plan time
-    read = spark.read.parquet(out).filter(
-        F.col("event_type") == "click"
-    )
-    plan = read._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    got = read.count()
-    want = (
-        _events(spark).filter(F.col("event_type") == "click").count()
-    )
-    assert got == want
-
-
-def test_files_per_partition_split(spark, tmp_path):
-    out = str(tmp_path / "split")
-    write_clustered(
-        _events(spark),
-        out,
-        partition_by=["event_type"],
-        cluster_by=["ts"],
-        files_per_partition=3,
-    )
-    dirs = [
-        e.path
-        for e in os.scandir(out)
-        if e.name.startswith("event_type=")
-    ]
-    per_dir = [
-        len([f for f in os.listdir(d) if f.endswith(".parquet")])
-        for d in dirs
-    ]
-    assert all(n <= 3 for n in per_dir), per_dir
-    # hash collisions can fuse two splits in SOME dir, but not in all
-    assert sum(per_dir) > len(dirs), per_dir
-    # round-trip: nothing lost
-    assert (
-        spark.read.parquet(out).count() == _events(spark).count()
-    )
 
 
 def test_sized_write_follows_data_size_not_task_count(spark, tmp_path):
