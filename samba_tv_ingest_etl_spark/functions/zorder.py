@@ -1,9 +1,8 @@
 """Z-order (Morton) sort keys for multi-column data skipping.
 
-``sources/writer.py::write_clustered`` sorts files on the cluster
-columns, which gives tight parquet row-group min/max stats on the
-FIRST column only — a filter on the second column still reads
-everything. Interleaving the bits of k bounded integers into one
+Sorting files on a list of columns gives tight parquet row-group
+min/max stats on the FIRST column only — a filter on the second
+column still reads everything. Interleaving the bits of k bounded integers into one
 Morton code makes file/row-group ranges tight on EVERY interleaved
 dimension simultaneously (each file covers a small hypercube of the
 key space instead of a thin slab), so predicate pushdown skips
@@ -12,8 +11,7 @@ ZORDER layout strategy, expressed as a plain sort key.
 
 Pure JVM bit arithmetic (shiftright/bitwiseAND/shiftleft chains) —
 whole-stage codegen, no UDF. At 100 TB this is a write-time layout
-decision exactly like ``write_clustered``: pay one sort at load,
-skip forever after.
+decision: pay one sort at load, skip forever after.
 """
 
 from __future__ import annotations
@@ -46,8 +44,8 @@ def z_value(cols: list[Column], bits: int = 16) -> Column:
     the [0, 2^bits) grid (see ``bucketize``). Bit b of column i lands
     at output bit ``b * len(cols) + i``; total bits must fit a long.
 
-    Sorting by this single column is the whole integration point:
-    ``write_clustered(..., cluster_by=["z"])``."""
+    Sorting the files by this single column is the whole integration
+    point."""
     n = len(cols)
     if n * bits > 62:
         raise ValueError(f"{n} cols x {bits} bits exceeds long range")

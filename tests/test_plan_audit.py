@@ -38,6 +38,8 @@ _SKIP = {
 # windows over an unlimited SinglePartition exchange fails the audit
 # (the q102 regression class).
 _ALLOW_SP_WINDOW = {
+    # day grain: <= #days in the data window rows reach the window
+    "q60_cumulative_reach_curve": frozenset({"single_partition_window"}),
     # histogram-sketch grain: O(event_types x bins) rows, row-count
     # independent by sketch construction
     "q78_histogram_quantile_sketch": frozenset(

@@ -199,6 +199,15 @@ def test_sample_and_split_are_shuffle_free_before_agg(spark, registry):
         assert "Python" not in plan, name
 
 
+def test_funnel_single_user_shuffle(spark, registry):
+    """q50: conditional-min funnel = one exchange on user_id plus the
+    final single-partition rollup; no window, no join."""
+    plan = plan_of(registry["q50_ordered_funnel"](spark, SF_DIR))
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
+    assert "Join" not in plan
+    assert "Window" not in plan
+
+
 def test_pii_scan_stays_jvm_side(spark, registry):
     """q53: regexp counting is codegen'd JVM work over a narrow scan —
     no Python nodes, no shuffle before the single rollup."""
