@@ -66,7 +66,7 @@ HEADLINE = [
     "q133_ivf_index_persisted",
     "q135_semdedup_increment",
     # r11 joiner — sf1->sf10 row in SCALING_r11.md (2.85x) BEFORE
-    # joining; q137 measured there too but stays out by the q61/q69
+    # joining; q137 measured there too but stays out by the q61
     # precedent (whole-DAG replay per call: a composition surface,
     # not a throughput one)
     "q136_ann_banded_index_persisted",

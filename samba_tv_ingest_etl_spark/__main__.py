@@ -17,10 +17,6 @@ reference's weighting join over the full GEO_WEIGHTS table).
 the reach/frequency rollup with ``--reach``) over a BUILT warehouse —
 what a reference user SELECTs after the DAG ran. ``query`` runs any
 registered query from the engine's registry and prints rows.
-``--scale-layout`` opts the warehouse into the hive-partitioned
-storage design; ``--manifest`` additionally commits
-``viewing_sessions`` through the manifest backend (multi-partition
-atomic commits + time travel).
 """
 
 from __future__ import annotations
@@ -41,19 +37,6 @@ def _feeds(spark, sf_dir: str):
     return _samba_feeds(spark, sf_dir)
 
 
-def _warehouse(spark, root: str, scale_layout: bool,
-               manifest: bool = False):
-    from .plans.backfill import Warehouse
-
-    if manifest and not scale_layout:
-        raise SystemExit("--manifest requires --scale-layout")
-    layout = Warehouse.SCALE_LAYOUT if scale_layout else None
-    return Warehouse(
-        spark, root, layout=layout,
-        manifest=Warehouse.MANIFEST_TABLES if manifest else None,
-    )
-
-
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="samba_tv_ingest_etl_spark")
     p.add_argument("--cpus", type=int, default=None)
@@ -63,8 +46,6 @@ def main(argv: list[str] | None = None) -> int:
         s = sub.add_parser(name)
         s.add_argument("--sf-dir", required=True)
         s.add_argument("--warehouse", required=True)
-        s.add_argument("--scale-layout", action="store_true")
-        s.add_argument("--manifest", action="store_true")
         if name == "incremental":
             s.add_argument("--as-of", default=None,
                            help="replay: event feeds restricted to "
@@ -72,8 +53,6 @@ def main(argv: list[str] | None = None) -> int:
 
     m = sub.add_parser("metrics")
     m.add_argument("--warehouse", required=True)
-    m.add_argument("--scale-layout", action="store_true")
-    m.add_argument("--manifest", action="store_true")
     m.add_argument("--reach", action="store_true",
                    help="reach/frequency rollup instead of the "
                         "per-session metrics view")
@@ -114,8 +93,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="components-state root: fold the remaps/ "
                     "merge log into nodes/ (path compression), "
                     "gated by --only-if-over on log rows")
-    mt.add_argument("--scale-layout", action="store_true")
-    mt.add_argument("--manifest", action="store_true")
 
     args = p.parse_args(argv)
 
@@ -129,6 +106,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = _spark(args.cpus)
 
     if args.cmd == "maintain":
+        from .plans.backfill import Warehouse
         from .plans.maintenance import (
             compact_index,
             compact_table,
@@ -240,9 +218,7 @@ def main(argv: list[str] | None = None) -> int:
                       file=sys.stderr)
                 return 2
             return 0
-        wh = _warehouse(
-            spark, args.warehouse, args.scale_layout, args.manifest
-        )
+        wh = Warehouse(spark, args.warehouse)
         if args.vacuum:
             print(f"vacuumed: {vacuum_warehouse(wh)}")
         if args.table:
@@ -259,11 +235,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "metrics":
         from .operators.metrics import reach_frequency
-        from .plans.backfill import v_audience_metrics
+        from .plans.backfill import Warehouse, v_audience_metrics
 
-        wh = _warehouse(
-            spark, args.warehouse, args.scale_layout, args.manifest
-        )
+        wh = Warehouse(spark, args.warehouse)
         if not wh.exists("viewing_sessions"):
             print(
                 f"no viewing_sessions in {args.warehouse}; run "
@@ -295,7 +269,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
 
-    wh = _warehouse(spark, args.warehouse, args.scale_layout, args.manifest)
+    from .plans.backfill import Warehouse
+
+    wh = Warehouse(spark, args.warehouse)
     acr, stb, geo = _feeds(spark, args.sf_dir)
 
     if args.cmd == "backfill":

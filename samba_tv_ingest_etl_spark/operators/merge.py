@@ -24,9 +24,9 @@ cannot change a semi-join's or an anti-join's result, and under AQE a
 DISTINCT costs an aggregate and a job of its own — over the whole
 target's history, for ``merge_insert_only``. The keys side of
 ``delete_by_keys`` / ``semi_join_keys`` is the incremental slice
-(small) — broadcast. A full-table rewrite for DELETE is the
-plain-parquet cost; the Delta backend (drop-in at the Warehouse
-layer) turns it into a file-level operation.
+(small) — broadcast. A DELETE rewrites every partition it touches
+whole, the plain-parquet cost; the warehouse's ``viewing_sessions``
+layout keeps that to the touched ``panel_monday`` directories.
 """
 
 from __future__ import annotations

@@ -31,7 +31,7 @@ from ..operators.union_events import raw_viewing_events
 from ..operators.weighting import weighted_events
 from ..sources import control
 from ..sources.writer import append as writer_append
-from ..sources.writer import atomic_overwrite
+from ..sources.writer import atomic_overwrite, recover_swap
 
 # sessionization spec (etl-ddl-backfill.sql:144,190-192)
 SESSION_PARTITION = ["hh_id", "title", "content_id"]
@@ -48,46 +48,36 @@ _TASK_CONTROL = to_arrow_schema(schemas.TASK_CONTROL)
 @dataclass
 class Warehouse:
     """Directory-of-parquet-tables catalog (the Snowflake schema
-    analog).
+    analog), in the hive layout of the 100 TB storage design: the
+    raw and weighted tables partition on ``metadata_date``, so every
+    watermark filter (``metadata_date > wm``) prunes whole
+    directories before I/O, and ``viewing_sessions`` partitions on
+    ``panel_monday``, so the incremental DELETE+INSERT rewrites only
+    the touched Mondays (``overwrite_partitions``). Tables outside
+    the layout (``panel_windows``, ``task_control``) are flat.
 
-    ``layout`` opts tables into hive partitioning — the 100 TB
-    storage design: raw/weighted tables partition on
-    ``metadata_date`` so every watermark filter
-    (``metadata_date > wm``) prunes whole directories before I/O,
-    and ``viewing_sessions`` partitions on ``panel_monday`` so the
-    incremental DELETE+INSERT rewrites only the touched Mondays
-    (``overwrite_partitions``) instead of swapping the whole table.
+    Commits are per directory: a whole-table write (the backfill) is
+    one atomic swap, and the sessions rewrite replaces one Monday
+    directory at a time, the standard Spark/Hive contract. A pass
+    that crashes part-way is repaired by its replay: the watermarks
+    advance only after the sessions task, and the affected-key
+    recompute is idempotent per group. The reference delegates the
+    equivalent to Snowflake DML.
 
-    ``manifest`` opts tables into the manifest-committed backend
-    (``sources/manifest.py``): still hive-shaped parquet, but commits
-    go through an immutable manifest + ``_CURRENT`` pointer swap, so
-    a multi-partition rewrite is ATOMIC across partitions and readers
-    get snapshot isolation + time travel. A manifest table must also
-    appear in ``layout`` with exactly one partition column.
-
-    Tradeoffs, stated: the default (no layout) keeps the per-table
-    atomic swap but rewrites everything each pass; the partitioned
-    backend rewrites only touched partitions but commits them one
-    directory at a time (the standard Spark/Hive contract); the
-    manifest backend has both scoped rewrites and cross-partition
-    atomicity, at the cost of a vacuum obligation for superseded
-    versions. The reference delegates the equivalent to Snowflake DML.
+    ``layout`` may add partitioned tables, but ``viewing_sessions``
+    must stay partitioned on ``panel_monday``: the incremental
+    rewrite depends on it.
     """
 
     spark: SparkSession
     root: str
     layout: dict[str, list[str]] | None = None
-    manifest: frozenset[str] | set[str] | None = None
 
-    # the scale defaults; pass layout=SCALE_LAYOUT to opt in
     SCALE_LAYOUT = {
         "raw_viewing_events": ["metadata_date"],
         "weighted_events": ["metadata_date"],
         "viewing_sessions": ["panel_monday"],
     }
-    # the ACID upgrade of SCALE_LAYOUT: the one table the incremental
-    # DAG rewrites across multiple partitions per pass
-    MANIFEST_TABLES = frozenset({"viewing_sessions"})
     # declared schemas of the modelling tables, in write order: a read
     # with one launches no footer-inference job
     SCHEMAS = {
@@ -97,27 +87,20 @@ class Warehouse:
         "viewing_sessions": schemas.VIEWING_SESSIONS,
     }
 
+    def __post_init__(self) -> None:
+        if self.layout is None:
+            self.layout = self.SCALE_LAYOUT
+        if self.layout.get("viewing_sessions") != ["panel_monday"]:
+            raise ValueError(
+                "viewing_sessions must be partitioned on panel_monday, "
+                f"got {self.layout.get('viewing_sessions')!r}"
+            )
+
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
     def partitioning(self, table: str) -> list[str] | None:
-        return (self.layout or {}).get(table)
-
-    def is_manifest(self, table: str) -> bool:
-        return table in (self.manifest or ())
-
-    def manifest_table(self, table: str):
-        from ..sources.manifest import ManifestTable
-
-        cols = self.partitioning(table)
-        if not cols or len(cols) != 1:
-            raise ValueError(
-                f"manifest table {table!r} needs exactly one layout "
-                f"partition column, got {cols!r}"
-            )
-        return ManifestTable(
-            self.spark, self.path(table), cols[0], self.schema(table)
-        )
+        return self.layout.get(table)
 
     def schema(self, table: str) -> StructType | None:
         """``table``'s declared schema in the order a read returns
@@ -133,51 +116,27 @@ class Warehouse:
         )
 
     def read(self, table: str) -> DataFrame:
-        if self.is_manifest(table):
-            return self.manifest_table(table).read()
+        recover_swap(self.spark, self.path(table))
         schema = self.schema(table)
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
         return reader.parquet(self.path(table))
 
-    def read_partitions(self, table: str, values: list) -> DataFrame:
-        """Read only the listed partition values. Manifest backend:
-        pruned at the manifest BEFORE any directory listing; hive
-        backend: partition-pruned filter (directories pruned by the
-        scan, after listing)."""
-        if self.is_manifest(table):
-            return self.manifest_table(table).read(
-                partitions=[str(v) for v in values]
-            )
-        col = (self.partitioning(table) or [None])[0]
-        if col is None:
-            raise ValueError(f"{table!r} has no partition column")
-        return self.read(table).filter(F.col(col).isin(list(values)))
-
     def write(self, df: DataFrame, table: str,
               partition_by: list[str] | None = None) -> None:
-        if self.is_manifest(table):
-            self.manifest_table(table).commit_dataframe(df, full=True)
-            return
         atomic_overwrite(
             df, self.path(table), partition_by or self.partitioning(table)
         )
 
     def append(self, df: DataFrame, table: str) -> None:
-        if self.is_manifest(table):
-            raise NotImplementedError(
-                "manifest backend covers rewritten tables; insert-only "
-                "tables use the plain append backend"
-            )
         writer_append(df, self.path(table), self.partitioning(table))
 
     def exists(self, table: str) -> bool:
-        if self.is_manifest(table):
-            return self.manifest_table(table).exists()
-        sc = self.spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(self.path(table))
-        return bool(p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p))
+        """Whether ``table`` is on disk, after finishing a directory
+        swap that crashed between its two renames: such a table is
+        missing only for the moment between them, never "absent"."""
+        return recover_swap(self.spark, self.path(table))
 
 
 def build_viewing_sessions(
@@ -257,8 +216,13 @@ def write_task_control(wh: Warehouse, rows: list[tuple[str, dt.date]]) -> None:
 def read_watermarks(wh: Warehouse) -> dict[str, dt.date]:
     """Every ``last_successful_run_date`` by task name (reference
     ``etl-dag.sql:22`` et al; SURVEY §2.2-P11), read on the driver
-    (``sources/control.py``): no Spark job."""
-    t = control.read_table(wh.spark, wh.path("task_control"), _TASK_CONTROL)
+    (``sources/control.py``): no Spark job. A ``task_control`` swap
+    that crashed between its renames is finished first, or the read
+    would find no table and every watermark would fall back to the
+    epoch."""
+    path = wh.path("task_control")
+    recover_swap(wh.spark, path)
+    t = control.read_table(wh.spark, path, _TASK_CONTROL)
     return dict(zip(
         t["task_name"].to_pylist(),
         t["last_successful_run_date"].to_pylist(),

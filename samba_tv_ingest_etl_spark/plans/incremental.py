@@ -34,17 +34,14 @@ Fidelity notes (each a correctness trap the oracle tests pin):
   dates (trail the slower feed), ``panel_windows_update`` to geo's max,
   both COALESCE-defaulted to 1900-01-01 (``etl-dag.sql:136-142``).
 
-Scale: each task reads only the watermark slice (partition pruning on
-``metadata_date`` when raw tables are date-partitioned); the affected
-keys are that slice's key columns, planned into the recompute
-semi-join (broadcast) and the DELETE anti-join rather than cached,
-with no DISTINCT (duplicates change neither join). The recompute
-shuffles only the affected groups. With the default flat
-layout the DELETE rewrites ``viewing_sessions`` once per pass (atomic
-swap); with ``Warehouse.SCALE_LAYOUT`` the pass reads and rewrites
-ONLY the touched ``panel_monday`` partitions — the 100 TB path. A
-Delta backend would slot into the same Warehouse seam for file-level
-deletes.
+Scale: each task reads only the watermark slice (the raw and
+weighted tables partition on ``metadata_date``, so the filter prunes
+directories); the affected keys are that slice's key columns, planned
+into the recompute semi-join (broadcast) and the DELETE anti-join
+rather than cached, with no DISTINCT (duplicates change neither
+join). The recompute shuffles only the affected groups, and the pass
+reads and rewrites ONLY the touched ``panel_monday`` partitions of
+``viewing_sessions`` — the 100 TB path.
 
 At daily-drop sizes the pass is bound by driver round trips, not by
 executor work (traced spans keep the executors 6-21% busy), so the
@@ -113,10 +110,10 @@ def _append_delta(
     Incremental runs (the target exists) take the count from the
     write job itself (``Observation``): one evaluation of the merge
     chain, nothing materialized in between. The cost: an empty delta
-    still lands one row-less parquet file in an unpartitioned table
-    (Spark's writer keeps the schema that way), one more footer for
-    later scans to read, against a count job saved on every pass
-    that has data.
+    still lands one row-less parquet file in ``panel_windows``, the
+    one unpartitioned table merged here (Spark's writer keeps the
+    schema that way), one more footer for later scans to read,
+    against a count job saved on every pass that has data.
 
     Bootstrap runs count first: the count decides whether the table
     is created at all — a zero-row write would still create it, and
@@ -223,40 +220,28 @@ def update_viewing_sessions(wh: Warehouse, wm: dt.date | None = None) -> int:
     One plan, one write action: the affected keys, the recompute,
     the survivors and the commit's bookkeeping are a single DataFrame
     (``_rewrite_sessions``), and its write is the task's only action
-    on the flat and hive layouts (AQE still runs the plan's shuffle
-    and broadcast stages as jobs of their own). The existing
-    sessions it reads depend on the Warehouse layout, and so does
-    its commit:
+    (AQE still runs the plan's shuffle and broadcast stages as jobs
+    of their own). Only the touched Mondays are read and rewritten:
+    a session's ``panel_monday`` is a grouping column carried from
+    its group's weighted events, so every existing or recomputed
+    session of an affected group lives under a Monday of that
+    group's events. The existing sessions are a left-semi join on
+    those Mondays inside the plan, which dynamic partition pruning
+    turns into a directory-pruned scan; the write is a dynamic
+    partition overwrite, one file per Monday. At 100 TB this turns
+    the daily pass from a full-table rewrite into a handful of
+    directory rewrites.
 
-    - default (flat): the whole table minus the affected groups'
-      sessions, plus the recomputed ones, committed as ONE atomic
-      table swap — stronger than the reference's two statements,
-      same result; but the swap rewrites the whole table every pass.
-    - ``viewing_sessions`` partitioned on ``panel_monday``
-      (``Warehouse.SCALE_LAYOUT``): only the touched Mondays are
-      read and rewritten. A session's ``panel_monday`` is a grouping
-      column carried from its group's weighted events, so every
-      existing or recomputed session of an affected group lives
-      under a Monday of that group's events. The existing sessions
-      are a left-semi join on those Mondays inside the plan, which
-      dynamic partition pruning turns into a directory-pruned scan;
-      the write is a dynamic partition overwrite, one file per
-      Monday. At 100 TB this turns the daily pass from a full-table
-      rewrite into a handful of directory rewrites.
-    - additionally listed in ``Warehouse.manifest``
-      (``MANIFEST_TABLES``): the same scoped rewrite, committed
-      through ``sources/manifest.py`` — every touched Monday flips
-      in ONE ``_CURRENT`` pointer swap, restoring the cross-partition
-      atomicity the plain hive backend trades away. The manifest
-      prunes before any listing, so this backend collects the
-      touched Mondays first (one job).
+    The Mondays commit one directory at a time. A pass that crashes
+    among them leaves some Mondays rewritten and the watermark
+    unadvanced; its replay recomputes the same groups from the same
+    weighted events and rewrites the same Mondays, so it converges.
 
     A touched Monday can lose every session (a late event re-cuts a
-    group's sessions into parts below the 180 s floor); both
-    partitioned commits clear such a Monday, using the expected
-    Mondays the write job observes: the Mondays of the recomputed
-    sessions before the floor, which are the Mondays of the affected
-    events.
+    group's sessions into parts below the 180 s floor); the commit
+    clears such a Monday, using the expected Mondays the write job
+    observes: the Mondays of the recomputed sessions before the
+    floor, which are the Mondays of the affected events.
     """
     from ..sources.writer import overwrite_partitions
 
@@ -289,41 +274,20 @@ def update_viewing_sessions(wh: Warehouse, wm: dt.date | None = None) -> int:
         return int(obs.get["n"])
 
     mondays = affected_events.select("panel_monday").distinct()
-    manifest = wh.is_manifest("viewing_sessions")
-    by_monday = wh.partitioning("viewing_sessions") == ["panel_monday"]
-    if manifest:
-        listed = [r[0] for r in mondays.collect()]
-        if not listed:
-            return 0
-        existing = wh.read_partitions("viewing_sessions", listed)
-    elif by_monday:
-        existing = wh.read("viewing_sessions").join(
-            F.broadcast(mondays), "panel_monday", "left_semi"
-        )
-    else:
-        existing = wh.read("viewing_sessions")
+    existing = wh.read("viewing_sessions").join(
+        F.broadcast(mondays), "panel_monday", "left_semi"
+    )
     # every recomputed session, the ones below the floor included
     sessions = build_viewing_sessions(
         affected_events, min_total_duration=None
     ).withColumn("created_at", now)
-    out, obs = _rewrite_sessions(existing, keys, sessions, by_monday)
-
-    def expected() -> list:
-        return obs.get["expected"]
-
-    if manifest:
-        wh.manifest_table("viewing_sessions").commit_dataframe(
-            out, expected_partitions=expected
-        )
-    elif by_monday:
-        overwrite_partitions(
-            out,
-            wh.path("viewing_sessions"),
-            ["panel_monday"],
-            expected_partitions=expected,
-        )
-    else:
-        wh.write(out, "viewing_sessions")
+    out, obs = _rewrite_sessions(existing, keys, sessions)
+    overwrite_partitions(
+        out,
+        wh.path("viewing_sessions"),
+        ["panel_monday"],
+        expected_partitions=lambda: obs.get["expected"],
+    )
     return int(obs.get["n_new"])
 
 
@@ -334,9 +298,8 @@ def _rewrite_sessions(
     existing: DataFrame,
     keys: DataFrame,
     sessions: DataFrame,
-    by_monday: bool,
 ) -> tuple[DataFrame, Observation]:
-    """The rows every backend commits: ``existing`` minus the affected
+    """The rows the sessions task commits: ``existing`` minus the affected
     groups' sessions (``delete_by_keys``), plus the ``sessions`` that
     reach the 180 s floor. ``sessions`` are the affected groups'
     recomputed sessions before the floor.
@@ -351,8 +314,8 @@ def _rewrite_sessions(
     join or union can be pruned away by AQE when its input is empty,
     and ``Observation.get`` then fails.
 
-    ``by_monday``: hash the rows on ``panel_monday`` before the write,
-    so that each touched Monday lands as one file."""
+    The rows are hashed on ``panel_monday`` before the write, so that
+    each touched Monday lands as one file."""
     floor = F.col("total_duration") >= F.lit(DEFAULT_MIN_TOTAL_DURATION)
     tagged = (
         delete_by_keys(existing, keys, AFFECTED_KEYS)
@@ -360,9 +323,7 @@ def _rewrite_sessions(
         .unionByName(
             sessions.withColumn(_ROW, F.when(floor, 1).otherwise(2))
         )
-    )
-    if by_monday:
-        tagged = tagged.repartition("panel_monday")
+    ).repartition("panel_monday")
     obs = Observation()
     out = (
         tagged.observe(

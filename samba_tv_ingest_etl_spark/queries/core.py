@@ -1129,16 +1129,11 @@ FROM sess
 
 
 def _incremental_replay(
-    spark: SparkSession,
-    sf_dir: str,
-    layout: dict | None,
-    manifest: frozenset | None = None,
-    lag: str | None = None,
+    spark: SparkSession, sf_dir: str, lag: str | None = None
 ) -> DataFrame:
-    """Shared body of q61/q69/q106/q107: replay the incremental DAG
-    day by day into a scratch warehouse with the given storage
-    layout, return the final viewing_sessions projected for the
-    oracle compare.
+    """Shared body of q61/q107: replay the incremental DAG day by day
+    into a scratch warehouse, return the final viewing_sessions
+    projected for the oracle compare.
 
     ``lag`` permutes ARRIVAL ORDER (reference ``etl-dag.sql:137``:
     the raw watermark advances to ``LEAST`` of the feeds' maxima
@@ -1170,9 +1165,7 @@ def _incremental_replay(
         .distinct()
         .collect()
     )
-    wh = Warehouse(
-        spark, os.path.join(root, "wh"), layout=layout, manifest=manifest
-    )
+    wh = Warehouse(spark, os.path.join(root, "wh"))
     # the replay is dozens of tiny jobs; a vanilla session's 200
     # shuffle partitions are pure scheduling overhead at fixture
     # scale. Scope the override to the loop and restore.
@@ -1225,7 +1218,9 @@ def q61_incremental_equals_backfill(
 ) -> DataFrame:
     """Replay the real incremental DAG (plans/incremental.py — the
     reference's etl-dag.sql task graph) one arrival day at a time into
-    a scratch warehouse, then return the final viewing_sessions. The
+    a scratch warehouse, whose sessions rewrite replaces only the
+    touched ``panel_monday`` partitions, then return the final
+    viewing_sessions. The
     oracle computes the ONE-SHOT backfill (etl-ddl-backfill.sql chain)
     over the same feeds; the hash match is the
     incremental == backfill contract (SURVEY §5.2-3).
@@ -1235,50 +1230,7 @@ def q61_incremental_equals_backfill(
     + NULL filters reduce to attaching the household/weight
     expressions to every panel-attributed event — any divergence in
     the engine's actual join/filter path still breaks the match."""
-    return _incremental_replay(spark, sf_dir, layout=None)
-
-
-@query("q69_incremental_partitioned_backend", oracle=_INC_EQ_ORACLE)
-def q69_incremental_partitioned_backend(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """q61's DAG replay on the PARTITION-SCOPED storage backend
-    (Warehouse.SCALE_LAYOUT): raw/weighted tables hive-partitioned on
-    metadata_date (watermark filters prune directories), and the
-    affected-key recompute rewrites only the touched panel_monday
-    partitions via dynamic partition overwrite instead of swapping
-    the whole table. Same oracle as q61 — the two storage strategies
-    must be indistinguishable at the results layer."""
-    from ..plans.backfill import Warehouse
-
-    return _incremental_replay(
-        spark, sf_dir, layout=Warehouse.SCALE_LAYOUT
-    )
-
-
-@query("q106_incremental_manifest_backend", oracle=_INC_EQ_ORACLE)
-def q106_incremental_manifest_backend(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """q61's DAG replay on the MANIFEST-COMMITTED storage backend
-    (Warehouse.MANIFEST_TABLES over SCALE_LAYOUT): viewing_sessions
-    commits go through an immutable manifest + ``_CURRENT`` pointer
-    swap (``sources/manifest.py``), so the affected-Mondays rewrite
-    is atomic ACROSS partitions and readers get snapshot isolation —
-    the ACID upgrade of q69's one-directory-at-a-time hive contract.
-    Same oracle as q61/q69: all three storage strategies must be
-    indistinguishable at the results layer. (Previously pytest-only
-    in tests/test_manifest.py; promoted so the strongest storage mode
-    is pinned by the same external gate as the other two backends —
-    VERDICT r3 next-round item 6.)"""
-    from ..plans.backfill import Warehouse
-
-    return _incremental_replay(
-        spark,
-        sf_dir,
-        layout=Warehouse.SCALE_LAYOUT,
-        manifest=Warehouse.MANIFEST_TABLES,
-    )
+    return _incremental_replay(spark, sf_dir)
 
 
 @query("q107_incremental_late_stb_feed", oracle=_INC_EQ_ORACLE)
@@ -1292,11 +1244,10 @@ def q107_incremental_late_stb_feed(
     two feeds' maxima (``etl-dag.sql:137``), so the trailing feed's
     slice is still above the watermark when it finally lands. Same
     oracle as q61: the end state must equal the one-shot backfill
-    regardless of feed arrival order. (All lag x backend
-    combinations are pinned in tests/test_incremental.py; this key
-    promotes the canonical one to the driver gate — VERDICT r4
-    next-round item 2.)"""
-    return _incremental_replay(spark, sf_dir, layout=None, lag="stb")
+    regardless of feed arrival order. (Both lags are pinned in
+    tests/test_incremental.py; this key promotes the canonical one to
+    the driver gate — VERDICT r4 next-round item 2.)"""
+    return _incremental_replay(spark, sf_dir, lag="stb")
 
 
 # ------------------------------------------------------------- q66

@@ -1,6 +1,6 @@
 """Driver-side control files: the engine's small metadata (the load
-ledger, the ``task_control`` watermarks, manifest pointers) read and
-written by the driver itself, through the Hadoop ``FileSystem`` of
+ledger, the ``task_control`` watermarks) read and written by the
+driver itself, through the Hadoop ``FileSystem`` of
 each path's scheme, with no Spark job and no Python worker.
 
 A control table is a directory of small parquet files with the same

@@ -309,9 +309,8 @@ def overwrite_partitions(
     every task has read its input. No lineage cut is needed.
 
     Atomicity is per-partition (the standard Spark/Hive contract),
-    not per-table like ``atomic_overwrite`` — the tradeoff is
-    documented at the Warehouse layer, which keeps the atomic-swap
-    path as the default backend.
+    not per-table like ``atomic_overwrite``; the Warehouse docstring
+    states how a pass that crashes among its partitions recovers.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 from samba_tv_ingest_etl_spark.__main__ import main
 
 from .conftest import SF_DIR
@@ -34,14 +32,10 @@ def test_query_command_unknown_name():
     )
 
 
-@pytest.mark.parametrize("scale", [False, True])
-def test_backfill_then_incremental(tmp_path, scale, spark):
+def test_backfill_then_incremental(tmp_path, spark):
     wh = os.path.join(str(tmp_path), "wh")
     argv = ["backfill", "--sf-dir", SF_DIR, "--warehouse", wh]
     argv2 = ["incremental", "--sf-dir", SF_DIR, "--warehouse", wh]
-    if scale:
-        argv.append("--scale-layout")
-        argv2.append("--scale-layout")
     assert main(argv) == 0
     assert os.path.isdir(os.path.join(wh, "viewing_sessions"))
     n = spark.read.parquet(os.path.join(wh, "viewing_sessions")).count()

@@ -3,14 +3,12 @@ reference user would, at sf0.1 — backfill, then three daily
 incremental passes with late-arriving data, then consume the metrics
 view — and require the incremental warehouse to converge to the
 one-shot backfill (the reference's EP2≡EP3 contract,
-etl-dag.sql:91-121) on BOTH storage backends (hive scale layout, and
-scale layout + manifest commits)."""
+etl-dag.sql:91-121)."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from samba_tv_ingest_etl_spark.__main__ import main
@@ -28,25 +26,17 @@ _COMPARE_COLS = [
 ]
 
 
-def _sessions(spark, root, manifest=False):
+def _sessions(spark, root):
     from samba_tv_ingest_etl_spark.plans.backfill import Warehouse
 
-    wh = Warehouse(
-        spark, root, layout=Warehouse.SCALE_LAYOUT,
-        manifest=Warehouse.MANIFEST_TABLES if manifest else None,
-    )
-    df = wh.read("viewing_sessions")
+    df = Warehouse(spark, root).read("viewing_sessions")
     return sorted(map(tuple, df.select(*_COMPARE_COLS).collect()))
 
 
-@pytest.mark.parametrize("manifest", [False, True], ids=["hive", "manifest"])
-def test_cli_end_to_end_sf01(spark, tmp_path, capsys, manifest):
-    flags = ["--scale-layout"] + (["--manifest"] if manifest else [])
-
+def test_cli_end_to_end_sf01(spark, tmp_path, capsys):
     # --- one-shot reference build (EP2) --------------------------------
     full = str(tmp_path / "full")
-    assert main(["backfill", "--sf-dir", SF01, "--warehouse", full,
-                 "--scale-layout"]) == 0
+    assert main(["backfill", "--sf-dir", SF01, "--warehouse", full]) == 0
 
     # --- day-by-day operation (EP3): 3 passes, later ones carry late
     # data for earlier panels so the affected-key recompute re-cuts
@@ -65,26 +55,19 @@ def test_cli_end_to_end_sf01(spark, tmp_path, capsys, manifest):
     for cut in cuts:
         assert main(
             ["incremental", "--sf-dir", SF01, "--warehouse", inc,
-             "--as-of", cut.isoformat(), *flags]
+             "--as-of", cut.isoformat()]
         ) == 0
 
     # --- convergence: incremental == backfill, column for column ------
-    assert _sessions(spark, inc, manifest) == _sessions(spark, full)
-
-    if manifest:
-        # the passes really committed through the manifest backend
-        assert os.path.exists(
-            os.path.join(inc, "viewing_sessions", "_CURRENT")
-        )
+    assert _sessions(spark, inc) == _sessions(spark, full)
 
     # --- consumption surface: the metrics view + reach rollup over
     # the warehouse the user just built ---------------------------------
     capsys.readouterr()
-    assert main(["metrics", "--warehouse", inc, *flags,
-                 "--limit", "5"]) == 0
+    assert main(["metrics", "--warehouse", inc, "--limit", "5"]) == 0
     out = capsys.readouterr().out
     assert "weighted_view" in out and "panel_monday" in out
-    assert main(["metrics", "--warehouse", inc, *flags, "--reach",
+    assert main(["metrics", "--warehouse", inc, "--reach",
                  "--limit", "5"]) == 0
     out = capsys.readouterr().out
     assert "weighted_reach" in out and "frequency" in out

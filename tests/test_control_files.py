@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 import sys
 import threading
 from concurrent.futures import ThreadPoolExecutor
@@ -16,10 +17,14 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 
 from samba_tv_ingest_etl_spark import schemas
+from samba_tv_ingest_etl_spark.plans.backfill import (
+    Warehouse,
+    read_watermarks,
+    write_task_control,
+)
 from samba_tv_ingest_etl_spark.sources import control
 from samba_tv_ingest_etl_spark.sources import ledger as ledger_mod
 from samba_tv_ingest_etl_spark.sources.ledger import MAX_ENTRY_FILES, LoadLedger
-from samba_tv_ingest_etl_spark.sources.manifest import ManifestTable
 
 
 def _viewfs(spark, tmp_path, cell):
@@ -32,8 +37,8 @@ def _viewfs(spark, tmp_path, cell):
 
 
 def test_round_trip_through_nonlocal_fs_scheme(spark, tmp_path):
-    """Bytes, a parquet control table and a manifest pointer written
-    and read back through ``viewfs://`` (a real non-``file:`` Hadoop
+    """Bytes and a parquet control table written and read back
+    through ``viewfs://`` (a real non-``file:`` Hadoop
     FileSystem): the layer resolves the filesystem from the path and
     never assumes locality. The payload is larger than any single
     stream buffer, and publishing leaves no visible temporary file."""
@@ -62,10 +67,6 @@ def test_round_trip_through_nonlocal_fs_scheme(spark, tmp_path):
     assert spark.read.schema(schemas.LOAD_LEDGER).parquet(
         f"{base}/ledger"
     ).count() == len(files)
-
-    mt = ManifestTable(spark, f"{base}/t", "p")
-    mt._write_text_atomic(None, f"{base}/t/_CURRENT", "7")
-    assert mt._read_text(f"{base}/t/_CURRENT") == "7"
 
 
 def test_control_tables_keep_spark_formats(spark, tmp_path):
@@ -214,3 +215,25 @@ def test_lookup_racing_a_fold_sees_every_entry(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert not reader.is_alive()
     assert got == [{f"/f{i}" for i in range(MAX_ENTRY_FILES + 1)}]
+
+
+def test_crashed_task_control_swap_keeps_watermarks(spark, tmp_path):
+    """``task_control`` left between the two renames of its swap: the
+    table moved to ``__old__`` and the new rows staged complete at
+    ``__tmp__``. ``read_watermarks`` finishes the swap and returns the
+    staged dates, where reading the missing table as empty would send
+    every task back to the epoch."""
+    old = [("raw_events_update", dt.date(2025, 5, 10)),
+           ("panel_windows_update", dt.date(2025, 6, 2))]
+    new = [("raw_events_update", dt.date(2025, 5, 20)),
+           ("panel_windows_update", dt.date(2025, 6, 9))]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    staged = Warehouse(spark, str(tmp_path / "staged"))
+    write_task_control(wh, old)
+    write_task_control(staged, new)
+    path = wh.path("task_control")
+    os.rename(path, path + "__old__")
+    shutil.copytree(staged.path("task_control"), path + "__tmp__")
+
+    assert read_watermarks(wh) == dict(new)
+    assert sorted(os.listdir(tmp_path / "wh")) == ["task_control"]

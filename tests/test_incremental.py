@@ -93,26 +93,15 @@ def test_late_geo_drops_events_quirk(spark, tmp_path, feeds):
     assert not wh.exists("viewing_sessions")
 
 
-_BACKENDS = {
-    "flat": {},
-    "partitioned": {"layout": Warehouse.SCALE_LAYOUT},
-    "manifest": {
-        "layout": Warehouse.SCALE_LAYOUT,
-        "manifest": Warehouse.MANIFEST_TABLES,
-    },
-}
-
-
-@pytest.mark.parametrize("backend", sorted(_BACKENDS))
 @pytest.mark.parametrize("lag", ["stb", "acr"])
 def test_arrival_order_permutation_equals_backfill(
-    spark, tmp_path, feeds, backend, lag
+    spark, tmp_path, feeds, lag
 ):
     """Arrival-order permutation property (reference watermark rule
     ``LEAST(acr_max, stb_max)``, etl-dag.sql:137): one feed trailing
     the other by a day on every pass must converge to the same final
     viewing_sessions as the in-order replay and the one-shot
-    backfill, on ALL THREE storage backends. The trailing feed's
+    backfill. The trailing feed's
     slice stays above the watermark (which trails the slower feed by
     construction), so nothing is skipped; the affected-key recompute
     re-cuts the touched groups when the late slice lands. Geo leads,
@@ -124,7 +113,7 @@ def test_arrival_order_permutation_equals_backfill(
 
     days = _arrival_dates(acr, stb)
     lagging, leading = (stb, acr) if lag == "stb" else (acr, stb)
-    wh = Warehouse(spark, str(tmp_path / "inc"), **_BACKENDS[backend])
+    wh = Warehouse(spark, str(tmp_path / "inc"))
     for i, day in enumerate(days):
         lead_cut = F.col("metadata_date") <= F.lit(day)
         lag_cut = (

@@ -41,7 +41,9 @@ def test_compact_flat_table(spark, tmp_path):
 
 
 def test_compact_single_partition_leaves_others(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path), layout={"t": ["p"]})
+    wh = Warehouse(
+        spark, str(tmp_path), layout={**Warehouse.SCALE_LAYOUT, "t": ["p"]}
+    )
     df = spark.range(400).select(
         "id", (F.col("id") % 2).alias("p")
     )

@@ -1,4 +1,5 @@
-"""Partition-scoped storage backend (Warehouse.SCALE_LAYOUT).
+"""Partition-scoped warehouse layout (Warehouse.SCALE_LAYOUT, the
+only one).
 
 The 100 TB mutation path: raw/weighted tables hive-partition on
 ``metadata_date`` (watermark filters prune directories), and
@@ -8,7 +9,9 @@ dynamic partition overwrite instead of swapping the whole table.
 
 Checks here:
 - result equivalence: the partitioned day-by-day replay produces
-  exactly the default (atomic-swap) backend's sessions;
+  exactly the one-shot backfill's sessions;
+- the layout: one that does not partition ``viewing_sessions`` on
+  ``panel_monday`` is refused;
 - physical locality: a pass that touches only new Mondays leaves the
   untouched Mondays' parquet files byte-identical on disk;
 - plan: the watermark filter reaches the partitioned scan as a
@@ -61,10 +64,17 @@ def _partition_files(wh, table):
     return out
 
 
+def test_layout_must_partition_sessions_by_monday(spark, tmp_path):
+    assert Warehouse(spark, str(tmp_path)).layout == Warehouse.SCALE_LAYOUT
+    for layout in ({}, {"viewing_sessions": ["hh_id"]}):
+        with pytest.raises(ValueError, match="panel_monday"):
+            Warehouse(spark, str(tmp_path), layout=layout)
+
+
 def test_partitioned_replay_equals_default(spark, tmp_path, feeds):
     acr, stb, geo = feeds
-    wh_flat = Warehouse(spark, str(tmp_path / "flat"))
-    backfill(wh_flat, acr, stb, geo)
+    wh_full = Warehouse(spark, str(tmp_path / "full"))
+    backfill(wh_full, acr, stb, geo)
 
     wh_part = Warehouse(
         spark, str(tmp_path / "part"), layout=Warehouse.SCALE_LAYOUT
@@ -73,7 +83,7 @@ def test_partitioned_replay_equals_default(spark, tmp_path, feeds):
         le = F.col("metadata_date") <= F.lit(day)
         run_incremental(wh_part, acr.filter(le), stb.filter(le), geo)
 
-    assert _sessions_set(wh_part) == _sessions_set(wh_flat)
+    assert _sessions_set(wh_part) == _sessions_set(wh_full)
     # the layout actually took effect on disk
     parts = os.listdir(wh_part.path("viewing_sessions"))
     assert any(p.startswith("panel_monday=") for p in parts)
@@ -229,15 +239,15 @@ def test_partitioned_backfill_then_incremental(spark, tmp_path, feeds):
     """The migration path: an initial BACKFILL lands directly on the
     partitioned layout (Warehouse.write applies the table layout), and
     subsequent incremental passes mutate it partition-scoped —
-    end state equals the all-flat pipeline."""
+    end state equals the same pipeline on a second warehouse."""
     acr, stb, geo = feeds
     days = _arrival_dates(acr, stb)
     cut = days[-2]
 
-    wh_flat = Warehouse(spark, str(tmp_path / "flat"))
+    wh_full = Warehouse(spark, str(tmp_path / "full"))
     early = F.col("metadata_date") <= F.lit(cut)
-    backfill(wh_flat, acr.filter(early), stb.filter(early), geo)
-    run_incremental(wh_flat, acr, stb, geo)
+    backfill(wh_full, acr.filter(early), stb.filter(early), geo)
+    run_incremental(wh_full, acr, stb, geo)
 
     wh_part = Warehouse(
         spark, str(tmp_path / "part"), layout=Warehouse.SCALE_LAYOUT
@@ -249,4 +259,4 @@ def test_partitioned_backfill_then_incremental(spark, tmp_path, feeds):
     ), "backfill must land on the partitioned layout"
     run_incremental(wh_part, acr, stb, geo)
 
-    assert _sessions_set(wh_part) == _sessions_set(wh_flat)
+    assert _sessions_set(wh_part) == _sessions_set(wh_full)

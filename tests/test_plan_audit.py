@@ -28,7 +28,6 @@ _SKIP = {
     # DAG-replay queries: rebuild a scratch warehouse (~60-90 s) to
     # return a read-back; covered by their own oracle rows.
     "q61_incremental_equals_backfill",
-    "q69_incremental_partitioned_backend",
 }
 
 # Queries whose single-partition windows run over a BOUNDED grain —
